@@ -30,8 +30,11 @@ Commit protocol (resume unit = wave of partitions):
        partition overwrite — a crash between write and commit leaves
        orphan rows, and the resume's rewrite of the same wave REPLACES
        them instead of appending duplicates
-    4. write the wave's lineage rows (doc/byte counts, checksum, wall_ms)
-       to a wave-keyed file, mode=overwrite (same idempotency)
+    4. build the wave's lineage rows (doc/byte counts, checksum, wall_ms)
+       on the JVM from the files step 3 committed — one aggregate plus
+       literal columns (lineage_frame), nothing collected to the driver,
+       no Python worker — and write them to a wave-keyed file,
+       mode=overwrite (same idempotency)
     5. atomically flip those partitions pending→committed in manifest.json
 A kill ANYWHERE — between waves or between steps 3/4 and 5 — loses at most
 the in-flight wave's work; re-running recomputes ONLY partitions absent
@@ -162,40 +165,69 @@ def _guard_sink_table_unclaimed(
     by a DIFFERENT manifest under runs_root, or already exists non-empty
     with no claiming manifest visible (a foreign runs_root) — force=True
     is the explicit override, mirroring the per-run-directory isolation
-    the parquet path gets by construction."""
+    the parquet path gets by construction. Each refusal names its real
+    cause: a run_id that already has a manifest is left to create()'s
+    refusal, an unreadable manifest under runs_root is named as a
+    possible claimant of a table holding rows, and a table that cannot be
+    read is reported as such, never as a raw Spark error."""
+    if run_id and RunManifest(runs_root, run_id).path.exists():
+        # re-enqueueing an existing run (readable manifest or not) is
+        # create()'s domain: it refuses with its own, accurate message
+        return
     import pathlib
 
-    root = pathlib.Path(runs_root)
-    if root.exists():
-        for mf in sorted(root.glob("*/manifest.json")):
-            rid = mf.parent.name
-            if rid == run_id:
-                continue  # resuming/resetting this very run is create()'s domain
-            try:
-                other = RunManifest.load(runs_root, rid).sink_table
-            except Exception:
-                continue  # unreadable manifest never blocks a new run
-            if other == sink_table:
-                raise RuntimeError(
-                    f"sink table {sink_table} is already recorded by run "
-                    f"{rid} under {runs_root} — two runs sharing one table "
-                    "overwrite each other's url-hash partitions while both "
-                    "manifests read complete; enqueue with a different "
-                    "spark.graft.sink.table, or pass force=True to claim "
-                    "the table anyway"
-                )
+    unreadable = []
+    for mf in sorted(pathlib.Path(runs_root).glob("*/manifest.json")):
+        rid = mf.parent.name
+        try:
+            other = RunManifest.load(runs_root, rid).sink_table
+        except Exception:
+            unreadable.append(rid)  # blocks only a table that holds rows
+            continue
+        if other == sink_table:
+            raise RuntimeError(
+                f"sink table {sink_table} is already recorded by run "
+                f"{rid} under {runs_root} — two runs sharing one table "
+                "overwrite each other's url-hash partitions while both "
+                "manifests read complete; enqueue with a different "
+                "spark.graft.sink.table, or pass force=True to claim "
+                "the table anyway"
+            )
     try:
         exists = spark.catalog.tableExists(sink_table)
     except Exception:
         exists = False
-    if exists and spark.table(sink_table).limit(1).count() > 0:
+    if not exists:
+        return
+    advice = (
+        "enqueue with a different spark.graft.sink.table, or pass "
+        "force=True to overwrite into it anyway"
+    )
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import PySparkException
+
+    try:
+        has_rows = spark.table(sink_table).limit(1).count() > 0
+    except (PySparkException, Py4JJavaError) as e:
         raise RuntimeError(
-            f"sink table {sink_table} already exists and holds rows, but "
-            f"no manifest under {runs_root} records it — it likely belongs "
-            "to a run under another runs_root; enqueue with a different "
-            "spark.graft.sink.table, or pass force=True to overwrite into "
-            "it anyway"
+            f"sink table {sink_table} exists but could not be read "
+            f"({type(e).__name__}), so enqueue cannot tell whether another "
+            f"run's rows live there; repair or drop the table, or {advice}"
+        ) from e
+    if not has_rows:
+        return
+    if unreadable:
+        raise RuntimeError(
+            f"sink table {sink_table} already exists and holds rows, and "
+            f"the manifest of run(s) {', '.join(unreadable)} under "
+            f"{runs_root} could not be read — it may be the table's "
+            f"claimant; repair that manifest, or {advice}"
         )
+    raise RuntimeError(
+        f"sink table {sink_table} already exists and holds rows, but "
+        f"no manifest under {runs_root} records it — it likely belongs "
+        f"to a run under another runs_root; {advice}"
+    )
 
 
 def _run_sink_table(
@@ -264,13 +296,14 @@ def run_extract_job(
     `max_waves` exists for the resume test (simulates a mid-run kill).
     Returns summary counters.
     """
+    import os
     import shutil
 
     from engine.catalog import read_sink_table, write_wave_to_table
 
     sink_table = _run_sink_table(spark, manifest, strict=True)
     pending = manifest.pending_partitions()
-    done_docs = 0
+    wave_paths = []
     waves_run = 0
     if not pending:
         # already complete — still reclaim the staged copy here: a crash
@@ -338,60 +371,30 @@ def run_extract_job(
         # not what was attempted); partition pruning keeps the read to the
         # wave's own output dirs. A run whose every wave is empty (empty
         # corpus) never creates extracted/ at all — dynamic overwrite of
-        # zero partitions writes nothing — so the commit proceeds with
-        # zero lineage rows instead of failing schema inference.
-        import os as _os
-
+        # zero partitions writes nothing — so it reads zero paths and the
+        # commit proceeds with zero lineage rows.
         wall_ms = int((time.monotonic() - t0) * 1000)
         if sink_table:
             out = read_sink_table(spark, sink_table)
-        elif _os.path.exists(manifest.extracted_path):
+        else:
             # explicit schema: an empty wave may leave the directory with
             # zero data files (only _SUCCESS) — inference would die
+            written = [manifest.extracted_path] if os.path.exists(
+                manifest.extracted_path
+            ) else []
             out = spark.read.schema(
                 EXTRACTED_DDL + ", partition_id int"
-            ).parquet(manifest.extracted_path)
-        else:
-            out = None
-        if out is not None:
-            row_hash = F.xxhash64(
-                F.col("url"), F.coalesce(F.col("text"), F.lit(""))
-            )
-            lin_rows = (
-                out.where(F.col("partition_id").isin(wave))
-                .groupBy("partition_id")
-                .agg(
-                    F.count("*").alias("doc_count"),
-                    F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("byte_count"),
-                    _content_checksum(row_hash).alias("checksum"),
-                )
-                .collect()
-            )
-        else:
-            lin_rows = []
-        lineage = spark.createDataFrame(
-            [
-                (
-                    manifest.run_id,
-                    int(r["partition_id"]),
-                    "extract",
-                    int(r["doc_count"]),
-                    int(r["byte_count"]),
-                    EXTRACTOR_VERSION,
-                    r["checksum"],
-                    wall_ms,
-                )
-                for r in lin_rows
-            ],
-            schema=_lineage_ddl(),
-        )
+            ).parquet(*written)
         # wave file keyed by its first partition id: unique across waves
         # (pending sets are disjoint), stable across resume, overwrite-safe
-        lineage.coalesce(1).write.mode("overwrite").parquet(
-            manifest.lineage_wave_path(wave[0])
+        wave_path = manifest.lineage_wave_path(wave[0])
+        lineage = lineage_frame(
+            out.where(F.col("partition_id").isin(wave)),
+            manifest.run_id, "extract", wall_ms,
         )
+        lineage.coalesce(1).write.mode("overwrite").parquet(wave_path)
         manifest.commit_partitions(wave)  # atomic snapshot flip — THE commit
-        done_docs += sum(int(r["doc_count"]) for r in lin_rows)
+        wave_paths.append(wave_path)
         waves_run += 1
 
     if manifest.is_complete():
@@ -400,6 +403,16 @@ def run_extract_job(
         # full second copy of the corpus)
         shutil.rmtree(manifest.staged_path, ignore_errors=True)
 
+    done_docs = 0
+    if wave_paths:
+        # read back from the committed lineage files (one tiny JVM scan),
+        # never from rows collected to the driver
+        done_docs = (
+            spark.read.schema(_lineage_ddl())
+            .parquet(*wave_paths)
+            .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
+            .collect()[0][0]
+        )
     return {
         "run_id": manifest.run_id,
         "waves_run": waves_run,
@@ -419,6 +432,43 @@ def _lineage_ddl() -> str:
     return (
         "run_id string, partition_id int, stage string, doc_count long, "
         "byte_count long, extractor_version string, checksum string, wall_ms long"
+    )
+
+
+# the column each stage's checksum digests next to the url: an extract
+# wave pins the committed text, a retry attempt each url's new status
+_CHECKSUM_COL = {"extract": "text", "retry": "status"}
+
+
+def lineage_frame(
+    out: DataFrame, run_id: str, stage: str, wall_ms: int
+) -> DataFrame:
+    """Per-partition lineage rows of one wave or retry attempt, built as a
+    JVM aggregate over `out` (the committed rows) plus literal columns.
+    Nothing is collected to the driver and no Python worker is touched:
+    at local[4] on a 4-vCPU host any Python-touching Spark job costs
+    ~0.2-0.35 s fixed, which a per-wave createDataFrame(collected rows)
+    paid once per wave (tests/test_resume.py pins the plan Python-free)."""
+    row_hash = F.xxhash64(
+        F.col("url"), F.coalesce(F.col(_CHECKSUM_COL[stage]), F.lit(""))
+    )
+    return (
+        out.groupBy("partition_id")
+        .agg(
+            F.count("*").alias("doc_count"),
+            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("byte_count"),
+            _content_checksum(row_hash).alias("checksum"),
+        )
+        .select(
+            F.lit(run_id).alias("run_id"),
+            F.col("partition_id").cast("int"),
+            F.lit(stage).alias("stage"),
+            F.col("doc_count").cast("long"),
+            F.col("byte_count").cast("long"),
+            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
+            F.col("checksum"),
+            F.lit(wall_ms).cast("long").alias("wall_ms"),
+        )
     )
 
 
@@ -556,27 +606,7 @@ def retry_failed(
     # only, not the accumulated retry table
     wall_ms = int((time.monotonic() - t0) * 1000)
     out = spark.read.parquet(retry_path).where(F.col("attempt") == attempt)
-    retry_hash = F.xxhash64(
-        F.col("url"), F.coalesce(F.col("status"), F.lit(""))
-    )
-    lineage = (
-        out.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("byte_count"),
-            _content_checksum(retry_hash).alias("checksum"),
-        )
-        .select(
-            F.lit(manifest.run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            F.lit("retry").alias("stage"),
-            F.col("doc_count").cast("long"),
-            F.col("byte_count").cast("long"),
-            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-            F.col("checksum"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-        )
-    )
+    lineage = lineage_frame(out, manifest.run_id, "retry", wall_ms)
     lineage.coalesce(1).write.mode("overwrite").parquet(
         str(manifest.lineage_dir / f"retry-{attempt:03d}.parquet")
     )
@@ -1303,16 +1333,34 @@ def rollup_hosts(
 
 def rollup_metrics(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     """upload/rollup analog (Q7, emop/lib/emop_upload.py [U]): per-run and
-    per-partition aggregates via ROLLUP, plus derived throughput columns."""
+    per-partition aggregates (the levels of ROLLUP(run_id, partition_id)),
+    plus derived throughput columns.
+
+    A wave's lineage file repeats the wave's wall_ms on every partition
+    row, so the run and grand levels count each wave file's wall_ms ONCE
+    (summing the rows would multiply it by the wave's partition count and
+    understate docs_per_sec by the same factor); a per-partition row keeps
+    the wall of every wave that touched the partition."""
     lin = read_lineage(spark, manifest)
+    per_part = lin.groupBy("run_id", "partition_id").agg(
+        F.sum("doc_count").alias("docs"),
+        F.sum("byte_count").alias("bytes"),
+        F.sum("wall_ms").alias("wall_ms"),
+        F.count("*").alias("n_rows"),
+    )
+    per_wave = lin.groupBy("run_id", F.input_file_name().alias("wave")).agg(
+        F.sum("doc_count").alias("docs"),
+        F.sum("byte_count").alias("bytes"),
+        F.max("wall_ms").alias("wall_ms"),
+        F.count("*").alias("n_rows"),
+    )
+    per_run = (
+        per_wave.rollup("run_id")
+        .agg(*(F.sum(c).alias(c) for c in ("docs", "bytes", "wall_ms", "n_rows")))
+        .withColumn("partition_id", F.lit(None).cast("int"))
+    )
     return (
-        lin.rollup("run_id", "partition_id")
-        .agg(
-            F.sum("doc_count").alias("docs"),
-            F.sum("byte_count").alias("bytes"),
-            F.sum("wall_ms").alias("wall_ms"),
-            F.count("*").alias("n_rows"),
-        )
+        per_part.unionByName(per_run)
         .withColumn(
             "docs_per_sec",
             F.when(

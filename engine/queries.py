@@ -4741,10 +4741,15 @@ def q_triangle_parts(spark, sf_dir):
     # one-pass metadata job that computes the pair bound; a corpus with
     # out-of-range ids falls back to the two-column key — no result
     # change either way, only the key representation.
+    # Both sides are cast to long BEFORE the shift: shiftleft keeps its
+    # input type, so an int32 partkey column would wrap in 32 bits
+    # ((2, 5) and (4, 5) both packing to 5) while the range guard passes.
     packable = 0 <= min_partkey and max_partkey < (1 << 31)
     e3 = (F.broadcast(edges) if bcast else edges).alias("e3")
     if packable:
-        pack = lambda u, v: F.shiftleft(F.col(u), 31).bitwiseOR(F.col(v))  # noqa: E731
+        pack = lambda u, v: F.shiftleft(  # noqa: E731
+            F.col(u).cast("long"), 31
+        ).bitwiseOR(F.col(v).cast("long"))
         cond = pack("e1.u", "e2.v") == pack("e3.u", "e3.v")
     else:
         cond = (F.col("e1.u") == F.col("e3.u")) & (

@@ -227,6 +227,15 @@ def test_read_extracted_raises_when_catalog_table_lost(spark, sink_table, tmp_pa
         read_extracted(spark, man).count()
 
 
+def _populate(spark, table):
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    spark.sql(
+        f"CREATE TABLE {table} (url STRING, partition_id INT) "
+        "USING parquet PARTITIONED BY (partition_id)"
+    )
+    spark.sql(f"INSERT INTO {table} VALUES ('u', 0)")
+
+
 def test_enqueue_refuses_claimed_or_populated_sink_table(
     spark, sink_table, tmp_path
 ):
@@ -250,15 +259,58 @@ def test_enqueue_refuses_claimed_or_populated_sink_table(
     assert m.sink_table == sink_table
 
     # foreign runs_root + table already holding rows → refused too
-    spark.sql(f"DROP TABLE IF EXISTS {sink_table}")
-    spark.sql(
-        f"CREATE TABLE {sink_table} (url STRING, partition_id INT) "
-        "USING parquet PARTITIONED BY (partition_id)"
-    )
-    spark.sql(f"INSERT INTO {sink_table} VALUES ('u', 0)")
+    _populate(spark, sink_table)
     other_root = str(tmp_path / "runs2")
     with pytest.raises(RuntimeError, match="no manifest under"):
         enqueue(spark, pages, other_root, run_id="claim-c")
     assert enqueue(
         spark, pages, other_root, run_id="claim-c", force=True
     ).sink_table == sink_table
+
+
+def test_enqueue_same_run_id_left_to_create_refusal(spark, sink_table, tmp_path):
+    """Re-enqueueing a run whose own manifest claims the (now populated)
+    table, or whose own manifest is unreadable, is create()'s refusal —
+    not the misleading 'no manifest records it' guard error."""
+    pages = generate_pages(spark, 30, partitions=2)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, run_id="own-a")
+    _populate(spark, sink_table)
+    with pytest.raises(FileExistsError, match="already has a manifest"):
+        enqueue(spark, pages, root, run_id="own-a")
+    man.path.write_text("{not json")
+    with pytest.raises(FileExistsError, match="already has a manifest"):
+        enqueue(spark, pages, root, run_id="own-a")
+
+
+def test_enqueue_names_unreadable_manifest_as_possible_claimant(
+    spark, sink_table, tmp_path
+):
+    """An unreadable manifest under runs_root may be the one recording a
+    table that holds rows: the refusal must say so, not claim that no
+    manifest records it; an empty table stays free to claim."""
+    pages = generate_pages(spark, 30, partitions=2)
+    root = tmp_path / "runs"
+    (root / "broken").mkdir(parents=True)
+    (root / "broken" / "manifest.json").write_text("{not json")
+    _populate(spark, sink_table)
+    with pytest.raises(RuntimeError, match="run\\(s\\) broken") as e:
+        enqueue(spark, pages, str(root), run_id="fresh")
+    assert "no manifest" not in str(e.value)
+    spark.sql(f"TRUNCATE TABLE {sink_table}")
+    assert enqueue(spark, pages, str(root), run_id="fresh").sink_table == sink_table
+
+
+def test_enqueue_reports_unreadable_sink_table(spark, sink_table, tmp_path):
+    """A table whose data cannot be read fails enqueue with guard advice,
+    not a raw Spark error from the row probe."""
+    import pathlib
+
+    _populate(spark, sink_table)
+    for f in spark.table(sink_table).inputFiles():
+        pathlib.Path(f.removeprefix("file:")).write_bytes(b"not parquet")
+    spark.catalog.refreshTable(sink_table)
+    pages = generate_pages(spark, 30, partitions=2)
+    with pytest.raises(RuntimeError, match="could not be read") as e:
+        enqueue(spark, pages, str(tmp_path / "runs"), run_id="probe")
+    assert "force=True" in str(e.value)

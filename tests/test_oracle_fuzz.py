@@ -374,6 +374,31 @@ def test_triangle_packed_key_guard(spark, lineitem_dir, tmp_path):
     assert not bad, bad
 
 
+def test_triangle_int32_partkey_no_wrap(spark, tmp_path):
+    """An int32 l_partkey column passes the packed-key range guard; the
+    packing must still not wrap in 32 bits. Orders 1-3 give edges (2,3),
+    (3,5), (4,5): the wedge 2-3-5 has no closing edge (2,5), but a 32-bit
+    (u << 31) | v packs (2,5) and (4,5) alike to 5, which invented the
+    triangle {2,3,5}. Order 4 holds the one real triangle {6,7,8}."""
+    import engine.queries as Q
+
+    rows = [
+        (1, 2), (1, 3), (2, 3), (2, 5), (3, 4), (3, 5), (4, 6), (4, 7), (4, 8),
+    ]
+    sf = str(tmp_path)
+    spark.createDataFrame(rows, "l_orderkey int, l_partkey int").coalesce(
+        1
+    ).write.parquet(f"{sf}/lineitem.parquet")
+    plan = Q.q_triangle_parts(
+        spark, sf
+    )._jdf.queryExecution().executedPlan().toString()
+    assert "shiftleft" in plan, plan  # the packed path is the one under test
+    bad = _compare(spark, sf, "lineitem", ["triangle_parts"])
+    assert not bad, bad
+    got = [tuple(r) for r in Q.q_triangle_parts(spark, sf).collect()]
+    assert got == [(6, 1), (7, 1), (8, 1)]
+
+
 def test_events_queries_survive_adversarial_rows(spark, events_dir):
     bad = _compare(spark, events_dir, "events", EVENT_QUERIES)
     assert not bad, bad

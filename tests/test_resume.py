@@ -112,6 +112,126 @@ def test_retry_failed_and_current_view(spark, pages, tmp_path):
     assert retry_docs == res["retried"]
 
 
+class _Kill(RuntimeError):
+    pass
+
+
+_MASK40 = (1 << 40) - 1
+
+
+def _expected_lineage(rows_df, hashed_col):
+    """{partition_id: (doc_count, byte_count, checksum)} recomputed on the
+    driver from the rows themselves: the per-row xxhash64 comes from
+    Spark, the count, byte sum, 40-bit lane sums and sha256 from Python."""
+    import hashlib
+
+    acc = {}
+    for r in rows_df.select(
+        "partition_id",
+        F.coalesce(F.col("n_chars"), F.lit(0)).alias("n"),
+        F.xxhash64("url", F.coalesce(F.col(hashed_col), F.lit(""))).alias("h"),
+    ).collect():
+        c, b, l1, l2 = acc.get(r["partition_id"], (0, 0, 0, 0))
+        h = r["h"] & ((1 << 64) - 1)
+        acc[r["partition_id"]] = (
+            c + 1, b + r["n"], l1 + (h & _MASK40), l2 + ((h >> 20) & _MASK40)
+        )
+    return {
+        p: (c, b, hashlib.sha256(f"{c}:{l1}:{l2}".encode()).hexdigest())
+        for p, (c, b, l1, l2) in acc.items()
+    }
+
+
+@pytest.fixture(scope="module")
+def interrupted_run(spark, pages, tmp_path_factory):
+    """A run with a committed wave, a wave killed between its lineage
+    write and its commit, the resume, and one retry — with every lineage
+    frame the job builds recorded on the way."""
+    import engine.jobs.extract_job as job
+
+    root = str(tmp_path_factory.mktemp("interrupted") / "runs")
+    man = enqueue(spark, pages, root, min_partitions=8, run_id="lin-values")
+    frames = []
+    real_frame = job.lineage_frame
+
+    def spy(*args):
+        frames.append(real_frame(*args))
+        return frames[-1]
+
+    job.lineage_frame = spy
+    try:
+        run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
+        real_commit = man.commit_partitions
+        man.commit_partitions = lambda wave: (_ for _ in ()).throw(_Kill())
+        with pytest.raises(_Kill):
+            run_extract_job(spark, pages, man, wave_size=4)
+        man.commit_partitions = real_commit
+        resumed_parts = man.pending_partitions()
+        resumed = run_extract_job(spark, pages, man, wave_size=4)
+        retried = retry_failed(spark, pages, man)
+    finally:
+        job.lineage_frame = real_frame
+    return {
+        "manifest": man, "frames": frames, "resumed": resumed,
+        "resumed_parts": resumed_parts, "retried": retried,
+    }
+
+
+def test_lineage_values_match_committed_rows(spark, interrupted_run):
+    """Every lineage row's doc_count / byte_count / checksum equals the
+    aggregate recomputed from the committed rows (read_extracted for the
+    extract waves, the retry attempt's own rows for the retry), and
+    docs_processed counts exactly the resumed wave."""
+    from engine.extract.core import EXTRACTOR_VERSION
+
+    man, retried = interrupted_run["manifest"], interrupted_run["retried"]
+    assert interrupted_run["resumed"]["complete"]
+    assert interrupted_run["resumed"]["waves_run"] == 1
+    assert retried["retried"] > 0
+    want = {
+        ("extract", p): v
+        for p, v in _expected_lineage(read_extracted(spark, man), "text").items()
+    }
+    attempt_rows = spark.read.parquet(man.extracted_path + "_retry").where(
+        F.col("attempt") == retried["attempt"]
+    )
+    want.update(
+        (("retry", p), v)
+        for p, v in _expected_lineage(attempt_rows, "status").items()
+    )
+    lin = read_lineage(spark, man).collect()
+    got = {
+        (r["stage"], r["partition_id"]):
+            (r["doc_count"], r["byte_count"], r["checksum"])
+        for r in lin
+    }
+    assert got == want
+    # one row per (stage, partition): the resume overwrote the killed
+    # wave's orphan lineage file instead of adding to it
+    assert len(lin) == len(got)
+    assert sum(stage == "extract" for stage, _ in got) == 8
+    assert {(r["run_id"], r["extractor_version"]) for r in lin} == {
+        ("lin-values", EXTRACTOR_VERSION)
+    }
+    assert all(r["wall_ms"] >= 0 for r in lin)
+    assert interrupted_run["resumed"]["docs_processed"] == sum(
+        want[("extract", p)][0] for p in interrupted_run["resumed_parts"]
+    )
+
+
+def test_lineage_frames_are_python_free(interrupted_run):
+    """Lineage is job-path bookkeeping: every frame the extract waves and
+    the retry wrote must plan as a pure JVM aggregate (no collected rows
+    re-parallelized from Python, no Python UDF or Arrow map)."""
+    frames = interrupted_run["frames"]
+    assert len(frames) == 4  # committed, killed, resumed wave + the retry
+    for df in frames:
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
+                     "MapInArrow"):
+            assert node not in plan, plan
+
+
 def test_rollup_metrics(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, min_partitions=8, run_id="rollup-test")
@@ -123,6 +243,22 @@ def test_rollup_metrics(spark, pages, tmp_path):
     assert len(grand) == 1 and len(per_run) == 1 and len(per_part) == 8
     assert grand[0]["docs"] == pages.count()
     assert per_run[0]["docs_per_sec"] is not None and per_run[0]["docs_per_sec"] > 0
+    # each wave file repeats its wall_ms on all 4 of its partition rows; the
+    # run and grand levels count every wave's wall exactly once
+    walls = [
+        spark.read.parquet(str(p)).select("wall_ms").distinct().collect()
+        for p in man.lineage_dir.glob("wave-*.parquet")
+    ]
+    assert len(walls) == 2 and all(len(w) == 1 for w in walls)
+    run_wall = sum(w[0]["wall_ms"] for w in walls)
+    assert per_run[0]["wall_ms"] == grand[0]["wall_ms"] == run_wall
+    assert per_run[0]["n_rows"] == 8
+    if run_wall:
+        assert per_run[0]["docs_per_sec"] == pytest.approx(
+            pages.count() / (run_wall / 1000.0)
+        )
+    # per-partition rows keep the wall of the wave that committed them
+    assert {r["wall_ms"] for r in per_part} == {w[0]["wall_ms"] for w in walls}
 
 
 def test_rollup_hosts(spark, pages, tmp_path):
@@ -247,9 +383,6 @@ def test_kill_between_write_and_commit_no_duplicates(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, min_partitions=12, run_id="orphan-test")
     run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
-
-    class _Kill(RuntimeError):
-        pass
 
     real_commit = man.commit_partitions
     man.commit_partitions = lambda wave: (_ for _ in ()).throw(_Kill())
@@ -617,9 +750,11 @@ def test_empty_corpus_run_still_reads_as_empty(spark, pages, tmp_path):
     man = enqueue(
         spark, pages.limit(0), root, min_partitions=4, run_id="empty-test"
     )
-    run_extract_job(spark, pages.limit(0), man, wave_size=4)
+    r = run_extract_job(spark, pages.limit(0), man, wave_size=4)
     assert man.is_complete()
+    assert r["waves_run"] == 1 and r["docs_processed"] == 0
     assert read_extracted(spark, man).count() == 0
+    assert read_lineage(spark, man).count() == 0
 
 
 def test_increment_refuses_empty_base_set(spark, pages, tmp_path):
