@@ -98,11 +98,21 @@ def _unescape(text: str) -> str:
 
 
 _WS_RE = re.compile(r"\s+")
-_TAG_NAME_RE = re.compile(r"[a-zA-Z][a-zA-Z0-9:-]*")
-# one C-level scan finds AND classifies the next markup candidate:
-# g1 comment, g2 decl/PI, g3(+g4) close tag, g5 open tag; bare '<' otherwise
-_MARKUP_RE = re.compile(
-    r"<(?:(!--)|([!?])|(/)([a-zA-Z][a-zA-Z0-9:-]*)?|([a-zA-Z][a-zA-Z0-9:-]*)|)"
+# One match per markup token, with the text run before it (g1). Then one of:
+# g2 comment, g3 declaration/PI, g4+g5 close tag (name, end), g6+g7 open tag
+# (name, attribute segment), g8 bare '<' (no tag name follows: it is text);
+# or nothing at the end of the input. m.lastindex names the kind. An open
+# tag ends at the first '>' outside quoted attribute values; an unclosed
+# comment, quote or tag runs to the end of the input.
+_TOKEN_RE = re.compile(
+    r"([^<]+)?(?:<(?:"
+    r"!--(?s:.*?)(-->|\Z)"
+    r"|[!?][^>]*(>|\Z)"
+    r"|/([a-zA-Z][a-zA-Z0-9:-]*)[^>]*(>|\Z)"
+    r"|([a-zA-Z][a-zA-Z0-9:-]*)"
+    r"""((?:[^>"']+|"[^"]*(?:"|\Z)|'[^']*(?:'|\Z))*+)(?:>|\Z)"""
+    r"|()"
+    r")|\Z)"
 )
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
@@ -112,6 +122,13 @@ _ATTR_RE = re.compile(
 @dataclass(slots=True)
 class Block:
     """One segment of running text between block-tag boundaries.
+
+    A block that starts under an ignored element (head/nav/header/footer/
+    aside/form/select) carries only `ignored`, `n_words` and
+    `n_anchor_words`: it never reaches the text, the spans, the container
+    scores or the page metrics, but the classifier still reads its word
+    count and link density as the neighbour of a kept block. Its other
+    fields keep their defaults.
 
     slots=True (r6): ~86k Block/_Elem instances per 3k documents sit on
     the tokenizer's hot path; slotted attribute access and construction
@@ -142,6 +159,9 @@ class Block:
 
 @dataclass(slots=True)
 class _Elem:
+    """An open element. Inside an ignored subtree only `tag` and `ignored`
+    are read, so those entries leave the other fields empty."""
+
     tag: str
     path: str
     ignored: bool
@@ -154,6 +174,7 @@ class _Elem:
 # shared root state for an empty element stack (immutable by convention —
 # avoids one _Elem allocation per text run outside any element)
 _ROOT_ELEM = _Elem("", "", False, False, False, "", False)
+_HEADING_TAGS = frozenset(("h1", "h2", "h3", "h4", "h5", "h6", "title"))
 
 
 def _parse_attrs(raw: str) -> dict[str, str]:
@@ -168,14 +189,30 @@ def _parse_attrs(raw: str) -> dict[str, str]:
     return attrs
 
 
+def _block(
+    st: _Elem, words: list[str], n_words: int, n_anchor: int, start: int, end: int
+) -> Block:
+    """The finished text block that started under element `st`."""
+    if st.ignored:
+        return Block("", n_words, n_anchor, [], -1, -1, True)
+    return Block(
+        st.path or "html", n_words, n_anchor, words, start, end, False,
+        st.neg, st.pos, st.container or "html", st.heading,
+    )
+
+
 def tokenize_blocks(src: str) -> tuple[list[Block], int]:
     """Single-pass tag scan → list of text Blocks. Returns (blocks, n_tags).
 
     Never raises on malformed markup: stray '<' becomes text, unclosed tags
     close implicitly at EOF, mismatched closes pop to the nearest match.
+
+    Work the later phases never read is skipped: an element opened inside
+    an ignored subtree pushes a tag-only stack entry (no node path, sibling
+    counter, class/id hint, container or heading), and a block that starts
+    there keeps word counts only (see Block).
     """
     n = len(src)
-    i = 0
     n_tags = 0
     blocks: list[Block] = []
     stack: list[_Elem] = []
@@ -187,198 +224,182 @@ def tokenize_blocks(src: str) -> tuple[list[Block], int]:
     # the stack pops BELOW its depth (an unclosed <a> cannot leak past the
     # close of the element that contained it)
     anchor_opens: list[int] = []
-    cur: Block | None = None
+    # stack depths of the open <head> elements, innermost last: a body-
+    # content tag closes the innermost one without walking the stack
+    head_opens: list[int] = []
+    # the block being filled (none while n_words == 0): its word and anchor
+    # word counts, the element it started in, and — unless that element is
+    # ignored (keep False) — its words and first/last source offsets
+    words: list[str] = []
+    n_words = n_anchor = 0
+    start = end = 0
+    opened = _ROOT_ELEM
+    keep = True
     low: str | None = None
     # r6 hot-path bindings: one LOAD_FAST instead of a global/attribute
-    # lookup per tag (the loop body runs ~100x per document)
-    _search = _MARKUP_RE.search
-    _find = src.find
+    # lookup per token
+    _tokens = _TOKEN_RE.finditer
+    _unesc = _html_std.unescape
     _VOID, _RAW, _BLOCK = _VOID_TAGS, _RAWTEXT_TAGS, _BLOCK_TAGS
     _HEADONLY, _IGNORE = _HEAD_ONLY_TAGS, _IGNORE_SUBTREE_TAGS
 
-    def state() -> _Elem:
-        if stack:
-            return stack[-1]
-        return _ROOT_ELEM
-
-    def flush() -> None:
-        nonlocal cur
-        if cur is not None and cur.words:
-            blocks.append(cur)
-        cur = None  # lazily re-created on next text run (hot path)
-
-    def add_text(run: str, start: int, end: int) -> None:
-        nonlocal cur
-        # str.split() == \s+-split + strip + drop-empties, but in C;
-        # the _unescape fast path ('&'-free) is inlined here — most runs
-        # carry no entity
-        words = (_html_std.unescape(run) if "&" in run else run).split()
-        if not words:
-            return
-        if cur is None:
-            cur = Block()
-        if not cur.words:
-            st = stack[-1] if stack else _ROOT_ELEM
-            cur.node_path = st.path or "html"
-            cur.start = start
-            cur.ignored = st.ignored
-            cur.neg_hint = st.neg
-            cur.pos_hint = st.pos
-            cur.container = st.container or "html"
-            cur.heading = st.heading
-        cur.words.extend(words)
-        cur.n_words += len(words)
-        if anchor_opens:
-            cur.n_anchor_words += len(words)
-        cur.end = end
-
-    while i < n:
-        m = _search(src, i)
-        if m is None:
-            add_text(src[i:], i, n)
-            break
-        lt, me = m.span()  # one C call for both offsets
-        if lt > i:
-            add_text(src[i:lt], i, lt)
-        # r6: dispatch on m.lastindex (comment=1, decl=2, bare close=3,
-        # named close=4, open=5, bare '<'=None) — no 5-tuple allocation,
-        # no per-branch truthiness tests, most-common case (open) first
-        li = m.lastindex
-        if li == 5:  # open tag (regex guarantees a non-empty name)
-            pass
-        elif li is None or li == 3:  # bare '<' / '</' with no tag name
-            add_text("<", lt, lt + 1)
-            i = lt + 1
-            continue
-        elif li == 1:  # <!--
-            close = _find("-->", lt + 4)
-            i = n if close == -1 else close + 3
-            n_tags += 1
-            continue
-        elif li == 2:  # <! / <?
-            close = _find(">", lt + 2)
-            i = n if close == -1 else close + 1
-            n_tags += 1
-            continue
-        else:  # li == 4: close tag with a name
-            tag = m.group(4).lower()
-            close = _find(">", me)
-            i = n if close == -1 else close + 1
-            n_tags += 1
-            if tag == "a":
-                if anchor_opens:
-                    anchor_opens.pop()
-                continue
-            if tag in _BLOCK:
-                if cur is not None:  # inlined flush() (hot path)
-                    if cur.words:
-                        blocks.append(cur)
-                    cur = None
-            # pop to nearest matching open tag (tolerates mis-nesting)
-            for d in range(len(stack) - 1, -1, -1):
-                if stack[d].tag == tag:
-                    del stack[d:]
-                    del child_counts[d + 1 :]
-                    break
-            # implicit </a>, BLOCK closes only: an anchor opened at a depth
-            # the pop removed is dead (an unclosed <a> must not poison
-            # content after its containing block), while anchors opened
-            # ABOVE the popped depth — the card pattern
-            # <a><div>…</div> tail</a> — stay open. Inline closes
-            # (</span>, </b>) never terminate an anchor: browsers
-            # reconstruct formatting elements across them, so
-            # '<span><a>x</span> y' keeps y as anchor text.
-            if tag in _BLOCK:
-                while anchor_opens and anchor_opens[-1] > len(stack):
-                    anchor_opens.pop()
-            continue
-        tag = m.group(5).lower()
-        # find tag end, honouring quoted attribute values. Fast path: C-level
-        # find('>'); the char-by-char scan only runs when the attr segment
-        # contains quotes (which may hide a '>').
-        j = _find(">", me)
-        if j == -1:
-            j = n
-        elif _find('"', me, j) != -1 or _find("'", me, j) != -1:
-            # ranged find (r6): same predicate as '"' in src[me:j] with
-            # no substring copy per tag
-            j = me
-            in_q = ""
-            while j < n:
-                c = src[j]
-                if in_q:
-                    if c == in_q:
-                        in_q = ""
-                elif c == '"' or c == "'":
-                    in_q = c
-                elif c == ">":
-                    break
-                j += 1
-        # fast path: no trailing-whitespace rstrip unless the last char is
-        # ws; the attr segment is only SLICED when a class/id hint needs
-        # parsing below (r6 — the slice per tag was measurable)
-        last = src[j - 1] if j > me else ""
-        self_close = last == "/" or (
-            last.isspace() and src[me:j].rstrip().endswith("/")
-        )
-        i = j + 1 if j < n else n
-        n_tags += 1
-
-        if tag in _BLOCK:
-            if cur is not None:  # inlined flush() (hot path)
-                if cur.words:
-                    blocks.append(cur)
-                cur = None
-        if tag not in _HEADONLY and tag not in ("html", "head"):
-            # implicit </head> on the first body-content tag (recovery)
-            for d in range(len(stack) - 1, -1, -1):
-                if stack[d].tag == "head":
-                    del stack[d:]
-                    del child_counts[d + 1 :]
+    resume = 0
+    while True:
+        # one C-level regex scan finds and classifies every token; it only
+        # restarts after a raw-text element, whose content is skipped
+        for m in _tokens(src, resume):
+            run = m.group(1)
+            if run is not None:
+                # str.split() == \s+-split + strip + drop-empties, but in C;
+                # most runs carry no entity
+                run_words = (_unesc(run) if "&" in run else run).split()
+                if run_words:
+                    if not n_words:
+                        opened = stack[-1] if stack else _ROOT_ELEM
+                        keep = not opened.ignored
+                        start = m.start()
+                    n_words += len(run_words)
+                    if anchor_opens:
+                        n_anchor += len(run_words)
+                    if keep:
+                        words += run_words
+                        end = m.end(1)
+            li = m.lastindex
+            if li == 7:  # open tag
+                pass
+            elif li == 5:  # close tag
+                tag = m.group(4).lower()
+                n_tags += 1
+                if tag == "a":
+                    if anchor_opens:
+                        anchor_opens.pop()
+                    continue
+                if tag in _BLOCK and n_words:
+                    blocks.append(_block(opened, words, n_words, n_anchor, start, end))
+                    if keep:
+                        words = []
+                    n_words = n_anchor = 0
+                # pop to nearest matching open tag (tolerates mis-nesting);
+                # the well-nested case closes the top of the stack
+                if stack and stack[-1].tag == tag:
+                    stack.pop()
+                    child_counts.pop()
+                    if head_opens and head_opens[-1] == len(stack):
+                        head_opens.pop()
+                else:
+                    for d in range(len(stack) - 2, -1, -1):
+                        if stack[d].tag == tag:
+                            del stack[d:]
+                            del child_counts[d + 1 :]
+                            while head_opens and head_opens[-1] >= d:
+                                head_opens.pop()
+                            break
+                # implicit </a>, BLOCK closes only: an anchor opened at a
+                # depth the pop removed is dead (an unclosed <a> must not
+                # poison content after its containing block), while anchors
+                # opened ABOVE the popped depth — the card pattern
+                # <a><div>…</div> tail</a> — stay open. Inline closes
+                # (</span>, </b>) never terminate an anchor: browsers
+                # reconstruct formatting elements across them, so
+                # '<span><a>x</span> y' keeps y as anchor text.
+                if tag in _BLOCK:
                     while anchor_opens and anchor_opens[-1] > len(stack):
                         anchor_opens.pop()
-                    break
-        # void/self-closing check must precede the anchor-open record: a
-        # self-closing <a/> has no matching </a>, so recording it would
-        # leak an open anchor and classify the document tail as anchor text
-        if tag in _VOID or self_close:
-            continue
-        if tag == "a":
-            anchor_opens.append(len(stack))
-            continue
-        if tag in _RAW:
-            # skip raw content up to the matching close tag (case-insensitive)
-            if low is None:
-                low = src.lower()  # lazily, once per document
-            close = low.find("</" + tag, i)
-            if close == -1:
-                i = n
+                continue
+            elif li == 8:  # bare '<' / '</' with no tag name: text
+                if not n_words:
+                    opened = stack[-1] if stack else _ROOT_ELEM
+                    keep = not opened.ignored
+                    start = m.end() - 1
+                n_words += 1
+                if anchor_opens:
+                    n_anchor += 1
+                if keep:
+                    words.append("<")
+                    end = m.end()
+                continue
+            else:  # comment / declaration; or the end of the input
+                if li is not None and li != 1:
+                    n_tags += 1
+                continue
+            tag = m.group(6).lower()
+            attrs = m.group(7)
+            # a bare tag (<p>) has no attribute segment: no self-close or
+            # class/id check; otherwise no trailing-whitespace rstrip unless
+            # the last char is whitespace
+            if attrs:
+                last = attrs[-1]
+                self_close = last == "/" or (
+                    last.isspace() and attrs.rstrip().endswith("/")
+                )
             else:
-                gt = _find(">", close)
-                i = n if gt == -1 else gt + 1
+                self_close = False
             n_tags += 1
-            continue
 
-        st = stack[-1] if stack else _ROOT_ELEM
-        counts = child_counts[-1]
-        idx = counts.get(tag, 0) + 1
-        counts[tag] = idx
-        path = f"{st.path}/{tag}[{idx}]" if st.path else f"{tag}[{idx}]"
-        neg, pos = st.neg, st.pos
-        # attr parse only when a class/id hint can possibly be present
-        # (ranged find == substring membership on src[me:j], zero-copy)
-        if _find("class", me, j) != -1 or _find("id", me, j) != -1:
-            attrs = _parse_attrs(src[me:j])
-            hint_src = (attrs.get("class", "") + " " + attrs.get("id", "")).strip()
-            neg = neg or bool(hint_src and _NEGATIVE_HINT.search(hint_src))
-            pos = pos or bool(hint_src and _POSITIVE_HINT.search(hint_src))
-        ignored = st.ignored or tag in _IGNORE
-        container = path if tag in _CONTAINER_TAGS else st.container
-        heading = st.heading or tag in ("h1", "h2", "h3", "h4", "h5", "h6", "title")
-        stack.append(_Elem(tag, path, ignored, neg, pos, container, heading))
-        child_counts.append({})
+            if tag in _BLOCK and n_words:
+                blocks.append(_block(opened, words, n_words, n_anchor, start, end))
+                if keep:
+                    words = []
+                n_words = n_anchor = 0
+            if head_opens and tag not in _HEADONLY and tag != "html" and tag != "head":
+                # implicit </head> on the first body-content tag (recovery)
+                d = head_opens.pop()
+                del stack[d:]
+                del child_counts[d + 1 :]
+                while anchor_opens and anchor_opens[-1] > d:
+                    anchor_opens.pop()
+            # void/self-closing check must precede the anchor-open record: a
+            # self-closing <a/> has no matching </a>, so recording it would
+            # leak an open anchor and classify the document tail as anchor
+            # text
+            if self_close or tag in _VOID:
+                continue
+            if tag == "a":
+                anchor_opens.append(len(stack))
+                continue
+            if tag in _RAW:
+                # skip raw content up to the matching close tag
+                # (case-insensitive), then rescan from there
+                if low is None:
+                    low = src.lower()  # lazily, once per document
+                close = low.find("</" + tag, m.end())
+                if close == -1:
+                    resume = n
+                else:
+                    gt = src.find(">", close)
+                    resume = n if gt == -1 else gt + 1
+                n_tags += 1
+                break
 
-    flush()
+            st = stack[-1] if stack else _ROOT_ELEM
+            if st.ignored or tag in _IGNORE:
+                if tag == "head":
+                    head_opens.append(len(stack))
+                stack.append(_Elem(tag, "", True, False, False, "", False))
+                child_counts.append({})
+                continue
+            counts = child_counts[-1]
+            idx = counts.get(tag, 0) + 1
+            counts[tag] = idx
+            path = f"{st.path}/{tag}[{idx}]" if st.path else f"{tag}[{idx}]"
+            neg, pos = st.neg, st.pos
+            # attr parse only when a class/id hint can possibly be present
+            if attrs and ("class" in attrs or "id" in attrs):
+                parsed = _parse_attrs(attrs)
+                hint_src = (
+                    parsed.get("class", "") + " " + parsed.get("id", "")
+                ).strip()
+                neg = neg or bool(hint_src and _NEGATIVE_HINT.search(hint_src))
+                pos = pos or bool(hint_src and _POSITIVE_HINT.search(hint_src))
+            container = path if tag in _CONTAINER_TAGS else st.container
+            heading = st.heading or tag in _HEADING_TAGS
+            stack.append(_Elem(tag, path, False, neg, pos, container, heading))
+            child_counts.append({})
+        else:
+            break
+
+    if n_words:
+        blocks.append(_block(opened, words, n_words, n_anchor, start, end))
     return blocks, n_tags
 
 
@@ -412,14 +433,15 @@ def classify_blocks(blocks: list[Block]) -> None:
     """Set .content/.rejected_short in place; apply structural overrides."""
     n = len(blocks)
     for k, b in enumerate(blocks):
-        prev = blocks[k - 1] if k > 0 else _EMPTY_BLOCK
-        nxt = blocks[k + 1] if k + 1 < n else _EMPTY_BLOCK
-        b.content, b.rejected_short = _classify_triple(prev, b, nxt)
         if b.ignored or b.neg_hint:
             # structural boilerplate: nav/header/footer/aside/form subtree or
             # negative class/id hint — overrides the density verdict.
             b.content = False
             b.rejected_short = False
+            continue
+        prev = blocks[k - 1] if k > 0 else _EMPTY_BLOCK
+        nxt = blocks[k + 1] if k + 1 < n else _EMPTY_BLOCK
+        b.content, b.rejected_short = _classify_triple(prev, b, nxt)
     # headline rule: a heading immediately before a content block is content.
     for k in range(n - 1):
         b = blocks[k]
@@ -647,12 +669,18 @@ def extract_html(data: bytes) -> dict:
     best_container, best_score = score_containers(blocks)
     apply_tiebreak(blocks, best_container)
 
-    kept = [b for b in blocks if b.content]
-    total_words = sum(b.n_words for b in blocks if not b.ignored)
-    anchor_words = sum(b.n_anchor_words for b in blocks if not b.ignored)
-    boiler_words = sum(
-        b.n_words for b in blocks if not b.content and not b.ignored
-    )
+    # one pass: ignored blocks are never content and feed no metric
+    kept: list[Block] = []
+    total_words = anchor_words = boiler_words = 0
+    for b in blocks:
+        if b.ignored:
+            continue
+        total_words += b.n_words
+        anchor_words += b.n_anchor_words
+        if b.content:
+            kept.append(b)
+        else:
+            boiler_words += b.n_words
     text = "\n".join(b.text for b in kept)
     spans = [
         {"node_path": b.node_path, "start": b.start, "end": b.end} for b in kept

@@ -7,24 +7,16 @@ once per batch, the whole R1–R5 stage chain of the reference
 ONE fused function over the batch (SURVEY.md §3.3 dedup note), and the
 (text, spans, metrics) result crosses back once.
 
-`mapInArrow` is the default surface (SURVEY §3.3's target): the measured A/B
-on the 150k-doc bench corpus (interleaved min-of-3 at local[32]) put the
-arrow body at 34.4k docs/s vs 30.7k for the mapInPandas twin (+12%) — the
-win is skipping the Arrow→pandas→Arrow hop on both sides of the channel;
-both paths still materialize Python bytes for the tokenizer. The pandas
-body is kept as `run_extract_pandas` (same output, byte-identical — pinned
-in tests/test_spark_extract.py) because a scalar-iterator pandas surface is
-what most Spark shops reach for first, and the twin documents exactly what
-the swap buys. Neither uses a scalar pandas_udf: the output is a 10-column
+`mapInArrow` is the one surface (SURVEY §3.3's target): the measured A/B on
+the 150k-doc bench corpus (interleaved min-of-3 at local[32]) put the arrow
+body at 34.4k docs/s vs 30.7k for a byte-identical mapInPandas body (+12%)
+— the win is skipping the Arrow→pandas→Arrow hop on both sides of the
+channel. No scalar pandas_udf either: the output is a 10-column
 struct-per-row (spans is array<struct>) — one pass, one schema, no column
 reassembly on the JVM side.
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 from engine.extract.core import extract_document
 from engine.schema import EXTRACTED_DDL
@@ -43,41 +35,13 @@ _OUT_COLS = [
 ]
 
 
-def extract_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """mapInPandas body: (url, html, ...) batches → extracted batches."""
-    for pdf in batches:
-        urls = pdf["url"].tolist()
-        htmls = pdf["html"].tolist()
-        # column-wise assembly (dict-of-lists) — cheaper pandas/Arrow
-        # conversion than a list of per-row dicts
-        cols: dict[str, list] = {c: [] for c in _OUT_COLS}
-        cols["url"] = urls
-        for html in htmls:
-            rec = extract_document(html)
-            for c in _OUT_COLS[1:]:
-                cols[c].append(rec[c])
-        yield pd.DataFrame(cols, columns=_OUT_COLS)
-
-
-def run_extract_pandas(pages_df):
-    """mapInPandas variant — the measured -12% twin of run_extract (see
-    module doc); byte-identical output, kept as the documented alternative
-    surface."""
-    return pages_df.select("url", "html").mapInPandas(
-        extract_batches, schema=EXTRACTED_DDL
-    )
-
-
 def extract_batches_arrow(batches):
-    """mapInArrow body — the pandas-free twin of extract_batches. Skips the
-    Arrow→pandas→Arrow conversion: html bytes come out of the RecordBatch
-    via to_pylist() (both paths must materialize Python bytes for the
-    tokenizer), and the output batch is assembled straight into pyarrow
-    arrays against the declared schema. Byte-identical to the pandas path
-    by construction (same extract_document), pinned in
-    tests/test_spark_extract.py."""
+    """mapInArrow body: (url, html[, partition_id]) batches → extracted
+    batches. html bytes come out of the RecordBatch via to_pylist() (the
+    tokenizer needs Python bytes), and the output batch is assembled
+    straight into pyarrow arrays against the declared schema. A batch that
+    carries partition_id (the wave-committed job path: partitioned writes
+    and lineage) gets it passed through as the last column."""
     import pyarrow as pa
 
     from engine.schema import extracted_arrow_schema
@@ -92,26 +56,12 @@ def extract_batches_arrow(batches):
             rec = extract_document(html)
             for c in _OUT_COLS[1:]:
                 cols[c].append(rec[c])
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[c], type=out_schema.field(c).type) for c in _OUT_COLS],
-            schema=out_schema,
-        )
-
-
-def extract_batches_arrow_with_pid(batches):
-    """mapInArrow body with partition_id passthrough — the job-path twin of
-    extract_batches_arrow (wave-committed runs carry partition_id through
-    the channel for partitioned writes + lineage). Same extract_document,
-    same +12% arrow surface as run_extract."""
-    import pyarrow as pa
-
-    for batch in batches:
-        pid = batch.column("partition_id")
-        for out in extract_batches_arrow(iter([batch])):
-            yield pa.RecordBatch.from_arrays(
-                [out.column(i) for i in range(out.num_columns)] + [pid],
-                names=list(out.schema.names) + ["partition_id"],
-            )
+        arrays = [pa.array(cols[c], type=out_schema.field(c).type) for c in _OUT_COLS]
+        schema = out_schema
+        if "partition_id" in batch.schema.names:
+            arrays.append(batch.column("partition_id"))
+            schema = out_schema.append(batch.schema.field("partition_id"))
+        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 def run_extract(pages_df):

@@ -52,10 +52,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.extract.core import EXTRACTOR_VERSION
-from engine.extract.udf import (
-    dedup_latest_crawl,
-    extract_batches_arrow_with_pid,
-)
+from engine.extract.udf import dedup_latest_crawl, extract_batches_arrow
 from engine.manifest import RunManifest
 from engine.schema import EXTRACTED_DDL
 
@@ -349,7 +346,7 @@ def run_extract_job(
                 F.col("partition_id").isin(wave)
             )
         extracted = batch.select("url", "html", "partition_id").mapInArrow(
-            extract_batches_arrow_with_pid,
+            extract_batches_arrow,
             schema=EXTRACTED_DDL + ", partition_id int",
         )
         if sink_table:
@@ -596,7 +593,7 @@ def retry_failed(
     attempt = _next_retry_attempt(manifest)
     t0 = time.monotonic()
     redone = todo.select("url", "html", "partition_id").mapInArrow(
-        extract_batches_arrow_with_pid,
+        extract_batches_arrow,
         schema=EXTRACTED_DDL + ", partition_id int",
     ).withColumn("attempt", F.lit(attempt))
     retry_path = manifest.extracted_path + "_retry"

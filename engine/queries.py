@@ -3468,9 +3468,11 @@ def q_incremental_dedup(spark, sf_dir):
         .where(F.col("df") <= MAX_SHINGLE_DF)
         .drop("df")
     )
+    # release the previous call's persist whichever side of the gate this
+    # call lands on: a below-gate call must not leave it cached
+    _release_round_caches(_INC_DEDUP_CACHED, spark)
     nbytes = _table_bytes(sf_dir, "documents")
     if nbytes is None or nbytes >= _INC_DEDUP_PERSIST_MIN_BYTES:
-        _release_round_caches(_INC_DEDUP_CACHED, spark)
         sh = sh.persist()
         _INC_DEDUP_CACHED.append(sh)
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))

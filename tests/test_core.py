@@ -118,6 +118,95 @@ def test_tokenizer_unclosed_head_recovery():
     assert kept and kept[0].text == "kept words"
 
 
+def _block_view(blocks):
+    """What the later phases read of each block: an ignored block only
+    feeds its word/anchor counts to its neighbours' verdicts."""
+    return [
+        ("ignored", b.n_words, b.n_anchor_words)
+        if b.ignored
+        else (b.node_path, b.text, b.start, b.end, b.container, b.heading,
+              b.n_anchor_words)
+        for b in blocks
+    ]
+
+
+@pytest.mark.parametrize(
+    "nav_words, text",
+    [
+        (5, "short words\none, two, three, four and five"),
+        (4, "one, two, three, four and five"),
+    ],
+)
+def test_ignored_neighbour_word_count_decides_short_block(nav_words, text):
+    """An ignored <nav> block still counts as the previous block of the
+    classifier triple: more than 4 words keeps the 2-word paragraph after
+    it; with 4 it is short-rejected, and the tie-break cannot promote it
+    because the comma-rich second container wins the score."""
+    nav = " ".join(["menu"] * nav_words)
+    src = (
+        f"<body><nav>{nav}</nav><div><p>short words</p></div>"
+        "<div><p>one, two, three, four and five</p></div></body>"
+    )
+    blocks, _ = tokenize_blocks(src)
+    assert _block_view(blocks)[0] == ("ignored", nav_words, 0)
+    assert extract_document(src.encode())["text"] == text
+
+
+@pytest.mark.parametrize(
+    "src, expected",
+    [
+        # the first body tag closes only the innermost open head
+        (
+            "<html><head><head><title>T</title><p>one</p><p>two</p></html>",
+            [("ignored", 1, 0), ("ignored", 1, 0),
+             ("html[1]/p[1]", "two", 47, 50, "html", False, 0)],
+        ),
+        # an explicit </head> pops the inner one; <p> closes the outer
+        (
+            "<html><head><head></head><p>one</p><p>two</p></html>",
+            [("html[1]/p[1]", "one", 28, 31, "html", False, 0),
+             ("html[1]/p[2]", "two", 38, 41, "html", False, 0)],
+        ),
+        # a head opened inside <nav> closes, the nav stays open
+        (
+            "<body><nav><head><p>x y</p></nav><p>after words</p></body>",
+            [("ignored", 2, 0),
+             ("body[1]/p[1]", "after words", 36, 47, "body[1]", False, 0)],
+        ),
+        (
+            "<div><nav>menu <head>x</nav> y <p>z</p></div>",
+            [("ignored", 1, 0), ("ignored", 1, 0),
+             ("div[1]", "y", 28, 31, "div[1]", False, 0),
+             ("div[1]/p[1]", "z", 34, 35, "div[1]", False, 0)],
+        ),
+        # a self-closed <head/> opens nothing
+        (
+            "<html><head/><title>T</title><div><p>words here</p></div>",
+            [("html[1]/title[1]", "T", 20, 21, "html", True, 0),
+             ("html[1]/div[1]/p[1]", "words here", 37, 47, "html[1]/div[1]",
+              False, 0)],
+        ),
+        # a mis-nested </div> pops the open head with it; nothing opened
+        # later may be closed as if that head were still open
+        (
+            "<body><div><head></div><section><div><p>words</p></div>"
+            "</section></body>",
+            [("body[1]/section[1]/div[1]/p[1]", "words", 40, 45,
+              "body[1]/section[1]/div[1]", False, 0)],
+        ),
+        # an anchor is body content: it closes the head
+        (
+            "<html><head><a href=x>lnk words</a><div><a>in</a> out</div>",
+            [("html[1]", "lnk words", 22, 31, "html", False, 2),
+             ("html[1]/div[1]", "in out", 43, 53, "html[1]/div[1]", False, 1)],
+        ),
+    ],
+)
+def test_tokenizer_head_recovery_cases(src, expected):
+    blocks, _ = tokenize_blocks(src)
+    assert _block_view(blocks) == expected
+
+
 def test_tokenizer_stray_lt_is_text():
     blocks, _ = tokenize_blocks("<body><p>3 < 5 and < stray</p></body>")
     assert blocks[0].text == "3 < 5 and < stray"

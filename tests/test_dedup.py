@@ -192,3 +192,23 @@ def test_fingerprint_no_python_udf(spark):
     ):
         plan = q(spark, SF)._jdf.queryExecution().executedPlan().toString()
         assert "Python" not in plan, q.__name__
+
+
+def test_incremental_dedup_below_gate_call_releases_previous_persist(spark):
+    """The shingle-postings persist is size-gated; the previous call's
+    persist must be released on every call, so a below-gate call after an
+    above-gate one leaves no persisted shingle frame behind."""
+    from unittest import mock
+
+    from pyspark import StorageLevel
+
+    from engine import queries as Q
+
+    with mock.patch.object(Q, "_INC_DEDUP_PERSIST_MIN_BYTES", 0):
+        Q.q_incremental_dedup(spark, SF)  # above the gate: persists
+    (sh,) = Q._INC_DEDUP_CACHED
+    assert sh.storageLevel != StorageLevel.NONE
+    with mock.patch.object(Q, "_INC_DEDUP_PERSIST_MIN_BYTES", 1 << 62):
+        Q.q_incremental_dedup(spark, SF)  # below the gate
+    assert Q._INC_DEDUP_CACHED == []
+    assert sh.storageLevel == StorageLevel.NONE

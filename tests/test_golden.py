@@ -12,10 +12,20 @@ a hard pass/fail gate.
 from __future__ import annotations
 
 import hashlib
+import random
+import types
 
+from engine.extract import core
 from engine.extract.core import EXTRACTOR_VERSION, extract_document
 from engine.synth import gen_doc
-from tests.golden_tool import FIXTURE_DIR, load_manifest
+from tests.golden_tool import (
+    FIXTURE_DIR,
+    _soup_tags,
+    diff_modules,
+    inputs,
+    load_manifest,
+    tag_soup,
+)
 
 
 def test_extractor_version_matches_frozen():
@@ -51,3 +61,29 @@ def test_golden_byte_identity_match_rate_100():
         matches += 1
     assert not failures, failures
     assert matches == total == len(manifest["docs"])
+
+
+def test_diff_tool_reports_each_changed_field():
+    """`golden_tool.py diff` compares every extract_document field: a core
+    whose n_chars differs is caught on every case, with the field named,
+    and a core compared with itself shows no diff."""
+    stub = types.SimpleNamespace(
+        extract_document=lambda data: dict(extract_document(data), n_chars=-1)
+    )
+    n_cases, n_diffs, first = diff_modules(core, stub, inputs(3, 40), show=2)
+    assert n_cases == n_diffs >= 43
+    assert [set(fields) for _, _, fields in first] == [{"n_chars"}] * 2
+    assert diff_modules(core, core, inputs(3, 40))[1] == 0
+
+
+def test_tag_soup_covers_every_special_tag():
+    """The differential fuzz opens and closes every ignored, raw-text and
+    void tag."""
+    rng, tags = random.Random(0), _soup_tags()
+    soup = b"".join(tag_soup(rng, tags) for _ in range(2000)).decode(
+        "utf-8", errors="replace"
+    )
+    special = (core._IGNORE_SUBTREE_TAGS | core._RAWTEXT_TAGS
+               | core._VOID_TAGS)
+    for tag in special:
+        assert f"<{tag}" in soup and f"</{tag}" in soup, tag

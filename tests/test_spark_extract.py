@@ -108,22 +108,3 @@ def test_spans_ordered_nonoverlapping(extracted):
         spans = r["spans"]
         for a, b in zip(spans, spans[1:]):
             assert a["start"] < a["end"] <= b["start"] < b["end"]
-
-
-def test_arrow_and_pandas_surfaces_byte_identical(spark):
-    """run_extract (mapInArrow, default) and run_extract_pandas must yield
-    byte-identical rows — the A/B in the module doc is a pure transport
-    swap, never a semantic one."""
-    from engine.extract.udf import run_extract_pandas
-
-    pages = generate_pages(spark, 80, partitions=3).cache()
-    key = lambda r: (  # noqa: E731
-        r.url, r.text,
-        tuple((s.node_path, s.start, s.end) for s in (r.spans or [])),
-        r.n_chars, r.link_density, r.boiler_ratio, r.quality,
-        r.extractor_version, r.status, r.error,
-    )
-    a = sorted(key(r) for r in run_extract(pages).collect())
-    b = sorted(key(r) for r in run_extract_pandas(pages).collect())
-    assert a == b
-    pages.unpersist()
