@@ -214,16 +214,3 @@ class RunManifest:
 
 def _now() -> str:
     return dt.datetime.now(dt.timezone.utc).strftime("%Y-%m-%dT%H:%M:%S.%fZ")
-
-
-def latest_run_id(root: str) -> str | None:
-    """Most recently created run under root (for CLI convenience)."""
-    rootp = pathlib.Path(root)
-    if not rootp.exists():
-        return None
-    runs = sorted(
-        ((p / "manifest.json").stat().st_mtime, p.name)
-        for p in rootp.iterdir()
-        if (p / "manifest.json").exists()
-    )
-    return runs[-1][1] if runs else None

@@ -245,20 +245,39 @@ def test_pagerank_eps_early_exit_and_fixpoint_property(spark):
 
 
 def test_pagerank_construction_survives_stale_cache_entries(spark):
-    """Review finding: _PAGERANK_CACHED may hold DataFrames of a stopped
-    SparkSession (bench.py stops/recreates sessions in-process). A dead
-    handle must not crash query CONSTRUCTION on the next call."""
-    from unittest import mock
-
+    """Review finding: the pagerank call scope may hold DataFrames of a
+    stopped SparkSession (bench.py stops/recreates sessions in-process). A
+    dead handle must not crash query CONSTRUCTION on the next call."""
     from engine import queries as Q
 
     class _Dead:
         def unpersist(self):
             raise RuntimeError("Cannot call methods on a stopped SparkContext")
 
-    patched: list = [_Dead()]
-    with mock.patch.object(Q, "_PAGERANK_CACHED", patched):
-        df = Q.q_pagerank_txn_graph(spark, SF)
-        assert df.schema is not None  # construction completed
-    for cached in patched:  # don't leak this call's persists into the session
-        cached.unpersist()
+    Q._CALL_PERSISTS.setdefault("pagerank", []).append(_Dead())
+    df = Q.q_pagerank_txn_graph(spark, SF)
+    assert df.schema is not None  # construction completed
+    # the slot now holds exactly this call's two persists (edges, nodetab)
+    held = Q._CALL_PERSISTS["pagerank"]
+    assert len(held) == 2
+    assert all(h.sparkSession is spark for h in held)
+
+
+def test_pagerank_construction_raises_on_current_session_release_failure(
+    spark,
+):
+    """The other half of the stale-handle rule: a failed unpersist of a
+    frame from the CURRENT session is a real leak (the frame would stay
+    cached with no owner and the next timed pass would hit a warm cache),
+    so construction must raise instead of skipping it."""
+    from engine import queries as Q
+
+    class _Live:
+        sparkSession = spark
+
+        def unpersist(self):
+            raise RuntimeError("unpersist failed")
+
+    Q._CALL_PERSISTS.setdefault("pagerank", []).append(_Live())
+    with pytest.raises(RuntimeError, match="unpersist failed"):
+        Q.q_pagerank_txn_graph(spark, SF)

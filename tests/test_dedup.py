@@ -206,9 +206,9 @@ def test_incremental_dedup_below_gate_call_releases_previous_persist(spark):
 
     with mock.patch.object(Q, "_INC_DEDUP_PERSIST_MIN_BYTES", 0):
         Q.q_incremental_dedup(spark, SF)  # above the gate: persists
-    (sh,) = Q._INC_DEDUP_CACHED
+    (sh,) = Q._CALL_PERSISTS["incremental_dedup"]
     assert sh.storageLevel != StorageLevel.NONE
     with mock.patch.object(Q, "_INC_DEDUP_PERSIST_MIN_BYTES", 1 << 62):
         Q.q_incremental_dedup(spark, SF)  # below the gate
-    assert Q._INC_DEDUP_CACHED == []
+    assert Q._CALL_PERSISTS["incremental_dedup"] == []
     assert sh.storageLevel == StorageLevel.NONE

@@ -430,10 +430,11 @@ def test_bpe_merge_pass_broadcast_jvm(spark):
     vocab²-bounded sort-limit, never a global sort)."""
     from engine.queries import BPE_ROUNDS, q_bpe_train_merges
 
-    plan = _plan(q_bpe_train_merges(spark, SF, _checkpoint=False))
-    # un-checkpointed, each round's summary re-embeds every prior round's
-    # merge join, so the count exceeds BPE_ROUNDS; the contract is that
-    # merge application is ALWAYS the broadcast shape, never a shuffle
+    plan = _plan(q_bpe_train_merges(spark, SF))
+    # each round's persisted frame prints as an InMemoryRelation carrying
+    # its cached plan, so every round's summary re-embeds every prior
+    # round's merge join and the count exceeds BPE_ROUNDS; the contract is
+    # that merge application is ALWAYS the broadcast shape, never a shuffle
     assert plan.count("BroadcastNestedLoopJoin") >= BPE_ROUNDS, plan
     assert "SortMergeJoin" not in plan, plan
     assert "ShuffledHashJoin" not in plan, plan
@@ -498,7 +499,7 @@ def test_bpe_encode_broadcast_merges_no_cartesian(spark):
     shape), so SMJ is NOT forbidden here."""
     from engine.queries import BPE_ROUNDS, q_bpe_encode_stats
 
-    plan = _plan(q_bpe_encode_stats(spark, SF, _checkpoint=False))
+    plan = _plan(q_bpe_encode_stats(spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") >= 2 * BPE_ROUNDS, plan
     assert "CartesianProduct" not in plan
     assert "TakeOrderedAndProject" in plan, plan
@@ -515,7 +516,7 @@ def test_kmeans_assignment_broadcasts_centroids(spark):
     cartesian fallback."""
     from engine.queries import KMEANS_ITERS, q_kmeans_clusters
 
-    plan = _plan(q_kmeans_clusters(spark, SF, _checkpoint=False))
+    plan = _plan(q_kmeans_clusters(spark, SF))
     assert plan.count("BroadcastNestedLoopJoin") == KMEANS_ITERS, plan
     assert plan.count("IdentityBroadcastMode") == KMEANS_ITERS, plan
     assert "CartesianProduct" not in plan
