@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from engine.pyworker import patch_worker
+
 # Deterministic demo dictionary over the testdata vocabulary (the corpus
 # is synthetic, so "misspellings" are recast as canonicalizations). Real
 # deployments pass their own dict — both paths take it as a parameter.
@@ -91,6 +93,8 @@ def correct_with_broadcast_dict(
     )
 
     def run(batches):
+        # pickled by value: this call makes the worker import `engine`
+        patch_worker()
         d = bc.value
         for pdf in batches:
             corrected, n_tok, n_corr = [], [], []

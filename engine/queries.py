@@ -35,6 +35,11 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+# A Python body defined inside a query function is pickled by value and
+# names no engine module, so unpickling it would not import `engine` on
+# the worker; each such body calls patch_worker() first (engine/pyworker.py)
+from engine.pyworker import patch_worker
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents "
     "embeddings"
@@ -1290,6 +1295,7 @@ def q_embedding_neardup_pairs_fast(spark, sf_dir):
     )
 
     def score_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
+        patch_worker()
         ga, gb = int(pdf["ga"].iloc[0]), int(pdf["gb"].iloc[0])
         ids = pdf["vec_id"].to_numpy()
         mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
@@ -1379,6 +1385,7 @@ def _neardup_lsh_pairs(
     pows = (1 << np.arange(bits)).astype(np.int64)
 
     def band_codes(batches):
+        patch_worker()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1431,6 +1438,7 @@ def _neardup_lsh_pairs(
         joined = cand.join(ea, "vec_a").join(eb, "vec_b")
 
         def verify(batches):
+            patch_worker()
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
@@ -1476,6 +1484,7 @@ def _neardup_lsh_pairs(
     # pair is scored by the same deterministic computation, so the
     # dedup's min(sim) collapses identical copies.
     def band_codes_emb(batches):
+        patch_worker()
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -1499,6 +1508,7 @@ def _neardup_lsh_pairs(
     rep = _block_pair_replicate(spark, banded, _NEARDUP_BLOCKS)
 
     def score_bucket_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
+        patch_worker()
         # normalized BLAS matmul, the exact-fast-kernel formulation:
         # per-pair row materialization ((va*vb).sum(axis=1) over fancy-
         # indexed copies) moved ~2×128 B per scored pair through memory
@@ -2177,6 +2187,7 @@ def q_semdedup_prune_fast(spark, sf_dir):
     t2n, t2d = SEMDEDUP_TAU_NUM**2, SEMDEDUP_TAU_DEN**2
 
     def prune_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
+        patch_worker()
         ga, gb = int(pdf["ga"].iloc[0]), int(pdf["gb"].iloc[0])
         ids = pdf["vec_id"].to_numpy()
         q = np.array(pdf["q"].tolist(), dtype=np.int64)
@@ -3627,7 +3638,11 @@ def q_text_normalize_stats(spark, sf_dir):
     # no type hints: the module-wide `from __future__ import annotations`
     # stringifies them and pyspark's hint inference can't resolve
     # 'pd.Series'; an annotation-free function infers SCALAR eval type
-    _nfc = pandas_udf(lambda s: s.str.normalize("NFC"), "string")
+    def nfc(s):
+        patch_worker()
+        return s.str.normalize("NFC")
+
+    _nfc = pandas_udf(nfc, "string")
 
     d = _t(spark, sf_dir, "documents")
     clean = F.trim(
@@ -5904,10 +5919,12 @@ def _reg(name: str, fn, sql: str | None) -> None:
 # rows the round they were built.
 _SEMDEDUP_SQL = _sql_semdedup_prune()
 _reg("bpe_train_merges", q_bpe_train_merges, _sql_bpe_train_merges())
-# registered under BOTH semdedup names: the scale path computes the
-# IDENTICAL answer, so sharing the oracle string structurally makes the
-# hash comparison a pair-set-equality check between the two
-_reg("semdedup_prune", q_semdedup_prune, _SEMDEDUP_SQL)
+# winnow_fingerprints (no driver row yet) holds the slot semdedup_prune
+# had (driver-green r5-r6, now overflow below): its fast twin shares
+# _SEMDEDUP_SQL and stays in-window, so the semdedup oracle keeps a row
+_reg(
+    "winnow_fingerprints", q_winnow_fingerprints, _sql_winnow_fingerprints()
+)
 _reg("bpe_encode_stats", q_bpe_encode_stats, _sql_bpe_encode_stats())
 _reg("semdedup_prune_fast", q_semdedup_prune_fast, _SEMDEDUP_SQL)
 _reg("rollup_doc_metrics", q_rollup_doc_metrics, _sql_rollup_doc_metrics())
@@ -6069,11 +6086,11 @@ _reg("pricing_summary", q_pricing_summary, _sql_pricing_summary())
 _reg("broadcast_dim_join", q_broadcast_dim_join, _sql_broadcast_dim_join())
 _reg("semi_join", q_semi_join, _sql_semi_join())
 _reg("running_totals", q_running_totals, _sql_running_totals())
-# registered after the displaced veterans = overflow this round (the r6
-# rotation head; repo-harness value-exact at all SFs meanwhile)
-_reg(
-    "winnow_fingerprints", q_winnow_fingerprints, _sql_winnow_fingerprints()
-)
+# registered under BOTH semdedup names: the scale path computes the
+# IDENTICAL answer, so sharing the oracle string structurally makes the
+# hash comparison a pair-set-equality check between the two. This one is
+# overflow: semdedup_prune_fast carries the shared oracle in-window
+_reg("semdedup_prune", q_semdedup_prune, _SEMDEDUP_SQL)
 
 # Rows-only queries in descending driver-visibility priority (they fill
 # whatever slots remain under the driver's 50-entry window after the

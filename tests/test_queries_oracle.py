@@ -84,17 +84,17 @@ def test_registry_driver_window_covers_value_exact():
             # so the session-2 ops earn driver rows this round too
             "pricing_summary", "broadcast_dim_join",
             "semi_join", "running_totals",
-            # registered after the window was re-finalized: r6 rotation
-            # head (repo-harness value-exact at all SFs meanwhile)
-            "winnow_fingerprints",
+            # displaced by winnow_fingerprints (driver-green r5-r6; its
+            # fast twin carries the shared oracle SQL in-window)
+            "semdedup_prune",
         }, overflow
         for must_be_in in (
             "multimodal_video_meta", "multimodal_video_frames",
             "keyword_search_topk", "triangle_parts",
             "bigram_novelty_scores", "full_outer_reconcile",
             "dup_span_stats", "bm25_topk", "kmeans_clusters",
-            "bpe_train_merges", "semdedup_prune", "bpe_encode_stats",
-            "semdedup_prune_fast",
+            "bpe_train_merges", "bpe_encode_stats",
+            "semdedup_prune_fast", "winnow_fingerprints",
         ):
             assert must_be_in in names[:50], must_be_in
 

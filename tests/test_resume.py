@@ -921,3 +921,48 @@ def test_compact_kill_window_leaves_readable_table(spark, pages, tmp_path):
     assert os.path.basename(man.extracted_path) == "extracted.gen-0002"
     assert not os.path.exists(os.path.join(str(man.dir), "extracted.gen-0001"))
     assert fp() == frozen
+
+
+# Spark jobs per verb of one warm lifecycle, counted through job groups and
+# pinned as caps (equal to the measured counts) so no change adds a Spark
+# round-trip to the job path unnoticed. A Python-touching job costs a fixed
+# ~0.25 s before its UDF runs (CLAUDE.md job-path rule).
+_JOBS_PER_VERB_CAP = {
+    "enqueue": 2, "stage": 1, "run": 5, "resume": 5, "retry": 11, "stats": 4,
+}
+
+
+def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
+    from engine.jobs.extract_job import run_stats, stage_pages
+
+    sc = spark.sparkContext
+
+    def lifecycle(tag):
+        jobs = {}
+
+        def step(verb, fn):
+            group = f"jobs-per-verb-{tag}-{verb}"
+            sc.setJobGroup(group, group)
+            try:
+                value = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
+            return value
+
+        root = str(tmp_path / f"runs-{tag}")
+        m = step("enqueue", lambda: enqueue(spark, pages, root, min_partitions=8, run_id="jobs"))
+        step("stage", lambda: stage_pages(spark, pages, m))
+        run = step("run", lambda: run_extract_job(spark, pages, m, wave_size=4, max_waves=1))
+        resume = step("resume", lambda: run_extract_job(spark, pages, m, wave_size=4))
+        retried = step("retry", lambda: retry_failed(spark, pages, m))
+        step("stats", lambda: run_stats(spark, m))
+        assert (run["complete"], resume["complete"]) == (False, True)
+        assert retried["retried"] > 0
+        return jobs
+
+    lifecycle("warm")
+    jobs = lifecycle("counted")
+    over = {v: (n, _JOBS_PER_VERB_CAP[v]) for v, n in jobs.items() if n > _JOBS_PER_VERB_CAP[v]}
+    assert not over, f"verbs over their Spark-job cap (count, cap): {over}"
+    assert all(n > 0 for n in jobs.values()), jobs
