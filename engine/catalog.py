@@ -109,7 +109,7 @@ def write_wave_to_table(
             raise
         # v1 (session-catalog) fallback: identical dynamic-overwrite
         # semantics via the legacy writer. insertInto is position-based;
-        # the wave frame's column order is fixed by EXTRACTED_DDL, the
+        # the wave frame's column order is fixed by EXTRACTED_SCHEMA, the
         # same order create() registered above.
         prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")

@@ -55,6 +55,35 @@ def _spark(cores: str = "*", conf: list[str] | None = None):
     return b.getOrCreate()
 
 
+def _pages_args(pages_help: str | None = None) -> argparse.ArgumentParser:
+    """The --pages input triple every page-reading verb takes (an
+    argparse parent parser)."""
+    pp = argparse.ArgumentParser(add_help=False)
+    pp.add_argument("--pages", required=True, help=pages_help)
+    pp.add_argument(
+        "--pages-format", default="parquet",
+        choices=["parquet", "orc", "json", "csv", "warc", "wet", "files"],
+        help="ingest format for --pages (warc/wet = Common-Crawl "
+        "segment files; files = one raw html file per page)",
+    )
+    pp.add_argument(
+        "--pages-glob", default=None,
+        help="filename glob for --pages-format files (scan-time "
+        "pathGlobFilter; default keeps .htm/.html/.xhtml/.shtml in "
+        "either case; use '*' to ingest every file)",
+    )
+    return pp
+
+
+def _read_pages(spark, a: argparse.Namespace):
+    from engine.sources import DEFAULT_FILES_GLOB, read_pages
+
+    return read_pages(
+        spark, a.pages, a.pages_format,
+        files_glob=a.pages_glob or DEFAULT_FILES_GLOB,
+    )
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="engine", description=__doc__)
     p.add_argument(
@@ -75,20 +104,8 @@ def main(argv: list[str] | None = None) -> int:
     qp.add_argument("--runs-root", required=True)
     qp.add_argument("--run-id", required=True)
 
-    ep = sub.add_parser("enqueue")
-    ep.add_argument("--pages", required=True)
-    ep.add_argument(
-        "--pages-format", default="parquet",
-        choices=["parquet", "orc", "json", "csv", "warc", "wet", "files"],
-        help="ingest format for --pages (warc/wet = Common-Crawl "
-        "segment files; files = one raw html file per page)",
-    )
-    ep.add_argument(
-        "--pages-glob", default=None,
-        help="filename glob for --pages-format files (scan-time "
-        "pathGlobFilter; default keeps .htm/.html/.xhtml/.shtml in "
-        "either case; use '*' to ingest every file)",
-    )
+    pages = _pages_args()
+    ep = sub.add_parser("enqueue", parents=[pages])
     ep.add_argument("--runs-root", required=True)
     ep.add_argument("--run-id")
     ep.add_argument("--target-partition-mb", type=int, default=64)
@@ -98,39 +115,13 @@ def main(argv: list[str] | None = None) -> int:
         help="reset an existing run (clears extracted/staged/lineage)",
     )
 
-    rp = sub.add_parser("run")
-    rp.add_argument("--pages", required=True)
-    rp.add_argument(
-        "--pages-format", default="parquet",
-        choices=["parquet", "orc", "json", "csv", "warc", "wet", "files"],
-        help="ingest format for --pages (warc/wet = Common-Crawl "
-        "segment files; files = one raw html file per page)",
-    )
-    rp.add_argument(
-        "--pages-glob", default=None,
-        help="filename glob for --pages-format files (scan-time "
-        "pathGlobFilter; default keeps .htm/.html/.xhtml/.shtml in "
-        "either case; use '*' to ingest every file)",
-    )
+    rp = sub.add_parser("run", parents=[pages])
     rp.add_argument("--runs-root", required=True)
     rp.add_argument("--run-id", required=True)
     rp.add_argument("--wave-size", type=int, default=8)
     rp.add_argument("--max-waves", type=int)
 
-    tp = sub.add_parser("retry")
-    tp.add_argument("--pages", required=True)
-    tp.add_argument(
-        "--pages-format", default="parquet",
-        choices=["parquet", "orc", "json", "csv", "warc", "wet", "files"],
-        help="ingest format for --pages (warc/wet = Common-Crawl "
-        "segment files; files = one raw html file per page)",
-    )
-    tp.add_argument(
-        "--pages-glob", default=None,
-        help="filename glob for --pages-format files (scan-time "
-        "pathGlobFilter; default keeps .htm/.html/.xhtml/.shtml in "
-        "either case; use '*' to ingest every file)",
-    )
+    tp = sub.add_parser("retry", parents=[pages])
     tp.add_argument("--runs-root", required=True)
     tp.add_argument("--run-id", required=True)
 
@@ -151,7 +142,7 @@ def main(argv: list[str] | None = None) -> int:
         "compact",
         description="Rewrite a completed run's extracted table at the "
         "target file size. Publication is an atomic manifest-pointer "
-        "flip to a new extracted.gen-* directory — a kill at any instant "
+        "flip to a new table-generation directory — a kill at any instant "
         "leaves a readable table; stale generations are expired by "
         "vacuum.",
     )
@@ -161,22 +152,10 @@ def main(argv: list[str] | None = None) -> int:
 
     ip = sub.add_parser(
         "increment",
+        parents=[_pages_args("the new crawl")],
         description="Incremental append: extract ONLY urls no base run has "
         "committed, as a new run whose output unions with the bases into "
         "one logical table (enqueue_increment + run in one verb).",
-    )
-    ip.add_argument("--pages", required=True, help="the new crawl")
-    ip.add_argument(
-        "--pages-format", default="parquet",
-        choices=["parquet", "orc", "json", "csv", "warc", "wet", "files"],
-        help="ingest format for --pages (warc/wet = Common-Crawl "
-        "segment files; files = one raw html file per page)",
-    )
-    ip.add_argument(
-        "--pages-glob", default=None,
-        help="filename glob for --pages-format files (scan-time "
-        "pathGlobFilter; default keeps .htm/.html/.xhtml/.shtml in "
-        "either case; use '*' to ingest every file)",
     )
     ip.add_argument("--runs-root", required=True)
     ip.add_argument(
@@ -210,7 +189,8 @@ def main(argv: list[str] | None = None) -> int:
     vp = sub.add_parser(
         "vacuum",
         description="Expire a completed run's recoverable artifacts "
-        "(staged leftovers, increment_input, compaction backup).",
+        "(staged leftovers, the increment's recorded input, compaction "
+        "backup).",
     )
     vp.add_argument("--runs-root", required=True)
     vp.add_argument("--run-id", required=True)
@@ -260,7 +240,6 @@ def main(argv: list[str] | None = None) -> int:
         run_extract_job,
     )
     from engine.manifest import RunManifest
-    from engine.sources import DEFAULT_FILES_GLOB, read_pages
 
     if a.verb == "synth":
         from engine.synth import generate_pages
@@ -282,7 +261,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif a.verb == "enqueue":
-        pages = read_pages(spark, a.pages, a.pages_format, files_glob=a.pages_glob or DEFAULT_FILES_GLOB)
+        pages = _read_pages(spark, a)
         m = enqueue(
             spark,
             pages,
@@ -302,7 +281,7 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif a.verb == "run":
-        pages = read_pages(spark, a.pages, a.pages_format, files_glob=a.pages_glob or DEFAULT_FILES_GLOB)
+        pages = _read_pages(spark, a)
         m = RunManifest.load(a.runs_root, a.run_id)
         res = run_extract_job(
             spark, pages, m, wave_size=a.wave_size, max_waves=a.max_waves
@@ -311,7 +290,7 @@ def main(argv: list[str] | None = None) -> int:
     elif a.verb == "increment":
         from engine.jobs.extract_job import enqueue_increment
 
-        pages = read_pages(spark, a.pages, a.pages_format, files_glob=a.pages_glob or DEFAULT_FILES_GLOB)
+        pages = _read_pages(spark, a)
         m, new_pages = enqueue_increment(
             spark,
             pages,
@@ -330,7 +309,7 @@ def main(argv: list[str] | None = None) -> int:
             )
             print(json.dumps(res))
     elif a.verb == "retry":
-        pages = read_pages(spark, a.pages, a.pages_format, files_glob=a.pages_glob or DEFAULT_FILES_GLOB)
+        pages = _read_pages(spark, a)
         m = RunManifest.load(a.runs_root, a.run_id)
         print(json.dumps(retry_failed(spark, pages, m)))
     elif a.verb == "dedup-increment":

@@ -23,20 +23,7 @@ engine/pyworker.py from a worker's second task on.
 from __future__ import annotations
 
 from engine.extract.core import extract_document
-from engine.schema import EXTRACTED_DDL
-
-_OUT_COLS = [
-    "url",
-    "text",
-    "spans",
-    "n_chars",
-    "link_density",
-    "boiler_ratio",
-    "quality",
-    "extractor_version",
-    "status",
-    "error",
-]
+from engine.schema import EXTRACTED_SCHEMA
 
 
 def extract_batches_arrow(batches):
@@ -51,16 +38,17 @@ def extract_batches_arrow(batches):
     from engine.schema import extracted_arrow_schema
 
     out_schema = extracted_arrow_schema()
+    out_cols = out_schema.names
     for batch in batches:
         urls = batch.column("url").to_pylist()
         htmls = batch.column("html").to_pylist()
-        cols: dict[str, list] = {c: [] for c in _OUT_COLS}
+        cols: dict[str, list] = {c: [] for c in out_cols}
         cols["url"] = urls
         for html in htmls:
             rec = extract_document(html)
-            for c in _OUT_COLS[1:]:
+            for c in out_cols[1:]:
                 cols[c].append(rec[c])
-        arrays = [pa.array(cols[c], type=out_schema.field(c).type) for c in _OUT_COLS]
+        arrays = [pa.array(cols[c], type=out_schema.field(c).type) for c in out_cols]
         schema = out_schema
         if "partition_id" in batch.schema.names:
             arrays.append(batch.column("partition_id"))
@@ -73,7 +61,7 @@ def run_extract(pages_df):
     module doc). Column-prunes to (url, html) before the UDF so only the
     needed bytes cross the Arrow channel."""
     return pages_df.select("url", "html").mapInArrow(
-        extract_batches_arrow, schema=EXTRACTED_DDL
+        extract_batches_arrow, schema=EXTRACTED_SCHEMA
     )
 
 

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from engine.extract.core import EXTRACTOR_VERSION
 from engine.extract.udf import dedup_latest_crawl, extract_batches_arrow
 from engine.manifest import RunManifest
-from engine.schema import EXTRACTED_DDL
+from engine.schema import EXTRACTED_PARTITIONED_SCHEMA, LINEAGE_SCHEMA
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
 
@@ -171,11 +171,8 @@ def _guard_sink_table_unclaimed(
         # re-enqueueing an existing run (readable manifest or not) is
         # create()'s domain: it refuses with its own, accurate message
         return
-    import pathlib
-
     unreadable = []
-    for mf in sorted(pathlib.Path(runs_root).glob("*/manifest.json")):
-        rid = mf.parent.name
+    for rid in RunManifest.run_ids(runs_root):
         try:
             other = RunManifest.load(runs_root, rid).sink_table
         except Exception:
@@ -269,7 +266,7 @@ def stage_pages(
     if os.path.exists(staged):
         return staged
     n_parts = manifest.state()["n_partitions"]
-    tmp = staged + ".tmp"
+    tmp = manifest.staged_tmp_path
     shutil.rmtree(tmp, ignore_errors=True)
     (
         with_partition_id(pages, n_parts)
@@ -346,8 +343,7 @@ def run_extract_job(
                 F.col("partition_id").isin(wave)
             )
         extracted = batch.select("url", "html", "partition_id").mapInArrow(
-            extract_batches_arrow,
-            schema=EXTRACTED_DDL + ", partition_id int",
+            extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
         )
         if sink_table:
             # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
@@ -379,9 +375,9 @@ def run_extract_job(
             written = [manifest.extracted_path] if os.path.exists(
                 manifest.extracted_path
             ) else []
-            out = spark.read.schema(
-                EXTRACTED_DDL + ", partition_id int"
-            ).parquet(*written)
+            out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
+                *written
+            )
         # wave file keyed by its first partition id: unique across waves
         # (pending sets are disjoint), stable across resume, overwrite-safe
         wave_path = manifest.lineage_wave_path(wave[0])
@@ -405,7 +401,7 @@ def run_extract_job(
         # read back from the committed lineage files (one tiny JVM scan),
         # never from rows collected to the driver
         done_docs = (
-            spark.read.schema(_lineage_ddl())
+            spark.read.schema(LINEAGE_SCHEMA)
             .parquet(*wave_paths)
             .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
             .collect()[0][0]
@@ -419,17 +415,10 @@ def run_extract_job(
 
 
 def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
-    waves = sorted(str(p) for p in manifest.lineage_dir.glob("*.parquet"))
-    if not waves:
-        return spark.createDataFrame([], schema=_lineage_ddl())
-    return spark.read.parquet(*waves)
-
-
-def _lineage_ddl() -> str:
-    return (
-        "run_id string, partition_id int, stage string, doc_count long, "
-        "byte_count long, extractor_version string, checksum string, wall_ms long"
-    )
+    files = manifest.lineage_files()
+    if not files:
+        return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
+    return spark.read.parquet(*files)
 
 
 # the column each stage's checksum digests next to the url: an extract
@@ -505,18 +494,15 @@ def read_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
             raise RuntimeError(
                 f"run {manifest.run_id}: lineage records {docs} committed "
                 f"docs but extracted data is unreadable ({reason}) — "
-                "refusing to degrade to an empty table; restore extracted/ "
-                "(or the .pre_compact backup) before reading or exporting"
+                "refusing to degrade to an empty table; restore the "
+                "extracted table (or its pre-compaction backup) before "
+                "reading or exporting"
             )
-        return spark.createDataFrame(
-            [], schema=EXTRACTED_DDL + ", partition_id int"
-        )
+        return spark.createDataFrame([], schema=EXTRACTED_PARTITIONED_SCHEMA)
 
     committed = manifest.committed_partitions()
     if not committed:
-        return spark.createDataFrame(
-            [], schema=EXTRACTED_DDL + ", partition_id int"
-        )
+        return spark.createDataFrame([], schema=EXTRACTED_PARTITIONED_SCHEMA)
     from engine.catalog import read_sink_table
 
     sink_table = _run_sink_table(spark, manifest)
@@ -554,17 +540,6 @@ def read_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     return df.where(F.col("partition_id").isin(committed))
 
 
-def _next_retry_attempt(manifest: RunManifest) -> int:
-    """Attempt numbers come from the retry lineage files already on disk —
-    monotonically increasing, so every retry wave keeps its own audit rows
-    and the latest-attempt window in read_current_extracted is
-    total-ordered."""
-    existing = sorted(manifest.lineage_dir.glob("retry-*.parquet"))
-    if not existing:
-        return 1
-    return max(int(p.stem.split("-")[1]) for p in existing) + 1
-
-
 def retry_failed(
     spark: SparkSession, pages: DataFrame, manifest: RunManifest
 ) -> dict:
@@ -590,13 +565,12 @@ def retry_failed(
     n_failed = todo.count()
     if n_failed == 0:
         return {"retried": 0}
-    attempt = _next_retry_attempt(manifest)
+    attempt = manifest.next_retry_attempt()
     t0 = time.monotonic()
     redone = todo.select("url", "html", "partition_id").mapInArrow(
-        extract_batches_arrow,
-        schema=EXTRACTED_DDL + ", partition_id int",
+        extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
     ).withColumn("attempt", F.lit(attempt))
-    retry_path = manifest.extracted_path + "_retry"
+    retry_path = manifest.retry_path
     redone.write.mode("append").partitionBy("partition_id").parquet(retry_path)
     # every stage writes lineage rows (BASELINE.json north_star) — the retry
     # wave is auditable like any extract wave; lineage covers THIS attempt
@@ -605,7 +579,7 @@ def retry_failed(
     out = spark.read.parquet(retry_path).where(F.col("attempt") == attempt)
     lineage = lineage_frame(out, manifest.run_id, "retry", wall_ms)
     lineage.coalesce(1).write.mode("overwrite").parquet(
-        str(manifest.lineage_dir / f"retry-{attempt:03d}.parquet")
+        manifest.retry_lineage_path(attempt)
     )
     return {"retried": n_failed, "attempt": attempt}
 
@@ -617,12 +591,11 @@ def read_current_extracted(spark: SparkSession, manifest: RunManifest) -> DataFr
     deterministic."""
     from pyspark.sql import Window as W
 
-    base = read_extracted(spark, manifest).withColumn("attempt", F.lit(0))
-    retry_path = manifest.extracted_path + "_retry"
     import os
 
-    if os.path.exists(retry_path):
-        retry = spark.read.parquet(retry_path).select(*base.columns)
+    base = read_extracted(spark, manifest).withColumn("attempt", F.lit(0))
+    if os.path.exists(manifest.retry_path):
+        retry = spark.read.parquet(manifest.retry_path).select(*base.columns)
         base = base.unionByName(retry)
     w = W.partitionBy("url").orderBy(F.desc("attempt"))
     return (
@@ -674,9 +647,7 @@ def enqueue_increment(
     increment's audit record. Returns (manifest, new_pages) — manifest is
     None when the increment contains nothing new (no run directory is
     created)."""
-    import json
     import os
-    import pathlib
     import shutil
     import uuid as _uuid
 
@@ -690,8 +661,8 @@ def enqueue_increment(
             "use enqueue() for a fresh ingest"
         )
     run_id = run_id or ("inc-" + _uuid.uuid4().hex[:12])
-    input_path = os.path.join(runs_root, run_id, "increment_input")
     existing = RunManifest(runs_root, run_id)
+    input_path = existing.increment_input_path
     if existing.path.exists():
         loaded = RunManifest.load(runs_root, run_id)
         if not os.path.exists(input_path):
@@ -699,7 +670,8 @@ def enqueue_increment(
                 # vacuumed after completion: nothing to resume, nothing new
                 return loaded, pages.limit(0)
             raise RuntimeError(
-                f"run {run_id} has a manifest but no increment_input — "
+                f"run {run_id} has a manifest but no recorded increment "
+                "input — "
                 "either it is not an increment run, or a crash hit the "
                 "window between manifest commit and input publication; "
                 "delete the run directory and re-call enqueue_increment "
@@ -709,10 +681,7 @@ def enqueue_increment(
         # the recorded input was anti-joined against a SPECIFIC base set;
         # resuming with a different one would silently hand base-committed
         # urls to this run and break cross-run url-disjointness
-        meta_file = os.path.join(input_path, "_increment_meta.json")
-        recorded = sorted(json.loads(
-            pathlib.Path(meta_file).read_text()
-        )["base_run_ids"]) if os.path.exists(meta_file) else None
+        recorded = loaded.increment_bases()
         if recorded is not None and recorded != sorted(base_run_ids):
             raise RuntimeError(
                 f"run {run_id} was enqueued against bases {recorded}, "
@@ -769,14 +738,12 @@ def enqueue_increment(
             )
         else:
             new_pages = latest.join(done_urls.distinct(), "url", "left_anti")
-    tmp = os.path.join(runs_root, f".{run_id}.input.tmp")
+    tmp = existing.increment_tmp_path
     shutil.rmtree(tmp, ignore_errors=True)
     new_pages.write.mode("overwrite").parquet(tmp)
-    # the base set is part of the recorded input (underscore-prefixed:
-    # parquet readers ignore it) — resume validates against it
-    pathlib.Path(tmp, "_increment_meta.json").write_text(
-        json.dumps({"base_run_ids": sorted(base_run_ids)})
-    )
+    # the base set is part of the recorded input — resume validates
+    # against it
+    existing.record_increment_bases(base_run_ids)
     mat = spark.read.parquet(tmp)
     if mat.limit(1).count() == 0:
         shutil.rmtree(tmp, ignore_errors=True)
@@ -1070,7 +1037,6 @@ def vacuum_run(spark: SparkSession, manifest: RunManifest) -> dict:
     killed just after). Refuses incomplete runs: every artifact listed is
     a live resume/recovery source until the last partition commits."""
     import os
-    import shutil
 
     if not manifest.is_complete():
         raise RuntimeError(
@@ -1084,31 +1050,25 @@ def vacuum_run(spark: SparkSession, manifest: RunManifest) -> dict:
         # generations here (snapshot expiry is the catalog's job) — only
         # the parquet side-car artifacts below are ours to reclaim
         return _vacuum_artifacts(
-            manifest, ("staged", "staged.tmp", "increment_input",
-                       "extracted.pre_compact", "extracted.compact_tmp"),
-            active=None,
+            manifest, manifest.expirable_paths(), active=None
         )
-    if not os.path.exists(manifest.extracted_path):
+    active = manifest.extracted_path
+    if not os.path.exists(active):
         # the pointer names a missing directory (manual damage, or a
         # legacy two-rename crash) — the data may survive ONLY in a
         # non-active dir; vacuuming now would delete the last copy
         raise RuntimeError(
             f"run {manifest.run_id}: the active extracted directory "
-            f"({os.path.basename(manifest.extracted_path)}) is missing — "
-            "recover first (point extracted_dir at a surviving "
-            "extracted.gen-*; restore legacy backups under a FRESH "
-            "extracted.gen-* name, never the plain 'extracted' name, so "
-            "a concurrent vacuum cannot classify the restored copy as a "
-            "stale generation), then vacuum"
+            f"({os.path.basename(active)}) is missing — recover first "
+            "(point extracted_dir at a surviving compaction generation; "
+            "restore legacy backups under a FRESH generation name, never "
+            "the plain base name, so a concurrent vacuum cannot classify "
+            "the restored copy as a stale generation), then vacuum"
         )
     skipped = []
-    active = os.path.basename(manifest.extracted_path)
-    stale_gens = sorted(
-        p.name
-        for p in manifest.dir.glob("extracted.gen-*")
-        if p.name != active
-    )
-    if active != "extracted":
+    stale = [g for g in manifest.generation_paths() if g != active]
+    plain = manifest.base_path
+    if active != plain:
         # the REAL crash state of the first compaction (killed between
         # the pointer flip and the old-dir delete) leaves the superseded
         # table under the plain name "extracted" — expire it too. BUT a
@@ -1122,22 +1082,16 @@ def vacuum_run(spark: SparkSession, manifest: RunManifest) -> dict:
         # rsync -a, copytree, a bare rename) are indistinguishable from
         # the crash leftover by construction — which is exactly why every
         # recovery message directs restores to fresh gen-* names instead.
-        plain = manifest.dir / "extracted"
         try:
-            is_newer = plain.exists() and (
-                plain.stat().st_mtime
-                >= os.path.getmtime(manifest.extracted_path)
+            is_newer = os.path.exists(plain) and (
+                os.path.getmtime(plain) >= os.path.getmtime(active)
             )
         except OSError:
             is_newer = False
-        if is_newer:
-            skipped.append("extracted")
-        else:
-            stale_gens.append("extracted")
+        (skipped if is_newer else stale).append(plain)
     return _vacuum_artifacts(
         manifest,
-        ("staged", "staged.tmp", "increment_input",
-         "extracted.pre_compact", "extracted.compact_tmp", *stale_gens),
+        [*manifest.expirable_paths(), *stale],
         active=active,
         skipped=skipped,
     )
@@ -1145,21 +1099,20 @@ def vacuum_run(spark: SparkSession, manifest: RunManifest) -> dict:
 
 def _vacuum_artifacts(
     manifest: RunManifest,
-    rels: tuple,
+    paths: list[str],
     active: str | None,
-    skipped: list | None = None,
+    skipped: list[str] | None = None,
 ) -> dict:
     import os
     import shutil
 
     removed = []
     freed = 0
-    for rel in rels:
-        if active is not None and rel == active:
+    for path in paths:
+        if path == active:
             # never delete the pointer's target, whatever it is named
             # (defense in depth behind set_extracted_dir's name guard)
             continue
-        path = str(manifest.dir / rel)
         if os.path.exists(path):
             freed += sum(
                 os.path.getsize(os.path.join(dp, f))
@@ -1167,14 +1120,14 @@ def _vacuum_artifacts(
                 for f in fs
             )
             shutil.rmtree(path, ignore_errors=True)
-            removed.append(rel)
+            removed.append(os.path.basename(path))
     out = {
         "run_id": manifest.run_id,
         "removed": removed,
         "freed_bytes": freed,
     }
     if skipped:
-        out["skipped"] = skipped
+        out["skipped"] = [os.path.basename(p) for p in skipped]
         out["skipped_reason"] = (
             "plain 'extracted' dir is at least as new as the active "
             "generation — looks like an in-flight recovery restore, not "
@@ -1251,14 +1204,7 @@ def compact_run(
         F.pmod(F.xxhash64("url"), F.coalesce(F.col("n_files"), F.lit(1))),
     ).drop("n_files")
     old_dir = manifest.extracted_path
-    cur_name = os.path.basename(old_dir)
-    gen = (
-        int(cur_name.rsplit("-", 1)[1]) + 1
-        if cur_name.startswith("extracted.gen-")
-        else 1
-    )
-    new_name = f"extracted.gen-{gen:04d}"
-    new_dir = str(manifest.dir / new_name)
+    new_dir = manifest.next_generation_path()
     shutil.rmtree(new_dir, ignore_errors=True)
     (
         keyed.repartition(max(total_files, 1), "partition_id", "file_no")
@@ -1271,7 +1217,7 @@ def compact_run(
     # a corrupt rewrite never publishes, and the pointer flip below is
     # the single atomic commit (no unreadable instant at any kill point)
     n_after = len(spark.read.parquet(new_dir).inputFiles())
-    manifest.set_extracted_dir(new_name)
+    manifest.set_extracted_dir(os.path.basename(new_dir))
     shutil.rmtree(old_dir)  # expire the superseded generation
     return {
         "run_id": manifest.run_id,

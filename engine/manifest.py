@@ -18,17 +18,30 @@ os.replace() of `manifest.json` — the same atomic-visibility contract an
 Iceberg snapshot commit provides. The layout keeps table paths and a
 `writeTo`-shaped API so a real catalog can be dropped in.
 
-Run directory layout:
+Run directory layout — RunManifest is the one owner of every name below;
+callers ask it for paths and never compose them:
 
   {root}/{run_id}/
-    manifest.json                 # atomic snapshot: per-partition status
+    manifest.json                 # atomic snapshot: per-partition status,
+                                  #   plus the active-table pointer
     staged/                       # keyed input, partitioned by partition_id
       partition_id=K/*.parquet    #   (written once; waves prune to their dirs)
+    staged.tmp/                   # staging in flight (atomic rename → staged/)
     extracted/                    # output parquet, partitioned by partition_id
       partition_id=K/*.parquet
-    extracted_retry/              # retry attempts (attempt column in data)
-    lineage/wave-*.parquet        # committed per-partition lineage rows
+    extracted.gen-NNNN/           # compaction generations; the manifest's
+                                  #   `extracted_dir` pointer names the active
+                                  #   one ("extracted" until the first compact)
+    extracted_retry/              # retry attempts (attempt column in data).
+                                  #   Fixed name: it does NOT follow the
+                                  #   generation pointer, so compaction never
+                                  #   orphans an attempt
+    increment_input/              # an increment run's anti-joined input
+                                  #   (+ _increment_meta.json: its base runs)
+    lineage/wave-NNNNN.parquet    # committed per-partition lineage rows
     lineage/retry-NNN.parquet     # one audit file per retry attempt
+  {root}/.{run_id}.input.tmp/     # increment input in flight (renamed into
+                                  #   the run dir once the manifest exists)
 """
 
 from __future__ import annotations
@@ -37,7 +50,15 @@ import datetime as dt
 import json
 import os
 import pathlib
+import re
+import shutil
 import uuid
+
+_MANIFEST = "manifest.json"
+_BASE = "extracted"
+# the one definition of a compaction generation's name (full match)
+_GENERATION = re.compile(r"extracted\.gen-(\d+)")
+_INCREMENT_META = "_increment_meta.json"
 
 
 class RunManifest:
@@ -47,7 +68,7 @@ class RunManifest:
         self.root = pathlib.Path(root)
         self.run_id = run_id
         self.dir = self.root / run_id
-        self.path = self.dir / "manifest.json"
+        self.path = self.dir / _MANIFEST
 
     # ---------------------------------------------------------------- create
     @classmethod
@@ -67,8 +88,6 @@ class RunManifest:
         make a re-run append duplicates of all committed rows. `force=True`
         is the explicit override — it also clears the run's data dirs so
         the reset is consistent."""
-        import shutil
-
         run_id = run_id or uuid.uuid4().hex[:12]
         m = cls(root, run_id)
         if m.path.exists():
@@ -78,12 +97,12 @@ class RunManifest:
                     "load it to resume, or pass force=True to reset "
                     "(clears extracted/, staged/ and lineage/)"
                 )
-            for sub in ("extracted", "extracted_retry", "staged", "staged.tmp", "lineage"):
-                shutil.rmtree(m.dir / sub, ignore_errors=True)
-            for gen in m.dir.glob("extracted.gen-*"):
-                shutil.rmtree(gen, ignore_errors=True)
-        m.dir.mkdir(parents=True, exist_ok=True)
-        (m.dir / "lineage").mkdir(exist_ok=True)
+            for path in (
+                m.base_path, m.retry_path, m.staged_path, m.staged_tmp_path,
+                m.lineage_dir, *m.generation_paths(),
+            ):
+                shutil.rmtree(path, ignore_errors=True)
+        m.lineage_dir.mkdir(parents=True, exist_ok=True)
         state = {
             "run_id": run_id,
             "n_partitions": n_partitions,
@@ -109,6 +128,14 @@ class RunManifest:
         if not m.path.exists():
             raise FileNotFoundError(f"no manifest for run {run_id} under {root}")
         return m
+
+    @classmethod
+    def run_ids(cls, root: str) -> list[str]:
+        """Every run under `root` that has a manifest file (readable or
+        not)."""
+        return sorted(
+            p.parent.name for p in pathlib.Path(root).glob(f"*/{_MANIFEST}")
+        )
 
     # ---------------------------------------------------------------- state
     def state(self) -> dict:
@@ -163,6 +190,9 @@ class RunManifest:
         os.replace(tmp, self.path)
 
     # ---------------------------------------------------------------- paths
+    def _at(self, name: str) -> str:
+        return str(self.dir / name)
+
     @property
     def extracted_path(self) -> str:
         """The ACTIVE extracted table, resolved through the manifest's
@@ -171,8 +201,13 @@ class RunManifest:
         atomic manifest commit — the Iceberg-snapshot analog — so there
         is no instant at which the run has no readable table (the old
         two-rename swap had one)."""
-        name = self.state().get("extracted_dir", "extracted")
-        return str(self.dir / name)
+        return self._at(self.state().get("extracted_dir", _BASE))
+
+    @property
+    def base_path(self) -> str:
+        """The plain base table dir: active until the first compaction,
+        that compaction's superseded leftover after it."""
+        return self._at(_BASE)
 
     def set_extracted_dir(self, name: str) -> None:
         """Atomically flip the active-table pointer (THE compact commit).
@@ -186,9 +221,7 @@ class RunManifest:
         vacuum classifies a plain 'extracted' dir as the first
         compaction's crash leftover and expires it — restoring under
         that name races any concurrent vacuum)."""
-        import re
-
-        if not (name == "extracted" or re.fullmatch(r"extracted\.gen-\d+", name)):
+        if not (name == _BASE or _GENERATION.fullmatch(name)):
             raise ValueError(
                 f"not a legal extracted dir name: {name!r} (use 'extracted' "
                 "or 'extracted.gen-NNNN'; restore recovery artifacts under "
@@ -198,18 +231,92 @@ class RunManifest:
         st["extracted_dir"] = name
         self._commit(st)
 
+    def generation_paths(self) -> list[str]:
+        """Every compaction generation dir on disk, active or not."""
+        return sorted(
+            str(p) for p in self.dir.glob("extracted.gen-*")
+            if _GENERATION.fullmatch(p.name)
+        )
+
+    def next_generation_path(self) -> str:
+        """Where compact_run writes the generation after the active one."""
+        m = _GENERATION.fullmatch(os.path.basename(self.extracted_path))
+        return self._at(f"extracted.gen-{int(m[1]) + 1 if m else 1:04d}")
+
+    def expirable_paths(self) -> list[str]:
+        """Side-car artifacts a completed run no longer needs: staged
+        input leftovers, the increment's recorded input, and the legacy
+        (pre-pointer) compaction's backup and temp dirs."""
+        return [
+            self.staged_path, self.staged_tmp_path, self.increment_input_path,
+            self._at("extracted.pre_compact"), self._at("extracted.compact_tmp"),
+        ]
+
+    @property
+    def retry_path(self) -> str:
+        """The retry overlay (attempt >= 1 rows). One fixed dir whatever
+        the active generation is: compaction rewrites only the base, so
+        the overlay must not follow the pointer."""
+        return self._at("extracted_retry")
+
     @property
     def staged_path(self) -> str:
         """Keyed input staged once, partitionBy(partition_id), so waves
         read only their own partition directories."""
-        return str(self.dir / "staged")
+        return self._at("staged")
+
+    @property
+    def staged_tmp_path(self) -> str:
+        return self._at("staged.tmp")
+
+    @property
+    def increment_input_path(self) -> str:
+        return self._at("increment_input")
+
+    @property
+    def increment_tmp_path(self) -> str:
+        """Outside the run dir: the increment's input is written before
+        its manifest (and so its run dir) exists."""
+        return str(self.root / f".{self.run_id}.input.tmp")
+
+    def record_increment_bases(self, base_run_ids: list[str]) -> None:
+        """Record the base set next to the in-flight increment input
+        (underscore-prefixed: parquet readers ignore it)."""
+        pathlib.Path(self.increment_tmp_path, _INCREMENT_META).write_text(
+            json.dumps({"base_run_ids": sorted(base_run_ids)})
+        )
+
+    def increment_bases(self) -> list[str] | None:
+        """The base set the published increment input was anti-joined
+        against, or None when it carries no record."""
+        meta = pathlib.Path(self.increment_input_path, _INCREMENT_META)
+        if not meta.exists():
+            return None
+        return sorted(json.loads(meta.read_text())["base_run_ids"])
 
     @property
     def lineage_dir(self) -> pathlib.Path:
         return self.dir / "lineage"
 
+    def lineage_files(self) -> list[str]:
+        return sorted(str(p) for p in self.lineage_dir.glob("*.parquet"))
+
     def lineage_wave_path(self, wave: int) -> str:
         return str(self.lineage_dir / f"wave-{wave:05d}.parquet")
+
+    def retry_lineage_path(self, attempt: int) -> str:
+        return str(self.lineage_dir / f"retry-{attempt:03d}.parquet")
+
+    def next_retry_attempt(self) -> int:
+        """Attempt numbers come from the retry lineage files already on
+        disk — monotonically increasing, so every retry wave keeps its
+        own audit rows and the latest-attempt window in
+        read_current_extracted is total-ordered."""
+        return 1 + max(
+            (int(p.stem.split("-")[1])
+             for p in self.lineage_dir.glob("retry-*.parquet")),
+            default=0,
+        )
 
 
 def _now() -> str:

@@ -1,4 +1,6 @@
-"""Declared StructTypes for every table in the pipeline.
+"""Declared StructTypes for every table in the pipeline — the one place a
+table's columns are declared; every reader, writer, UDF and empty-table
+constructor takes its schema from here.
 
 The reference (Early-Modern-OCR/emop-controller) is schemaless JSON-over-HTTP
 (emop/lib/emop_payload.py, emop/lib/models/*.py); here every table has one
@@ -10,10 +12,9 @@ Tables
 pages      : the input (BASELINE.json input_hint — exact shape, do not change)
 extracted  : per-url extraction output (FIXTURES.md §2)
 lineage    : per-partition per-stage commit rows (FIXTURES.md §3)
-manifest   : run/partition status lifecycle (FIXTURES.md §3), mirrors the
-             reference's job_queues status machine
-             not_started → reserved → processing → done/failed
-             (emop/lib/emop_query.py, emop/lib/emop_job.py [U]).
+
+A run's partition status lives in its manifest.json (engine/manifest.py),
+a JSON snapshot, not a table.
 """
 
 from __future__ import annotations
@@ -30,8 +31,8 @@ PAGES_SCHEMA = T.StructType(
     ]
 )
 
-# Nullability is uniformly True: this schema is produced by a Python UDF
-# (mapInPandas), whose DDL-declared output is always nullable on the JVM side.
+# Nullability is uniformly True: this schema is produced by the Python
+# extract UDF (mapInArrow), whose declared output is nullable on the JVM side.
 SPAN_SCHEMA = T.StructType(
     [
         T.StructField("node_path", T.StringType(), True),
@@ -55,67 +56,31 @@ EXTRACTED_SCHEMA = T.StructType(
     ]
 )
 
-# extracted + the partition id the row was committed under (resume unit).
+# extracted + the partition id the row was committed under (resume unit);
+# nullable like every column the extract UDF and parquet reads produce.
 EXTRACTED_PARTITIONED_SCHEMA = T.StructType(
-    EXTRACTED_SCHEMA.fields + [T.StructField("partition_id", T.IntegerType(), False)]
+    EXTRACTED_SCHEMA.fields + [T.StructField("partition_id", T.IntegerType(), True)]
 )
 
+# nullable: lineage is read back from parquet files, which Spark always
+# reads as nullable
 LINEAGE_SCHEMA = T.StructType(
     [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("stage", T.StringType(), False),
-        T.StructField("doc_count", T.LongType(), False),
-        T.StructField("byte_count", T.LongType(), False),
-        T.StructField("extractor_version", T.StringType(), False),
-        T.StructField("checksum", T.StringType(), False),
-        T.StructField("wall_ms", T.LongType(), False),
+        T.StructField("run_id", T.StringType(), True),
+        T.StructField("partition_id", T.IntegerType(), True),
+        T.StructField("stage", T.StringType(), True),
+        T.StructField("doc_count", T.LongType(), True),
+        T.StructField("byte_count", T.LongType(), True),
+        T.StructField("extractor_version", T.StringType(), True),
+        T.StructField("checksum", T.StringType(), True),
+        T.StructField("wall_ms", T.LongType(), True),
     ]
-)
-
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("partition_id", T.IntegerType(), False),
-        T.StructField("status", T.StringType(), False),
-        T.StructField("attempt", T.IntegerType(), False),
-        T.StructField("started_at", T.TimestampType(), True),
-        T.StructField("committed_at", T.TimestampType(), True),
-    ]
-)
-
-# DDL strings for mapInPandas(schema=...) call sites.
-EXTRACTED_DDL = (
-    "url string, text string, "
-    "spans array<struct<node_path:string,start:int,end:int>>, "
-    "n_chars long, link_density double, boiler_ratio double, quality double, "
-    "extractor_version string, status string, error string"
 )
 
 
 def extracted_arrow_schema():
-    """pyarrow schema matching EXTRACTED_SCHEMA — for the mapInArrow
-    extract variant (assembling RecordBatches without a pandas hop)."""
-    import pyarrow as pa
+    """pyarrow schema of EXTRACTED_SCHEMA — for the mapInArrow extract
+    body (assembling RecordBatches without a pandas hop)."""
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    span = pa.struct(
-        [
-            pa.field("node_path", pa.string()),
-            pa.field("start", pa.int32()),
-            pa.field("end", pa.int32()),
-        ]
-    )
-    return pa.schema(
-        [
-            pa.field("url", pa.string()),
-            pa.field("text", pa.string()),
-            pa.field("spans", pa.list_(span)),
-            pa.field("n_chars", pa.int64()),
-            pa.field("link_density", pa.float64()),
-            pa.field("boiler_ratio", pa.float64()),
-            pa.field("quality", pa.float64()),
-            pa.field("extractor_version", pa.string()),
-            pa.field("status", pa.string()),
-            pa.field("error", pa.string()),
-        ]
-    )
+    return to_arrow_schema(EXTRACTED_SCHEMA)

@@ -146,12 +146,12 @@ def test_kill_and_resume_through_catalog_sink(spark, sink_table, tmp_path):
     assert n_failed > 0, "synth corpus must carry deterministic failures"
     r = retry_failed(spark, pages, man2)
     assert r["retried"] == n_failed and r["attempt"] == 1
-    assert os.path.exists(man2.extracted_path + "_retry")  # side-car
+    assert os.path.exists(man2.retry_path)  # side-car
     cur = read_current_extracted(spark, man2)
     # latest-attempt view: still one row per url, and the retried urls'
     # rows now come from the overlay (attempt 1), not the table base
     assert cur.count() == pages.select("url").distinct().count()
-    overlay = spark.read.parquet(man2.extracted_path + "_retry")
+    overlay = spark.read.parquet(man2.retry_path)
     assert overlay.where(F.col("attempt") == 1).count() == n_failed
 
     # file compaction belongs to the catalog, not the parquet verb

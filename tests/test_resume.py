@@ -192,7 +192,7 @@ def test_lineage_values_match_committed_rows(spark, interrupted_run):
         ("extract", p): v
         for p, v in _expected_lineage(read_extracted(spark, man), "text").items()
     }
-    attempt_rows = spark.read.parquet(man.extracted_path + "_retry").where(
+    attempt_rows = spark.read.parquet(man.retry_path).where(
         F.col("attempt") == retried["attempt"]
     )
     want.update(
@@ -921,6 +921,106 @@ def test_compact_kill_window_leaves_readable_table(spark, pages, tmp_path):
     assert os.path.basename(man.extracted_path) == "extracted.gen-0002"
     assert not os.path.exists(os.path.join(str(man.dir), "extracted.gen-0001"))
     assert fp() == frozen
+
+
+def test_retry_overlay_survives_compaction(spark, pages, tmp_path):
+    """The retry overlay is one fixed directory, not derived from the
+    active-table pointer. Retry then compact: the current view still reads
+    every earlier attempt, and a later-attempt overlay row still wins over
+    its base row. Retry, compact, retry, compact, vacuum: vacuum expires
+    no overlay, and each attempt's rows stay readable and match the
+    attempt's retry-NNN lineage rows."""
+    import os
+
+    from engine.jobs.extract_job import compact_run, vacuum_run
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=8, run_id="retry-compact")
+    run_extract_job(spark, pages, man, wave_size=8)
+    first = retry_failed(spark, pages, man)
+    assert first["attempt"] == 1 and first["retried"] > 0
+    overlay = man.retry_path
+    overlay_files = set(spark.read.parquet(overlay).inputFiles())
+
+    compact_run(spark, man, target_file_bytes=1 << 30)
+    assert overlay_files <= set(read_current_extracted(spark, man).inputFiles())
+    url = read_extracted(spark, man).where(F.col("status") == "ok").first()["url"]
+    (
+        read_extracted(spark, man).where(F.col("url") == url)
+        .withColumn("text", F.lit("planted later attempt"))
+        .withColumn("attempt", F.lit(99))
+        .write.mode("append").partitionBy("partition_id").parquet(overlay)
+    )
+    cur = read_current_extracted(spark, man).where(F.col("url") == url)
+    assert [r["text"] for r in cur.collect()] == ["planted later attempt"]
+
+    second = retry_failed(spark, pages, man)
+    assert second["attempt"] == 2 and second["retried"] > 0
+    compact_run(spark, man, target_file_bytes=1 << 30)
+    removed = vacuum_run(spark, man)["removed"]
+    assert os.path.basename(overlay) not in removed
+    assert all("retry" not in name for name in removed)
+    rows = spark.read.parquet(overlay)
+    for attempt in (1, 2):
+        lin = spark.read.parquet(man.retry_lineage_path(attempt)).collect()
+        got = {
+            r["partition_id"]: (r["doc_count"], r["byte_count"], r["checksum"])
+            for r in lin
+        }
+        want = _expected_lineage(
+            rows.where(F.col("attempt") == attempt), "status"
+        )
+        assert want and got == want, attempt
+
+
+# string constants that name a run artifact: exact names and prefixes of
+# the run directory's entries, and substrings only a run path contains
+_RUN_NAMES = {"extracted", "staged", "lineage"}
+_RUN_PREFIXES = ("wave-", "retry-", "_retry")
+_RUN_SUBSTRINGS = (
+    "extracted.", "extracted_retry", "increment_input", "staged.tmp",
+    ".input.tmp", "pre_compact", "compact_tmp", "manifest.json",
+    "_increment_meta",
+)
+
+
+def test_only_the_manifest_names_run_paths():
+    """Tooling guard: RunManifest (engine/manifest.py) is the one owner of
+    the run-directory layout. No other engine module holds a string
+    constant (docstrings aside) naming a run artifact, so no caller can
+    compose a run path that drifts from the manifest's."""
+    import ast
+    import pathlib
+
+    import engine
+
+    hits = []
+    for path in sorted(pathlib.Path(engine.__file__).parent.rglob("*.py")):
+        if path.name == "manifest.py":
+            continue
+        tree = ast.parse(path.read_text())
+        docs = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(n, (ast.Module, ast.ClassDef, ast.FunctionDef,
+                              ast.AsyncFunctionDef))
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        hits += [
+            (path.name, n.lineno, n.value)
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Constant)
+            and isinstance(n.value, str)
+            and id(n) not in docs
+            and (
+                n.value in _RUN_NAMES
+                or n.value.startswith(_RUN_PREFIXES)
+                or any(t in n.value for t in _RUN_SUBSTRINGS)
+            )
+        ]
+    assert hits == []
 
 
 # Spark jobs per verb of one warm lifecycle, counted through job groups and
