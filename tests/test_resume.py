@@ -742,6 +742,26 @@ def test_lost_extracted_dir_raises_not_empty(spark, pages, tmp_path):
         read_extracted(spark, man).count()
 
 
+def test_emptied_extracted_dir_raises_not_empty(spark, pages, tmp_path):
+    """The data-loss case a declared-schema read would turn into an empty
+    table: extracted/ and its partition dirs survive but every data file
+    is gone. Lineage says docs were committed, so read_extracted must
+    raise, not read 0 rows."""
+    import pathlib
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="emptied-test")
+    run_extract_job(spark, pages, man, wave_size=4)
+    assert read_extracted(spark, man).count() > 0
+    data = [p for p in pathlib.Path(man.extracted_path).rglob("*") if p.is_file()]
+    assert data
+    for p in data:
+        p.unlink()
+    assert pathlib.Path(man.extracted_path).is_dir()
+    with pytest.raises(RuntimeError, match="lineage records"):
+        read_extracted(spark, man).count()
+
+
 def test_empty_corpus_run_still_reads_as_empty(spark, pages, tmp_path):
     """The legitimate degradation case the lost-dir guard must NOT break:
     a committed run over an empty corpus writes no data files and reads
