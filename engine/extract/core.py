@@ -45,9 +45,12 @@ from dataclasses import dataclass, field
 # anchor text, a mis-nested inline close (</span>) doesn't end the anchor
 # (browser formatting reconstruction), and an unclosed <a> still cannot
 # leak past its containing block's close.
-# Output on the frozen golden corpus is byte-identical to 1.0.0 at both
-# bumps (verified doc-by-doc over all 2000 corpus docs).
-EXTRACTOR_VERSION = "1.2.0"
+# 1.2.1: a raw-text element's close tag is searched in the source itself,
+# not in src.lower(), whose offsets ran one char ahead per 'İ' (U+0130)
+# earlier in the document and could skip the text after the element.
+# Output on the frozen golden corpus is byte-identical to 1.0.0 at every
+# bump (verified doc-by-doc over all 2000 corpus docs).
+EXTRACTOR_VERSION = "1.2.1"
 
 # --------------------------------------------------------------------------
 # HTML tokenizer
@@ -57,6 +60,13 @@ _VOID_TAGS = frozenset(
     "area base br col embed hr img input link meta param source track wbr".split()
 )
 _RAWTEXT_TAGS = frozenset(("script", "style", "textarea", "noscript"))
+# the close-tag search of each raw-text element, case-insensitive in ASCII
+# only and run on the source itself: offsets into src.lower() drift, since
+# 'İ'.lower() is two code points
+_RAW_CLOSE = {
+    t: re.compile("</" + t, re.IGNORECASE | re.ASCII).search
+    for t in _RAWTEXT_TAGS
+}
 # Opening/closing any of these flushes the current text block.
 _BLOCK_TAGS = frozenset(
     (
@@ -235,7 +245,6 @@ def tokenize_blocks(src: str) -> tuple[list[Block], int]:
     start = end = 0
     opened = _ROOT_ELEM
     keep = True
-    low: str | None = None
     # r6 hot-path bindings: one LOAD_FAST instead of a global/attribute
     # lookup per token
     _tokens = _TOKEN_RE.finditer
@@ -360,13 +369,11 @@ def tokenize_blocks(src: str) -> tuple[list[Block], int]:
             if tag in _RAW:
                 # skip raw content up to the matching close tag
                 # (case-insensitive), then rescan from there
-                if low is None:
-                    low = src.lower()  # lazily, once per document
-                close = low.find("</" + tag, m.end())
-                if close == -1:
+                close = _RAW_CLOSE[tag](src, m.end())
+                if close is None:
                     resume = n
                 else:
-                    gt = src.find(">", close)
+                    gt = src.find(">", close.start())
                     resume = n if gt == -1 else gt + 1
                 n_tags += 1
                 break

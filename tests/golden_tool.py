@@ -12,7 +12,8 @@ semantic change to the extractor.
 `python tests/golden_tool.py diff [REV]` is the differential gate for
 extractor changes that must not change output: it loads REV's
 engine/extract/core.py through `git show` and compares every field of
-`extract_document` against the working tree's, over DIFF_DOCS synth docs
+`extract_document` but the `extractor_version` label against the working
+tree's, over DIFF_DOCS synth docs
 from each of several seeds plus DIFF_FUZZ seeded tag-soup cases (every
 ignored/raw-text/void/block tag, anchors, quoted '>' in attributes, class/id
 hints, entities, comments, stray '<', mis-nesting, truncation). It prints
@@ -112,7 +113,7 @@ DIFF_SHOW = 5       # diffs printed in full
 
 _WORDS = (
     "alpha beta gamma delta epsilon, zeta; eta. Privacy cookies Home "
-    "menu item Kontakt über straße 中文 文本 مرحبا").split()
+    "menu item Kontakt über straße 中文 文本 مرحبا İzmir").split()
 _TEXT_BITS = (
     "&amp;", "&nbsp;", "&lt;p&gt;", "&#65;", "&#x41;", "&unknown;", "&amp",
     "&copy", " < ", "a<b", "3 < 5", "</", "</ p>", "<", "<<", ">", " \n\t ",
@@ -244,13 +245,17 @@ def inputs(n_docs: int, n_fuzz: int, seeds=SYNTH_SEEDS, fuzz_seed: int = 0):
 
 
 def diff_modules(old, new, cases, show: int = 5) -> tuple[int, int, list]:
-    """Compare every extract_document field of two cores over `cases`.
-    Returns (n_cases, n_diffs, first `show` diffs)."""
+    """Compare every extract_document field of two cores over `cases`, but
+    the `extractor_version` label (a deliberate change bumps it on every
+    document; diff_main reports it once). Returns (n_cases, n_diffs, first
+    `show` diffs)."""
     n_cases = n_diffs = 0
     first = []
     for label, data in cases:
         n_cases += 1
         a, b = old.extract_document(data), new.extract_document(data)
+        a.pop("extractor_version", None)
+        b.pop("extractor_version", None)
         if a != b:
             n_diffs += 1
             if len(first) < show:
@@ -270,6 +275,9 @@ def diff_main(rev: str = "HEAD") -> int:
               f"e.g. `diff HEAD~1`.")
         return 2
     old = module_from_source(source, f"core@{rev}")
+    if old.EXTRACTOR_VERSION != new.EXTRACTOR_VERSION:
+        print(f"extractor_version {old.EXTRACTOR_VERSION} ({rev}) -> "
+              f"{new.EXTRACTOR_VERSION} (tree); the other fields follow")
     n_cases, n_diffs, first = diff_modules(
         old, new, inputs(DIFF_DOCS, DIFF_FUZZ), DIFF_SHOW
     )

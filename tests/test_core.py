@@ -110,6 +110,38 @@ def test_tokenizer_skips_script_style_head_comments():
     assert [b.text for b in visible] == ["real"]
 
 
+def test_raw_text_skip_not_shifted_by_dotted_capital_i():
+    """'İ'.lower() is two code points: a close-tag search in src.lower()
+    landed one char further per 'İ' before the <script> and dropped the
+    whole next paragraph (1.2.0 bug). The text must match the same page
+    spelled with a plain 'I'."""
+    first = (
+        "İstanbul'da İlkbahar İzmir İzmit İnebolu İskenderun İpsala İnegöl "
+        "İmralı İncesu İliç ve İdil ilçelerinde bu hafta hava güzel olacak "
+        "ve yağmur beklenmiyor, dedi meteoroloji müdürlüğü sözcüsü."
+    )
+    second = (
+        "İkinci paragraf betiğin hemen ardından gelir ve metnin tamamı "
+        "korunmalıdır; çıkarıcı bu cümleleri asla atlamamalıdır, çünkü "
+        "kapanış etiketi aramasının kayması yüzünden kaybolurlardı."
+    )
+    assert first.count("İ") == 12
+
+    def page(a, b):
+        return (
+            f"<html><body><p>{a}</p><script>var t = 1;</script>"
+            f"<p>{b}</p></body></html>"
+        ).encode()
+
+    got = extract_document(page(first, second))
+    plain = extract_document(
+        page(first.replace("İ", "I"), second.replace("İ", "I"))
+    )
+    assert second in got["text"]
+    assert got["n_chars"] == plain["n_chars"]
+    assert got["text"].replace("İ", "I") == plain["text"]
+
+
 def test_tokenizer_unclosed_head_recovery():
     # browsers auto-close <head> at the first body-content tag
     src = "<html><head><meta charset=x><body><p>kept words</p>"

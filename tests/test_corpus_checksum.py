@@ -12,7 +12,9 @@ FROZEN_SHA hashes only text/status/error. FROZEN_FULL_SHA pins every other
 output column too (spans with node_path/start/end, n_chars, link_density,
 boiler_ratio, quality, extractor_version), so a span-offset or metric drift
 with unchanged text also fails. It was frozen from the 1.2.0 extractor
-before the tokenizer's lean ignored-subtree pass.
+before the tokenizer's lean ignored-subtree pass, and re-frozen at 1.2.1
+(raw-text close search after U+0130), where extractor_version is the only
+column that changed on this corpus.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ from engine.extract.udf import run_extract
 from engine.synth import generate_pages
 
 FROZEN_SHA = "161733f9d26f0c828d6f5ca39e9d1375576499ebc003a47e703df6b2c102b23e"
-FROZEN_FULL_SHA = "3676b7f90a494d6f4c9d4683f910df903d840a743be6b8e2dcb07631b0073180"
+FROZEN_FULL_SHA = "7647f229a08336da48a2ff0fa16b878430fcec1fdc582a5da86f0b393dcf77d6"
 FROZEN_ROWS = 2043
 N_DOCS = 2000
 
