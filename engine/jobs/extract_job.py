@@ -45,16 +45,21 @@ tests/test_resume.py). A fully committed run is a no-op.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from engine.extract.core import EXTRACTOR_VERSION
 from engine.extract.udf import dedup_latest_crawl, extract_batches_arrow
-from engine.manifest import RunManifest
-from engine.schema import EXTRACTED_PARTITIONED_SCHEMA, LINEAGE_SCHEMA
+from engine.manifest import RunManifest, new_run_id
+from engine.schema import (
+    EXTRACTED_PARTITIONED_SCHEMA,
+    EXTRACTED_RETRY_SCHEMA,
+    LINEAGE_SCHEMA,
+)
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
 
@@ -98,6 +103,23 @@ def with_partition_id(pages: DataFrame, n_partitions: int) -> DataFrame:
     )
 
 
+@contextlib.contextmanager
+def _job_description(
+    spark: SparkSession, verb: str, run_id: str, wave: int | None = None
+):
+    """Label every Spark job a verb runs "<verb> run=<id>[ wave=<first
+    pid>]" (the status store, event log and UI show it), and restore the
+    caller's description on exit."""
+    sc = spark.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    label = f"{verb} run={run_id}"
+    sc.setJobDescription(label if wave is None else f"{label} wave={wave}")
+    try:
+        yield
+    finally:
+        sc.setJobDescription(prev)
+
+
 N_HOST_SALT = 16
 
 
@@ -133,16 +155,18 @@ def enqueue(
     force: bool = False,
 ) -> RunManifest:
     """submit/reserve analog: size the run and commit a pending manifest."""
-    sized = pages.agg(
-        F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("b"),
-    ).collect()[0]
-    total_bytes = int(sized["b"] or 0)
-    n = plan_partitions(total_bytes, target_partition_bytes, min_partitions)
     from engine.catalog import configured_sink_table
 
-    sink_table = configured_sink_table(spark)
-    if sink_table and not force:
-        _guard_sink_table_unclaimed(spark, sink_table, runs_root, run_id)
+    run_id = run_id or new_run_id()
+    with _job_description(spark, "enqueue", run_id):
+        sized = pages.agg(
+            F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("b"),
+        ).collect()[0]
+        total_bytes = int(sized["b"] or 0)
+        n = plan_partitions(total_bytes, target_partition_bytes, min_partitions)
+        sink_table = configured_sink_table(spark)
+        if sink_table and not force:
+            _guard_sink_table_unclaimed(spark, sink_table, runs_root, run_id)
     return RunManifest.create(
         runs_root, n, total_bytes, run_id=run_id, force=force,
         sink_table=sink_table,
@@ -268,12 +292,13 @@ def stage_pages(
     n_parts = manifest.state()["n_partitions"]
     tmp = manifest.staged_tmp_path
     shutil.rmtree(tmp, ignore_errors=True)
-    (
-        with_partition_id(pages, n_parts)
-        .write.mode("overwrite")
-        .partitionBy("partition_id")
-        .parquet(tmp)
-    )
+    with _job_description(spark, "stage", manifest.run_id):
+        (
+            with_partition_id(pages, n_parts)
+            .write.mode("overwrite")
+            .partitionBy("partition_id")
+            .parquet(tmp)
+        )
     os.rename(tmp, staged)
     return staged
 
@@ -290,15 +315,12 @@ def run_extract_job(
     `max_waves` exists for the resume test (simulates a mid-run kill).
     Returns summary counters.
     """
-    import os
     import shutil
-
-    from engine.catalog import read_sink_table, write_wave_to_table
 
     sink_table = _run_sink_table(spark, manifest, strict=True)
     pending = manifest.pending_partitions()
-    wave_paths = []
     waves_run = 0
+    done_docs = 0
     if not pending:
         # already complete — still reclaim the staged copy here: a crash
         # between the final wave's commit and its cleanup would otherwise
@@ -317,77 +339,27 @@ def run_extract_job(
     single_wave = len(pending) <= wave_size and (
         max_waves is None or max_waves >= 1
     )
-    if single_wave:
-        keyed = with_partition_id(pages, manifest.state()["n_partitions"])
-    else:
+    keyed = with_partition_id(pages, manifest.state()["n_partitions"])
+    if not single_wave:
         staged = stage_pages(spark, pages, manifest)
         # explicit schema (known statically from the input): skips footer
         # inference and keeps an all-empty staged table (empty corpus)
         # readable instead of dying with UNABLE_TO_INFER_SCHEMA
-        staged_schema = with_partition_id(
-            pages, manifest.state()["n_partitions"]
-        ).schema
+        keyed = spark.read.schema(keyed.schema).parquet(staged)
 
     for w0 in range(0, len(pending), wave_size):
         if max_waves is not None and waves_run >= max_waves:
             break
         wave = pending[w0 : w0 + wave_size]
-        t0 = time.monotonic()
-        if single_wave:
-            batch = keyed.where(F.col("partition_id").isin(wave))
-        else:
-            # partition_id is a partition DIRECTORY of the staged table →
+        with _job_description(spark, "run", manifest.run_id, wave[0]):
+            # on the staged table partition_id is a partition DIRECTORY →
             # this filter prunes to the wave's files (pinned by the
             # inputFiles test)
-            batch = spark.read.schema(staged_schema).parquet(staged).where(
-                F.col("partition_id").isin(wave)
+            done_docs += _run_wave(
+                spark, manifest, sink_table, wave,
+                keyed.where(F.col("partition_id").isin(wave)),
             )
-        extracted = batch.select("url", "html", "partition_id").mapInArrow(
-            extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
-        )
-        if sink_table:
-            # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
-            # replaces exactly this wave's partitions under the catalog's
-            # own commit protocol
-            write_wave_to_table(spark, extracted, sink_table)
-        else:
-            (
-                extracted.write.mode("overwrite")
-                # dynamic overwrite replaces ONLY the partitions this wave
-                # produced: orphan rows from a crash between write and
-                # commit are rewritten, never duplicated, on resume
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("partition_id")
-                .parquet(manifest.extracted_path)
-            )
-        # lineage from the just-written files (counts what was COMMITTED,
-        # not what was attempted); partition pruning keeps the read to the
-        # wave's own output dirs. A run whose every wave is empty (empty
-        # corpus) never creates extracted/ at all — dynamic overwrite of
-        # zero partitions writes nothing — so it reads zero paths and the
-        # commit proceeds with zero lineage rows.
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        if sink_table:
-            out = read_sink_table(spark, sink_table)
-        else:
-            # explicit schema: an empty wave may leave the directory with
-            # zero data files (only _SUCCESS) — inference would die
-            written = [manifest.extracted_path] if os.path.exists(
-                manifest.extracted_path
-            ) else []
-            out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
-                *written
-            )
-        # wave file keyed by its first partition id: unique across waves
-        # (pending sets are disjoint), stable across resume, overwrite-safe
-        wave_path = manifest.lineage_wave_path(wave[0])
-        lineage = lineage_frame(
-            out.where(F.col("partition_id").isin(wave)),
-            manifest.run_id, "extract", wall_ms,
-        )
-        lineage.coalesce(1).write.mode("overwrite").parquet(wave_path)
         manifest.commit_partitions(wave)  # atomic snapshot flip — THE commit
-        wave_paths.append(wave_path)
         waves_run += 1
 
     if manifest.is_complete():
@@ -396,16 +368,6 @@ def run_extract_job(
         # full second copy of the corpus)
         shutil.rmtree(manifest.staged_path, ignore_errors=True)
 
-    done_docs = 0
-    if wave_paths:
-        # read back from the committed lineage files (one tiny JVM scan),
-        # never from rows collected to the driver
-        done_docs = (
-            spark.read.schema(LINEAGE_SCHEMA)
-            .parquet(*wave_paths)
-            .agg(F.coalesce(F.sum("doc_count"), F.lit(0)))
-            .collect()[0][0]
-        )
     return {
         "run_id": manifest.run_id,
         "waves_run": waves_run,
@@ -414,11 +376,74 @@ def run_extract_job(
     }
 
 
+def _run_wave(
+    spark: SparkSession,
+    manifest: RunManifest,
+    sink_table: str | None,
+    wave: list[int],
+    batch: DataFrame,
+) -> int:
+    """Extract one wave's pages, write them, and write the wave's lineage
+    file; returns the docs that lineage counts (observed on its write, so
+    no job reads it back). The caller commits the wave."""
+    import os
+
+    from engine.catalog import read_sink_table, write_wave_to_table
+
+    t0 = time.monotonic()
+    extracted = batch.select("url", "html", "partition_id").mapInArrow(
+        extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
+    )
+    if sink_table:
+        # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
+        # replaces exactly this wave's partitions under the catalog's own
+        # commit protocol
+        write_wave_to_table(spark, extracted, sink_table)
+    else:
+        (
+            extracted.write.mode("overwrite")
+            # dynamic overwrite replaces ONLY the partitions this wave
+            # produced: orphan rows from a crash between write and commit
+            # are rewritten, never duplicated, on resume
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("partition_id")
+            .parquet(manifest.extracted_path)
+        )
+    # lineage from the just-written files (counts what was COMMITTED, not
+    # what was attempted); partition pruning keeps the read to the wave's
+    # own output dirs. A run whose every wave is empty (empty corpus) never
+    # creates extracted/ at all — dynamic overwrite of zero partitions
+    # writes nothing — so it reads zero paths and the commit proceeds with
+    # zero lineage rows.
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    if sink_table:
+        out = read_sink_table(spark, sink_table)
+    else:
+        written = [manifest.extracted_path] if os.path.exists(
+            manifest.extracted_path
+        ) else []
+        out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(*written)
+    docs = Observation()
+    # wave file keyed by its first partition id: unique across waves
+    # (pending sets are disjoint), stable across resume, overwrite-safe
+    (
+        lineage_frame(
+            out.where(F.col("partition_id").isin(wave)),
+            manifest.run_id, "extract", wall_ms,
+        )
+        .observe(docs, F.coalesce(F.sum("doc_count"), F.lit(0)).alias("n"))
+        .coalesce(1)
+        .write.mode("overwrite")
+        .parquet(manifest.lineage_wave_path(wave[0]))
+    )
+    return docs.get["n"]
+
+
 def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     files = manifest.lineage_files()
     if not files:
         return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
-    return spark.read.parquet(*files)
+    return spark.read.schema(LINEAGE_SCHEMA).parquet(*files)
 
 
 # the column each stage's checksum digests next to the url: an extract
@@ -523,16 +548,24 @@ def read_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     from pyspark.errors import AnalysisException
 
     try:
-        df = spark.read.parquet(manifest.extracted_path)
+        # declared schema: no footer-inference job
+        df = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
+            manifest.extracted_path
+        )
     except AnalysisException as e:
         # try/except keeps the healthy path free of any extra filesystem
-        # walk. ONLY the no-data classes may degrade (via the lineage
-        # check): any other analysis error (conflicting partition layouts,
-        # corrupt footers) on a run the manifest says has committed data
-        # must surface, or export would silently publish an empty table.
-        if e.getCondition() not in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND"):
+        # walk. ONLY a vanished path may degrade (via the lineage check):
+        # any other analysis error (conflicting partition layouts) on a
+        # run the manifest says has committed data must surface, or export
+        # would silently publish an empty table.
+        if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return _empty_or_raise(str(e.getCondition()))
+    if not df.inputFiles():
+        # a declared schema reads a directory with no data files as an
+        # empty table; the file index is already listed, so this costs no
+        # job
+        return _empty_or_raise("no data files")
     if len(committed) == manifest.state()["n_partitions"]:
         # fully committed: skip the isin filter — at 10^6 partitions the
         # predicate alone bloats the plan, and it would prune nothing
@@ -551,37 +584,61 @@ def retry_failed(
     lineage file (retry-NNN.parquet) so a second retry never erases the
     first's audit rows. Without a Delta/Iceberg MERGE in-sandbox this
     append+window-dedup is the idempotent equivalent.
+
+    One pass: the failed-url window and semi join run once, inside the
+    overlay write, and `retried` is the row count observed on that write.
+    An attempt that re-extracts nothing leaves no trace: no lineage file
+    (so the attempt number stays free) and no new overlay directory.
     """
-    n_parts = manifest.state()["n_partitions"]
-    failed_urls = (
-        read_current_extracted(spark, manifest)
-        .where(F.col("status") == "failed")
-        .select("url")
-        .distinct()
-    )
-    todo = with_partition_id(
-        pages.join(failed_urls, "url", "left_semi"), n_parts
-    )
-    n_failed = todo.count()
-    if n_failed == 0:
-        return {"retried": 0}
-    attempt = manifest.next_retry_attempt()
-    t0 = time.monotonic()
-    redone = todo.select("url", "html", "partition_id").mapInArrow(
-        extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
-    ).withColumn("attempt", F.lit(attempt))
-    retry_path = manifest.retry_path
-    redone.write.mode("append").partitionBy("partition_id").parquet(retry_path)
-    # every stage writes lineage rows (BASELINE.json north_star) — the retry
-    # wave is auditable like any extract wave; lineage covers THIS attempt
-    # only, not the accumulated retry table
-    wall_ms = int((time.monotonic() - t0) * 1000)
-    out = spark.read.parquet(retry_path).where(F.col("attempt") == attempt)
-    lineage = lineage_frame(out, manifest.run_id, "retry", wall_ms)
-    lineage.coalesce(1).write.mode("overwrite").parquet(
-        manifest.retry_lineage_path(attempt)
-    )
-    return {"retried": n_failed, "attempt": attempt}
+    import os
+    import shutil
+
+    if not manifest.committed_partitions():
+        return {"retried": 0}  # nothing committed, nothing can have failed
+    with _job_description(spark, "retry", manifest.run_id):
+        n_parts = manifest.state()["n_partitions"]
+        failed_urls = (
+            read_current_extracted(spark, manifest)
+            .where(F.col("status") == "failed")
+            .select("url")
+            .distinct()
+        )
+        todo = with_partition_id(
+            pages.join(failed_urls, "url", "left_semi"), n_parts
+        )
+        attempt = manifest.next_retry_attempt()
+        retry_path = manifest.retry_path
+        had_overlay = os.path.exists(retry_path)
+        rows = Observation()
+        t0 = time.monotonic()
+        (
+            todo.select("url", "html", "partition_id")
+            .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
+            .withColumn("attempt", F.lit(attempt))
+            .observe(rows, F.count(F.lit(1)).alias("n"))
+            .write.mode("append")
+            .partitionBy("partition_id")
+            .parquet(retry_path)
+        )
+        retried = rows.get["n"]
+        if retried == 0:
+            if not had_overlay:
+                # the zero-row write left only a _SUCCESS marker
+                shutil.rmtree(retry_path, ignore_errors=True)
+            return {"retried": 0}
+        # every stage writes lineage rows (BASELINE.json north_star) — the
+        # retry wave is auditable like any extract wave; lineage covers
+        # THIS attempt only, not the accumulated retry table
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        out = spark.read.schema(EXTRACTED_RETRY_SCHEMA).parquet(retry_path)
+        lineage = lineage_frame(
+            out.where(F.col("attempt") == attempt),
+            manifest.run_id, "retry", wall_ms,
+        )
+        lineage.coalesce(1).write.mode("overwrite").parquet(
+            manifest.retry_lineage_path(attempt)
+        )
+    return {"retried": retried, "attempt": attempt}
 
 
 def read_current_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
@@ -589,14 +646,28 @@ def read_current_extracted(spark: SparkSession, manifest: RunManifest) -> DataFr
     Retry rows carry their real attempt number (written by retry_failed),
     so repeated retries are total-ordered and the window winner is
     deterministic."""
-    from pyspark.sql import Window as W
-
     import os
 
+    from pyspark.sql import Window as W
+
+    legacy = manifest.legacy_retry_paths()
+    if legacy:
+        raise RuntimeError(
+            f"run {manifest.run_id}: retry attempts under "
+            f"{', '.join(os.path.basename(p) for p in legacy)} are not "
+            "read — older code put a compacted run's retry overlay there. "
+            "Move the files of each of its partition_id=* directories into "
+            "the same directory under "
+            f"{os.path.basename(manifest.retry_path)}/ (the attempt column "
+            "travels with the rows), remove the emptied directory, and "
+            "read again"
+        )
     base = read_extracted(spark, manifest).withColumn("attempt", F.lit(0))
     if os.path.exists(manifest.retry_path):
-        retry = spark.read.parquet(manifest.retry_path).select(*base.columns)
-        base = base.unionByName(retry)
+        retry = spark.read.schema(EXTRACTED_RETRY_SCHEMA).parquet(
+            manifest.retry_path
+        )
+        base = base.unionByName(retry.select(*base.columns))
     w = W.partitionBy("url").orderBy(F.desc("attempt"))
     return (
         base.withColumn("_rn", F.row_number().over(w))
@@ -997,23 +1068,25 @@ def run_stats(spark: SparkSession, manifest: RunManifest) -> dict:
     quantiles. ONE scan computes everything (multi-aggregate, map-side
     partials); approx_count_distinct and approx_percentile keep the
     aggregation state constant-size at any corpus scale."""
-    cur = read_extracted(spark, manifest)
-    row = cur.agg(
-        F.count("*").alias("rows"),
-        F.approx_count_distinct("url").alias("approx_urls"),
-        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("failed"),
-        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
-        # octet_length = true UTF-8 bytes (length() counts characters —
-        # an under-count on any accented corpus, review finding)
-        F.sum(F.coalesce(F.octet_length("text"), F.lit(0))).alias("text_bytes"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-        F.expr(
-            "approx_percentile(quality, array(0.5, 0.9), 1000)"
-        ).alias("quality_p50_p90"),
-        F.countDistinct("extractor_version").alias("n_versions"),
-    ).collect()[0]
+    with _job_description(spark, "stats", manifest.run_id):
+        row = read_extracted(spark, manifest).agg(
+            F.count("*").alias("rows"),
+            F.approx_count_distinct("url").alias("approx_urls"),
+            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("failed"),
+            F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
+            # octet_length = true UTF-8 bytes (length() counts characters —
+            # an under-count on any accented corpus, review finding)
+            F.sum(F.coalesce(F.octet_length("text"), F.lit(0))).alias("text_bytes"),
+            F.min("n_chars").alias("min_chars"),
+            F.max("n_chars").alias("max_chars"),
+            F.expr(
+                "approx_percentile(quality, array(0.5, 0.9), 1000)"
+            ).alias("quality_p50_p90"),
+            # size(collect_set) is countDistinct's value without its Expand
+            # stage and extra shuffle (a handful of versions per run)
+            F.size(F.collect_set("extractor_version")).alias("n_versions"),
+        ).collect()[0]
     out = row.asDict()
     q = out.pop("quality_p50_p90") or [None, None]
     out["quality_p50"], out["quality_p90"] = (
@@ -1191,7 +1264,9 @@ def compact_run(
         pid: max(1, math.ceil(b / target_file_bytes)) for pid, b in sizes.items()
     }
     total_files = sum(files_for.values())
-    out = spark.read.parquet(manifest.extracted_path)
+    out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
+        manifest.extracted_path
+    )
     n_before = len(out.inputFiles())
     # sizing table rides a broadcast join (a literal map would bloat the
     # plan at 10^6 partitions)
@@ -1216,7 +1291,17 @@ def compact_run(
     # verify the rewrite readable BEFORE it becomes the active table —
     # a corrupt rewrite never publishes, and the pointer flip below is
     # the single atomic commit (no unreadable instant at any kill point)
-    n_after = len(spark.read.parquet(new_dir).inputFiles())
+    n_after = len(
+        spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA)
+        .parquet(new_dir)
+        .inputFiles()
+    )
+    if n_before and not n_after:
+        raise RuntimeError(
+            f"run {manifest.run_id}: the compaction rewrite "
+            f"{os.path.basename(new_dir)} holds no data files — not "
+            "published; the active table is unchanged"
+        )
     manifest.set_extracted_dir(os.path.basename(new_dir))
     shutil.rmtree(old_dir)  # expire the superseded generation
     return {

@@ -36,6 +36,9 @@ callers ask it for paths and never compose them:
                                   #   Fixed name: it does NOT follow the
                                   #   generation pointer, so compaction never
                                   #   orphans an attempt
+    extracted.gen-NNNN_retry/     # legacy: older code's overlay after a
+                                  #   compaction; reads refuse while one
+                                  #   exists (move its rows into the above)
     increment_input/              # an increment run's anti-joined input
                                   #   (+ _increment_meta.json: its base runs)
     lineage/wave-NNNNN.parquet    # committed per-partition lineage rows
@@ -58,6 +61,9 @@ _MANIFEST = "manifest.json"
 _BASE = "extracted"
 # the one definition of a compaction generation's name (full match)
 _GENERATION = re.compile(r"extracted\.gen-(\d+)")
+# where code before the fixed overlay name put the retry attempts of a
+# compacted run: the active generation's name + "_retry" (full match)
+_LEGACY_RETRY = re.compile(r"extracted\.gen-\d+_retry")
 _INCREMENT_META = "_increment_meta.json"
 
 
@@ -88,7 +94,7 @@ class RunManifest:
         make a re-run append duplicates of all committed rows. `force=True`
         is the explicit override — it also clears the run's data dirs so
         the reset is consistent."""
-        run_id = run_id or uuid.uuid4().hex[:12]
+        run_id = run_id or new_run_id()
         m = cls(root, run_id)
         if m.path.exists():
             if not force:
@@ -259,6 +265,15 @@ class RunManifest:
         the overlay must not follow the pointer."""
         return self._at("extracted_retry")
 
+    def legacy_retry_paths(self) -> list[str]:
+        """Retry overlays that code before the fixed `retry_path` wrote
+        after a compaction (`extracted.gen-NNNN_retry/`). Nothing reads
+        them: their rows belong in `retry_path`."""
+        return sorted(
+            str(p) for p in self.dir.glob("extracted.gen-*_retry")
+            if _LEGACY_RETRY.fullmatch(p.name)
+        )
+
     @property
     def staged_path(self) -> str:
         """Keyed input staged once, partitionBy(partition_id), so waves
@@ -317,6 +332,10 @@ class RunManifest:
              for p in self.lineage_dir.glob("retry-*.parquet")),
             default=0,
         )
+
+
+def new_run_id() -> str:
+    return uuid.uuid4().hex[:12]
 
 
 def _now() -> str:

@@ -11,6 +11,7 @@ Tables
 ------
 pages      : the input (BASELINE.json input_hint — exact shape, do not change)
 extracted  : per-url extraction output (FIXTURES.md §2)
+retry      : extracted rows re-extracted by a retry attempt (+ attempt)
 lineage    : per-partition per-stage commit rows (FIXTURES.md §3)
 
 A run's partition status lives in its manifest.json (engine/manifest.py),
@@ -60,6 +61,18 @@ EXTRACTED_SCHEMA = T.StructType(
 # nullable like every column the extract UDF and parquet reads produce.
 EXTRACTED_PARTITIONED_SCHEMA = T.StructType(
     EXTRACTED_SCHEMA.fields + [T.StructField("partition_id", T.IntegerType(), True)]
+)
+
+# the retry overlay: extracted + the retry attempt that wrote the row, in
+# the column order its files hold (partition_id is the directory key).
+# Built as a new StructType: StructType.add mutates in place, so calling it
+# on a shared constant changes every later reader and writer of that table.
+EXTRACTED_RETRY_SCHEMA = T.StructType(
+    EXTRACTED_SCHEMA.fields
+    + [
+        T.StructField("attempt", T.IntegerType(), True),
+        T.StructField("partition_id", T.IntegerType(), True),
+    ]
 )
 
 # nullable: lineage is read back from parquet files, which Spark always

@@ -451,6 +451,141 @@ def test_second_retry_preserves_first_audit_rows(spark, pages, tmp_path):
     assert cur.count() == cur.select("url").distinct().count()
 
 
+def _ok_pages(spark, n):
+    """n small pages that all extract with status ok, one url each."""
+    import datetime as dt
+
+    body = "Plain article words for the retry test, long enough to keep. " * 4
+    return spark.createDataFrame(
+        [
+            (f"http://ok.example/{i}", dt.datetime(2024, 1, 1),
+             f"<html><body><p>{i} {body}</p></body></html>".encode(), None, None)
+            for i in range(n)
+        ],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+
+
+def test_retry_with_nothing_failed_leaves_no_attempt(spark, tmp_path):
+    """On a complete run whose current view has no failed row, a retry
+    returns {"retried": 0}, writes no retry lineage file and no overlay
+    directory, and the next real retry is attempt 1."""
+    import os
+    import shutil
+
+    pages = _ok_pages(spark, 12)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="no-fail")
+    run_extract_job(spark, pages, man, wave_size=4)
+    assert read_current_extracted(spark, man).where(
+        F.col("status") != "ok"
+    ).count() == 0
+    before = sorted(os.listdir(man.dir))
+
+    assert retry_failed(spark, pages, man) == {"retried": 0}
+    assert sorted(os.listdir(man.dir)) == before
+    assert not os.path.exists(man.retry_path)
+    assert not any(
+        os.path.basename(f).startswith("retry-") for f in man.lineage_files()
+    )
+    assert man.next_retry_attempt() == 1
+
+    # make one committed row a failure: rewrite the base table with it
+    url = "http://ok.example/3"
+    base = read_extracted(spark, man)
+    tmp = str(tmp_path / "rewritten")
+    base.withColumn(
+        "status",
+        F.when(F.col("url") == url, F.lit("failed")).otherwise(F.col("status")),
+    ).write.partitionBy("partition_id").parquet(tmp)
+    shutil.rmtree(man.extracted_path)
+    os.rename(tmp, man.extracted_path)
+
+    res = retry_failed(spark, pages, man)
+    assert res == {"retried": 1, "attempt": 1}
+    cur = read_current_extracted(spark, man).where(F.col("url") == url)
+    assert [r["status"] for r in cur.collect()] == ["ok"]
+
+
+def test_retry_counts_every_recrawl_row(spark, pages, tmp_path):
+    """With duplicate input urls (re-crawls), `retried` is the number of
+    page rows re-extracted, and equals the attempt's lineage doc_count
+    sum and its overlay rows."""
+    import datetime as dt
+
+    junk = spark.createDataFrame(
+        [("http://junk.example/x", dt.datetime(2024, m, 1), b"\x00\x01", None,
+          None) for m in (1, 2, 3)],
+        pages.schema,
+    )
+    crawl = pages.unionByName(junk)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, crawl, root, min_partitions=8, run_id="recrawl")
+    run_extract_job(spark, crawl, man, wave_size=8)
+    failed = (
+        read_current_extracted(spark, man)
+        .where(F.col("status") == "failed").select("url").distinct()
+    )
+    want = crawl.join(failed, "url", "left_semi").count()
+    assert want > failed.count()  # some failed url has several rows
+
+    res = retry_failed(spark, pages.unionByName(junk), man)
+    assert res["retried"] == want
+    lin = read_lineage(spark, man).where(F.col("stage") == "retry")
+    assert lin.agg(F.sum("doc_count")).collect()[0][0] == want
+    rows = spark.read.parquet(man.retry_path)
+    assert rows.where(F.col("attempt") == res["attempt"]).count() == want
+
+
+def test_legacy_retry_overlay_fails_loudly(spark, pages, tmp_path):
+    """Runs that older code compacted and then retried keep attempts in
+    extracted.gen-NNNN_retry/, which nothing reads. The current view (and
+    so retry and export) refuses to read such a run, naming the directory
+    and the fix; after the documented move the attempts are read."""
+    import os
+    import pathlib
+
+    from engine.jobs.extract_job import compact_run
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=8, run_id="legacy")
+    run_extract_job(spark, pages, man, wave_size=8)
+    retry_failed(spark, pages, man)
+    compact_run(spark, man, target_file_bytes=1 << 30)
+    # what older code did: the overlay followed the generation pointer
+    legacy = man.extracted_path + "_retry"
+    os.rename(man.retry_path, legacy)
+    assert man.legacy_retry_paths() == [legacy]
+
+    for verb in (
+        lambda: read_current_extracted(spark, man),
+        lambda: retry_failed(spark, pages, man),
+        lambda: export_run(spark, man, str(tmp_path / "out")),
+    ):
+        with pytest.raises(RuntimeError) as e:
+            verb()
+        msg = str(e.value)
+        assert os.path.basename(legacy) in msg
+        assert os.path.basename(man.retry_path) in msg
+        assert "partition_id=*" in msg
+
+    # the fix the message names: move each partition dir's files
+    for part in pathlib.Path(legacy).glob("partition_id=*"):
+        dest = pathlib.Path(man.retry_path) / part.name
+        dest.mkdir(parents=True, exist_ok=True)
+        for f in part.iterdir():
+            f.rename(dest / f.name)
+    import shutil
+
+    shutil.rmtree(legacy)
+    assert man.legacy_retry_paths() == []
+    cur = read_current_extracted(spark, man)
+    assert cur.count() == cur.select("url").distinct().count()
+    assert spark.read.parquet(man.retry_path).where(
+        F.col("attempt") == 1
+    ).count() > 0
+
+
 def test_manifest_create_refuses_overwrite(spark, pages, tmp_path):
     """ADVICE(low): re-creating an existing run must be an explicit,
     data-clearing act, never a silent pending-reset over live data."""
@@ -1046,10 +1181,24 @@ def test_only_the_manifest_names_run_paths():
 # Spark jobs per verb of one warm lifecycle, counted through job groups and
 # pinned as caps (equal to the measured counts) so no change adds a Spark
 # round-trip to the job path unnoticed. A Python-touching job costs a fixed
-# ~0.25 s before its UDF runs (CLAUDE.md job-path rule).
+# ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
+# wave write and the lineage write (2 AQE stages); retry: the one overlay
+# write (failed-url window + semi join) and its lineage write; stats: one
+# aggregate.
 _JOBS_PER_VERB_CAP = {
-    "enqueue": 2, "stage": 1, "run": 5, "resume": 5, "retry": 11, "stats": 4,
+    "enqueue": 2, "stage": 1, "run": 3, "resume": 3, "retry": 5, "stats": 2,
 }
+
+
+def _job_labels(spark, job_ids):
+    """(description, call site) of each job, from the status store."""
+    store = spark.sparkContext._jsc.sc().statusStore()
+    out = []
+    for i in job_ids:
+        job = store.job(i)
+        desc = job.description()
+        out.append((desc.get() if desc.isDefined() else None, job.name()))
+    return out
 
 
 def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
@@ -1058,7 +1207,7 @@ def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
     sc = spark.sparkContext
 
     def lifecycle(tag):
-        jobs = {}
+        jobs, labels = {}, {}
 
         def step(verb, fn):
             group = f"jobs-per-verb-{tag}-{verb}"
@@ -1067,7 +1216,8 @@ def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
                 value = fn()
             finally:
                 sc.setLocalProperty("spark.jobGroup.id", None)
-            jobs[verb] = len(sc.statusTracker().getJobIdsForGroup(group))
+            ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
+            jobs[verb], labels[verb] = len(ids), _job_labels(spark, ids)
             return value
 
         root = str(tmp_path / f"runs-{tag}")
@@ -1079,10 +1229,50 @@ def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
         step("stats", lambda: run_stats(spark, m))
         assert (run["complete"], resume["complete"]) == (False, True)
         assert retried["retried"] > 0
-        return jobs
+        return jobs, labels
 
     lifecycle("warm")
-    jobs = lifecycle("counted")
-    over = {v: (n, _JOBS_PER_VERB_CAP[v]) for v, n in jobs.items() if n > _JOBS_PER_VERB_CAP[v]}
-    assert not over, f"verbs over their Spark-job cap (count, cap): {over}"
+    jobs, labels = lifecycle("counted")
+    over = {
+        v: (n, _JOBS_PER_VERB_CAP[v], labels[v])
+        for v, n in jobs.items() if n > _JOBS_PER_VERB_CAP[v]
+    }
+    assert not over, (
+        f"verbs over their Spark-job cap (count, cap, [(description, "
+        f"call site) per job]): {over}"
+    )
     assert all(n > 0 for n in jobs.values()), jobs
+    # each verb labels its jobs "<verb> run=<id>[ wave=<first pid>]"
+    want = {
+        "enqueue": {"enqueue run=jobs"}, "stage": {"stage run=jobs"},
+        "run": {"run run=jobs wave=0"}, "resume": {"run run=jobs wave=4"},
+        "retry": {"retry run=jobs"}, "stats": {"stats run=jobs"},
+    }
+    assert {v: {d for d, _ in ls} for v, ls in labels.items()} == want
+
+
+def test_job_description_restored_after_verb(
+    spark, pages, tmp_path, monkeypatch
+):
+    """A verb's job label is scoped to the verb: the caller's description
+    is back in place afterwards, also when the verb raises mid-wave."""
+    import engine.jobs.extract_job as job
+
+    sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try:
+        man = enqueue(spark, pages, str(tmp_path / "runs"), run_id="desc")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+
+        def kill(*args):
+            assert sc.getLocalProperty("spark.job.description") == (
+                "run run=desc wave=0"
+            )
+            raise _Kill()
+
+        monkeypatch.setattr(job, "lineage_frame", kill)
+        with pytest.raises(_Kill):
+            run_extract_job(spark, pages, man, wave_size=4)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
