@@ -30,11 +30,13 @@ Commit protocol (resume unit = wave of partitions):
        partition overwrite — a crash between write and commit leaves
        orphan rows, and the resume's rewrite of the same wave REPLACES
        them instead of appending duplicates
-    4. build the wave's lineage rows (doc/byte counts, checksum, wall_ms)
-       on the JVM from the files step 3 committed — one aggregate plus
-       literal columns (lineage_frame), nothing collected to the driver,
-       no Python worker — and write them to a wave-keyed file,
-       mode=overwrite (same idempotency)
+    4. publish the wave's lineage rows (per partition: doc/byte counts and
+       checksum, plus wall_ms) to a wave-keyed file. The counts and
+       checksums are an unnamed Observation on step 3's write — per
+       partition id of the wave, the aggregates `_lineage_sql` defines —
+       so the wave is ONE Spark job and nothing is read back; the driver
+       writes the file with pyarrow (temp, fsync, rename; the rename
+       replaces any orphan a killed wave left)
     5. atomically flip those partitions pending→committed in manifest.json
 A kill ANYWHERE — between waves or between steps 3/4 and 5 — loses at most
 the in-flight wave's work; re-running recomputes ONLY partitions absent
@@ -59,30 +61,65 @@ from engine.schema import (
     EXTRACTED_PARTITIONED_SCHEMA,
     EXTRACTED_RETRY_SCHEMA,
     LINEAGE_SCHEMA,
+    lineage_arrow_schema,
 )
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
 
 _MASK40 = (1 << 40) - 1
 
+# the column each stage's checksum digests next to the url: an extract
+# wave pins the committed text, a retry attempt each url's new status
+_CHECKSUM_COL = {"extract": "text", "retry": "status"}
 
-def _content_checksum(per_row_hash):
-    """Order-insensitive, partial-aggregatable content digest.
 
-    Two independent 40-bit lanes of the per-row hash are SUMmed (not
-    collected): commutative + associative → map-side combine works, the
-    aggregation buffer is constant-size, and the result is independent of
-    row order. 40-bit lanes keep the long sum overflow-free to ~2^23 rows
-    per partition (partitions are byte-bounded far below that). The naive
-    alternative — sort_array(collect_list(row_digest)) — buffers every row
-    of a partition in ONE aggregation state: a scale bug at 64 MiB+
-    partitions (round-2 fix; was the dominant lineage cost)."""
-    lane1 = F.sum(per_row_hash.bitwiseAND(F.lit(_MASK40)))
-    lane2 = F.sum(
-        F.shiftrightunsigned(per_row_hash, 20).bitwiseAND(F.lit(_MASK40))
+def _lineage_sql(stage: str, pid: int | None = None) -> tuple[str, str, str]:
+    """SQL text of one partition's lineage aggregates (doc_count,
+    byte_count, checksum): over every row of a group when `pid` is None
+    (lineage_frame's groupBy), else over the rows of partition `pid` only
+    (the per-partition metrics a wave observes on its write).
+
+    The checksum is an order-insensitive, partial-aggregatable content
+    digest: sha256 of "count:lane1:lane2", where the lanes are two
+    independent 40-bit lanes of the per-row xxhash64(url, column) SUMmed
+    (not collected). Commutative + associative → map-side combine works,
+    the aggregation buffer is constant-size, and the result is independent
+    of row order. 40-bit lanes keep the long sum overflow-free to ~2^23
+    rows per partition (partitions are byte-bounded far below that). The
+    naive alternative — sort_array(collect_list(row_digest)) — buffers
+    every row of a partition in ONE aggregation state: a scale bug at
+    64 MiB+ partitions (round-2 fix; was the dominant lineage cost).
+
+    SQL text, not `F.*` chains: every `F.*` call is ~3 py4j round trips
+    and a wave's metric would take ~100 of them."""
+    def rows(x):
+        return x if pid is None else f"if(partition_id = {pid}, {x}, 0)"
+
+    row_hash = f"xxhash64(url, coalesce({_CHECKSUM_COL[stage]}, ''))"
+    count = "count(1)" if pid is None else f"count_if(partition_id = {pid})"
+    lane1 = f"sum({rows(f'{row_hash} & {_MASK40}')})"
+    lane2 = f"sum({rows(f'shiftrightunsigned({row_hash}, 20) & {_MASK40}')})"
+    return (
+        count,
+        f"sum({rows('coalesce(n_chars, 0)')})",
+        f"sha2(concat_ws(':', {count}, {lane1}, {lane2}), 256)",
     )
-    return F.sha2(
-        F.concat_ws(":", F.count("*"), lane1, lane2), 256
+
+
+def _wave_lineage_metric(wave: list[int]):
+    """One observed metric: per partition id of the wave, a struct of its
+    lineage aggregates. Per-row work and aggregation state grow with the
+    wave size only, never with the run's partition count."""
+    return F.expr(
+        "array("
+        + ", ".join(
+            "named_struct('partition_id', {}, 'doc_count', {}, "
+            "'byte_count', {}, 'checksum', {})".format(
+                p, *_lineage_sql("extract", p)
+            )
+            for p in wave
+        )
+        + ") AS per_partition"
     )
 
 
@@ -383,16 +420,24 @@ def _run_wave(
     wave: list[int],
     batch: DataFrame,
 ) -> int:
-    """Extract one wave's pages, write them, and write the wave's lineage
-    file; returns the docs that lineage counts (observed on its write, so
-    no job reads it back). The caller commits the wave."""
-    import os
+    """Extract one wave's pages, write them, and publish the wave's lineage
+    file; returns the docs that lineage counts. One Spark job: the lineage
+    values are observed on the write itself, and the file is written on
+    the driver. The caller commits the wave."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from engine.catalog import read_sink_table, write_wave_to_table
+    from engine.catalog import write_wave_to_table
 
     t0 = time.monotonic()
-    extracted = batch.select("url", "html", "partition_id").mapInArrow(
-        extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA
+    # the observation sits in the write's only stage with no exchange above
+    # it, so it sees exactly the rows the committed tasks wrote (lineage
+    # counts what was COMMITTED, not what was attempted)
+    observed = Observation()
+    extracted = (
+        batch.select("url", "html", "partition_id")
+        .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
+        .observe(observed, _wave_lineage_metric(wave))
     )
     if sink_table:
         # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
@@ -409,34 +454,30 @@ def _run_wave(
             .partitionBy("partition_id")
             .parquet(manifest.extracted_path)
         )
-    # lineage from the just-written files (counts what was COMMITTED, not
-    # what was attempted); partition pruning keeps the read to the wave's
-    # own output dirs. A run whose every wave is empty (empty corpus) never
-    # creates extracted/ at all — dynamic overwrite of zero partitions
-    # writes nothing — so it reads zero paths and the commit proceeds with
-    # zero lineage rows.
     wall_ms = int((time.monotonic() - t0) * 1000)
-    if sink_table:
-        out = read_sink_table(spark, sink_table)
-    else:
-        written = [manifest.extracted_path] if os.path.exists(
-            manifest.extracted_path
-        ) else []
-        out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(*written)
-    docs = Observation()
+    # a partition with no rows gets no lineage row, as a groupBy gives
+    # none; a wave with no rows at all (empty corpus) publishes a zero-row
+    # file
+    rows = [
+        {
+            "run_id": manifest.run_id,
+            "partition_id": p["partition_id"],
+            "stage": "extract",
+            "doc_count": p["doc_count"],
+            "byte_count": p["byte_count"],
+            "extractor_version": EXTRACTOR_VERSION,
+            "checksum": p["checksum"],
+            "wall_ms": wall_ms,
+        }
+        for p in observed.get["per_partition"]
+        if p["doc_count"]
+    ]
+    table = pa.Table.from_pylist(rows, schema=lineage_arrow_schema())
     # wave file keyed by its first partition id: unique across waves
-    # (pending sets are disjoint), stable across resume, overwrite-safe
-    (
-        lineage_frame(
-            out.where(F.col("partition_id").isin(wave)),
-            manifest.run_id, "extract", wall_ms,
-        )
-        .observe(docs, F.coalesce(F.sum("doc_count"), F.lit(0)).alias("n"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(manifest.lineage_wave_path(wave[0]))
-    )
-    return docs.get["n"]
+    # (pending sets are disjoint), stable across resume, and the publish
+    # replaces an orphan a killed wave left
+    manifest.publish_wave_lineage(wave[0], lambda f: pq.write_table(table, f))
+    return sum(r["doc_count"] for r in rows)
 
 
 def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
@@ -446,41 +487,47 @@ def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     return spark.read.schema(LINEAGE_SCHEMA).parquet(*files)
 
 
-# the column each stage's checksum digests next to the url: an extract
-# wave pins the committed text, a retry attempt each url's new status
-_CHECKSUM_COL = {"extract": "text", "retry": "status"}
+def _sql_string(value: str) -> str:
+    """A SQL string literal holding exactly `value`, whatever quotes or
+    backslashes it contains (spelled as UTF-8 bytes, so no escaping rule
+    applies)."""
+    return f"CAST(X'{value.encode().hex()}' AS STRING)"
 
 
 def lineage_frame(
     out: DataFrame, run_id: str, stage: str, wall_ms: int
 ) -> DataFrame:
-    """Per-partition lineage rows of one wave or retry attempt, built as a
-    JVM aggregate over `out` (the committed rows) plus literal columns.
-    Nothing is collected to the driver and no Python worker is touched:
-    at local[4] on a 4-vCPU host any Python-touching Spark job costs
-    ~0.2-0.35 s fixed, which a per-wave createDataFrame(collected rows)
-    paid once per wave (tests/test_resume.py pins the plan Python-free)."""
-    row_hash = F.xxhash64(
-        F.col("url"), F.coalesce(F.col(_CHECKSUM_COL[stage]), F.lit(""))
-    )
-    return (
-        out.groupBy("partition_id")
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("byte_count"),
-            _content_checksum(row_hash).alias("checksum"),
+    """Per-partition lineage rows of a retry attempt, built as a JVM
+    aggregate over `out` (the committed rows) plus literal columns, from
+    the same SQL text a wave observes (`_lineage_sql`). Nothing is
+    collected to the driver and no Python worker is touched: at local[4]
+    on a 4-vCPU host any Python-touching Spark job costs ~0.2-0.35 s fixed
+    (tests/test_resume.py pins the plan Python-free)."""
+    count, n_bytes, checksum = _lineage_sql(stage)
+    return out.groupBy("partition_id").agg(
+        F.expr(
+            f"named_struct('doc_count', CAST({count} AS BIGINT), "
+            f"'byte_count', CAST({n_bytes} AS BIGINT), "
+            f"'checksum', {checksum}) AS l"
         )
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            F.lit(stage).alias("stage"),
-            F.col("doc_count").cast("long"),
-            F.col("byte_count").cast("long"),
-            F.lit(EXTRACTOR_VERSION).alias("extractor_version"),
-            F.col("checksum"),
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-        )
+    ).selectExpr(
+        f"{_sql_string(run_id)} AS run_id",
+        "CAST(partition_id AS INT) AS partition_id",
+        f"{_sql_string(stage)} AS stage",
+        "l.doc_count",
+        "l.byte_count",
+        f"{_sql_string(EXTRACTOR_VERSION)} AS extractor_version",
+        "l.checksum",
+        f"CAST({int(wall_ms)} AS BIGINT) AS wall_ms",
     )
+
+
+def _data_file_count(df: DataFrame) -> int:
+    """The number of data files `df` reads, in a fixed number of py4j
+    round trips: `DataFrame.inputFiles()` pulls every path to the driver,
+    two round trips per file (py4j asks the JVM for the array length again
+    on every element)."""
+    return len(df._jdf.inputFiles())
 
 
 def _lineage_committed_docs(spark: SparkSession, manifest: RunManifest) -> int:
@@ -561,7 +608,7 @@ def read_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
         if e.getCondition() != "PATH_NOT_FOUND":
             raise
         return _empty_or_raise(str(e.getCondition()))
-    if not df.inputFiles():
+    if not _data_file_count(df):
         # a declared schema reads a directory with no data files as an
         # empty table; the file index is already listed, so this costs no
         # job
@@ -1267,7 +1314,7 @@ def compact_run(
     out = spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
         manifest.extracted_path
     )
-    n_before = len(out.inputFiles())
+    n_before = _data_file_count(out)
     # sizing table rides a broadcast join (a literal map would bloat the
     # plan at 10^6 partitions)
     fmap = spark.createDataFrame(
@@ -1291,10 +1338,8 @@ def compact_run(
     # verify the rewrite readable BEFORE it becomes the active table —
     # a corrupt rewrite never publishes, and the pointer flip below is
     # the single atomic commit (no unreadable instant at any kill point)
-    n_after = len(
-        spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA)
-        .parquet(new_dir)
-        .inputFiles()
+    n_after = _data_file_count(
+        spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(new_dir)
     )
     if n_before and not n_after:
         raise RuntimeError(

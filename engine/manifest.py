@@ -41,7 +41,9 @@ callers ask it for paths and never compose them:
                                   #   exists (move its rows into the above)
     increment_input/              # an increment run's anti-joined input
                                   #   (+ _increment_meta.json: its base runs)
-    lineage/wave-NNNNN.parquet    # committed per-partition lineage rows
+    lineage/wave-NNNNN.parquet/   # per-partition lineage rows of a wave:
+      part-00000.parquet          #   one file the driver publishes
+      .part-00000.parquet.tmp     #   (temp, fsync, rename)
     lineage/retry-NNN.parquet     # one audit file per retry attempt
   {root}/.{run_id}.input.tmp/     # increment input in flight (renamed into
                                   #   the run dir once the manifest exists)
@@ -318,6 +320,39 @@ class RunManifest:
 
     def lineage_wave_path(self, wave: int) -> str:
         return str(self.lineage_dir / f"wave-{wave:05d}.parquet")
+
+    def lineage_wave_file(self, wave: int) -> str:
+        """The one data file of a wave's lineage dir, which the driver
+        publishes (`publish_wave_lineage`)."""
+        return os.path.join(self.lineage_wave_path(wave), "part-00000.parquet")
+
+    def lineage_wave_tmp_file(self, wave: int) -> str:
+        """The wave's lineage file in flight; dot-prefixed, so parquet
+        readers skip one a kill left behind."""
+        return os.path.join(
+            self.lineage_wave_path(wave), ".part-00000.parquet.tmp"
+        )
+
+    def publish_wave_lineage(self, wave: int, write) -> None:
+        """Publish a wave's lineage file the way `_commit` publishes
+        manifest.json: `write(f)` fills the temp file, fsync, one rename.
+        Whatever else the wave dir holds (an orphan a killed wave left,
+        also one a Spark writer named) is removed before the rename, so the
+        dir ends up holding exactly this file."""
+        tmp = self.lineage_wave_tmp_file(wave)
+        final = self.lineage_wave_file(wave)
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        with open(tmp, "wb") as f:
+            write(f)
+            f.flush()
+            os.fsync(f.fileno())
+        for entry in os.scandir(os.path.dirname(tmp)):
+            if entry.path not in (tmp, final):
+                if entry.is_dir(follow_symlinks=False):
+                    shutil.rmtree(entry.path)
+                else:
+                    os.remove(entry.path)
+        os.replace(tmp, final)
 
     def retry_lineage_path(self, attempt: int) -> str:
         return str(self.lineage_dir / f"retry-{attempt:03d}.parquet")

@@ -97,3 +97,11 @@ def extracted_arrow_schema():
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(EXTRACTED_SCHEMA)
+
+
+def lineage_arrow_schema():
+    """pyarrow schema of LINEAGE_SCHEMA — for the lineage file a wave
+    publishes from the driver."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return to_arrow_schema(LINEAGE_SCHEMA)

@@ -145,8 +145,9 @@ def _expected_lineage(rows_df, hashed_col):
 @pytest.fixture(scope="module")
 def interrupted_run(spark, pages, tmp_path_factory):
     """A run with a committed wave, a wave killed between its lineage
-    write and its commit, the resume, and one retry — with every lineage
-    frame the job builds recorded on the way."""
+    publish and its commit, the resume, and one retry — with every lineage
+    frame the job builds recorded on the way (only the retry builds one:
+    a wave observes its lineage on its write)."""
     import engine.jobs.extract_job as job
 
     root = str(tmp_path_factory.mktemp("interrupted") / "runs")
@@ -220,16 +221,115 @@ def test_lineage_values_match_committed_rows(spark, interrupted_run):
 
 
 def test_lineage_frames_are_python_free(interrupted_run):
-    """Lineage is job-path bookkeeping: every frame the extract waves and
-    the retry wrote must plan as a pure JVM aggregate (no collected rows
-    re-parallelized from Python, no Python UDF or Arrow map)."""
+    """Lineage is job-path bookkeeping: the frame the retry wrote must plan
+    as a pure JVM aggregate (no collected rows re-parallelized from Python,
+    no Python UDF or Arrow map). The waves build no frame: they observe
+    their lineage on the extract write (the job caps pin that a wave runs
+    no lineage job)."""
     frames = interrupted_run["frames"]
-    assert len(frames) == 4  # committed, killed, resumed wave + the retry
+    assert len(frames) == 1  # the retry's
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
                      "MapInArrow"):
             assert node not in plan, plan
+
+
+def _lineage_by_partition(lin):
+    return {
+        r["partition_id"]: (r["doc_count"], r["byte_count"], r["checksum"])
+        for r in lin
+    }
+
+
+def test_observed_lineage_of_a_64_partition_wave(spark, pages, tmp_path):
+    """One wave holding 64 partitions, 8x the CLI's default wave: the
+    lineage each partition's observed metric yields equals the aggregate
+    recomputed from the committed rows."""
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=64, run_id="wide-wave")
+    r = run_extract_job(spark, pages, man, wave_size=64)
+    assert (r["waves_run"], r["complete"]) == (1, True)
+    lin = read_lineage(spark, man).collect()
+    want = _expected_lineage(read_extracted(spark, man), "text")
+    assert len(want) > 56  # nearly every partition holds rows
+    assert _lineage_by_partition(lin) == want and len(lin) == len(want)
+    assert r["docs_processed"] == pages.count()
+
+
+def test_kill_between_extract_write_and_lineage_publish(
+    spark, pages, tmp_path, monkeypatch
+):
+    """A kill after a wave's extract write and before its lineage publish
+    leaves the wave's rows on disk, uncommitted, with no lineage file. The
+    resume re-runs the wave, and its publish replaces whatever the wave's
+    lineage dir holds (a half-written temp, a file another writer named),
+    so lineage has exactly one row per partition."""
+    import os
+    import shutil
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=8, run_id="publish-kill")
+    run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
+
+    def kill(*args):
+        raise _Kill()
+
+    monkeypatch.setattr(man, "publish_wave_lineage", kill)
+    with pytest.raises(_Kill):
+        run_extract_job(spark, pages, man, wave_size=4)
+    monkeypatch.undo()
+    assert man.committed_partitions() == [0, 1, 2, 3]
+    assert not os.path.exists(man.lineage_wave_path(4))
+    on_disk = spark.read.parquet(man.extracted_path)
+    assert {r[0] for r in on_disk.select("partition_id").distinct().collect()} == set(
+        range(8)
+    )
+    # what a kill inside an earlier publish, or another writer, could leave
+    os.makedirs(man.lineage_wave_path(4))
+    with open(man.lineage_wave_tmp_file(4), "wb") as f:
+        f.write(b"half a parquet file")
+    shutil.copy(
+        man.lineage_wave_file(0),
+        os.path.join(man.lineage_wave_path(4), "part-00000-stale.snappy.parquet"),
+    )
+    assert read_lineage(spark, man).count() == 8  # the temp is skipped
+
+    r = run_extract_job(spark, pages, man, wave_size=4)
+    assert (r["waves_run"], r["complete"]) == (1, True)
+    assert os.listdir(man.lineage_wave_path(4)) == [
+        os.path.basename(man.lineage_wave_file(4))
+    ]
+    lin = read_lineage(spark, man).collect()
+    want = _expected_lineage(read_extracted(spark, man), "text")
+    assert _lineage_by_partition(lin) == want
+    assert sorted(r["partition_id"] for r in lin) == list(range(8))
+
+
+def test_read_extracted_round_trips_do_not_grow_with_files(
+    spark, tmp_path, py4j_round_trips
+):
+    """read_extracted makes the same number of py4j round trips on a run
+    with few data files and on one with many (its empty-directory check
+    must not pull every file path to the driver)."""
+    pages = _ok_pages(spark, 400).repartition(1)  # one file per partition
+    runs = {}
+    for n in (16, 200):
+        man = enqueue(
+            spark, pages, str(tmp_path / "runs"), min_partitions=n,
+            run_id=f"files-{n}",
+        )
+        run_extract_job(spark, pages, man, wave_size=n)
+        runs[n] = man
+        read_extracted(spark, man)  # warm every one-time lookup
+    files = {n: len(read_extracted(spark, m).inputFiles()) for n, m in runs.items()}
+    assert files[200] >= 8 * files[16] > 0, files
+    trips = {}
+    for n, man in runs.items():
+        with py4j_round_trips() as calls:
+            read_extracted(spark, man)
+        trips[n] = len(calls.caller)
+    assert trips[16] == trips[200], (files, trips)
 
 
 def test_rollup_metrics(spark, pages, tmp_path):
@@ -1182,11 +1282,11 @@ def test_only_the_manifest_names_run_paths():
 # pinned as caps (equal to the measured counts) so no change adds a Spark
 # round-trip to the job path unnoticed. A Python-touching job costs a fixed
 # ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
-# wave write and the lineage write (2 AQE stages); retry: the one overlay
-# write (failed-url window + semi join) and its lineage write; stats: one
-# aggregate.
+# wave write alone (its lineage is observed on that write and published
+# from the driver); retry: the one overlay write (failed-url window + semi
+# join) and its lineage write; stats: one aggregate.
 _JOBS_PER_VERB_CAP = {
-    "enqueue": 2, "stage": 1, "run": 3, "resume": 3, "retry": 5, "stats": 2,
+    "enqueue": 2, "stage": 1, "run": 1, "resume": 1, "retry": 5, "stats": 2,
 }
 
 
@@ -1256,8 +1356,6 @@ def test_job_description_restored_after_verb(
 ):
     """A verb's job label is scoped to the verb: the caller's description
     is back in place afterwards, also when the verb raises mid-wave."""
-    import engine.jobs.extract_job as job
-
     sc = spark.sparkContext
     sc.setJobDescription("caller")
     try:
@@ -1270,7 +1368,7 @@ def test_job_description_restored_after_verb(
             )
             raise _Kill()
 
-        monkeypatch.setattr(job, "lineage_frame", kill)
+        monkeypatch.setattr(man, "publish_wave_lineage", kill)
         with pytest.raises(_Kill):
             run_extract_job(spark, pages, man, wave_size=4)
         assert sc.getLocalProperty("spark.job.description") == "caller"
