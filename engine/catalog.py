@@ -118,8 +118,3 @@ def write_wave_to_table(
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
 
-
-def read_sink_table(spark: SparkSession, table: str) -> DataFrame:
-    """Read back the catalog sink (empty-schema-safe counterpart of the
-    parquet path's explicit-schema read)."""
-    return spark.table(table)

@@ -33,10 +33,12 @@ Commit protocol (resume unit = wave of partitions):
     4. publish the wave's lineage rows (per partition: doc/byte counts and
        checksum, plus wall_ms) to a wave-keyed file. The counts and
        checksums are an unnamed Observation on step 3's write — per
-       partition id of the wave, the aggregates `_lineage_sql` defines —
-       so the wave is ONE Spark job and nothing is read back; the driver
-       writes the file with pyarrow (temp, fsync, rename; the rename
-       replaces any orphan a killed wave left)
+       partition id of the wave, the record `_lineage_sql` defines — so
+       the wave is ONE Spark job and nothing is read back; the driver
+       writes the file with pyarrow (`_publish_lineage`: temp, fsync,
+       rename; the rename replaces any orphan a killed wave left). A retry
+       attempt publishes its lineage the same way, from a collected
+       aggregate of its overlay rows
     5. atomically flip those partitions pending→committed in manifest.json
 A kill ANYWHERE — between waves or between steps 3/4 and 5 — loses at most
 the in-flight wave's work; re-running recomputes ONLY partitions absent
@@ -73,11 +75,13 @@ _MASK40 = (1 << 40) - 1
 _CHECKSUM_COL = {"extract": "text", "retry": "status"}
 
 
-def _lineage_sql(stage: str, pid: int | None = None) -> tuple[str, str, str]:
-    """SQL text of one partition's lineage aggregates (doc_count,
-    byte_count, checksum): over every row of a group when `pid` is None
-    (lineage_frame's groupBy), else over the rows of partition `pid` only
-    (the per-partition metrics a wave observes on its write).
+def _lineage_sql(stage: str, pid: int | None = None) -> str:
+    """SQL text of one partition's lineage record, a struct of
+    (partition_id, doc_count, byte_count, checksum): over every row of a
+    group when `pid` is None (a retry attempt's read-back
+    groupBy(partition_id), `_lineage_aggregate`), else over the rows of
+    partition `pid` only (the per-partition metrics a wave observes on its
+    write).
 
     The checksum is an order-insensitive, partial-aggregatable content
     digest: sha256 of "count:lane1:lane2", where the lanes are two
@@ -100,27 +104,61 @@ def _lineage_sql(stage: str, pid: int | None = None) -> tuple[str, str, str]:
     lane1 = f"sum({rows(f'{row_hash} & {_MASK40}')})"
     lane2 = f"sum({rows(f'shiftrightunsigned({row_hash}, 20) & {_MASK40}')})"
     return (
-        count,
-        f"sum({rows('coalesce(n_chars, 0)')})",
-        f"sha2(concat_ws(':', {count}, {lane1}, {lane2}), 256)",
+        f"named_struct('partition_id', {'partition_id' if pid is None else pid},"
+        f" 'doc_count', {count},"
+        f" 'byte_count', sum({rows('coalesce(n_chars, 0)')}),"
+        f" 'checksum', sha2(concat_ws(':', {count}, {lane1}, {lane2}), 256))"
     )
 
 
 def _wave_lineage_metric(wave: list[int]):
-    """One observed metric: per partition id of the wave, a struct of its
-    lineage aggregates. Per-row work and aggregation state grow with the
-    wave size only, never with the run's partition count."""
+    """One observed metric: per partition id of the wave, its lineage
+    record. Per-row work and aggregation state grow with the wave size
+    only, never with the run's partition count."""
     return F.expr(
         "array("
-        + ", ".join(
-            "named_struct('partition_id', {}, 'doc_count', {}, "
-            "'byte_count', {}, 'checksum', {})".format(
-                p, *_lineage_sql("extract", p)
-            )
-            for p in wave
-        )
+        + ", ".join(_lineage_sql("extract", p) for p in wave)
         + ") AS per_partition"
     )
+
+
+def _lineage_aggregate(rows: DataFrame, stage: str) -> DataFrame:
+    """Per-partition lineage records of `rows` (column `l`), a JVM
+    aggregate from the same SQL text a wave observes: no Python worker is
+    touched (tests/test_resume.py pins the plan Python-free)."""
+    return rows.groupBy("partition_id").agg(
+        F.expr(f"{_lineage_sql(stage)} AS l")
+    )
+
+
+def _publish_lineage(
+    manifest: RunManifest, name: str, stage: str, wall_ms: int, records
+) -> int:
+    """Publish lineage file `name` from per-partition records
+    (partition_id, doc_count, byte_count, checksum), written with pyarrow
+    on the driver; returns the docs it counts. A partition with no rows
+    gets no lineage row, as a groupBy gives none; no records at all (an
+    empty corpus) publish a zero-row file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rows = [
+        {
+            "run_id": manifest.run_id,
+            "partition_id": r["partition_id"],
+            "stage": stage,
+            "doc_count": r["doc_count"],
+            "byte_count": r["byte_count"],
+            "extractor_version": EXTRACTOR_VERSION,
+            "checksum": r["checksum"],
+            "wall_ms": wall_ms,
+        }
+        for r in records
+        if r["doc_count"]
+    ]
+    table = pa.Table.from_pylist(rows, schema=lineage_arrow_schema())
+    manifest.publish_lineage(name, lambda f: pq.write_table(table, f))
+    return sum(r["doc_count"] for r in rows)
 
 
 def plan_partitions(
@@ -424,9 +462,6 @@ def _run_wave(
     file; returns the docs that lineage counts. One Spark job: the lineage
     values are observed on the write itself, and the file is written on
     the driver. The caller commits the wave."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     from engine.catalog import write_wave_to_table
 
     t0 = time.monotonic()
@@ -455,29 +490,13 @@ def _run_wave(
             .parquet(manifest.extracted_path)
         )
     wall_ms = int((time.monotonic() - t0) * 1000)
-    # a partition with no rows gets no lineage row, as a groupBy gives
-    # none; a wave with no rows at all (empty corpus) publishes a zero-row
-    # file
-    rows = [
-        {
-            "run_id": manifest.run_id,
-            "partition_id": p["partition_id"],
-            "stage": "extract",
-            "doc_count": p["doc_count"],
-            "byte_count": p["byte_count"],
-            "extractor_version": EXTRACTOR_VERSION,
-            "checksum": p["checksum"],
-            "wall_ms": wall_ms,
-        }
-        for p in observed.get["per_partition"]
-        if p["doc_count"]
-    ]
-    table = pa.Table.from_pylist(rows, schema=lineage_arrow_schema())
     # wave file keyed by its first partition id: unique across waves
     # (pending sets are disjoint), stable across resume, and the publish
     # replaces an orphan a killed wave left
-    manifest.publish_wave_lineage(wave[0], lambda f: pq.write_table(table, f))
-    return sum(r["doc_count"] for r in rows)
+    return _publish_lineage(
+        manifest, manifest.wave_lineage_name(wave[0]), "extract", wall_ms,
+        observed.get["per_partition"],
+    )
 
 
 def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
@@ -485,41 +504,6 @@ def read_lineage(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     if not files:
         return spark.createDataFrame([], schema=LINEAGE_SCHEMA)
     return spark.read.schema(LINEAGE_SCHEMA).parquet(*files)
-
-
-def _sql_string(value: str) -> str:
-    """A SQL string literal holding exactly `value`, whatever quotes or
-    backslashes it contains (spelled as UTF-8 bytes, so no escaping rule
-    applies)."""
-    return f"CAST(X'{value.encode().hex()}' AS STRING)"
-
-
-def lineage_frame(
-    out: DataFrame, run_id: str, stage: str, wall_ms: int
-) -> DataFrame:
-    """Per-partition lineage rows of a retry attempt, built as a JVM
-    aggregate over `out` (the committed rows) plus literal columns, from
-    the same SQL text a wave observes (`_lineage_sql`). Nothing is
-    collected to the driver and no Python worker is touched: at local[4]
-    on a 4-vCPU host any Python-touching Spark job costs ~0.2-0.35 s fixed
-    (tests/test_resume.py pins the plan Python-free)."""
-    count, n_bytes, checksum = _lineage_sql(stage)
-    return out.groupBy("partition_id").agg(
-        F.expr(
-            f"named_struct('doc_count', CAST({count} AS BIGINT), "
-            f"'byte_count', CAST({n_bytes} AS BIGINT), "
-            f"'checksum', {checksum}) AS l"
-        )
-    ).selectExpr(
-        f"{_sql_string(run_id)} AS run_id",
-        "CAST(partition_id AS INT) AS partition_id",
-        f"{_sql_string(stage)} AS stage",
-        "l.doc_count",
-        "l.byte_count",
-        f"{_sql_string(EXTRACTOR_VERSION)} AS extractor_version",
-        "l.checksum",
-        f"CAST({int(wall_ms)} AS BIGINT) AS wall_ms",
-    )
 
 
 def _data_file_count(df: DataFrame) -> int:
@@ -575,15 +559,13 @@ def read_extracted(spark: SparkSession, manifest: RunManifest) -> DataFrame:
     committed = manifest.committed_partitions()
     if not committed:
         return spark.createDataFrame([], schema=EXTRACTED_PARTITIONED_SCHEMA)
-    from engine.catalog import read_sink_table
-
     sink_table = _run_sink_table(spark, manifest)
     if sink_table:
         if not spark.catalog.tableExists(sink_table):
             # same data-loss guard as the parquet path: committed lineage
             # with no readable base must surface, not read as empty
             return _empty_or_raise(f"catalog table {sink_table} missing")
-        df = read_sink_table(spark, sink_table)
+        df = spark.table(sink_table)
         # ALWAYS filter to this run's committed partitions: the table is
         # shared run-lineage state, so unlike the per-run parquet dir a
         # "fully committed" run may coexist with stale partitions from an
@@ -627,15 +609,17 @@ def retry_failed(
 
     Re-extracted rows are appended with a real monotonically increasing
     `attempt` column; the current-view dedup (latest attempt per url)
-    happens in `read_current_extracted`. Each retry wave writes its OWN
-    lineage file (retry-NNN.parquet) so a second retry never erases the
-    first's audit rows. Without a Delta/Iceberg MERGE in-sandbox this
+    happens in `read_current_extracted`. Each attempt claims its number
+    (its own lineage dir) before it writes, so a second retry never erases
+    the first's audit rows and a killed attempt's overlay rows are never
+    reused by the next. Without a Delta/Iceberg MERGE in-sandbox this
     append+window-dedup is the idempotent equivalent.
 
     One pass: the failed-url window and semi join run once, inside the
     overlay write, and `retried` is the row count observed on that write.
-    An attempt that re-extracts nothing leaves no trace: no lineage file
-    (so the attempt number stays free) and no new overlay directory.
+    An attempt that re-extracts nothing leaves no trace: its claim is
+    removed (so the attempt number stays free) and no new overlay
+    directory is left.
     """
     import os
     import shutil
@@ -653,7 +637,8 @@ def retry_failed(
         todo = with_partition_id(
             pages.join(failed_urls, "url", "left_semi"), n_parts
         )
-        attempt = manifest.next_retry_attempt()
+        attempt = manifest.claim_retry_attempt()
+        lineage_name = manifest.retry_lineage_name(attempt)
         retry_path = manifest.retry_path
         had_overlay = os.path.exists(retry_path)
         rows = Observation()
@@ -669,6 +654,7 @@ def retry_failed(
         )
         retried = rows.get["n"]
         if retried == 0:
+            os.rmdir(manifest.lineage_path(lineage_name))
             if not had_overlay:
                 # the zero-row write left only a _SUCCESS marker
                 shutil.rmtree(retry_path, ignore_errors=True)
@@ -678,12 +664,11 @@ def retry_failed(
         # THIS attempt only, not the accumulated retry table
         wall_ms = int((time.monotonic() - t0) * 1000)
         out = spark.read.schema(EXTRACTED_RETRY_SCHEMA).parquet(retry_path)
-        lineage = lineage_frame(
-            out.where(F.col("attempt") == attempt),
-            manifest.run_id, "retry", wall_ms,
-        )
-        lineage.coalesce(1).write.mode("overwrite").parquet(
-            manifest.retry_lineage_path(attempt)
+        records = _lineage_aggregate(
+            out.where(F.col("attempt") == attempt), "retry"
+        ).collect()
+        _publish_lineage(
+            manifest, lineage_name, "retry", wall_ms, [r.l for r in records]
         )
     return {"retried": retried, "attempt": attempt}
 
@@ -1075,8 +1060,6 @@ def export_run(
         # derived text out. WARC-Date = the base run's created_at (the
         # one capture timestamp a multi-run logical table shares).
         import datetime as _dt
-
-        from pyspark.sql import functions as F
 
         from engine.sources import export_pages_warc
 

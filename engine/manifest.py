@@ -41,10 +41,13 @@ callers ask it for paths and never compose them:
                                   #   exists (move its rows into the above)
     increment_input/              # an increment run's anti-joined input
                                   #   (+ _increment_meta.json: its base runs)
-    lineage/wave-NNNNN.parquet/   # per-partition lineage rows of a wave:
+    lineage/wave-NNNNN.parquet/   # per-partition lineage rows of a wave
+    lineage/retry-NNN.parquet/    #   or of a retry attempt, each dir
       part-00000.parquet          #   one file the driver publishes
-      .part-00000.parquet.tmp     #   (temp, fsync, rename)
-    lineage/retry-NNN.parquet     # one audit file per retry attempt
+      .part-00000.parquet.tmp     #   (temp, fsync, rename); a retry dir is
+                                  #   claimed (mkdir) before its attempt
+                                  #   writes, so an empty one is a burned
+                                  #   attempt number
   {root}/.{run_id}.input.tmp/     # increment input in flight (renamed into
                                   #   the run dir once the manifest exists)
 """
@@ -318,29 +321,38 @@ class RunManifest:
     def lineage_files(self) -> list[str]:
         return sorted(str(p) for p in self.lineage_dir.glob("*.parquet"))
 
-    def lineage_wave_path(self, wave: int) -> str:
-        return str(self.lineage_dir / f"wave-{wave:05d}.parquet")
+    @staticmethod
+    def wave_lineage_name(wave: int) -> str:
+        """A wave's lineage name, keyed by its first partition id."""
+        return f"wave-{wave:05d}"
 
-    def lineage_wave_file(self, wave: int) -> str:
-        """The one data file of a wave's lineage dir, which the driver
-        publishes (`publish_wave_lineage`)."""
-        return os.path.join(self.lineage_wave_path(wave), "part-00000.parquet")
+    @staticmethod
+    def retry_lineage_name(attempt: int) -> str:
+        return f"retry-{attempt:03d}"
 
-    def lineage_wave_tmp_file(self, wave: int) -> str:
-        """The wave's lineage file in flight; dot-prefixed, so parquet
-        readers skip one a kill left behind."""
-        return os.path.join(
-            self.lineage_wave_path(wave), ".part-00000.parquet.tmp"
-        )
+    def lineage_path(self, name: str) -> str:
+        """The lineage dir of `name` (`wave_lineage_name` or
+        `retry_lineage_name`)."""
+        return str(self.lineage_dir / f"{name}.parquet")
 
-    def publish_wave_lineage(self, wave: int, write) -> None:
-        """Publish a wave's lineage file the way `_commit` publishes
-        manifest.json: `write(f)` fills the temp file, fsync, one rename.
-        Whatever else the wave dir holds (an orphan a killed wave left,
-        also one a Spark writer named) is removed before the rename, so the
-        dir ends up holding exactly this file."""
-        tmp = self.lineage_wave_tmp_file(wave)
-        final = self.lineage_wave_file(wave)
+    def lineage_file(self, name: str) -> str:
+        """The one data file of a lineage dir, which the driver publishes
+        (`publish_lineage`)."""
+        return os.path.join(self.lineage_path(name), "part-00000.parquet")
+
+    def lineage_tmp_file(self, name: str) -> str:
+        """A lineage file in flight; dot-prefixed, so parquet readers skip
+        one a kill left behind."""
+        return os.path.join(self.lineage_path(name), ".part-00000.parquet.tmp")
+
+    def publish_lineage(self, name: str, write) -> None:
+        """Publish a lineage file the way `_commit` publishes manifest.json:
+        `write(f)` fills the temp file, fsync, one rename. Whatever else the
+        lineage dir holds (an orphan a killed wave left, also one a Spark
+        writer named) is removed before the rename, so the dir ends up
+        holding exactly this file."""
+        tmp = self.lineage_tmp_file(name)
+        final = self.lineage_file(name)
         os.makedirs(os.path.dirname(tmp), exist_ok=True)
         with open(tmp, "wb") as f:
             write(f)
@@ -354,19 +366,25 @@ class RunManifest:
                     os.remove(entry.path)
         os.replace(tmp, final)
 
-    def retry_lineage_path(self, attempt: int) -> str:
-        return str(self.lineage_dir / f"retry-{attempt:03d}.parquet")
-
     def next_retry_attempt(self) -> int:
-        """Attempt numbers come from the retry lineage files already on
-        disk — monotonically increasing, so every retry wave keeps its
-        own audit rows and the latest-attempt window in
-        read_current_extracted is total-ordered."""
+        """The attempt number after every retry lineage dir on disk. A dir
+        is claimed before its attempt writes (`claim_retry_attempt`), so
+        numbers increase monotonically, every attempt keeps its own audit
+        rows and the latest-attempt window in read_current_extracted is
+        total-ordered."""
         return 1 + max(
             (int(p.stem.split("-")[1])
              for p in self.lineage_dir.glob("retry-*.parquet")),
             default=0,
         )
+
+    def claim_retry_attempt(self) -> int:
+        """Take the next attempt number by creating its lineage dir (an
+        existing dir raises): an attempt killed after its claim has burned
+        its number, and its lineage dir reads as zero rows."""
+        attempt = self.next_retry_attempt()
+        os.mkdir(self.lineage_path(self.retry_lineage_name(attempt)))
+        return attempt
 
 
 def new_run_id() -> str:

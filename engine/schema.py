@@ -100,8 +100,8 @@ def extracted_arrow_schema():
 
 
 def lineage_arrow_schema():
-    """pyarrow schema of LINEAGE_SCHEMA — for the lineage file a wave
-    publishes from the driver."""
+    """pyarrow schema of LINEAGE_SCHEMA — for the lineage files the driver
+    publishes (waves and retry attempts alike)."""
     from pyspark.sql.pandas.types import to_arrow_schema
 
     return to_arrow_schema(LINEAGE_SCHEMA)

@@ -146,20 +146,20 @@ def _expected_lineage(rows_df, hashed_col):
 def interrupted_run(spark, pages, tmp_path_factory):
     """A run with a committed wave, a wave killed between its lineage
     publish and its commit, the resume, and one retry — with every lineage
-    frame the job builds recorded on the way (only the retry builds one:
-    a wave observes its lineage on its write)."""
+    aggregate frame the job builds recorded on the way (only the retry
+    builds one: a wave observes its lineage on its write)."""
     import engine.jobs.extract_job as job
 
     root = str(tmp_path_factory.mktemp("interrupted") / "runs")
     man = enqueue(spark, pages, root, min_partitions=8, run_id="lin-values")
     frames = []
-    real_frame = job.lineage_frame
+    real_frame = job._lineage_aggregate
 
     def spy(*args):
         frames.append(real_frame(*args))
         return frames[-1]
 
-    job.lineage_frame = spy
+    job._lineage_aggregate = spy
     try:
         run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
         real_commit = man.commit_partitions
@@ -171,7 +171,7 @@ def interrupted_run(spark, pages, tmp_path_factory):
         resumed = run_extract_job(spark, pages, man, wave_size=4)
         retried = retry_failed(spark, pages, man)
     finally:
-        job.lineage_frame = real_frame
+        job._lineage_aggregate = real_frame
     return {
         "manifest": man, "frames": frames, "resumed": resumed,
         "resumed_parts": resumed_parts, "retried": retried,
@@ -221,8 +221,8 @@ def test_lineage_values_match_committed_rows(spark, interrupted_run):
 
 
 def test_lineage_frames_are_python_free(interrupted_run):
-    """Lineage is job-path bookkeeping: the frame the retry wrote must plan
-    as a pure JVM aggregate (no collected rows re-parallelized from Python,
+    """Lineage is job-path bookkeeping: the aggregate the retry collects
+    must plan as a pure JVM aggregate (no collected rows re-parallelized from Python,
     no Python UDF or Arrow map). The waves build no frame: they observe
     their lineage on the extract write (the job caps pin that a wave runs
     no lineage job)."""
@@ -275,30 +275,31 @@ def test_kill_between_extract_write_and_lineage_publish(
     def kill(*args):
         raise _Kill()
 
-    monkeypatch.setattr(man, "publish_wave_lineage", kill)
+    monkeypatch.setattr(man, "publish_lineage", kill)
     with pytest.raises(_Kill):
         run_extract_job(spark, pages, man, wave_size=4)
     monkeypatch.undo()
     assert man.committed_partitions() == [0, 1, 2, 3]
-    assert not os.path.exists(man.lineage_wave_path(4))
+    assert not os.path.exists(man.lineage_path(man.wave_lineage_name(4)))
     on_disk = spark.read.parquet(man.extracted_path)
     assert {r[0] for r in on_disk.select("partition_id").distinct().collect()} == set(
         range(8)
     )
     # what a kill inside an earlier publish, or another writer, could leave
-    os.makedirs(man.lineage_wave_path(4))
-    with open(man.lineage_wave_tmp_file(4), "wb") as f:
+    wave4 = man.wave_lineage_name(4)
+    os.makedirs(man.lineage_path(wave4))
+    with open(man.lineage_tmp_file(wave4), "wb") as f:
         f.write(b"half a parquet file")
     shutil.copy(
-        man.lineage_wave_file(0),
-        os.path.join(man.lineage_wave_path(4), "part-00000-stale.snappy.parquet"),
+        man.lineage_file(man.wave_lineage_name(0)),
+        os.path.join(man.lineage_path(wave4), "part-00000-stale.snappy.parquet"),
     )
     assert read_lineage(spark, man).count() == 8  # the temp is skipped
 
     r = run_extract_job(spark, pages, man, wave_size=4)
     assert (r["waves_run"], r["complete"]) == (1, True)
-    assert os.listdir(man.lineage_wave_path(4)) == [
-        os.path.basename(man.lineage_wave_file(4))
+    assert os.listdir(man.lineage_path(wave4)) == [
+        os.path.basename(man.lineage_file(wave4))
     ]
     lin = read_lineage(spark, man).collect()
     want = _expected_lineage(read_extracted(spark, man), "text")
@@ -635,6 +636,93 @@ def test_retry_counts_every_recrawl_row(spark, pages, tmp_path):
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == want
     rows = spark.read.parquet(man.retry_path)
     assert rows.where(F.col("attempt") == res["attempt"]).count() == want
+
+
+def _ok_and_junk_pages(spark, n_ok, n_junk):
+    """`_ok_pages(n_ok)` plus n_junk pages that always fail to extract, one
+    url each."""
+    import datetime as dt
+
+    junk = spark.createDataFrame(
+        [(f"http://junk.example/{i}", dt.datetime(2024, 1, 1), b"\x00\x01",
+          None, None) for i in range(n_junk)],
+        "url string, warc_ts timestamp, html binary, text string, lang string",
+    )
+    return _ok_pages(spark, n_ok).unionByName(junk)
+
+
+def test_kill_between_retry_write_and_lineage_publish(
+    spark, tmp_path, monkeypatch
+):
+    """A retry killed after its overlay write and before its lineage
+    publish has burned its attempt number: the next retry is attempt 2, so
+    the overlay never holds one (url, attempt) pair twice and the new
+    attempt's lineage counts exactly the rows it retried."""
+    from pyspark.sql import Observation
+
+    import engine.jobs.extract_job as job
+
+    pages = _ok_and_junk_pages(spark, 40, 6)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-kill")
+    run_extract_job(spark, pages, man, wave_size=4)
+
+    class _KilledAfterWrite(Observation):
+        # the retry reads its observed row count right after the overlay
+        # write returns
+        @property
+        def get(self):
+            raise _Kill()
+
+    monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
+    with pytest.raises(_Kill):
+        retry_failed(spark, pages, man)
+    monkeypatch.undo()
+    killed = spark.read.parquet(man.retry_path)
+    assert killed.where(F.col("attempt") == 1).count() == 6
+
+    res = retry_failed(spark, pages, man)
+    assert res == {"retried": 6, "attempt": 2}
+    lin = read_lineage(spark, man).where(F.col("stage") == "retry")
+    assert lin.agg(F.sum("doc_count")).collect()[0][0] == res["retried"]
+    pairs = spark.read.parquet(man.retry_path).groupBy("url", "attempt").count()
+    assert pairs.where(F.col("count") > 1).count() == 0
+
+
+def test_spark_written_retry_lineage_still_reads(spark, tmp_path):
+    """A run dir whose retry lineage older code wrote with Spark (a
+    retry-001.parquet/ dir of part-*.snappy.parquet files and a _SUCCESS
+    marker) still reads through read_lineage, and the next retry is
+    attempt 2. A claimed retry dir with no file reads as zero rows."""
+    import os
+    import shutil
+
+    pages = _ok_and_junk_pages(spark, 40, 6)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="old-lineage")
+    run_extract_job(spark, pages, man, wave_size=4)
+    assert retry_failed(spark, pages, man)["attempt"] == 1
+    want = sorted(read_lineage(spark, man).collect())
+    assert any(r["stage"] == "retry" for r in want)
+
+    old = man.lineage_path(man.retry_lineage_name(1))
+    tmp = str(tmp_path / "spark-written")
+    spark.read.parquet(old).coalesce(1).write.parquet(tmp)
+    shutil.rmtree(old)
+    os.rename(tmp, old)
+    names = os.listdir(old)
+    assert "_SUCCESS" in names
+    assert any(
+        n.startswith("part-") and n.endswith(".snappy.parquet") for n in names
+    )
+    assert sorted(read_lineage(spark, man).collect()) == want
+
+    assert retry_failed(spark, pages, man) == {"retried": 6, "attempt": 2}
+    n_rows = read_lineage(spark, man).count()
+    assert man.claim_retry_attempt() == 3
+    assert os.listdir(man.lineage_path(man.retry_lineage_name(3))) == []
+    assert read_lineage(spark, man).count() == n_rows
+    assert man.next_retry_attempt() == 4
 
 
 def test_legacy_retry_overlay_fails_loudly(spark, pages, tmp_path):
@@ -1217,7 +1305,9 @@ def test_retry_overlay_survives_compaction(spark, pages, tmp_path):
     assert all("retry" not in name for name in removed)
     rows = spark.read.parquet(overlay)
     for attempt in (1, 2):
-        lin = spark.read.parquet(man.retry_lineage_path(attempt)).collect()
+        lin = spark.read.parquet(
+            man.lineage_path(man.retry_lineage_name(attempt))
+        ).collect()
         got = {
             r["partition_id"]: (r["doc_count"], r["byte_count"], r["checksum"])
             for r in lin
@@ -1284,7 +1374,7 @@ def test_only_the_manifest_names_run_paths():
 # ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
 # wave write alone (its lineage is observed on that write and published
 # from the driver); retry: the one overlay write (failed-url window + semi
-# join) and its lineage write; stats: one aggregate.
+# join) and its collected lineage aggregate; stats: one aggregate.
 _JOBS_PER_VERB_CAP = {
     "enqueue": 2, "stage": 1, "run": 1, "resume": 1, "retry": 5, "stats": 2,
 }
@@ -1368,7 +1458,7 @@ def test_job_description_restored_after_verb(
             )
             raise _Kill()
 
-        monkeypatch.setattr(man, "publish_wave_lineage", kill)
+        monkeypatch.setattr(man, "publish_lineage", kill)
         with pytest.raises(_Kill):
             run_extract_job(spark, pages, man, wave_size=4)
         assert sc.getLocalProperty("spark.job.description") == "caller"
