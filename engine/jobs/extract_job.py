@@ -677,7 +677,9 @@ def read_current_extracted(spark: SparkSession, manifest: RunManifest) -> DataFr
     """Latest-attempt view across base + retry outputs (MERGE emulation).
     Retry rows carry their real attempt number (written by retry_failed),
     so repeated retries are total-ordered and the window winner is
-    deterministic."""
+    deterministic. Rows of a burned attempt (killed before its lineage
+    publish) are left out: its urls read as they did before it, so the
+    next retry takes them up again."""
     import os
 
     from pyspark.sql import Window as W
@@ -699,6 +701,9 @@ def read_current_extracted(spark: SparkSession, manifest: RunManifest) -> DataFr
         retry = spark.read.schema(EXTRACTED_RETRY_SCHEMA).parquet(
             manifest.retry_path
         )
+        burned = manifest.burned_retry_attempts()
+        if burned:
+            retry = retry.where(~F.col("attempt").isin(burned))
         base = base.unionByName(retry.select(*base.columns))
     w = W.partitionBy("url").orderBy(F.desc("attempt"))
     return (

@@ -47,7 +47,8 @@ callers ask it for paths and never compose them:
       .part-00000.parquet.tmp     #   (temp, fsync, rename); a retry dir is
                                   #   claimed (mkdir) before its attempt
                                   #   writes, so an empty one is a burned
-                                  #   attempt number
+                                  #   attempt (its overlay rows, if any,
+                                  #   are not in the current view)
   {root}/.{run_id}.input.tmp/     # increment input in flight (renamed into
                                   #   the run dir once the manifest exists)
 """
@@ -366,16 +367,29 @@ class RunManifest:
                     os.remove(entry.path)
         os.replace(tmp, final)
 
+    def _retry_lineage_dirs(self) -> dict[int, pathlib.Path]:
+        return {
+            int(p.stem.split("-")[1]): p
+            for p in self.lineage_dir.glob("retry-*.parquet")
+        }
+
     def next_retry_attempt(self) -> int:
         """The attempt number after every retry lineage dir on disk. A dir
         is claimed before its attempt writes (`claim_retry_attempt`), so
         numbers increase monotonically, every attempt keeps its own audit
         rows and the latest-attempt window in read_current_extracted is
         total-ordered."""
-        return 1 + max(
-            (int(p.stem.split("-")[1])
-             for p in self.lineage_dir.glob("retry-*.parquet")),
-            default=0,
+        return 1 + max(self._retry_lineage_dirs(), default=0)
+
+    def burned_retry_attempts(self) -> list[int]:
+        """Claimed attempts whose lineage dir holds no parquet file: killed
+        before their lineage publish, perhaps after their overlay write.
+        No lineage row counts their overlay rows, so the current view
+        leaves those rows out. A dir Spark wrote (part-*.parquet) counts
+        as published."""
+        return sorted(
+            attempt for attempt, p in self._retry_lineage_dirs().items()
+            if not any(p.glob("*.parquet"))
         )
 
     def claim_retry_attempt(self) -> int:

@@ -1087,6 +1087,25 @@ def _sql_dedup_exact():
     """
 
 
+def _dot(a, b):
+    """Dot product of two float arrays as one sequential double fold: the
+    cosine numerator of every JVM-side embedding operator."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _norm2(a):
+    """Squared norm of a float array, the same sequential double fold."""
+    return F.aggregate(
+        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def _valid_embeddings(e: DataFrame, keep_norm2: bool = False) -> DataFrame:
     """Declared domain of every embedding operator: non-null vectors with
     positive norm. A null or all-zero embedding (a failed encoder run) has
@@ -1095,12 +1114,7 @@ def _valid_embeddings(e: DataFrame, keep_norm2: bool = False) -> DataFrame:
     JVM fold, fused into the scan; `keep_norm2=True` exposes the fold's
     result as `_norm2` so cosine kernels reuse it instead of folding the
     array a second time (measured 3.7× on the brute-force ANN)."""
-    norm2 = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    keyed = e.withColumn("_norm2", norm2).where(
+    keyed = e.withColumn("_norm2", _norm2("embedding")).where(
         F.col("embedding").isNotNull() & (F.col("_norm2") > 0)
     )
     return keyed if keep_norm2 else keyed.drop("_norm2")
@@ -1117,34 +1131,17 @@ _SQL_VALID_EMB = (
 )
 
 
-def _enforce_oracle_quarantine(df: DataFrame, message: str) -> None:
-    """Shared enforcement for operators whose pair stage is quadratic at
-    the oracle configuration: above ORACLE_KERNEL_MAX_ROWS input rows,
-    raise instead of silently launching an n² job. limit(cap+1) bounds
-    the guard's scan to the cap regardless of input size (a bare count()
-    would eagerly scan the whole table every time the query is merely
-    CONSTRUCTED at oracle scale)."""
-    if df.limit(ORACLE_KERNEL_MAX_ROWS + 1).count() > ORACLE_KERNEL_MAX_ROWS:
-        raise RuntimeError(message)
-
-
 def q_ann_cosine_topk(spark, sf_dir):
     """Brute-force ANN baseline: cosine top-10 vs the vec_id=0 query vector.
     The query vector broadcasts (a scalar crossJoin of one row); each
     partition scores locally, TakeOrderedAndProject keeps k — the pattern
-    that scales to 'one query vs 10^9 vectors'. IVF/LSH variant:
-    q_lsh_bucketed_ann."""
+    that scales to 'one query vs 10^9 vectors'. Scale-path variants:
+    q_ann_lsh_bucketed (sign-LSH) and q_ann_ivf (IVF)."""
     e = _valid_embeddings(_t(spark, sf_dir, "embeddings"), keep_norm2=True)
     q = e.where(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qe"), F.col("_norm2").alias("_qnorm2")
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "embedding", "qe", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot("embedding", "qe")
     return (
         e.where(F.col("vec_id") != 0)
         .crossJoin(F.broadcast(q))
@@ -1192,26 +1189,20 @@ def q_embedding_neardup_pairs(spark, sf_dir):
     input vectors the kernel raises instead of silently launching an n²
     job — callers at scale are pointed at the two scale paths."""
     e = _valid_embeddings(_t(spark, sf_dir, "embeddings"), keep_norm2=True)
-    _enforce_oracle_quarantine(
-        e,
-        f"embedding_neardup_pairs is the O(n^2) oracle kernel, capped "
-        f"at {ORACLE_KERNEL_MAX_ROWS} vectors; use "
-        "embedding_neardup_pairs_fast (exact) or _lsh (sub-quadratic) "
-        "above oracle scale",
-    )
+    # limit(cap+1) bounds the guard's scan to the cap whatever the input
+    # size (a bare count() would scan the whole table every time the query
+    # is merely CONSTRUCTED at oracle scale)
+    if e.limit(ORACLE_KERNEL_MAX_ROWS + 1).count() > ORACLE_KERNEL_MAX_ROWS:
+        raise RuntimeError(
+            f"embedding_neardup_pairs is the O(n^2) oracle kernel, capped "
+            f"at {ORACLE_KERNEL_MAX_ROWS} vectors; use "
+            "embedding_neardup_pairs_fast (exact) or _lsh (sub-quadratic) "
+            "above oracle scale"
+        )
     v = e.select("vec_id", "embedding", F.sqrt(F.col("_norm2")).alias("nrm"))
     a = v.alias("a")
     b = v.alias("b")
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("a.embedding"),
-            F.col("b.embedding"),
-            lambda x, y: x.cast("double") * y.cast("double"),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    sim = dot / (F.col("a.nrm") * F.col("b.nrm"))
+    sim = _dot("a.embedding", "b.embedding") / (F.col("a.nrm") * F.col("b.nrm"))
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
         .select(
@@ -1248,6 +1239,7 @@ ORACLE_KERNEL_MAX_ROWS = 10_000
 
 
 _NEARDUP_BLOCKS = 8
+_PAIR_SCHEMA = "vec_a long, vec_b long, sim double"
 
 
 def _block_pair_replicate(spark, df: DataFrame, G: int) -> DataFrame:
@@ -1268,6 +1260,45 @@ def _block_pair_replicate(spark, df: DataFrame, G: int) -> DataFrame:
     )
 
 
+def _score_block_pair(pdf, threshold: float, keep_all: bool = False):
+    """Score one (ga, gb) task of `_block_pair_replicate`'s output: the
+    cosine of every pair with one vector from each block (each unordered
+    pair once when ga == gb), as a normalized float64 BLAS matmul rounded
+    to 4 decimals BEFORE the threshold, so boundary semantics match the
+    exact kernel. Returns (vec_a < vec_b, sim) rows with sim >= threshold,
+    or every scored pair when `keep_all`.
+
+    A matmul, not per-pair rows ((va*vb).sum(axis=1) over fancy-indexed
+    copies): those move ~2×128 B per scored pair through memory (the dense
+    LSH path's sf1.0 bottleneck, ~100 GB of traffic, 43 s). Sims can
+    differ from a row-wise reduction only in the last ulp before the
+    round (summation order); every copy of a pair is scored by the same
+    deterministic computation. Callers pass it
+    through a lambda that names this module-level def, so a worker
+    unpickling the lambda imports `engine` (and its worker patch)."""
+    import numpy as np
+    import pandas as pd
+
+    ga, gb = int(pdf["ga"].iloc[0]), int(pdf["gb"].iloc[0])
+    ids = pdf["vec_id"].to_numpy()
+    mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+    g = pdf["g"].to_numpy()
+    am, bm = np.nonzero(g == ga)[0], np.nonzero(g == gb)[0]
+    a = mat[am]
+    b = a if ga == gb else mat[bm]
+    sims = np.round(a @ b.T, 4)
+    keep = np.full(sims.shape, True) if keep_all else sims >= threshold
+    if ga == gb:
+        keep = np.triu(keep, 1)
+    ii, jj = np.nonzero(keep)
+    ia, ib = ids[am][ii], ids[bm][jj]
+    return pd.DataFrame(
+        {"vec_a": np.minimum(ia, ib), "vec_b": np.maximum(ia, ib),
+         "sim": sims[ii, jj]}
+    )
+
+
 def q_embedding_neardup_pairs_fast(spark, sf_dir):
     """Distributed exact near-dup pair kernel: block-pair decomposition.
 
@@ -1282,40 +1313,15 @@ def q_embedding_neardup_pairs_fast(spark, sf_dir):
     factor G), the unavoidable cost of exact all-pairs; FLOPs stay n²·d/2
     split across G(G+1)/2 independent BLAS tasks. The LSH variant below is
     the sub-quadratic approximate path."""
-    import numpy as np
-    import pandas as pd
-
-    G = _NEARDUP_BLOCKS
     rep = _block_pair_replicate(
         spark,
         _valid_embeddings(_t(spark, sf_dir, "embeddings")).select(
             "vec_id", "embedding"
         ),
-        G,
+        _NEARDUP_BLOCKS,
     )
-
-    def score_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        patch_worker()
-        ga, gb = int(pdf["ga"].iloc[0]), int(pdf["gb"].iloc[0])
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        g = pdf["g"].to_numpy()
-        if ga == gb:
-            sims = np.round(mat @ mat.T, 4)  # round BEFORE threshold —
-            # boundary semantics match the exact kernel
-            ii, jj = np.nonzero(np.triu(sims >= NEARDUP_SIM, 1))
-            a_ids, b_ids, s = ids[ii], ids[jj], sims[ii, jj]
-        else:
-            am, bm = g == ga, g == gb
-            sims = np.round(mat[am] @ mat[bm].T, 4)
-            ii, jj = np.nonzero(sims >= NEARDUP_SIM)
-            a_ids, b_ids, s = ids[am][ii], ids[bm][jj], sims[ii, jj]
-        lo, hi = np.minimum(a_ids, b_ids), np.maximum(a_ids, b_ids)
-        return pd.DataFrame({"vec_a": lo, "vec_b": hi, "sim": s})
-
     return rep.groupBy("ga", "gb").applyInPandas(
-        score_block_pair, schema="vec_a long, vec_b long, sim double"
+        lambda pdf: _score_block_pair(pdf, NEARDUP_SIM), schema=_PAIR_SCHEMA
     )
 
 
@@ -1332,6 +1338,8 @@ _LSH_DENSE_MAX_BITS = 4
 
 
 def _rand_planes(n: int, seed: int) -> list[list[float]]:
+    """`n` fixed sign-random-projection hyperplanes drawn from `seed`
+    (deterministic plan-time constants, the role of a broadcast codebook)."""
     import random as _r
 
     rng = _r.Random(seed)
@@ -1383,6 +1391,9 @@ def _neardup_lsh_pairs(
         dtype=np.float64,
     ).reshape(bands * bits, -1).T  # dim x (bands*bits)
     pows = (1 << np.arange(bits)).astype(np.int64)
+    # dense configs score inside bucket tasks, so the embedding rides along
+    # with its codes; sparse ones ship no embedding back across Arrow
+    dense = not candidates_only and bits <= _LSH_DENSE_MAX_BITS
 
     def band_codes(batches):
         patch_worker()
@@ -1393,18 +1404,21 @@ def _neardup_lsh_pairs(
             signs = (mat @ planes_w) > 0  # n x (bands*bits)
             codes_m = signs.reshape(len(mat), bands, bits) @ pows  # n x bands
             n = len(mat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
-                    "band": np.tile(np.arange(bands, dtype=np.int32), n),
-                    "code": codes_m.reshape(-1),
-                }
-            )
+            out = {
+                "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
+                "band": np.tile(np.arange(bands, dtype=np.int32), n),
+                "code": codes_m.reshape(-1),
+            }
+            if dense:
+                out["embedding"] = np.repeat(pdf["embedding"].to_numpy(), bands)
+            yield pd.DataFrame(out)
 
-    if candidates_only or bits > _LSH_DENSE_MAX_BITS:
-        banded = e.mapInPandas(
-            band_codes, schema="vec_id long, band int, code long"
-        )
+    banded = e.mapInPandas(
+        band_codes,
+        schema="vec_id long, band int, code long"
+        + (", embedding array<double>" if dense else ""),
+    )
+    if not dense:
         a, b = banded.alias("a"), banded.alias("b")
         cand = (
             a.join(
@@ -1463,9 +1477,7 @@ def _neardup_lsh_pairs(
                     }
                 )
 
-        return joined.mapInPandas(
-            verify, schema="vec_a long, vec_b long, sim double"
-        )
+        return joined.mapInPandas(verify, schema=_PAIR_SCHEMA)
 
     # DENSE configs, r6 restructure (guide §8: decide with small rows —
     # but here the DECISION needs the payload, so move the payload ONCE):
@@ -1479,80 +1491,14 @@ def _neardup_lsh_pairs(
     # of one quadratic reducer): the only embedding movement is the
     # bands×(G+1) replication of the input rows (~150 MB here), and only
     # surviving pairs reach the final dedup. Sims come from a normalized
-    # BLAS matmul (the exact-fast-kernel formulation; see the scorer
-    # comment for the last-ulp-before-round caveat); every copy of a
+    # BLAS matmul (`_score_block_pair`, shared with the exact fast
+    # kernel; see it for the last-ulp-before-round caveat); every copy of a
     # pair is scored by the same deterministic computation, so the
     # dedup's min(sim) collapses identical copies.
-    def band_codes_emb(batches):
-        patch_worker()
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            signs = (mat @ planes_w) > 0
-            codes_m = signs.reshape(len(mat), bands, bits) @ pows
-            n = len(mat)
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(pdf["vec_id"].to_numpy(), bands),
-                    "band": np.tile(np.arange(bands, dtype=np.int32), n),
-                    "code": codes_m.reshape(-1),
-                    "embedding": np.repeat(pdf["embedding"].to_numpy(), bands),
-                }
-            )
-
-    banded = e.mapInPandas(
-        band_codes_emb,
-        schema="vec_id long, band int, code long, embedding array<double>",
-    )
     rep = _block_pair_replicate(spark, banded, _NEARDUP_BLOCKS)
-
-    def score_bucket_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        patch_worker()
-        # normalized BLAS matmul, the exact-fast-kernel formulation:
-        # per-pair row materialization ((va*vb).sum(axis=1) over fancy-
-        # indexed copies) moved ~2×128 B per scored pair through memory
-        # and was the sf1.0 bottleneck (~100 GB of traffic, 43 s); the
-        # matmul scores the same pairs at BLAS speed. Sims can differ
-        # from the old row-wise reduction only in the last ulp BEFORE the
-        # 4-decimal round (different summation order), the same
-        # already-accepted divergence the exact kernel has vs the old
-        # verify; the operator is rows-only/probabilistic and its pins
-        # (recall, determinism) are unaffected.
-        ga, gb = int(pdf["ga"].iloc[0]), int(pdf["gb"].iloc[0])
-        ids = pdf["vec_id"].to_numpy()
-        mat = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-        mat = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        g = pdf["g"].to_numpy()
-        if ga == gb:
-            sims_m = np.round(mat @ mat.T, 4)
-            if keep_all:
-                ii, jj = np.triu_indices(len(ids), k=1)
-            else:
-                ii, jj = np.nonzero(np.triu(sims_m >= threshold, 1))
-            sims = sims_m[ii, jj]
-            ia, ib = ids[ii], ids[jj]
-        else:
-            am = np.nonzero(g == ga)[0]
-            bm = np.nonzero(g == gb)[0]
-            sims_m = np.round(mat[am] @ mat[bm].T, 4)
-            if keep_all:
-                ii = np.repeat(np.arange(len(am)), len(bm))
-                jj = np.tile(np.arange(len(bm)), len(am))
-            else:
-                ii, jj = np.nonzero(sims_m >= threshold)
-            sims = sims_m[ii, jj]
-            ia, ib = ids[am][ii], ids[bm][jj]
-        return pd.DataFrame(
-            {
-                "vec_a": np.minimum(ia, ib),
-                "vec_b": np.maximum(ia, ib),
-                "sim": sims,
-            }
-        )
-
     scored = rep.groupBy("band", "code", "ga", "gb").applyInPandas(
-        score_bucket_block_pair, schema="vec_a long, vec_b long, sim double"
+        lambda pdf: _score_block_pair(pdf, threshold, keep_all),
+        schema=_PAIR_SCHEMA,
     )
     # cross-band dedup: every copy of a pair carries the identical sim,
     # so min() is that sim — same (vec_a, vec_b, sim) rows the old
@@ -1625,26 +1571,6 @@ _LSH_BITS = 4
 _EMB_DIM = 64
 
 
-def _lsh_planes() -> list[list[float]]:
-    """Fixed sign-random-projection hyperplanes (deterministic literals —
-    plan-time constants, same role as a broadcast codebook)."""
-    import random as _r
-
-    rng = _r.Random(7)
-    return [
-        [rng.gauss(0.0, 1.0) for _ in range(_EMB_DIM)] for _ in range(_LSH_BITS)
-    ]
-
-
-def _vec_dot_plane(vec_col, plane: list[float]):
-    lits = F.array(*[F.lit(float(x)) for x in plane])
-    return F.aggregate(
-        F.zip_with(vec_col, lits, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def q_ann_lsh_bucketed(spark, sf_dir):
     """Scale-path ANN: sign-random-projection LSH bucketing + in-bucket
     brute force. Each vector gets a 4-bit code (sign of dot with 4 fixed
@@ -1655,10 +1581,10 @@ def q_ann_lsh_bucketed(spark, sf_dir):
     scan is the same brute-force kernel as q_ann_cosine_topk.
     Non-oracle (recall-vs-brute-force is pinned in tests/test_ann.py)."""
     e = _valid_embeddings(_t(spark, sf_dir, "embeddings"), keep_norm2=True)
-    planes = _lsh_planes()
     code = None
-    for j, pl in enumerate(planes):
-        bit = F.when(_vec_dot_plane(F.col("embedding"), pl) > 0, F.lit(1 << j)).otherwise(
+    for j, pl in enumerate(_rand_planes(_LSH_BITS, seed=7)):
+        plane = F.array(*[F.lit(float(x)) for x in pl])
+        bit = F.when(_dot("embedding", plane) > 0, F.lit(1 << j)).otherwise(
             F.lit(0)
         )
         code = bit if code is None else code + bit
@@ -1675,12 +1601,7 @@ def q_ann_lsh_bucketed(spark, sf_dir):
         return spark.createDataFrame([], "vec_id long, sim double")
     qrow = qrows[0]
     probe = [qrow["code"]] + [qrow["code"] ^ (1 << j) for j in range(_LSH_BITS)]
-    qe = F.array(*[F.lit(float(x)) for x in qrow["embedding"]])
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), qe, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot("embedding", F.array(*[F.lit(float(x)) for x in qrow["embedding"]]))
     # query norm comes from the same validity fold the candidates use —
     # one definition of "norm", no driver-side re-derivation
     qnorm = float(qrow["_norm2"]) ** 0.5
@@ -1767,12 +1688,7 @@ def q_ann_ivf(spark, sf_dir):
     q = np.array(qrows[0]["embedding"], dtype=np.float64)
     d2 = ((centers - q) ** 2).sum(axis=1)
     probe = [int(c) for c in np.argsort(d2)[:_IVF_NPROBE]]
-    qe = F.array(*[F.lit(float(x)) for x in q])
-    dot = F.aggregate(
-        F.zip_with(F.col("embedding"), qe, lambda a, b: a.cast("double") * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    dot = _dot("embedding", F.array(*[F.lit(float(x)) for x in q]))
     qnorm = float(np.sqrt((q * q).sum()))
     return (
         assigned.where(
@@ -2005,15 +1921,14 @@ def _sd_terms(fmt):
 
 
 def _semdedup_assign(spark, sf_dir):
-    """Shared first half of both semdedup variants: quantize + validate,
-    then Voronoi-assign every point to the K=8 smallest-vec_id seeds via
-    a broadcast nested loop with pure-BIGINT squared-L2 argmin (cid-asc
-    tie-break). Returns (pts, asg) — pts so the oracle-kernel variant can
-    run its quarantine count without triggering the assignment.
+    """First half of semdedup: quantize + validate, then Voronoi-assign
+    every point to the K=8 smallest-vec_id seeds via a broadcast nested
+    loop with pure-BIGINT squared-L2 argmin (cid-asc tie-break). Returns
+    the (vec_id, cid, q, n2) assignment.
 
-    r6: asg is lazily persist()-ed — both variants consume it TWICE (the
-    pair stage and the keep/prune summary join), and without the cache
-    the scan+quantize+argmin subtree executed once per reference."""
+    r6: the assignment is lazily persist()-ed — semdedup consumes it TWICE
+    (the pair stage and the keep/prune summary join), and without the
+    cache the scan+quantize+argmin subtree executed once per reference."""
     keep = _call_scope("semdedup", spark)
     e = _t_spread(spark, sf_dir, "embeddings")
     n2 = F.expr(_sd_terms("element_at(q, {d}) * element_at(q, {d})"))
@@ -2040,7 +1955,7 @@ def _semdedup_assign(spark, sf_dir):
             " * (element_at(q, {d}) - element_at(s, {d}))"
         )
     )
-    asg = keep(
+    return keep(
         pts.crossJoin(F.broadcast(seeds))
         .select(
             "vec_id",
@@ -2055,34 +1970,13 @@ def _semdedup_assign(spark, sf_dir):
             F.col("m.n2").alias("n2"),
         )
     )
-    return pts, asg
 
 
-def _semdedup_summary(asg, pruned):
-    """Shared final half: per-cell keep/prune accounting from the
-    assignment and the distinct pruned (cid, vec_id) set."""
-    return (
-        asg.join(pruned, ["cid", "vec_id"], "left")
-        .groupBy("cid")
-        .agg(
-            F.count("*").alias("n_points"),
-            F.count("_p").alias("n_pruned"),
-            (F.count("*") - F.count("_p")).alias("n_kept"),
-            F.min("vec_id").alias("min_vec"),
-            F.sum(
-                F.when(F.col("_p").isNotNull(), F.col("vec_id")).otherwise(
-                    F.lit(0)
-                )
-            ).alias("pruned_id_sum"),
-        )
-        .orderBy("cid")
-    )
-
-
-def q_semdedup_prune(spark, sf_dir):
-    """SemDeDup semantic dedup as a relational curation decision: Voronoi-
-    partition the embedding space over the K=8 smallest-vec_id seed
-    points (one assignment round — production swaps the full k-means of
+def q_semdedup_prune_fast(spark, sf_dir):
+    """SemDeDup semantic dedup as a curation decision, registered under
+    both `semdedup_prune` and `semdedup_prune_fast`: Voronoi-partition the
+    embedding space over the K=8 smallest-vec_id seed points (one
+    assignment round — production swaps the full k-means of
     q_kmeans_clusters or the IVF index in, orthogonal to the prune
     mechanics), then inside each cell prune every vector that has an
     EARLIER (smaller vec_id) cell-mate with cosine >= 0.30, keeping the
@@ -2101,89 +1995,22 @@ def q_semdedup_prune(spark, sf_dir):
     list_sum skips nulls where Spark's fold propagates them).
 
     Scale: assignment is a K-row broadcast nested loop, map-side, then
-    one groupBy(vec_id) argmin collapse; pair generation is an equi-join
-    on cid — CELL-bounded, not corpus-bounded, which is the entire
-    SemDeDup bargain (K grows with the corpus so cells stay ~constant).
-    The O(sum nc^2) pair stage shares the oracle kernel's enforced
-    quarantine: above ORACLE_KERNEL_MAX_ROWS input vectors this raises —
-    at real scale you raise K, you don't widen cells."""
-    pts, asg = _semdedup_assign(spark, sf_dir)
-    _enforce_oracle_quarantine(
-        pts,
-        f"semdedup_prune's within-cell pair stage is quarantined at "
-        f"{ORACLE_KERNEL_MAX_ROWS} vectors with fixed K={SEMDEDUP_K}; "
-        "at scale, K grows with the corpus (cells stay bounded) — "
-        "re-partition with a larger seed set, or use semdedup_prune_fast "
-        "(block-pair decomposition, same exact answer)",
-    )
-    a = asg.select(
-        "cid",
-        F.col("vec_id").alias("va"),
-        F.col("q").alias("qa"),
-        F.col("n2").alias("na2"),
-    )
-    b = asg.select(
-        "cid",
-        F.col("vec_id").alias("vb"),
-        F.col("q").alias("qb"),
-        F.col("n2").alias("nb2"),
-    )
-    # The pair predicate is ONE zip_with+aggregate integer fold whose
-    # `finish` lambda applies the threshold to the final accumulator —
-    # NOT the assignment stage's 64-term expression, and NOT an aliased
-    # dot column: a multiply-referenced 64-term alias gets inlined by
-    # Catalyst into the fused join+filter stage and blows janino's 64 KB
-    # method limit (measured: whole-stage codegen fell back to
-    # interpreted for the entire join stage), while an aliased FOLD gets
-    # inlined once per reference and pays one interpreted 64-element
-    # fold per copy (measured 2x on the pair stage). Binding the
-    # comparison inside `finish` evaluates the fold exactly once per
-    # pair. Integer addition is associative-exact, so fold order is
-    # irrelevant to parity; dot*abs(dot) is the SIGNED square — >= a
-    # positive RHS implies dot > 0 with a single accumulator reference.
-    sim_ok = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-        lambda acc: (
-            F.lit(SEMDEDUP_TAU_DEN * SEMDEDUP_TAU_DEN) * acc * F.abs(acc)
-            >= F.lit(SEMDEDUP_TAU_NUM * SEMDEDUP_TAU_NUM)
-            * F.col("na2")
-            * F.col("nb2")
-        ),
-    )
-    pruned = (
-        a.join(b, "cid")
-        .where(F.col("va") < F.col("vb"))
-        .where(sim_ok)
-        .select("cid", F.col("vb").alias("vec_id"))
-        .distinct()
-        .withColumn("_p", F.lit(1))
-    )
-    return _semdedup_summary(asg, pruned)
-
-
-def q_semdedup_prune_fast(spark, sf_dir):
-    """The SemDeDup scale path: IDENTICAL output to q_semdedup_prune
-    (registered against the SAME oracle SQL), with the within-cell pair
-    stage as block-pair decomposition instead of a cell self-join — the
-    embedding_neardup_pairs_fast treatment applied per cell. Every
-    vector lands in block g = pmod(xxhash64(vec_id), G); each
-    (cell, block-pair) becomes one Arrow task whose integer numpy matmul
-    scores its two sub-matrices, so a giant cell becomes G(G+1)/2
-    bounded tasks instead of one quadratic reducer, and the G·n-row
-    replication is the only extra shuffle volume. All arithmetic stays
-    int64 (quantized dots, cross-multiplied rational threshold — numpy
-    integer matmul is exact), so the pair set is bit-identical to the
-    quarantined kernel and the per-cell accounting hash-matches the same
-    DuckDB twin. From any qualifying pair only the LARGER vec_id is
-    pruned (the va < vb rule)."""
+    one groupBy(vec_id) argmin collapse. The within-cell pair stage is
+    block-pair decomposition (the embedding_neardup_pairs_fast treatment
+    applied per cell): every vector lands in block g = pmod(xxhash64(
+    vec_id), G); each (cell, block-pair) becomes one Arrow task whose
+    integer numpy matmul scores its two sub-matrices, so a giant cell
+    becomes G(G+1)/2 bounded tasks instead of one quadratic reducer, and
+    the G·n-row replication is the only extra shuffle volume. All
+    arithmetic stays int64 (quantized dots, cross-multiplied rational
+    threshold), so the per-cell accounting hash-matches the DuckDB twin.
+    From any qualifying pair only the LARGER vec_id is pruned (the
+    va < vb rule), so every non-empty cell keeps its min_vec."""
     import numpy as np
     import pandas as pd
 
-    G = _NEARDUP_BLOCKS
-    _pts, asg = _semdedup_assign(spark, sf_dir)
-    rep = _block_pair_replicate(spark, asg, G)
+    asg = _semdedup_assign(spark, sf_dir)
+    rep = _block_pair_replicate(spark, asg, _NEARDUP_BLOCKS)
     t2n, t2d = SEMDEDUP_TAU_NUM**2, SEMDEDUP_TAU_DEN**2
 
     def prune_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -2228,7 +2055,23 @@ def q_semdedup_prune_fast(spark, sf_dir):
         .distinct()
         .withColumn("_p", F.lit(1))
     )
-    return _semdedup_summary(asg, pruned)
+    # per-cell keep/prune accounting
+    return (
+        asg.join(pruned, ["cid", "vec_id"], "left")
+        .groupBy("cid")
+        .agg(
+            F.count("*").alias("n_points"),
+            F.count("_p").alias("n_pruned"),
+            (F.count("*") - F.count("_p")).alias("n_kept"),
+            F.min("vec_id").alias("min_vec"),
+            F.sum(
+                F.when(F.col("_p").isNotNull(), F.col("vec_id")).otherwise(
+                    F.lit(0)
+                )
+            ).alias("pruned_id_sum"),
+        )
+        .orderBy("cid")
+    )
 
 
 def _sql_semdedup_prune():
@@ -5191,27 +5034,16 @@ def q_multimodal_image_topk(spark, sf_dir):
     from engine import multimodal as M
 
     media = M.generate_media(spark, N_MULTIMODAL_MEDIA, partitions=8)
-    norm2 = F.aggregate(
-        F.transform("features", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
     fv = (
         M.image_features(media)
         .where(F.col("status") == "ok")
-        .withColumn("_n2", norm2)
+        .withColumn("_n2", _norm2("features"))
         .where(F.col("_n2") > 0)
     )
     q = fv.where(F.col("media_id") == 1).select(
         F.col("features").alias("qf"), F.col("_n2").alias("_qn2")
     )
-    dot = F.aggregate(
-        F.zip_with(
-            "features", "qf", lambda a, b: a.cast("double") * b.cast("double")
-        ),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
+    dot = _dot("features", "qf")
     meta = M.image_meta(media).where(F.col("parse_ok"))
     return (
         fv.where(F.col("media_id") != 1)
@@ -5920,8 +5752,9 @@ def _reg(name: str, fn, sql: str | None) -> None:
 _SEMDEDUP_SQL = _sql_semdedup_prune()
 _reg("bpe_train_merges", q_bpe_train_merges, _sql_bpe_train_merges())
 # winnow_fingerprints (no driver row yet) holds the slot semdedup_prune
-# had (driver-green r5-r6, now overflow below): its fast twin shares
-# _SEMDEDUP_SQL and stays in-window, so the semdedup oracle keeps a row
+# had (driver-green r5-r6, now overflow below): semdedup_prune_fast runs
+# the same body under _SEMDEDUP_SQL and stays in-window, so the semdedup
+# oracle keeps a row
 _reg(
     "winnow_fingerprints", q_winnow_fingerprints, _sql_winnow_fingerprints()
 )
@@ -6086,11 +5919,9 @@ _reg("pricing_summary", q_pricing_summary, _sql_pricing_summary())
 _reg("broadcast_dim_join", q_broadcast_dim_join, _sql_broadcast_dim_join())
 _reg("semi_join", q_semi_join, _sql_semi_join())
 _reg("running_totals", q_running_totals, _sql_running_totals())
-# registered under BOTH semdedup names: the scale path computes the
-# IDENTICAL answer, so sharing the oracle string structurally makes the
-# hash comparison a pair-set-equality check between the two. This one is
+# the second name of the one semdedup body, with the same oracle string;
 # overflow: semdedup_prune_fast carries the shared oracle in-window
-_reg("semdedup_prune", q_semdedup_prune, _SEMDEDUP_SQL)
+_reg("semdedup_prune", q_semdedup_prune_fast, _SEMDEDUP_SQL)
 
 # Rows-only queries in descending driver-visibility priority (they fill
 # whatever slots remain under the driver's 50-entry window after the

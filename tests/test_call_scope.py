@@ -17,7 +17,6 @@ from tests.test_plans import SF, _plan
 # every query that persists, with the call-scope family it persists under
 PERSISTING = [
     ("kmeans", "q_kmeans_clusters"),
-    ("semdedup", "q_semdedup_prune"),
     ("semdedup", "q_semdedup_prune_fast"),
     ("incremental_dedup", "q_incremental_dedup"),
     ("bpe", "q_bpe_train_merges"),

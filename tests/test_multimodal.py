@@ -156,6 +156,33 @@ def test_registered_multimodal_queries_deterministic(spark):
         assert a == b and len(a) == 10, name
 
 
+def test_image_topk_sims_are_feature_cosines(spark):
+    """multimodal_image_topk returns the 10 media whose pooled features
+    have the highest cosine against media 1's, with those cosines as its
+    sims: recomputed here in numpy from the payloads (float32 features,
+    as the Spark column stores them), rounded to 4 decimals."""
+    import numpy as np
+
+    from engine.multimodal import _pool_features, generate_media
+    from engine.queries import N_MULTIMODAL_MEDIA, _QUERIES
+
+    feats = {}
+    for r in generate_media(spark, N_MULTIMODAL_MEDIA).collect():
+        try:
+            f = _pool_features(r["payload"])
+        except Exception:
+            continue  # a corrupt payload has no features
+        feats[r["media_id"]] = np.asarray(f, dtype=np.float32).astype(np.float64)
+    q = feats[1]
+    sims = sorted(
+        (-round(float(v @ q / (np.sqrt(v @ v) * np.sqrt(q @ q))), 4), m)
+        for m, v in feats.items() if m != 1
+    )
+    want = [(m, -s) for s, m in sims[:10]]
+    rows = _QUERIES["multimodal_image_topk"](spark, "unused").collect()
+    assert [(r["media_id"], r["sim"]) for r in rows] == want
+
+
 # ----------------------------------------------------------------- video
 def test_video_codec_roundtrip_and_sampling():
     from engine.multimodal import (

@@ -445,22 +445,6 @@ def test_bpe_merge_pass_broadcast_jvm(spark):
         assert marker not in plan, marker
 
 
-def test_semdedup_broadcast_assign_equijoin_pairs(spark):
-    """semdedup_prune's two join stages must keep their scale shapes:
-    seed assignment is a BROADCAST nested loop (8-row seed set, map-side
-    — a point never shuffles to be scored), and pair generation is an
-    EQUI-join on cid (cell-bounded), never a cartesian; the whole plan is
-    integer JVM arithmetic with no Python eval."""
-    from engine.queries import q_semdedup_prune
-
-    plan = _plan(q_semdedup_prune(spark, SF))
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInArrow",
-                   "FlatMapGroupsInPandas", "MapInPandas"):
-        assert marker not in plan, marker
-
-
 def test_winnow_jvm_only_no_cartesian(spark):
     """Winnowing must stay entirely JVM-side (fold-arithmetic hashing,
     explode-into-windows, groupBy selection) with no Python eval and no

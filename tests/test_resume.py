@@ -5,6 +5,7 @@ FIXTURES.md §3 resume fixture)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from engine.jobs.extract_job import (
@@ -552,14 +553,14 @@ def test_second_retry_preserves_first_audit_rows(spark, pages, tmp_path):
     assert cur.count() == cur.select("url").distinct().count()
 
 
-def _ok_pages(spark, n):
+def _ok_pages(spark, n, host="ok.example"):
     """n small pages that all extract with status ok, one url each."""
     import datetime as dt
 
     body = "Plain article words for the retry test, long enough to keep. " * 4
     return spark.createDataFrame(
         [
-            (f"http://ok.example/{i}", dt.datetime(2024, 1, 1),
+            (f"http://{host}/{i}", dt.datetime(2024, 1, 1),
              f"<html><body><p>{i} {body}</p></body></html>".encode(), None, None)
             for i in range(n)
         ],
@@ -651,6 +652,14 @@ def _ok_and_junk_pages(spark, n_ok, n_junk):
     return _ok_pages(spark, n_ok).unionByName(junk)
 
 
+class _KilledAfterWrite(Observation):
+    # the retry reads its observed row count right after the overlay
+    # write returns
+    @property
+    def get(self):
+        raise _Kill()
+
+
 def test_kill_between_retry_write_and_lineage_publish(
     spark, tmp_path, monkeypatch
 ):
@@ -658,21 +667,12 @@ def test_kill_between_retry_write_and_lineage_publish(
     publish has burned its attempt number: the next retry is attempt 2, so
     the overlay never holds one (url, attempt) pair twice and the new
     attempt's lineage counts exactly the rows it retried."""
-    from pyspark.sql import Observation
-
     import engine.jobs.extract_job as job
 
     pages = _ok_and_junk_pages(spark, 40, 6)
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-kill")
     run_extract_job(spark, pages, man, wave_size=4)
-
-    class _KilledAfterWrite(Observation):
-        # the retry reads its observed row count right after the overlay
-        # write returns
-        @property
-        def get(self):
-            raise _Kill()
 
     monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
     with pytest.raises(_Kill):
@@ -687,6 +687,41 @@ def test_kill_between_retry_write_and_lineage_publish(
     assert lin.agg(F.sum("doc_count")).collect()[0][0] == res["retried"]
     pairs = spark.read.parquet(man.retry_path).groupBy("url", "attempt").count()
     assert pairs.where(F.col("count") > 1).count() == 0
+
+
+def test_burned_retry_attempt_is_not_current(spark, tmp_path, monkeypatch):
+    """A retry killed after its overlay write and before its lineage
+    publish may have fixed urls, but no lineage row counts its rows: the
+    current view leaves them out, so those urls still read as failed, the
+    next retry takes them up again as attempt 2, and the retry lineage
+    counts exactly the overlay rows of the published attempts."""
+    import engine.jobs.extract_job as job
+
+    pages = _ok_and_junk_pages(spark, 40, 6)
+    # the same urls, now with html that extracts
+    fixed = _ok_pages(spark, 40).unionByName(_ok_pages(spark, 6, "junk.example"))
+    junk = [f"http://junk.example/{i}" for i in range(6)]
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-burned")
+    run_extract_job(spark, pages, man, wave_size=4)
+
+    monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
+    with pytest.raises(_Kill):
+        retry_failed(spark, fixed, man)
+    monkeypatch.undo()
+    killed = spark.read.parquet(man.retry_path).where(F.col("attempt") == 1)
+    assert sorted(r["status"] for r in killed.collect()) == ["ok"] * 6
+    cur = read_current_extracted(spark, man).where(F.col("url").isin(junk))
+    assert sorted(r["status"] for r in cur.collect()) == ["failed"] * 6
+    assert man.burned_retry_attempts() == [1]
+
+    res = retry_failed(spark, fixed, man)
+    assert res == {"retried": 6, "attempt": 2}
+    lin = read_lineage(spark, man).where(F.col("stage") == "retry")
+    published = spark.read.parquet(man.retry_path).where(F.col("attempt") != 1)
+    assert lin.agg(F.sum("doc_count")).collect()[0][0] == published.count()
+    cur = read_current_extracted(spark, man).where(F.col("url").isin(junk))
+    assert sorted(r["status"] for r in cur.collect()) == ["ok"] * 6
 
 
 def test_spark_written_retry_lineage_still_reads(spark, tmp_path):
