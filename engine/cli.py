@@ -118,7 +118,11 @@ def main(argv: list[str] | None = None) -> int:
     rp = sub.add_parser("run", parents=[pages])
     rp.add_argument("--runs-root", required=True)
     rp.add_argument("--run-id", required=True)
-    rp.add_argument("--wave-size", type=int, default=8)
+    rp.add_argument(
+        "--wave-size", type=int, default=8,
+        help="partitions per committed wave; a wave runs one task per "
+        "partition, so choose at least the cluster's task slots",
+    )
     rp.add_argument("--max-waves", type=int)
 
     tp = sub.add_parser("retry", parents=[pages])
@@ -164,7 +168,10 @@ def main(argv: list[str] | None = None) -> int:
     )
     ip.add_argument("--run-id", help="id for the new increment run")
     ip.add_argument("--target-partition-mb", type=int, default=64)
-    ip.add_argument("--wave-size", type=int, default=8)
+    ip.add_argument(
+        "--wave-size", type=int, default=8,
+        help="partitions per committed wave (see run --wave-size)",
+    )
     ip.add_argument(
         "--canonical-urls", action="store_true",
         help="key the increment's within-crawl dedup on the canonical "

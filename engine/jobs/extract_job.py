@@ -18,18 +18,25 @@ which IS the salting strategy for the extract stage: the skew-prone key
 explicit salt column instead (see queries.q_salted_host_join).
 
 Commit protocol (resume unit = wave of partitions):
-  0. stage keyed pages ONCE, written partitionBy(partition_id) (atomic dir
-     rename) — partition_id is hash(url), which parquet cannot prune as a
-     predicate, but CAN prune as a partition directory. Waves then read
-     only their own files instead of re-scanning the corpus (round-1 did W
-     full scans for W waves — a 100 TB corpus scanned W times).
+  0. stage keyed pages ONCE, clustered by partition and written
+     partitionBy(partition_id) (atomic dir rename). The one shuffle that
+     feeds extraction sits here: repartition(n, url) is Spark's
+     HashPartitioning(url, n) = pmod(murmur3(url, 42), n), the very
+     expression partition_id is, so reduce task p holds exactly partition
+     p and staged/ holds one file per partition. partition_id is
+     hash(url), which parquet cannot prune as a predicate, but CAN prune
+     as a partition directory. Waves then read only their own files
+     instead of re-scanning the corpus (round-1 did W full scans for W
+     waves — a 100 TB corpus scanned W times).
   for each wave of pending partition ids:
-    1. read the wave's staged partition dirs        (file-pruned scan)
+    1. read the wave's staged partition dirs        (file-pruned scan; one
+       file, so one task, per partition)
     2. run the fused extract UDF
     3. write extracted parquet partitioned by partition_id with DYNAMIC
        partition overwrite — a crash between write and commit leaves
        orphan rows, and the resume's rewrite of the same wave REPLACES
-       them instead of appending duplicates
+       them instead of appending duplicates. A task holds one partition,
+       so the write adds one file per partition
     4. publish the wave's lineage rows (per partition: doc/byte counts and
        checksum, plus wall_ms) to a wave-keyed file. The counts and
        checksums are an unnamed Observation on step 3's write — per
@@ -356,8 +363,11 @@ def stage_pages(
 ) -> str:
     """Write keyed pages ONCE, laid out partitionBy(partition_id), so wave
     filters become partition-directory pruning instead of full scans.
-    Publication is an atomic directory rename: a kill mid-staging leaves
-    only a .tmp dir that the next attempt clears and rebuilds."""
+    The rows are first clustered by repartition(n, url), whose hash is
+    partition_id's own: each partition is written by one task as one
+    file, so every later wave runs one task per partition. Publication
+    is an atomic directory rename: a kill mid-staging leaves only a .tmp
+    dir that the next attempt clears and rebuilds."""
     import os
     import shutil
 
@@ -370,6 +380,7 @@ def stage_pages(
     with _job_description(spark, "stage", manifest.run_id):
         (
             with_partition_id(pages, n_parts)
+            .repartition(n_parts, "url")
             .write.mode("overwrite")
             .partitionBy("partition_id")
             .parquet(tmp)
@@ -387,9 +398,14 @@ def run_extract_job(
 ) -> dict:
     """Process pending partitions in committed waves; resume-safe.
 
+    A wave over the staged copy runs one task per partition, so it fills
+    at most `wave_size` task slots: choose `wave_size` at least the
+    cluster's task slots for the wave to use all of them.
+
     `max_waves` exists for the resume test (simulates a mid-run kill).
     Returns summary counters.
     """
+    import os
     import shutil
 
     sink_table = _run_sink_table(spark, manifest, strict=True)
@@ -409,18 +425,21 @@ def run_extract_job(
             "complete": True,
         }
     # staging pays for itself only when MULTIPLE waves would otherwise
-    # each re-scan the corpus; a single-wave run reads everything exactly
-    # once either way, so it skips the staging write entirely
+    # each re-scan the corpus; a single wave with no staged copy reads
+    # everything exactly once either way, so it skips the staging write.
+    # A staged copy that already exists (a resume's last wave) is read
+    # instead: its scan prunes to the wave's files
     single_wave = len(pending) <= wave_size and (
         max_waves is None or max_waves >= 1
     )
     keyed = with_partition_id(pages, manifest.state()["n_partitions"])
     if not single_wave:
-        staged = stage_pages(spark, pages, manifest)
+        stage_pages(spark, pages, manifest)
+    if os.path.exists(manifest.staged_path):
         # explicit schema (known statically from the input): skips footer
         # inference and keeps an all-empty staged table (empty corpus)
         # readable instead of dying with UNABLE_TO_INFER_SCHEMA
-        keyed = spark.read.schema(keyed.schema).parquet(staged)
+        keyed = spark.read.schema(keyed.schema).parquet(manifest.staged_path)
 
     for w0 in range(0, len(pending), wave_size):
         if max_waves is not None and waves_run >= max_waves:
@@ -1250,11 +1269,13 @@ def compact_run(
     manifest: RunManifest,
     target_file_bytes: int = 128 << 20,
 ) -> dict:
-    """Small-files compaction — the table-maintenance op wave-commits make
-    necessary at scale: every wave's tasks append files into the partition
-    dirs they touch, so a 10^6-partition run accumulates O(waves x tasks)
-    small files that wreck downstream scan planning. Rewrites the extracted
-    table with ~ceil(partition_bytes / target) files per partition:
+    """Small-files compaction — the table-maintenance op for the runs that
+    scatter files: a wave over the staged copy writes one file per
+    partition, but a single wave run without one writes a file per (input
+    task, partition) — up to O(tasks x partitions) small files, which
+    wreck downstream scan planning at 10^6 partitions. Rewrites the
+    extracted table with ~ceil(partition_bytes / target) files per
+    partition:
 
       file_no = pmod(xxhash64(url), files_for(partition))   (content-keyed,
       deterministic) → repartition(total_files, partition_id, file_no) →

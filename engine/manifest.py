@@ -25,7 +25,8 @@ callers ask it for paths and never compose them:
     manifest.json                 # atomic snapshot: per-partition status,
                                   #   plus the active-table pointer
     staged/                       # keyed input, partitioned by partition_id
-      partition_id=K/*.parquet    #   (written once; waves prune to their dirs)
+      partition_id=K/*.parquet    #   (written once, one file per partition;
+                                  #   waves prune to their dirs)
     staged.tmp/                   # staging in flight (atomic rename → staged/)
     extracted/                    # output parquet, partitioned by partition_id
       partition_id=K/*.parquet
@@ -282,8 +283,9 @@ class RunManifest:
 
     @property
     def staged_path(self) -> str:
-        """Keyed input staged once, partitionBy(partition_id), so waves
-        read only their own partition directories."""
+        """Keyed input staged once, partitionBy(partition_id) with one file
+        per partition, so waves read only their own partition directories
+        and run one task per partition."""
         return self._at("staged")
 
     @property

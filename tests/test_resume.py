@@ -423,7 +423,9 @@ def test_compact_run_reduces_files_preserves_rows(spark, pages, tmp_path):
 
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, min_partitions=12, run_id="compact-test")
-    run_extract_job(spark, pages, man, wave_size=3)
+    # one wave with no staged copy: each input task writes a file into
+    # every partition it holds (a staged run already has one per partition)
+    run_extract_job(spark, pages, man, wave_size=12)
     before = read_extracted(spark, man)
     before_fp = {
         (r["url"], r["n_chars"], r["status"]) for r in before.collect()
@@ -530,6 +532,47 @@ def test_waves_read_only_their_partitions(spark, pages, tmp_path):
     # and the pruned read returns only the wave's rows
     got_parts = {r["partition_id"] for r in batch.select("partition_id").distinct().collect()}
     assert got_parts <= set(wave) and got_parts
+
+
+def _data_files_per_partition(table_dir: str) -> dict[str, int]:
+    """Parquet data files in each partition_id=* dir of `table_dir`."""
+    import os
+
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(table_dir, d)))
+        for d in os.listdir(table_dir)
+        if d.startswith("partition_id=")
+    }
+
+
+def test_staged_and_wave_outputs_hold_one_file_per_partition(
+    spark, pages, tmp_path
+):
+    """Staging clusters rows by partition, so staged/ holds one file per
+    partition and each wave task extracts exactly one partition: an
+    interrupted and resumed run writes one file per partition too. The
+    clustering rests on repartition(n, url) hashing exactly as
+    with_partition_id does."""
+    from engine.jobs.extract_job import stage_pages, with_partition_id
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=12, run_id="layout-test")
+    stage_pages(spark, pages, man)
+    one_each = {f"partition_id={p}": 1 for p in range(12)}
+    assert _data_files_per_partition(man.staged_path) == one_each
+    run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
+    # the 8 pending partitions resume as one wave, over the staged copy
+    assert run_extract_job(spark, pages, man, wave_size=8)["complete"]
+    assert _data_files_per_partition(man.extracted_path) == one_each
+
+    for n in (8, 12, 200):
+        misplaced = (
+            with_partition_id(pages, n)
+            .repartition(n, "url")
+            .where(F.spark_partition_id() != F.col("partition_id"))
+            .count()
+        )
+        assert misplaced == 0, (n, misplaced)
 
 
 def test_second_retry_preserves_first_audit_rows(spark, pages, tmp_path):
@@ -1408,10 +1451,11 @@ def test_only_the_manifest_names_run_paths():
 # round-trip to the job path unnoticed. A Python-touching job costs a fixed
 # ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
 # wave write alone (its lineage is observed on that write and published
-# from the driver); retry: the one overlay write (failed-url window + semi
-# join) and its collected lineage aggregate; stats: one aggregate.
+# from the driver); stage: the clustering shuffle's map stage (its own job
+# under AQE) and the write; retry: the one overlay write (failed-url window
+# + semi join) and its collected lineage aggregate; stats: one aggregate.
 _JOBS_PER_VERB_CAP = {
-    "enqueue": 2, "stage": 1, "run": 1, "resume": 1, "retry": 5, "stats": 2,
+    "enqueue": 2, "stage": 2, "run": 1, "resume": 1, "retry": 5, "stats": 2,
 }
 
 
