@@ -35,7 +35,7 @@ import json
 import sys
 
 
-def _spark(cores: str = "*", conf: list[str] | None = None):
+def _spark(conf: list[str] | None = None):
     from pyspark.sql import SparkSession
 
     b = (

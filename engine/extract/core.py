@@ -97,16 +97,6 @@ _HEAD_ONLY_TAGS = frozenset(
 import html as _html_std
 
 
-def _unescape(text: str) -> str:
-    """Deterministic entity decode via the stdlib HTML5 table (complete
-    named-entity coverage, tolerant of missing semicolons); '&'-free text
-    short-circuits. Unknown entities pass through verbatim (html.unescape
-    semantics)."""
-    if "&" not in text:
-        return text
-    return _html_std.unescape(text)
-
-
 _WS_RE = re.compile(r"\s+")
 # One match per markup token, with the text run before it (g1). Then one of:
 # g2 comment, g3 declaration/PI, g4+g5 close tag (name, end), g6+g7 open tag

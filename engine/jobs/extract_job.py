@@ -217,8 +217,9 @@ def with_host_salted_partition_id(
     host still lands in at most n_salt partitions (usually fewer rows than
     one batch anyway). The default extract layout (with_partition_id) hashes
     the full url, which spreads hosts maximally; this variant is the
-    explicit middle ground. tests/test_resume.py::test_host_salting_spreads
-    pins the spread behaviour."""
+    explicit middle ground.
+    tests/test_resume.py::test_host_salting_spreads_hot_hosts pins the
+    spread behaviour."""
     host = F.parse_url("url", F.lit("HOST"))
     salt = F.pmod(F.hash("url"), F.lit(n_salt))
     return pages.withColumn(
@@ -1364,53 +1365,6 @@ def compact_run(
         "files_after": n_after,
         "target_file_bytes": target_file_bytes,
     }
-
-
-def rollup_hosts(
-    spark: SparkSession,
-    manifest: RunManifest,
-    golden: DataFrame | None = None,
-) -> DataFrame:
-    """Host-level quality rollup over the extraction output: grouping sets
-    (host), (host, status) — the dashboard's per-batch quality view recast
-    (SURVEY.md §3.3 'metrics by (run),(run,host),(run,host,lang)').
-    `parse_url` derives host from url JVM-side; one shuffle on the
-    grouping keys.
-
-    `golden` (url, expected_text) adds the R7/R8 secondary accuracy metric
-    (juxta/retas_compare.py [U]): avg levenshtein between extracted and
-    expected text over a 200-char prefix (bounded cost per row). Without a
-    golden table the column is null — the byte-identity goldens remain the
-    primary invariant."""
-    out = read_extracted(spark, manifest)
-    if golden is not None:
-        # drift is measured ONLY where a golden row exists: a url missing
-        # from a partial golden table stays NULL (excluded from the avg)
-        # rather than contributing levenshtein(text, '') — which would
-        # measure golden coverage, not extraction accuracy
-        out = out.join(F.broadcast(golden), "url", "left").withColumn(
-            "lev_vs_golden",
-            F.when(
-                F.col("expected_text").isNotNull(),
-                F.levenshtein(
-                    F.substring(F.coalesce(F.col("text"), F.lit("")), 1, 200),
-                    F.substring(F.col("expected_text"), 1, 200),
-                ),
-            ),
-        )
-    else:
-        out = out.withColumn("lev_vs_golden", F.lit(None).cast("int"))
-    return (
-        out.withColumn("host", F.parse_url("url", F.lit("HOST")))
-        .rollup("host", "status")
-        .agg(
-            F.count("*").alias("docs"),
-            F.sum(F.coalesce(F.col("n_chars"), F.lit(0))).alias("chars"),
-            F.round(F.avg("boiler_ratio"), 4).alias("avg_boiler"),
-            F.round(F.avg("quality"), 4).alias("avg_quality"),
-            F.round(F.avg("lev_vs_golden"), 2).alias("avg_lev_vs_golden"),
-        )
-    )
 
 
 def rollup_metrics(spark: SparkSession, manifest: RunManifest) -> DataFrame:

@@ -1,13 +1,12 @@
 """Multimodal binary-column plumbing: images/audio as opaque bytes + typed
 metadata, processed by Arrow-batched UDFs.
 
-The container ships no image/audio codecs (task constraint), so the DECODE
-step is stubbed two ways:
-  * decode_image_real — raises NotImplementedError (the marked seam where
-    Pillow/libvips/ffmpeg would plug in on a real cluster);
-  * decode_image_fake — a deterministic pure-Python decoder for the in-repo
-    synthetic "PPMish" payload format, so the Spark-side plumbing (schema,
-    partitioning, UDF signature, Arrow batch shape) is REAL and tested.
+The engine ships no image/audio/video codecs, so each DECODE step
+(decode_image_fake, decode_audio_fake, decode_video_fake) is a
+deterministic pure-Python decoder for an in-repo synthetic payload format
+(PPMX, PCMX, FVIX). The Spark-side plumbing (schema, partitioning, UDF
+signature, Arrow batch shape) is REAL and tested; a real codec
+(Pillow/libvips, ffmpeg/libsndfile, pyav) replaces the fake decoder's body.
 
 Everything Spark-side is honest scale machinery: binary column stays opaque
 until the one mapInPandas crossing; metadata (width/height/channels) is
@@ -62,15 +61,6 @@ def sniff_image_meta(data: bytes | None) -> dict:
         "n_bytes": len(data),
         "parse_ok": True,
     }
-
-
-def decode_image_real(data: bytes):
-    """The production decode seam. Plug Pillow/libvips here on a real
-    cluster; the sandbox ships no codecs (by design — see module doc)."""
-    raise NotImplementedError(
-        "image codecs are not available in this environment; "
-        "use decode_image_fake for the synthetic PPMX format"
-    )
 
 
 def decode_image_fake(data: bytes) -> tuple[int, int, int, bytes]:
@@ -239,15 +229,6 @@ def sniff_audio_meta(data: bytes | None) -> dict:
         "n_bytes": len(data),
         "parse_ok": True,
     }
-
-
-def decode_audio_real(data: bytes):
-    """The production decode seam — plug ffmpeg/libsndfile here on a real
-    cluster; the sandbox ships no codecs (by design — see module doc)."""
-    raise NotImplementedError(
-        "audio codecs are not available in this environment; "
-        "use decode_audio_fake for the synthetic PCMX format"
-    )
 
 
 def decode_audio_fake(data: bytes) -> tuple[int, int, list[int]]:
@@ -420,15 +401,6 @@ def sniff_video_meta(data: bytes | None) -> dict:
         "n_bytes": len(data),
         "parse_ok": True,
     }
-
-
-def decode_video_real(data: bytes):
-    """The production decode seam (ffmpeg/pyav on a real cluster; the
-    sandbox ships no codecs — see module doc)."""
-    raise NotImplementedError(
-        "video codecs are not available in this environment; "
-        "use decode_video_fake for the synthetic FVIX format"
-    )
 
 
 def decode_video_fake(data: bytes) -> tuple[int, int, int, int, bytes]:

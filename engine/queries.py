@@ -1354,7 +1354,6 @@ def _neardup_lsh_pairs(
     bits: int,
     bands: int,
     threshold: float,
-    candidates_only: bool = False,
     keep_all: bool = False,
 ) -> DataFrame:
     """Banded sign-LSH near-dup pairs: candidates from band-bucket joins,
@@ -1393,7 +1392,7 @@ def _neardup_lsh_pairs(
     pows = (1 << np.arange(bits)).astype(np.int64)
     # dense configs score inside bucket tasks, so the embedding rides along
     # with its codes; sparse ones ship no embedding back across Arrow
-    dense = not candidates_only and bits <= _LSH_DENSE_MAX_BITS
+    dense = bits <= _LSH_DENSE_MAX_BITS
 
     def band_codes(batches):
         patch_worker()
@@ -1433,8 +1432,6 @@ def _neardup_lsh_pairs(
             )
             .distinct()
         )
-        if candidates_only:
-            return cand
         # SPARSE configs (2^bits ≫ typical bucket occupancy, e.g. the
         # production bits=8/bands=12 point where candidates are ~5% of
         # all pairs): candidate join + re-attach + row-wise verify moves
@@ -1538,8 +1535,8 @@ def q_embedding_neardup_pairs_lsh_prod(spark, sf_dir):
     pytest pin. Rows-only (probabilistic candidate set)."""
     # ONE pipeline pass: every candidate leaves the verify stage with its
     # sim, and candidate/verified counts fall out of a single aggregate
-    # (building the pipeline twice — candidates_only then verified — would
-    # double the cost of this headline entry)
+    # (building the pipeline twice — candidates, then verified pairs —
+    # would double the cost of this headline entry)
     theta = _NEARDUP_PROD_THETA
     scored = _neardup_lsh_pairs(
         spark, sf_dir, bits=8, bands=12, threshold=theta, keep_all=True
@@ -2403,9 +2400,8 @@ def q_token_correction_stats(spark, sf_dir):
     ratio (pp_health) and a bounded levenshtein drift between original and
     corrected text — the R7/R8 secondary accuracy metric
     (juxta_compare.py / retas_compare.py [U] report edit-distance-style
-    scores next to the exact-match invariant). The JVM CASE-chain path runs
-    here (small dict → plan literals); the broadcast-dict Arrow path in
-    engine.correct is pinned byte-identical in tests/test_correct.py.
+    scores next to the exact-match invariant). engine.correct's JVM
+    CASE-chain runs here (small dict → plan literals).
     Levenshtein over a 200-char prefix: O(200²) per row, constant at any
     corpus scale (full-text edit distance would be O(doc²))."""
     from engine.correct import DEFAULT_DICT, corrected_tokens_expr
@@ -4882,47 +4878,6 @@ def _pagerank_project(ranks, nn):
         .alias("node_type"),
         F.floor(F.col("id") / F.lit(2.0)).cast("long").alias("key"),
         F.round(F.col("r") * F.col("n"), 4).alias("rank_scaled"),
-    )
-
-
-def pagerank_txn_graph_eps(
-    spark, sf_dir, eps: float = 1e-6, max_iter: int = 40
-):
-    """Tolerance-stopped PageRank over the same transaction graph — the
-    convergence-action pattern of engine/cluster.py applied to ranks:
-    each round materializes (localCheckpoint truncates the lineage so
-    plan depth stays O(1)) and a 1-row L∞-delta aggregate decides
-    whether to continue; the driver never sees rank data, only the
-    scalar delta (same inherent-to-fixpoint collect as
-    connected_components). Returns (result DataFrame in the registered
-    query's schema, rounds actually run). The REGISTERED query keeps the
-    fixed-8 lazy unrolled loop — its DuckDB twin unrolls exactly 8 CTE
-    iterations, and an adaptive round count would break value parity.
-
-    Scale: per round one (dst, double) shuffle + one |V|-row
-    materialization + one max-aggregate — the early exit saves whole
-    rounds (each a full shuffle at 10^9 nodes), which dominates the
-    added delta-join cost whenever the graph converges before max_iter.
-    Raises like connected_components if eps is not reached."""
-    d = PAGERANK_DAMP
-    edges, nodetab, nn = _pagerank_graph(spark, sf_dir)
-    ranks = nodetab.select(
-        "id", F.col("r0").alias("r"), "outdeg"
-    ).localCheckpoint()
-    for rounds in range(1, max_iter + 1):
-        new = _pagerank_step(edges, nodetab, ranks, d).localCheckpoint()
-        delta = (
-            new.join(
-                ranks.select(F.col("id"), F.col("r").alias("r_prev")), "id"
-            )
-            .agg(F.max(F.abs(F.col("r") - F.col("r_prev"))).alias("delta"))
-            .collect()[0]["delta"]
-        )
-        ranks = new
-        if delta is None or delta < eps:  # None: empty graph ≡ converged
-            return _pagerank_project(ranks, nn), rounds
-    raise RuntimeError(
-        f"pagerank did not converge to {eps} within {max_iter} rounds"
     )
 
 

@@ -14,9 +14,11 @@ Formats:
   warc/wet — the Common-Crawl wire formats (engine/warc.py): file-per-task
              binaryFile scan + one mapInPandas parse, zero shuffles
 
-Sinks mirror the formats; `write_pages` always writes parquet (columnar,
-predicate-pushdown-able) — JSON/CSV exports exist for interop, marked as
-non-scale paths in their docstrings.
+The one pages sink here is `export_pages_warc`; a finished run's
+extracted table is published as parquet, orc or json by
+`engine.jobs.extract_job.export_run`. The json/csv readers take
+interchange input from outside the engine (they are not scale paths:
+row-oriented, base64-inflated).
 """
 
 from __future__ import annotations
@@ -49,11 +51,6 @@ def read_pages_orc(spark: SparkSession, path: str) -> DataFrame:
     """ORC ingest: columnar with a real binary type, so html round-trips
     byte-exact like parquet (predicate pushdown + column pruning apply)."""
     return spark.read.schema(PAGES_SCHEMA).orc(path)
-
-
-def write_pages_orc(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Columnar ORC sink — a scale path like parquet."""
-    df.select(*_COLS).write.mode(mode).orc(path)
 
 
 def read_pages_json(spark: SparkSession, path: str) -> DataFrame:
@@ -316,32 +313,3 @@ def read_pages(
     if fmt == "files":
         return reader(spark, path, glob=files_glob)
     return reader(spark, path)
-
-
-def write_pages(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Native sink: parquet (the only path meant for full-scale data)."""
-    df.select(*_COLS).write.mode(mode).parquet(path)
-
-
-def export_pages_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Interchange export (NOT a scale path: row-oriented, base64-inflated)."""
-    df.select(
-        "url",
-        "warc_ts",
-        F.base64("html").alias("html_b64"),
-        "text",
-        "lang",
-    ).write.mode(mode).json(path)
-
-
-def export_pages_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Interchange export (NOT a scale path)."""
-    df.select(
-        "url",
-        "warc_ts",
-        # Spark's base64 is MIME-chunked (newline every 76 chars) — strip so
-        # each CSV record stays on one physical line
-        F.regexp_replace(F.base64("html"), "[\\r\\n]", "").alias("html_b64"),
-        "text",
-        "lang",
-    ).write.mode(mode).option("header", True).csv(path)

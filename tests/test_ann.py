@@ -105,16 +105,14 @@ def test_lsh_neardup_prunes_at_production_threshold(spark, tmp_path):
 
     n_total = n_random + 2 * n_planted
     all_pairs = n_total * (n_total - 1) / 2
-    n_cand = _neardup_lsh_pairs(
-        spark, sf, bits=8, bands=12, threshold=0.9, candidates_only=True
-    ).count()
+    # keep_all: every candidate leaves the (sparse, bits=8) verify stage
+    # with its sim, so one pass gives both the candidate set and the pairs
+    scored = _neardup_lsh_pairs(
+        spark, sf, bits=8, bands=12, threshold=0.9, keep_all=True
+    ).collect()
+    n_cand = len(scored)
     assert n_cand / all_pairs < 0.15, f"candidates {n_cand}/{all_pairs:.0f}"
-    found = {
-        (r["vec_a"], r["vec_b"])
-        for r in _neardup_lsh_pairs(
-            spark, sf, bits=8, bands=12, threshold=0.9
-        ).collect()
-    }
+    found = {(r["vec_a"], r["vec_b"]) for r in scored if r["sim"] >= 0.9}
     assert planted <= found
 
 

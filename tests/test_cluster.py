@@ -182,68 +182,6 @@ def test_pagerank_mass_conserved_and_deterministic(spark):
     assert rows == again
 
 
-def test_pagerank_eps_early_exit_and_fixpoint_property(spark):
-    """Tolerance-stopped PageRank (round-3 verdict optional item): on the
-    battery graph it must exit before max_iter, report the rounds it ran,
-    satisfy the mass/positivity invariants, cover the same node set as
-    the fixed-8 query, and satisfy the DEFINING convergence property —
-    one further rank update moves no node by eps or more. (No closeness
-    assertion vs the fixed-8 query: that is deliberately an 8-round
-    approximation, measurably far from the fixpoint on this hub-heavy
-    graph — deltas shrink ~x0.85/round from 0.077.)"""
-    from pyspark.sql import functions as F
-
-    from engine.queries import (
-        PAGERANK_DAMP,
-        _pagerank_graph,
-        _pagerank_step,
-        pagerank_txn_graph_eps,
-        q_pagerank_txn_graph,
-    )
-
-    eps = 1e-3
-    df, rounds = pagerank_txn_graph_eps(spark, SF, eps=eps, max_iter=60)
-    assert 1 < rounds < 60
-    got = {
-        (r["node_type"], r["key"]): r["rank_scaled"] for r in df.collect()
-    }
-    agg = df.agg(
-        F.sum("rank_scaled").alias("mass"),
-        F.count("*").alias("n"),
-        F.min("rank_scaled").alias("lo"),
-    ).collect()[0]
-    assert abs(agg["mass"] - agg["n"]) < 0.01 * agg["n"]
-    assert agg["lo"] > 0
-    fixed_keys = {
-        (r["node_type"], r["key"])
-        for r in q_pagerank_txn_graph(spark, SF).collect()
-    }
-    assert set(got) == fixed_keys
-    # defining property: replay the converged state and take ONE more
-    # step — the L-infinity movement must be below eps
-    edges, nodetab, nn = _pagerank_graph(spark, SF)
-    n = nn.collect()[0]["n"]
-    ranks = nodetab.join(
-        spark.createDataFrame(
-            [(0 if t == "customer" else 1, k, v) for (t, k), v in got.items()],
-            "par int, key long, rank_scaled double",
-        ).select(
-            (F.col("key") * 2 + F.col("par")).alias("id"),
-            (F.col("rank_scaled") / F.lit(float(n))).alias("r"),
-        ),
-        "id",
-    ).select("id", "r", "outdeg")
-    stepped = _pagerank_step(edges, nodetab, ranks, PAGERANK_DAMP)
-    move = (
-        stepped.join(ranks.select("id", F.col("r").alias("r0")), "id")
-        .agg(F.max(F.abs(F.col("r") - F.col("r0"))).alias("m"))
-        .collect()[0]["m"]
-    )
-    # rank_scaled is rounded to 4 decimals, so replaying adds up to
-    # 5e-5/n of quantization per node — covered by the eps margin
-    assert move < eps + 1e-4
-
-
 def test_pagerank_construction_survives_stale_cache_entries(spark):
     """Review finding: the pagerank call scope may hold DataFrames of a
     stopped SparkSession (bench.py stops/recreates sessions in-process). A

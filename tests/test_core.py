@@ -18,7 +18,6 @@ from engine.extract.core import (
     extract_html,
     extract_pdf,
     tokenize_blocks,
-    _unescape,
 )
 from engine.synth import gen_doc, make_pdf
 
@@ -247,10 +246,14 @@ def test_tokenizer_stray_lt_is_text():
 def test_entities():
     # stdlib HTML5 semantics: full named table, nbsp -> U+00A0 (whitespace
     # for word splitting), unknown entities verbatim
-    assert _unescape("a &amp; b &lt;c&gt; &#65; &#x41; &unknown; &nbsp;x") == (
-        "a & b <c> A A &unknown; \xa0x"
+    blocks, _ = tokenize_blocks(
+        "<body><p>a &amp; b &lt;c&gt; &#65; &#x41; &unknown; &nbsp;x</p>"
+        "<p>&mdash;&hellip;&copy;</p></body>"
     )
-    assert _unescape("&mdash;&hellip;&copy;") == "\u2014\u2026\u00a9"
+    assert [b.text for b in blocks] == [
+        "a & b <c> A A &unknown; x",
+        "\u2014\u2026\u00a9",
+    ]
 
 
 # ----------------------------------------------------------------- classifier

@@ -1,18 +1,15 @@
 """Multimodal binary-column plumbing tests: schema, batch shape, failure
-containment, determinism, and the explicit real-decode seam."""
+containment and determinism."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from engine.multimodal import (
     audio_features,
     audio_meta,
     decode_audio_fake,
-    decode_audio_real,
     decode_image_fake,
-    decode_image_real,
     encode_fake_audio,
     encode_fake_image,
     generate_audio,
@@ -22,11 +19,6 @@ from engine.multimodal import (
     sniff_audio_meta,
     sniff_image_meta,
 )
-
-
-def test_real_decode_is_marked_seam():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"anything")
 
 
 def test_fake_codec_roundtrip():
@@ -93,12 +85,7 @@ def test_features_feed_ann_operator(spark):
     assert len(top) == 5 and all(r["dot"] is not None for r in top)
 
 
-# ===== audio path: the same five pins as the image trio =====
-
-
-def test_audio_real_decode_is_marked_seam():
-    with pytest.raises(NotImplementedError):
-        decode_audio_real(b"anything")
+# ===== audio path: the same pins as the image path =====
 
 
 def test_audio_fake_codec_roundtrip():
@@ -187,7 +174,6 @@ def test_image_topk_sims_are_feature_cosines(spark):
 def test_video_codec_roundtrip_and_sampling():
     from engine.multimodal import (
         decode_video_fake,
-        decode_video_real,
         encode_fake_video,
         sample_frame_indices,
         sniff_video_meta,
@@ -204,10 +190,6 @@ def test_video_codec_roundtrip_and_sampling():
     assert sample_frame_indices(2, 4) == [0, 1]
     assert sample_frame_indices(0, 4) == []
     assert sniff_video_meta(b"\x00garbage")["parse_ok"] is False
-    import pytest as _pt
-
-    with _pt.raises(NotImplementedError):
-        decode_video_real(b)
 
 
 def test_video_frames_spark_path(spark):

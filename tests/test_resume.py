@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from engine.jobs.extract_job import (
     enqueue,
     export_run,
-    rollup_hosts,
     with_host_salted_partition_id,
     plan_partitions,
     read_current_extracted,
@@ -361,47 +360,6 @@ def test_rollup_metrics(spark, pages, tmp_path):
         )
     # per-partition rows keep the wall of the wave that committed them
     assert {r["wall_ms"] for r in per_part} == {w[0]["wall_ms"] for w in walls}
-
-
-def test_rollup_hosts(spark, pages, tmp_path):
-    root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="hosts-test")
-    run_extract_job(spark, pages, man, wave_size=8)
-    rows = rollup_hosts(spark, man).collect()
-    grand = [r for r in rows if r["host"] is None and r["status"] is None]
-    per_host = [r for r in rows if r["host"] is not None and r["status"] is None]
-    assert len(grand) == 1 and grand[0]["docs"] == pages.count()
-    assert len(per_host) >= 10  # zipf host spread
-    assert all(r["host"].endswith(".example.org") for r in per_host)
-
-
-def test_rollup_hosts_golden_levenshtein(spark, pages, tmp_path):
-    """R7/R8 secondary accuracy metric: with a golden (url, expected_text)
-    table the host rollup reports avg levenshtein vs golden; perfect
-    extraction of the synthetic corpus means a small grand-total drift."""
-    from engine.synth import gen_doc_with_expected
-
-    root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="lev-test")
-    run_extract_job(spark, pages, man, wave_size=8)
-    golden_rows = []
-    for i in range(N_DOCS):
-        rows, expected = gen_doc_with_expected(i)
-        if expected is not None:
-            golden_rows.append((rows[0]["url"], expected))
-    golden = spark.createDataFrame(
-        golden_rows, "url string, expected_text string"
-    )
-    roll = rollup_hosts(spark, man, golden=golden).collect()
-    grand = [r for r in roll if r["host"] is None and r["status"] is None][0]
-    assert grand["avg_lev_vs_golden"] is not None
-    # word-level P/R ≈ 1.0 on this corpus (test_quality_eval) → the 200-char
-    # prefix drift must be far below the prefix length
-    assert 0 <= grand["avg_lev_vs_golden"] < 100
-    # without a golden table the column exists and is null
-    plain = rollup_hosts(spark, man).collect()
-    g2 = [r for r in plain if r["host"] is None and r["status"] is None][0]
-    assert g2["avg_lev_vs_golden"] is None
 
 
 def test_export_completed_run_only(spark, pages, tmp_path):

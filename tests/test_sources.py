@@ -1,5 +1,6 @@
-"""Source/sink round-trips: pages survive parquet/json/csv byte-exactly
-(html binary through base64 wire formats) and feed the extractor."""
+"""Source round-trips: pages written as parquet/orc/json/csv read back
+byte-exactly (html binary through base64 wire formats) and feed the
+extractor."""
 
 from __future__ import annotations
 
@@ -8,14 +9,10 @@ from pyspark.sql import functions as F
 
 from engine.extract.udf import run_extract
 from engine.sources import (
-    export_pages_csv,
-    export_pages_json,
     read_pages_csv,
     read_pages_json,
     read_pages_orc,
     read_pages_parquet,
-    write_pages,
-    write_pages_orc,
 )
 from engine.synth import generate_pages
 
@@ -36,23 +33,35 @@ def _fingerprint(df):
     }
 
 
+def _wire(pages):
+    """Pages in the json/csv wire shape: html as one-line base64 text
+    (Spark's base64 may be MIME-chunked, a newline every 76 chars)."""
+    return pages.select(
+        "url",
+        "warc_ts",
+        F.regexp_replace(F.base64("html"), "[\\r\\n]", "").alias("html_b64"),
+        "text",
+        "lang",
+    )
+
+
 def test_parquet_roundtrip(spark, pages, tmp_path):
     p = str(tmp_path / "pq")
-    write_pages(pages, p)
+    pages.write.parquet(p)
     back = read_pages_parquet(spark, p)
     assert _fingerprint(back) == _fingerprint(pages)
 
 
 def test_orc_roundtrip_binary_exact(spark, pages, tmp_path):
     p = str(tmp_path / "orc")
-    write_pages_orc(pages, p)
+    pages.write.orc(p)
     back = read_pages_orc(spark, p)
     assert _fingerprint(back) == _fingerprint(pages)
 
 
 def test_json_roundtrip_binary_exact(spark, pages, tmp_path):
     p = str(tmp_path / "js")
-    export_pages_json(pages, p)
+    _wire(pages).write.json(p)
     back = read_pages_json(spark, p)
     assert _fingerprint(back) == _fingerprint(pages)
     # and the re-ingested table extracts identically
@@ -63,7 +72,7 @@ def test_json_roundtrip_binary_exact(spark, pages, tmp_path):
 
 def test_csv_roundtrip_binary_exact(spark, pages, tmp_path):
     p = str(tmp_path / "cs")
-    export_pages_csv(pages, p)
+    _wire(pages).write.option("header", True).csv(p)
     back = read_pages_csv(spark, p)
     assert _fingerprint(back) == _fingerprint(pages)
 
