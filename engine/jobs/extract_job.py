@@ -45,7 +45,9 @@ Commit protocol (resume unit = wave of partitions):
        writes the file with pyarrow (`_publish_lineage`: temp, fsync,
        rename; the rename replaces any orphan a killed wave left). A retry
        attempt publishes its lineage the same way, from a collected
-       aggregate of its overlay rows
+       aggregate of its overlay rows. The shuffle that feeds a retry's
+       UDF carries only the failed rows, clustered by partition_id, so
+       an attempt writes one overlay file per partition it touches
     5. atomically flip those partitions pending→committed in manifest.json
 A kill ANYWHERE — between waves or between steps 3/4 and 5 — loses at most
 the in-flight wave's work; re-running recomputes ONLY partitions absent
@@ -637,6 +639,11 @@ def retry_failed(
 
     One pass: the failed-url window and semi join run once, inside the
     overlay write, and `retried` is the row count observed on that write.
+    The failed rows are clustered by `partition_id` before the extract
+    UDF: the shuffle carries only failed rows, AQE coalesces it (one
+    Python task for a small failure set), and no partition id is split
+    across tasks, so an attempt writes one overlay file per partition it
+    touches.
     An attempt that re-extracts nothing leaves no trace: its claim is
     removed (so the attempt number stays free) and no new overlay
     directory is left.
@@ -648,15 +655,18 @@ def retry_failed(
         return {"retried": 0}  # nothing committed, nothing can have failed
     with _job_description(spark, "retry", manifest.run_id):
         n_parts = manifest.state()["n_partitions"]
+        # the current view holds one row per url, and the semi join ignores
+        # duplicates on its right side: no distinct needed
         failed_urls = (
             read_current_extracted(spark, manifest)
             .where(F.col("status") == "failed")
             .select("url")
-            .distinct()
         )
+        # no partition count: a fixed count would fix that many Python
+        # tasks
         todo = with_partition_id(
             pages.join(failed_urls, "url", "left_semi"), n_parts
-        )
+        ).repartition("partition_id")
         attempt = manifest.claim_retry_attempt()
         lineage_name = manifest.retry_lineage_name(attempt)
         retry_path = manifest.retry_path
@@ -739,7 +749,6 @@ def enqueue_increment(
     runs_root: str,
     base_run_ids: list[str],
     target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
-    min_partitions: int = 8,
     run_id: str | None = None,
     canonical_urls: bool = False,
 ) -> tuple[RunManifest | None, DataFrame]:
@@ -877,12 +886,7 @@ def enqueue_increment(
         shutil.rmtree(tmp, ignore_errors=True)
         return None, new_pages
     manifest = enqueue(
-        spark,
-        mat,
-        runs_root,
-        target_partition_bytes,
-        min_partitions,
-        run_id=run_id,
+        spark, mat, runs_root, target_partition_bytes, run_id=run_id
     )
     os.rename(tmp, input_path)  # the manifest dir exists now
     return manifest, spark.read.parquet(input_path)

@@ -725,6 +725,50 @@ def test_burned_retry_attempt_is_not_current(spark, tmp_path, monkeypatch):
     assert sorted(r["status"] for r in cur.collect()) == ["ok"] * 6
 
 
+def test_retry_writes_one_overlay_file_per_touched_partition(spark, tmp_path):
+    """Failed rows spread over every scan task of `pages`: each retry
+    attempt still adds exactly one data file to each
+    extracted_retry/partition_id=K/ dir it touches, and none elsewhere."""
+    import os
+
+    src = str(tmp_path / "pages.parquet")
+    _ok_and_junk_pages(spark, 40, 12).repartition(4).write.parquet(src)
+    pages = spark.read.parquet(src)
+    assert pages.rdd.getNumPartitions() >= 3
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-files")
+    run_extract_job(spark, pages, man, wave_size=4)
+
+    def data_files():
+        out = {}
+        for d in os.listdir(man.retry_path):
+            if d.startswith("partition_id="):
+                out[int(d.split("=")[1])] = {
+                    f for f in os.listdir(os.path.join(man.retry_path, d))
+                    if not f.startswith((".", "_"))
+                }
+        return out
+
+    before = {}
+    for attempt in (1, 2):
+        assert retry_failed(spark, pages, man) == {
+            "retried": 12, "attempt": attempt
+        }
+        touched = {
+            r["partition_id"]
+            for r in spark.read.parquet(man.retry_path)
+            .where(F.col("attempt") == attempt)
+            .select("partition_id").distinct().collect()
+        }
+        assert len(touched) > 1
+        after = data_files()
+        added = {
+            p: len(fs - before.get(p, set())) for p, fs in after.items()
+        }
+        assert added == {p: int(p in touched) for p in after}, added
+        before = after
+
+
 def test_spark_written_retry_lineage_still_reads(spark, tmp_path):
     """A run dir whose retry lineage older code wrote with Spark (a
     retry-001.parquet/ dir of part-*.snappy.parquet files and a _SUCCESS
@@ -1010,9 +1054,7 @@ def test_increment_killed_midrun_resumes_from_recorded_input(
     base_urls = {r["url"] for r in pages.select("url").distinct().collect()}
 
     bigger = generate_pages(spark, N_DOCS + 120, partitions=4)
-    inc, new_pages = enqueue_increment(
-        spark, bigger, root, ["base"], run_id="inc", min_partitions=8
-    )
+    inc, new_pages = enqueue_increment(spark, bigger, root, ["base"], run_id="inc")
     run_extract_job(spark, new_pages, inc, wave_size=4, max_waves=1)  # kill
 
     # resume: same call, same run_id — returns the durable recorded input
@@ -1410,10 +1452,12 @@ def test_only_the_manifest_names_run_paths():
 # ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
 # wave write alone (its lineage is observed on that write and published
 # from the driver); stage: the clustering shuffle's map stage (its own job
-# under AQE) and the write; retry: the one overlay write (failed-url window
-# + semi join) and its collected lineage aggregate; stats: one aggregate.
+# under AQE) and the write; retry: the overlay write (failed-url window +
+# semi join), the map stage of the shuffle that clusters the failed rows by
+# partition id before the UDF (a JVM-only job under AQE, as staging's is),
+# and its collected lineage aggregate; stats: one aggregate.
 _JOBS_PER_VERB_CAP = {
-    "enqueue": 2, "stage": 2, "run": 1, "resume": 1, "retry": 5, "stats": 2,
+    "enqueue": 2, "stage": 2, "run": 1, "resume": 1, "retry": 6, "stats": 2,
 }
 
 
