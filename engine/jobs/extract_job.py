@@ -7,7 +7,7 @@ jobs with a driver-side manifest table instead of a scheduler daemon").
 
 Partitioning (the Q3 optimize_job analog, emop/lib/emop_submit.py [U]):
   n_partitions = clamp(ceil(total_html_bytes / target_partition_bytes),
-                       min_partitions, max_partitions)
+                       min_partitions, MAX_PARTITIONS)
   partition_id = pmod(hash(url), n_partitions)
 
 hash(url) is Spark's Murmur3 — content-addressed, so a document's partition
@@ -38,14 +38,17 @@ Commit protocol (resume unit = wave of partitions):
        them instead of appending duplicates. A task holds one partition,
        so the write adds one file per partition
     4. publish the wave's lineage rows (per partition: doc/byte counts and
-       checksum, plus wall_ms) to a wave-keyed file. The counts and
-       checksums are an unnamed Observation on step 3's write — per
-       partition id of the wave, the record `_lineage_sql` defines — so
-       the wave is ONE Spark job and nothing is read back; the driver
-       writes the file with pyarrow (`_publish_lineage`: temp, fsync,
-       rename; the rename replaces any orphan a killed wave left). A retry
-       attempt publishes its lineage the same way, from a collected
-       aggregate of its overlay rows. The shuffle that feeds a retry's
+       checksum, plus wall_ms) to a wave-keyed file. Up to
+       `_OBSERVED_LINEAGE_MAX` partitions, the counts and checksums are an
+       unnamed Observation on step 3's write — per partition id of the
+       wave, the record `_lineage_sql` defines — so the wave is ONE Spark
+       job and nothing is read back; above it they are a collected
+       aggregate of the written partitions. The driver writes the file
+       with pyarrow (`_publish_lineage`: temp, fsync, rename; the rename
+       replaces any orphan a killed wave left). A retry attempt publishes
+       its lineage the same way (`_write_with_lineage`), its partition set
+       being the run's committed partitions: observed on its overlay write
+       up to the cap, read back above it. The shuffle that feeds a retry's
        UDF carries only the failed rows, clustered by partition_id, so
        an attempt writes one overlay file per partition it touches
     5. atomically flip those partitions pending→committed in manifest.json
@@ -76,6 +79,7 @@ from engine.schema import (
 )
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
+MAX_PARTITIONS = 1 << 20  # plan_partitions' upper clamp
 
 _MASK40 = (1 << 40) - 1
 
@@ -87,10 +91,9 @@ _CHECKSUM_COL = {"extract": "text", "retry": "status"}
 def _lineage_sql(stage: str, pid: int | None = None) -> str:
     """SQL text of one partition's lineage record, a struct of
     (partition_id, doc_count, byte_count, checksum): over every row of a
-    group when `pid` is None (a retry attempt's read-back
-    groupBy(partition_id), `_lineage_aggregate`), else over the rows of
-    partition `pid` only (the per-partition metrics a wave observes on its
-    write).
+    group when `pid` is None (the read-back groupBy(partition_id),
+    `_lineage_aggregate`), else over the rows of partition `pid` only (the
+    per-partition metrics a write observes, `_write_with_lineage`).
 
     The checksum is an order-insensitive, partial-aggregatable content
     digest: sha256 of "count:lane1:lane2", where the lanes are two
@@ -120,24 +123,63 @@ def _lineage_sql(stage: str, pid: int | None = None) -> str:
     )
 
 
-def _wave_lineage_metric(wave: list[int]):
-    """One observed metric: per partition id of the wave, its lineage
-    record. Per-row work and aggregation state grow with the wave size
-    only, never with the run's partition count."""
-    return F.expr(
-        "array("
-        + ", ".join(_lineage_sql("extract", p) for p in wave)
-        + ") AS per_partition"
-    )
+# The largest partition set whose lineage a write observes. The metric is
+# 4 aggregates per partition, so its driver-side build and its per-row cost
+# grow with the set, while a read-back costs two more jobs and a listing of
+# the written files. Timed at local[4] (CHANGES.md): observing wins for a
+# wave and a retry at 4 partitions, ties at 8 and loses at 16 and above.
+_OBSERVED_LINEAGE_MAX = 8
 
 
 def _lineage_aggregate(rows: DataFrame, stage: str) -> DataFrame:
     """Per-partition lineage records of `rows` (column `l`), a JVM
-    aggregate from the same SQL text a wave observes: no Python worker is
+    aggregate from the same SQL text a write observes: no Python worker is
     touched (tests/test_resume.py pins the plan Python-free)."""
     return rows.groupBy("partition_id").agg(
         F.expr(f"{_lineage_sql(stage)} AS l")
     )
+
+
+def _write_with_lineage(rows: DataFrame, stage: str, pids: list[int],
+                        write, written) -> tuple[int, int, list]:
+    """Extract `rows` (url, html, partition_id) with the fused UDF, pass
+    the extracted frame to `write`, and return (rows written, wall ms of
+    the extract and write, the written rows' per-partition lineage
+    records).
+
+    `pids` is the write's partition set: every row has a partition_id in
+    it. Up to `_OBSERVED_LINEAGE_MAX` partitions, the records are an
+    unnamed Observation on the write, one `_lineage_sql` record per
+    partition id, so nothing is read back. Above it, `written()`, the rows
+    the write committed, is aggregated and collected
+    (`_lineage_aggregate`). The row count is observed either way, on the
+    same Observation, and read right after the write returns."""
+    t0 = time.monotonic()
+    observed = Observation()
+    metrics = [F.expr("count(1) AS n")]
+    if len(pids) <= _OBSERVED_LINEAGE_MAX:
+        metrics.append(F.expr(
+            "array("
+            + ", ".join(_lineage_sql(stage, p) for p in pids)
+            + ") AS per_partition"
+        ))
+    # the observation sits right above the UDF, where no exchange is above
+    # it in the write's plan, so it sees exactly the rows the committed
+    # tasks wrote
+    write(
+        rows.select("url", "html", "partition_id")
+        .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
+        .observe(observed, *metrics)
+    )
+    wall_ms = int((time.monotonic() - t0) * 1000)
+    got = observed.get
+    if "per_partition" in got:
+        records = got["per_partition"]
+    elif got["n"]:
+        records = [r.l for r in _lineage_aggregate(written(), stage).collect()]
+    else:
+        records = []
+    return got["n"], wall_ms, records
 
 
 def _publish_lineage(
@@ -174,11 +216,10 @@ def plan_partitions(
     total_bytes: int,
     target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
     min_partitions: int = 8,
-    max_partitions: int = 1 << 20,
 ) -> int:
     """Byte-based partition sizing (optimize_job analog)."""
     n = math.ceil(max(total_bytes, 1) / target_partition_bytes)
-    return max(min_partitions, min(n, max_partitions))
+    return max(min_partitions, min(n, MAX_PARTITIONS))
 
 
 def with_partition_id(pages: DataFrame, n_partitions: int) -> DataFrame:
@@ -202,6 +243,20 @@ def _job_description(
         yield
     finally:
         sc.setJobDescription(prev)
+
+
+def _observed_pass(df: DataFrame, *aggs: str) -> dict:
+    """The values of the SQL aggregates `aggs` over `df`, observed on a
+    noop write of `df`: one Spark job with no exchange (a global
+    aggregate's collect runs a map job and a final job under AQE). Select
+    only the columns the aggregates read: the noop sink consumes every
+    column of `df`."""
+    observed = Observation()
+    (
+        df.observe(observed, *(F.expr(a) for a in aggs))
+        .write.format("noop").mode("overwrite").save()
+    )
+    return observed.get
 
 
 N_HOST_SALT = 16
@@ -239,15 +294,19 @@ def enqueue(
     run_id: str | None = None,
     force: bool = False,
 ) -> RunManifest:
-    """submit/reserve analog: size the run and commit a pending manifest."""
+    """submit/reserve analog: size the run and commit a pending manifest.
+    The sizing sum is observed on one noop pass over `pages`' html: one
+    Spark job with no exchange, where an aggregate's collect runs a map job
+    and a final job under AQE."""
     from engine.catalog import configured_sink_table
 
     run_id = run_id or new_run_id()
     with _job_description(spark, "enqueue", run_id):
-        sized = pages.agg(
-            F.sum(F.coalesce(F.length("html"), F.lit(0))).alias("b"),
-        ).collect()[0]
-        total_bytes = int(sized["b"] or 0)
+        total_bytes = int(
+            _observed_pass(
+                pages.select("html"), "sum(coalesce(length(html), 0)) AS b"
+            )["b"] or 0
+        )
         n = plan_partitions(total_bytes, target_partition_bytes, min_partitions)
         sink_table = configured_sink_table(spark)
         if sink_table and not force:
@@ -481,43 +540,47 @@ def _run_wave(
     batch: DataFrame,
 ) -> int:
     """Extract one wave's pages, write them, and publish the wave's lineage
-    file; returns the docs that lineage counts. One Spark job: the lineage
-    values are observed on the write itself, and the file is written on
+    file; returns the docs that lineage counts. Up to
+    `_OBSERVED_LINEAGE_MAX` partitions the wave is one Spark job: its
+    lineage is observed on the write itself, and the file is written on
     the driver. The caller commits the wave."""
     from engine.catalog import write_wave_to_table
 
-    t0 = time.monotonic()
-    # the observation sits in the write's only stage with no exchange above
-    # it, so it sees exactly the rows the committed tasks wrote (lineage
-    # counts what was COMMITTED, not what was attempted)
-    observed = Observation()
-    extracted = (
-        batch.select("url", "html", "partition_id")
-        .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
-        .observe(observed, _wave_lineage_metric(wave))
-    )
-    if sink_table:
-        # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
-        # replaces exactly this wave's partitions under the catalog's own
-        # commit protocol
-        write_wave_to_table(spark, extracted, sink_table)
-    else:
-        (
-            extracted.write.mode("overwrite")
-            # dynamic overwrite replaces ONLY the partitions this wave
-            # produced: orphan rows from a crash between write and commit
-            # are rewritten, never duplicated, on resume
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(manifest.extracted_path)
+    def write(extracted):
+        if sink_table:
+            # Iceberg-shaped path (engine/catalog.py): DataFrameWriterV2
+            # replaces exactly this wave's partitions under the catalog's
+            # own commit protocol
+            write_wave_to_table(spark, extracted, sink_table)
+        else:
+            (
+                extracted.write.mode("overwrite")
+                # dynamic overwrite replaces ONLY the partitions this wave
+                # produced: orphan rows from a crash between write and
+                # commit are rewritten, never duplicated, on resume
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("partition_id")
+                .parquet(manifest.extracted_path)
+            )
+
+    def written():
+        table = (
+            spark.table(sink_table) if sink_table
+            else spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
+                manifest.extracted_path
+            )
         )
-    wall_ms = int((time.monotonic() - t0) * 1000)
+        return table.where(F.col("partition_id").isin(wave))
+
+    _, wall_ms, records = _write_with_lineage(
+        batch, "extract", wave, write, written
+    )
     # wave file keyed by its first partition id: unique across waves
     # (pending sets are disjoint), stable across resume, and the publish
     # replaces an orphan a killed wave left
     return _publish_lineage(
         manifest, manifest.wave_lineage_name(wave[0]), "extract", wall_ms,
-        observed.get["per_partition"],
+        records,
     )
 
 
@@ -639,11 +702,14 @@ def retry_failed(
 
     One pass: the failed-url window and semi join run once, inside the
     overlay write, and `retried` is the row count observed on that write.
-    The failed rows are clustered by `partition_id` before the extract
-    UDF: the shuffle carries only failed rows, AQE coalesces it (one
-    Python task for a small failure set), and no partition id is split
-    across tasks, so an attempt writes one overlay file per partition it
-    touches.
+    The attempt's lineage is observed on the same write when the run has
+    at most `_OBSERVED_LINEAGE_MAX` committed partitions (the set its rows
+    can fall in); above that its overlay rows are read back and
+    aggregated. The failed rows are clustered by `partition_id` before
+    the extract UDF: the shuffle carries only failed rows, AQE coalesces
+    it (one Python task for a small failure set), and no partition id is
+    split across tasks, so an attempt writes one overlay file per
+    partition it touches.
     An attempt that re-extracts nothing leaves no trace: its claim is
     removed (so the attempt number stays free) and no new overlay
     directory is left.
@@ -671,18 +737,16 @@ def retry_failed(
         lineage_name = manifest.retry_lineage_name(attempt)
         retry_path = manifest.retry_path
         had_overlay = os.path.exists(retry_path)
-        rows = Observation()
-        t0 = time.monotonic()
-        (
-            todo.select("url", "html", "partition_id")
-            .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
-            .withColumn("attempt", F.lit(attempt))
-            .observe(rows, F.count(F.lit(1)).alias("n"))
-            .write.mode("append")
-            .partitionBy("partition_id")
-            .parquet(retry_path)
+        # every failed url lies in a committed partition: the current view
+        # reads no other
+        retried, wall_ms, records = _write_with_lineage(
+            todo, "retry", manifest.committed_partitions(),
+            lambda df: df.withColumn("attempt", F.lit(attempt))
+            .write.mode("append").partitionBy("partition_id")
+            .parquet(retry_path),
+            lambda: spark.read.schema(EXTRACTED_RETRY_SCHEMA)
+            .parquet(retry_path).where(F.col("attempt") == attempt),
         )
-        retried = rows.get["n"]
         if retried == 0:
             os.rmdir(manifest.lineage_path(lineage_name))
             if not had_overlay:
@@ -692,14 +756,7 @@ def retry_failed(
         # every stage writes lineage rows (BASELINE.json north_star) — the
         # retry wave is auditable like any extract wave; lineage covers
         # THIS attempt only, not the accumulated retry table
-        wall_ms = int((time.monotonic() - t0) * 1000)
-        out = spark.read.schema(EXTRACTED_RETRY_SCHEMA).parquet(retry_path)
-        records = _lineage_aggregate(
-            out.where(F.col("attempt") == attempt), "retry"
-        ).collect()
-        _publish_lineage(
-            manifest, lineage_name, "retry", wall_ms, [r.l for r in records]
-        )
+        _publish_lineage(manifest, lineage_name, "retry", wall_ms, records)
     return {"retried": retried, "attempt": attempt}
 
 
@@ -1124,29 +1181,32 @@ def run_stats(spark: SparkSession, manifest: RunManifest) -> dict:
     """Data-quality profile of a run's extracted table — the ANALYZE-style
     gate an operator runs before exporting: per-status doc counts, text
     size aggregates, per-column null counts, distinct url count, quality
-    quantiles. ONE scan computes everything (multi-aggregate, map-side
-    partials); approx_count_distinct and approx_percentile keep the
-    aggregation state constant-size at any corpus scale."""
+    quantiles. ONE scan computes everything: the aggregates are observed on
+    a noop pass over the table (one Spark job, no exchange);
+    approx_count_distinct and approx_percentile keep the aggregation state
+    constant-size at any corpus scale."""
     with _job_description(spark, "stats", manifest.run_id):
-        row = read_extracted(spark, manifest).agg(
-            F.count("*").alias("rows"),
-            F.approx_count_distinct("url").alias("approx_urls"),
-            F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
-            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("failed"),
-            F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
+        out = _observed_pass(
+            read_extracted(spark, manifest).select(
+                "url", "status", "text", "n_chars", "quality",
+                "extractor_version",
+            ),
+            "count(1) AS rows",
+            "approx_count_distinct(url) AS approx_urls",
+            "sum(if(status = 'ok', 1, 0)) AS ok",
+            "sum(if(status != 'ok', 1, 0)) AS failed",
+            "sum(cast(text IS NULL AS bigint)) AS null_text",
             # octet_length = true UTF-8 bytes (length() counts characters —
             # an under-count on any accented corpus, review finding)
-            F.sum(F.coalesce(F.octet_length("text"), F.lit(0))).alias("text_bytes"),
-            F.min("n_chars").alias("min_chars"),
-            F.max("n_chars").alias("max_chars"),
-            F.expr(
-                "approx_percentile(quality, array(0.5, 0.9), 1000)"
-            ).alias("quality_p50_p90"),
+            "sum(coalesce(octet_length(text), 0)) AS text_bytes",
+            "min(n_chars) AS min_chars",
+            "max(n_chars) AS max_chars",
+            "approx_percentile(quality, array(0.5, 0.9), 1000)"
+            " AS quality_p50_p90",
             # size(collect_set) is countDistinct's value without its Expand
             # stage and extra shuffle (a handful of versions per run)
-            F.size(F.collect_set("extractor_version")).alias("n_versions"),
-        ).collect()[0]
-    out = row.asDict()
+            "size(collect_set(extractor_version)) AS n_versions",
+        )
     q = out.pop("quality_p50_p90") or [None, None]
     out["quality_p50"], out["quality_p90"] = (
         round(q[0], 4) if q[0] is not None else None,

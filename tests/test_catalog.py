@@ -210,6 +210,29 @@ def test_increment_refuses_shared_table_and_unions_across_tables(
         spark.sql(f"DROP TABLE IF EXISTS {inc_table}")
 
 
+def test_read_back_lineage_through_catalog_sink(spark, sink_table, tmp_path):
+    """A wave above `_OBSERVED_LINEAGE_MAX` reads its lineage back from
+    the catalog table it wrote: every lineage row equals the aggregate
+    recomputed from the table's rows."""
+    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX
+    from tests.test_resume import _expected_lineage
+
+    pages_path = str(tmp_path / "pages.parquet")
+    generate_pages(spark, 200, partitions=4).write.parquet(pages_path)
+    pages = spark.read.parquet(pages_path)
+    n = _OBSERVED_LINEAGE_MAX + 4
+    man = enqueue(spark, pages, str(tmp_path / "runs"), min_partitions=n,
+                  run_id="cat-read-back")
+    r = run_extract_job(spark, pages, man, wave_size=n)
+    assert (r["waves_run"], r["complete"]) == (1, True)
+    got = {
+        x["partition_id"]: (x["doc_count"], x["byte_count"], x["checksum"])
+        for x in read_lineage(spark, man).collect()
+    }
+    assert got == _expected_lineage(spark.table(sink_table), "text")
+    assert len(got) == n
+
+
 def test_read_extracted_raises_when_catalog_table_lost(spark, sink_table, tmp_path):
     """The parquet path's data-loss guard must hold for the table path:
     committed lineage + vanished table => loud error, not an empty read."""

@@ -9,6 +9,7 @@ from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from engine.jobs.extract_job import (
+    MAX_PARTITIONS,
     enqueue,
     export_run,
     with_host_salted_partition_id,
@@ -37,7 +38,7 @@ def pages(spark, tmp_path_factory):
 def test_plan_partitions_bounds():
     assert plan_partitions(0) == 8  # min bound
     assert plan_partitions(640 << 20, target_partition_bytes=64 << 20) == 10
-    assert plan_partitions(1 << 50, max_partitions=100) == 100
+    assert plan_partitions(1 << 50) == MAX_PARTITIONS  # max bound
 
 
 def test_kill_and_resume_no_reprocessing(spark, pages, tmp_path):
@@ -142,16 +143,17 @@ def _expected_lineage(rows_df, hashed_col):
     }
 
 
-@pytest.fixture(scope="module")
-def interrupted_run(spark, pages, tmp_path_factory):
+def _interrupted(spark, pages, root, n_partitions, wave_size):
     """A run with a committed wave, a wave killed between its lineage
     publish and its commit, the resume, and one retry — with every lineage
-    aggregate frame the job builds recorded on the way (only the retry
-    builds one: a wave observes its lineage on its write)."""
+    aggregate frame the job builds recorded on the way (a write whose
+    partition set is above `_OBSERVED_LINEAGE_MAX` builds one; below it a
+    write observes its lineage and builds none)."""
     import engine.jobs.extract_job as job
 
-    root = str(tmp_path_factory.mktemp("interrupted") / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="lin-values")
+    man = enqueue(spark, pages, root, min_partitions=n_partitions,
+                  run_id="lin-values")
+    assert man.state()["n_partitions"] == n_partitions
     frames = []
     real_frame = job._lineage_aggregate
 
@@ -161,14 +163,14 @@ def interrupted_run(spark, pages, tmp_path_factory):
 
     job._lineage_aggregate = spy
     try:
-        run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
+        run_extract_job(spark, pages, man, wave_size=wave_size, max_waves=1)
         real_commit = man.commit_partitions
         man.commit_partitions = lambda wave: (_ for _ in ()).throw(_Kill())
         with pytest.raises(_Kill):
-            run_extract_job(spark, pages, man, wave_size=4)
+            run_extract_job(spark, pages, man, wave_size=wave_size)
         man.commit_partitions = real_commit
         resumed_parts = man.pending_partitions()
-        resumed = run_extract_job(spark, pages, man, wave_size=4)
+        resumed = run_extract_job(spark, pages, man, wave_size=wave_size)
         retried = retry_failed(spark, pages, man)
     finally:
         job._lineage_aggregate = real_frame
@@ -178,16 +180,38 @@ def interrupted_run(spark, pages, tmp_path_factory):
     }
 
 
-def test_lineage_values_match_committed_rows(spark, interrupted_run):
+@pytest.fixture(scope="module")
+def interrupted_run(spark, pages, tmp_path_factory):
+    """`_interrupted` above the cap: two waves of cap + 1 partitions, and
+    a retry over 2 * (cap + 1) committed partitions, all read back."""
+    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX as cap
+
+    root = str(tmp_path_factory.mktemp("interrupted") / "runs")
+    return _interrupted(spark, pages, root, 2 * (cap + 1), cap + 1)
+
+
+@pytest.fixture(scope="module")
+def observed_run(spark, pages, tmp_path_factory):
+    """`_interrupted` below the cap: two waves of 4 partitions, and a
+    retry over 8 committed partitions, all observed on their writes."""
+    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX as cap
+
+    assert cap >= 8
+    root = str(tmp_path_factory.mktemp("observed") / "runs")
+    return _interrupted(spark, pages, root, 8, 4)
+
+
+def _assert_lineage_matches_committed_rows(spark, run):
     """Every lineage row's doc_count / byte_count / checksum equals the
     aggregate recomputed from the committed rows (read_extracted for the
-    extract waves, the retry attempt's own rows for the retry), and
-    docs_processed counts exactly the resumed wave."""
+    extract waves, the retry attempt's own rows for the retry), `retried`
+    counts the attempt's overlay rows, and docs_processed counts exactly
+    the resumed wave."""
     from engine.extract.core import EXTRACTOR_VERSION
 
-    man, retried = interrupted_run["manifest"], interrupted_run["retried"]
-    assert interrupted_run["resumed"]["complete"]
-    assert interrupted_run["resumed"]["waves_run"] == 1
+    man, retried = run["manifest"], run["retried"]
+    assert run["resumed"]["complete"]
+    assert run["resumed"]["waves_run"] == 1
     assert retried["retried"] > 0
     want = {
         ("extract", p): v
@@ -196,6 +220,7 @@ def test_lineage_values_match_committed_rows(spark, interrupted_run):
     attempt_rows = spark.read.parquet(man.retry_path).where(
         F.col("attempt") == retried["attempt"]
     )
+    assert attempt_rows.count() == retried["retried"]
     want.update(
         (("retry", p), v)
         for p, v in _expected_lineage(attempt_rows, "status").items()
@@ -210,24 +235,40 @@ def test_lineage_values_match_committed_rows(spark, interrupted_run):
     # one row per (stage, partition): the resume overwrote the killed
     # wave's orphan lineage file instead of adding to it
     assert len(lin) == len(got)
-    assert sum(stage == "extract" for stage, _ in got) == 8
+    assert sum(stage == "extract" for stage, _ in got) == (
+        man.state()["n_partitions"]
+    )
     assert {(r["run_id"], r["extractor_version"]) for r in lin} == {
         ("lin-values", EXTRACTOR_VERSION)
     }
     assert all(r["wall_ms"] >= 0 for r in lin)
-    assert interrupted_run["resumed"]["docs_processed"] == sum(
-        want[("extract", p)][0] for p in interrupted_run["resumed_parts"]
+    assert run["resumed"]["docs_processed"] == sum(
+        want[("extract", p)][0] for p in run["resumed_parts"]
     )
 
 
+def test_lineage_values_match_committed_rows(spark, interrupted_run):
+    """Above the cap (waves and retry read their lineage back), lineage
+    equals what the committed rows give."""
+    _assert_lineage_matches_committed_rows(spark, interrupted_run)
+
+
+def test_observed_lineage_values_match_committed_rows(spark, observed_run):
+    """At or below the cap (waves and retry observe their lineage on their
+    writes and build no read-back frame), lineage equals what the
+    committed rows give."""
+    assert observed_run["frames"] == []
+    _assert_lineage_matches_committed_rows(spark, observed_run)
+
+
 def test_lineage_frames_are_python_free(interrupted_run):
-    """Lineage is job-path bookkeeping: the aggregate the retry collects
-    must plan as a pure JVM aggregate (no collected rows re-parallelized from Python,
-    no Python UDF or Arrow map). The waves build no frame: they observe
-    their lineage on the extract write (the job caps pin that a wave runs
-    no lineage job)."""
+    """Lineage is job-path bookkeeping: the aggregate a write above the cap
+    collects must plan as a pure JVM aggregate (no collected rows
+    re-parallelized from Python, no Python UDF or Arrow map). One frame
+    per wave write (the first wave, the killed wave, its resume) and one
+    for the retry."""
     frames = interrupted_run["frames"]
-    assert len(frames) == 1  # the retry's
+    assert len(frames) == 4
     for df in frames:
         plan = df._jdf.queryExecution().executedPlan().toString()
         for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
@@ -242,10 +283,14 @@ def _lineage_by_partition(lin):
     }
 
 
-def test_observed_lineage_of_a_64_partition_wave(spark, pages, tmp_path):
-    """One wave holding 64 partitions, 8x the CLI's default wave: the
-    lineage each partition's observed metric yields equals the aggregate
-    recomputed from the committed rows."""
+def test_read_back_lineage_of_a_64_partition_wave(spark, pages, tmp_path):
+    """One wave holding 64 partitions, 8x the CLI's default wave and above
+    `_OBSERVED_LINEAGE_MAX`, so its lineage is read back from the written
+    partitions: it equals the aggregate recomputed from the committed
+    rows."""
+    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX
+
+    assert 64 > _OBSERVED_LINEAGE_MAX
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, min_partitions=64, run_id="wide-wave")
     r = run_extract_job(spark, pages, man, wave_size=64)
@@ -651,6 +696,37 @@ def _ok_and_junk_pages(spark, n_ok, n_junk):
         "url string, warc_ts timestamp, html binary, text string, lang string",
     )
     return _ok_pages(spark, n_ok).unionByName(junk)
+
+
+def test_run_stats_equals_an_independent_aggregate(spark, tmp_path):
+    """On a run with failed rows, every `run_stats` field equals the same
+    aggregate computed by `DataFrame.agg` over `read_extracted`, the
+    approximate ones (distinct urls, quality quantiles) included."""
+    from engine.jobs.extract_job import run_stats
+
+    pages = _ok_and_junk_pages(spark, 40, 6)
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, min_partitions=4, run_id="stats")
+    run_extract_job(spark, pages, man, wave_size=4)
+    row = read_extracted(spark, man).agg(
+        F.count("*").alias("rows"),
+        F.approx_count_distinct("url").alias("approx_urls"),
+        F.sum(F.when(F.col("status") == "ok", 1).otherwise(0)).alias("ok"),
+        F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("failed"),
+        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
+        F.sum(F.coalesce(F.octet_length("text"), F.lit(0))).alias("text_bytes"),
+        F.min("n_chars").alias("min_chars"),
+        F.max("n_chars").alias("max_chars"),
+        F.percentile_approx("quality", [0.5, 0.9], 1000).alias("q"),
+        F.countDistinct("extractor_version").alias("n_versions"),
+    ).collect()[0].asDict()
+    q = row.pop("q")
+    want = dict(
+        row, quality_p50=round(q[0], 4), quality_p90=round(q[1], 4),
+        run_id="stats",
+    )
+    assert want["failed"] == 6 and want["rows"] == 46
+    assert run_stats(spark, man) == want
 
 
 class _KilledAfterWrite(Observation):
@@ -1448,16 +1524,19 @@ def test_only_the_manifest_names_run_paths():
 
 # Spark jobs per verb of one warm lifecycle, counted through job groups and
 # pinned as caps (equal to the measured counts) so no change adds a Spark
-# round-trip to the job path unnoticed. A Python-touching job costs a fixed
-# ~0.25 s before its UDF runs (CLAUDE.md job-path rule). run/resume: the
-# wave write alone (its lineage is observed on that write and published
-# from the driver); stage: the clustering shuffle's map stage (its own job
-# under AQE) and the write; retry: the overlay write (failed-url window +
-# semi join), the map stage of the shuffle that clusters the failed rows by
-# partition id before the UDF (a JVM-only job under AQE, as staging's is),
-# and its collected lineage aggregate; stats: one aggregate.
+# round-trip to the job path unnoticed. A Python-touching job costs ~50 ms
+# per Python task before its UDF runs (CLAUDE.md job-path rule).
+# enqueue and stats: one noop pass each, its aggregates observed on it (a
+# collected global aggregate is a map job plus a final job under AQE);
+# run/resume: the wave write alone (its lineage is observed on that write
+# and published from the driver); stage: the clustering shuffle's map stage
+# (its own job under AQE) and the write; retry: the map stage of the
+# failed-url window's shuffle, the broadcast of the failed urls, the map
+# stage of the shuffle that clusters the failed rows by partition id before
+# the UDF, and the overlay write (its lineage observed on it: the run's 8
+# committed partitions are within `_OBSERVED_LINEAGE_MAX`).
 _JOBS_PER_VERB_CAP = {
-    "enqueue": 2, "stage": 2, "run": 1, "resume": 1, "retry": 6, "stats": 2,
+    "enqueue": 1, "stage": 2, "run": 1, "resume": 1, "retry": 4, "stats": 1,
 }
 
 
