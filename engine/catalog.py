@@ -56,9 +56,11 @@ to somebody's table by a session-wide conf, and a run refuses to WRITE
 anywhere but where its manifest says its data lives (strict check in
 run_extract_job). Because every run partitions by pmod(hash(url), n),
 two runs must never share one table — enqueue_increment refuses a sink
-table any base run records (the increment gets its own table and
-read_extracted_across unions the runs from their manifests). Retry
-overlays stay parquet side-cars under the manifest dir. Out of scope ON PURPOSE: the manifest's
+table any base run records (the increment gets its own table, and
+read_extracted_across — the reader export and dedup-increment share —
+unions the runs' current views, each routed from its manifest). Retry
+overlays stay parquet side-cars under the manifest dir. Out of scope ON
+PURPOSE: the manifest's
 compact/vacuum TABLE-maintenance duties. They exist precisely because
 parquet-on-a-filesystem has no transaction log; a configured catalog owns
 its own maintenance (Iceberg rewrite_data_files / expire_snapshots), so

@@ -51,12 +51,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+MAX_ITER = 25  # rounds before connected_components gives up
+
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 25,
+    edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> DataFrame:
     """Cluster assignment for every node appearing in `edges`.
 
@@ -66,9 +65,9 @@ def connected_components(
     minimum node id of the connected component — deterministic, so two
     runs at any parallelism agree bit-for-bit.
 
-    Raises RuntimeError if the fixpoint is not reached in `max_iter`
+    Raises RuntimeError if the fixpoint is not reached in MAX_ITER
     rounds; with pointer jumping that needs a component diameter over
-    ~2^(max_iter/2), which at 25 rounds is beyond any physical corpus.
+    ~2^(MAX_ITER/2), which at 25 rounds is beyond any physical corpus.
     """
     e = edges.select(
         F.col(src).cast("long").alias("src"),
@@ -92,7 +91,7 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # 1. propagate: min label over {self} ∪ in-neighbors
         nbr = sym.join(labels, sym["src"] == labels["id"]).select(
             F.col("dst").alias("id"), "label"
@@ -120,5 +119,5 @@ def connected_components(
             return labels
         prev_sum = cur_sum
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {MAX_ITER} rounds"
     )

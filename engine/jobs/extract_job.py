@@ -7,7 +7,7 @@ jobs with a driver-side manifest table instead of a scheduler daemon").
 
 Partitioning (the Q3 optimize_job analog, emop/lib/emop_submit.py [U]):
   n_partitions = clamp(ceil(total_html_bytes / target_partition_bytes),
-                       min_partitions, MAX_PARTITIONS)
+                       MIN_PARTITIONS, MAX_PARTITIONS)
   partition_id = pmod(hash(url), n_partitions)
 
 hash(url) is Spark's Murmur3 — content-addressed, so a document's partition
@@ -79,6 +79,7 @@ from engine.schema import (
 )
 
 DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
+MIN_PARTITIONS = 8  # plan_partitions' lower clamp
 MAX_PARTITIONS = 1 << 20  # plan_partitions' upper clamp
 
 _MASK40 = (1 << 40) - 1
@@ -215,11 +216,10 @@ def _publish_lineage(
 def plan_partitions(
     total_bytes: int,
     target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
-    min_partitions: int = 8,
 ) -> int:
     """Byte-based partition sizing (optimize_job analog)."""
     n = math.ceil(max(total_bytes, 1) / target_partition_bytes)
-    return max(min_partitions, min(n, MAX_PARTITIONS))
+    return max(MIN_PARTITIONS, min(n, MAX_PARTITIONS))
 
 
 def with_partition_id(pages: DataFrame, n_partitions: int) -> DataFrame:
@@ -263,22 +263,22 @@ N_HOST_SALT = 16
 
 
 def with_host_salted_partition_id(
-    pages: DataFrame, n_partitions: int, n_salt: int = N_HOST_SALT
+    pages: DataFrame, n_partitions: int
 ) -> DataFrame:
     """Host-grouped layout WITH explicit hot-host salting (BASELINE.json:6).
 
     Use when per-host locality matters (politeness/rate limits, per-site
     models): the partition key is hash(host, salt) where
-    salt = pmod(hash(url), n_salt) — a hot host (Zipf head) spreads across
-    exactly n_salt partitions instead of melting one reducer, while a cold
-    host still lands in at most n_salt partitions (usually fewer rows than
-    one batch anyway). The default extract layout (with_partition_id) hashes
-    the full url, which spreads hosts maximally; this variant is the
-    explicit middle ground.
+    salt = pmod(hash(url), N_HOST_SALT) — a hot host (Zipf head) spreads
+    across exactly N_HOST_SALT partitions instead of melting one reducer,
+    while a cold host still lands in at most N_HOST_SALT partitions
+    (usually fewer rows than one batch anyway). The default extract layout
+    (with_partition_id) hashes the full url, which spreads hosts
+    maximally; this variant is the explicit middle ground.
     tests/test_resume.py::test_host_salting_spreads_hot_hosts pins the
     spread behaviour."""
     host = F.parse_url("url", F.lit("HOST"))
-    salt = F.pmod(F.hash("url"), F.lit(n_salt))
+    salt = F.pmod(F.hash("url"), F.lit(N_HOST_SALT))
     return pages.withColumn(
         "partition_id",
         F.pmod(F.hash(host, salt), F.lit(n_partitions)).cast("int"),
@@ -290,27 +290,29 @@ def enqueue(
     pages: DataFrame,
     runs_root: str,
     target_partition_bytes: int = DEFAULT_TARGET_PARTITION_BYTES,
-    min_partitions: int = 8,
     run_id: str | None = None,
     force: bool = False,
 ) -> RunManifest:
     """submit/reserve analog: size the run and commit a pending manifest.
-    The sizing sum is observed on one noop pass over `pages`' html: one
-    Spark job with no exchange, where an aggregate's collect runs a map job
-    and a final job under AQE."""
+    A run id that already has a manifest, or a sink table another run
+    claims, is refused before the sizing pass reads any html. The sizing
+    sum is observed on one noop pass over `pages`' html: one Spark job
+    with no exchange, where an aggregate's collect runs a map job and a
+    final job under AQE."""
     from engine.catalog import configured_sink_table
 
     run_id = run_id or new_run_id()
+    RunManifest(runs_root, run_id).refuse_existing(force)
     with _job_description(spark, "enqueue", run_id):
+        sink_table = configured_sink_table(spark)
+        if sink_table and not force:
+            _guard_sink_table_unclaimed(spark, sink_table, runs_root)
         total_bytes = int(
             _observed_pass(
                 pages.select("html"), "sum(coalesce(length(html), 0)) AS b"
             )["b"] or 0
         )
-        n = plan_partitions(total_bytes, target_partition_bytes, min_partitions)
-        sink_table = configured_sink_table(spark)
-        if sink_table and not force:
-            _guard_sink_table_unclaimed(spark, sink_table, runs_root, run_id)
+        n = plan_partitions(total_bytes, target_partition_bytes)
     return RunManifest.create(
         runs_root, n, total_bytes, run_id=run_id, force=force,
         sink_table=sink_table,
@@ -318,7 +320,7 @@ def enqueue(
 
 
 def _guard_sink_table_unclaimed(
-    spark: SparkSession, sink_table: str, runs_root: str, run_id: str | None
+    spark: SparkSession, sink_table: str, runs_root: str
 ) -> None:
     """enqueue-time sink-table collision check (advice, round 5): every
     catalog run partitions its writes by pmod(hash(url), n), so two runs
@@ -331,14 +333,10 @@ def _guard_sink_table_unclaimed(
     with no claiming manifest visible (a foreign runs_root) — force=True
     is the explicit override, mirroring the per-run-directory isolation
     the parquet path gets by construction. Each refusal names its real
-    cause: a run_id that already has a manifest is left to create()'s
-    refusal, an unreadable manifest under runs_root is named as a
-    possible claimant of a table holding rows, and a table that cannot be
-    read is reported as such, never as a raw Spark error."""
-    if run_id and RunManifest(runs_root, run_id).path.exists():
-        # re-enqueueing an existing run (readable manifest or not) is
-        # create()'s domain: it refuses with its own, accurate message
-        return
+    cause: an unreadable manifest under runs_root is named as a possible
+    claimant of a table holding rows, and a table that cannot be read is
+    reported as such, never as a raw Spark error. enqueue refuses a run id
+    that already has a manifest before it calls this."""
     unreadable = []
     for rid in RunManifest.run_ids(runs_root):
         try:
@@ -949,12 +947,16 @@ def enqueue_increment(
     return manifest, spark.read.parquet(input_path)
 
 
-def _union_current(
+def read_extracted_across(
     spark: SparkSession, manifests: list[RunManifest]
 ) -> DataFrame:
-    """Union of each run's CURRENT view — the one definition shared by
-    read_extracted_across and multi-run export, so cross-run semantics
-    cannot drift between the read path and the publish path."""
+    """One logical extracted table across a base run and its increments:
+    union of each run's CURRENT view (latest retry attempt per url). The
+    one definition the read path and multi-run export share, so cross-run
+    semantics cannot drift between them. Url-disjointness across runs
+    holds by construction — enqueue_increment anti-joins every committed
+    base url — so this is a plain union (no extra url-shuffle per read);
+    the invariant is pinned in tests/test_resume.py."""
     out = None
     for m in manifests:
         cur = read_current_extracted(spark, m)
@@ -962,20 +964,6 @@ def _union_current(
     if out is None:
         raise ValueError("manifests must be non-empty")
     return out
-
-
-def read_extracted_across(
-    spark: SparkSession, runs_root: str, run_ids: list[str]
-) -> DataFrame:
-    """One logical extracted table across a base run and its increments:
-    union of each run's CURRENT view (latest retry attempt per url).
-    Url-disjointness across runs holds by construction — enqueue_increment
-    anti-joins every committed base url — so this is a plain union (no
-    extra url-shuffle per read); the invariant is pinned in
-    tests/test_resume.py."""
-    return _union_current(
-        spark, [RunManifest.load(runs_root, rid) for rid in run_ids]
-    )
 
 
 def dedup_increment_docs(
@@ -1032,7 +1020,7 @@ def dedup_increment_docs(
         .where(F.col("status") == "ok")
         .select("url", "text")
     )
-    base = _union_current(
+    base = read_extracted_across(
         spark, [RunManifest.load(runs_root, rid) for rid in base_run_ids]
     ).where(F.col("status") == "ok").select("url", "text")
 
@@ -1131,7 +1119,7 @@ def export_run(
                 f"run {m.run_id} has "
                 f"{len(m.pending_partitions())} pending partitions"
             )
-    cur = _union_current(spark, manifests)
+    cur = read_extracted_across(spark, manifests)
     run_label = ",".join(m.run_id for m in manifests)
     writer = cur.write.mode("overwrite")
     if fmt == "parquet":

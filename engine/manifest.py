@@ -103,13 +103,8 @@ class RunManifest:
         the reset is consistent."""
         run_id = run_id or new_run_id()
         m = cls(root, run_id)
+        m.refuse_existing(force)
         if m.path.exists():
-            if not force:
-                raise FileExistsError(
-                    f"run {run_id} already has a manifest under {root}; "
-                    "load it to resume, or pass force=True to reset "
-                    "(clears extracted/, staged/ and lineage/)"
-                )
             for path in (
                 m.base_path, m.retry_path, m.staged_path, m.staged_tmp_path,
                 m.lineage_dir, *m.generation_paths(),
@@ -134,6 +129,16 @@ class RunManifest:
             state["sink_table"] = sink_table
         m._commit(state)
         return m
+
+    def refuse_existing(self, force: bool) -> None:
+        """Raise FileExistsError if this run already has a manifest,
+        unless `force` asks for the reset."""
+        if self.path.exists() and not force:
+            raise FileExistsError(
+                f"run {self.run_id} already has a manifest under "
+                f"{self.root}; load it to resume, or pass force=True to "
+                "reset (clears extracted/, staged/ and lineage/)"
+            )
 
     @classmethod
     def load(cls, root: str, run_id: str) -> "RunManifest":

@@ -32,10 +32,11 @@ IMAGE_FEATURES_DDL = (
 _MAGIC = b"PPMX"  # in-repo synthetic format: magic|w|h|c|pixels(u8)
 
 
-def encode_fake_image(media_id: int, width: int, height: int, channels: int = 3) -> bytes:
-    """Deterministic synthetic image payload (pixel = f(media_id, x, y, c))."""
-    head = _MAGIC + struct.pack("<III", width, height, channels)
-    px = bytearray(width * height * channels)
+def encode_fake_image(media_id: int, width: int, height: int) -> bytes:
+    """Deterministic synthetic RGB image payload (pixel = f(media_id, x,
+    y, c))."""
+    head = _MAGIC + struct.pack("<III", width, height, 3)
+    px = bytearray(width * height * 3)
     for i in range(len(px)):
         px[i] = (media_id * 31 + i * 7) & 0xFF
     return head + bytes(px)
@@ -194,14 +195,13 @@ AUDIO_FEATURES_DDL = (
 _AUDIO_MAGIC = b"PCMX"  # magic|sample_rate|channels|n_samples|samples(s16le)
 
 
-def encode_fake_audio(
-    media_id: int, n_samples: int, sample_rate: int = 16000, channels: int = 1
-) -> bytes:
-    """Deterministic synthetic audio payload: integer-arithmetic sample
-    values (no float trig — bit-stable across platforms)."""
-    head = _AUDIO_MAGIC + struct.pack("<III", sample_rate, channels, n_samples)
-    body = bytearray(n_samples * channels * 2)
-    for t in range(n_samples * channels):
+def encode_fake_audio(media_id: int, n_samples: int) -> bytes:
+    """Deterministic synthetic 16 kHz mono audio payload:
+    integer-arithmetic sample values (no float trig — bit-stable across
+    platforms)."""
+    head = _AUDIO_MAGIC + struct.pack("<III", 16000, 1, n_samples)
+    body = bytearray(n_samples * 2)
+    for t in range(n_samples):
         v = ((media_id * 131 + t * 37) % 65536) - 32768
         struct.pack_into("<h", body, t * 2, v)
     return head + bytes(body)

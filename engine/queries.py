@@ -2473,14 +2473,10 @@ def _sql_token_correction_stats():
 
 
 MAX_SHINGLE_DF = 128
+MIN_JACCARD = 0.2  # q_ngram_jaccard_pairs' pair threshold
 
 
-def q_ngram_jaccard_pairs(
-    spark,
-    sf_dir,
-    max_shingle_df: int = MAX_SHINGLE_DF,
-    min_jaccard: float = 0.2,
-):
+def q_ngram_jaccard_pairs(spark, sf_dir):
     """N-gram Jaccard near-dup candidate pairs via explode + self-join on
     shared 3-gram shingles, exact Jaccard over distinct-shingle counts.
     Scale path: this is the verify stage AFTER LSH bucketing (below) prunes
@@ -2488,7 +2484,7 @@ def q_ngram_jaccard_pairs(
     shingle buckets, not a cross join.
 
     Hot-shingle guard: shingles whose document frequency exceeds
-    `max_shingle_df` are dropped BEFORE the self-join (and symmetrically
+    MAX_SHINGLE_DF are dropped BEFORE the self-join (and symmetrically
     from the per-doc counts — 'jaccard over informative shingles'). A
     stop-shingle like 'the of the' appears in ~every web document: at
     10^12 docs it alone would send 10^12 rows to one reducer and its
@@ -2513,7 +2509,7 @@ def q_ngram_jaccard_pairs(
         sh.withColumn(
             "df", F.count("*").over(W.partitionBy("shingle"))
         )
-        .where(F.col("df") <= max_shingle_df)
+        .where(F.col("df") <= MAX_SHINGLE_DF)
         .drop("df")
     )
     counts = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
@@ -2539,7 +2535,7 @@ def q_ngram_jaccard_pairs(
                 4,
             ).alias("jaccard"),
         )
-        .where(F.col("jaccard") >= min_jaccard)
+        .where(F.col("jaccard") >= MIN_JACCARD)
     )
 
 
@@ -2604,7 +2600,7 @@ def _shingle_expr(toks):
     return _ngram_expr(toks, 3, distinct=True)
 
 
-def minhash_signatures_for(df, id_col="doc_id", text_col="text"):
+def minhash_signatures_for(df, id_col="doc_id"):
     """DataFrame-parameterized MinHash signature (array layout): per
     permutation k, min over distinct 3-gram shingles of
     xxhash64(shingle, k) — higher-order functions only, no Python, no
@@ -2613,7 +2609,7 @@ def minhash_signatures_for(df, id_col="doc_id", text_col="text"):
     one definition, so a base corpus's published band buckets and a later
     increment's probe can never desynchronize."""
     d = df.select(
-        F.col(id_col), F.split(F.col(text_col), " ").alias("toks")
+        F.col(id_col), F.split(F.col("text"), " ").alias("toks")
     )
     shingles = _shingle_expr(F.col("toks"))
     sig = F.transform(
@@ -2722,9 +2718,7 @@ def band_hashes_for(sigs, id_col="doc_id"):
     ).select(id_col, "band.band_idx", "band.band_hash")
 
 
-def q_lsh_bucket_candidates(
-    spark, sf_dir, max_bucket: int = MAX_BAND_BUCKET
-):
+def q_lsh_bucket_candidates(spark, sf_dir):
     """MinHash-LSH near-dup candidates: band the signature (4 bands x 4
     rows), hash each band, groupBy (band_idx, band_hash) → docs sharing any
     band bucket are candidate pairs. The only shuffle is on band hashes —
@@ -2734,7 +2728,7 @@ def q_lsh_bucket_candidates(
     Degenerate-bucket guard: a band bucket of size s implies s(s-1)/2
     candidate pairs on one reducer; at web scale the empty-document /
     template-boilerplate bucket holds millions of docs (10^13 pairs from
-    one key). Buckets larger than `max_bucket` are dropped — above that
+    one key). Buckets larger than MAX_BAND_BUCKET are dropped — above that
     size the bucket is a degenerate cluster, not near-dup signal. 4096
     (~8M pairs/bucket max) never binds on testdata; the mechanism is
     pinned with a binding cap in tests/test_dedup.py."""
@@ -2745,7 +2739,7 @@ def q_lsh_bucket_candidates(
             "bucket_n",
             F.count("*").over(W.partitionBy("band_idx", "band_hash")),
         )
-        .where(F.col("bucket_n") <= max_bucket)
+        .where(F.col("bucket_n") <= MAX_BAND_BUCKET)
         .drop("bucket_n")
     )
     a = banded.alias("a")

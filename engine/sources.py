@@ -102,7 +102,7 @@ def read_pages_warc(spark: SparkSession, path: str) -> DataFrame:
 
 
 def export_pages_warc(
-    df: DataFrame, path: str, wet: bool = False, compress: bool = True
+    df: DataFrame, path: str, wet: bool = False
 ) -> list[dict]:
     """WARC (or WET) export: each input partition becomes one segment
     file written task-side (segment size = upstream partitioning — callers
@@ -141,7 +141,7 @@ def export_pages_warc(
             return
         ctx = TaskContext.get()
         pid = ctx.partitionId()
-        ext = ("wet" if wet else "warc") + (".gz" if compress else "")
+        ext = ("wet" if wet else "warc") + ".gz"
         fname = os.path.join(path, f"part-{pid:05d}.{ext}")
         # write under a task-attempt-unique temp name and os.replace()
         # into place: a speculative/zombie duplicate attempt writing the
@@ -157,7 +157,7 @@ def export_pages_warc(
             path, f".part-{pid:05d}.{ext}.tmp-{ctx.taskAttemptId()}"
         )
         with open(tmp, "wb") as f:
-            f.write(encode_pages(rows, wet=wet, compress=compress))
+            f.write(encode_pages(rows, wet=wet))
         os.replace(tmp, fname)
         yield pd.DataFrame([{"file": fname, "n_records": len(rows)}])
 

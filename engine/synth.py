@@ -7,10 +7,11 @@ corpus is identical regardless of partitioning, ordering, platform or scale
 prefix (doc i at n=1000 equals doc i at n=500000). That determinism is what
 makes the byte-identical golden invariant testable (SURVEY.md §6.2 item 6).
 
-Distributed generation: `generate_pages(spark, n)` runs the per-doc generator
-inside `mapInPandas` over `spark.range(n)` — the driver never materialises the
-corpus, so the same code path scales to arbitrarily large synthetic tables
-(FIXTURES.md §1 scales: 1e3 pytest / 5e4 sweep / 5e5+ bench).
+Distributed generation: `generate_pages(spark, n, partitions)` runs the
+per-doc generator inside `mapInPandas` over `spark.range(n, numPartitions=
+partitions)` — the driver never materialises the corpus, so the same code
+path scales to arbitrarily large synthetic tables (FIXTURES.md §1 scales:
+1e3 pytest / 5e4 sweep / 5e5+ bench).
 
 Template classes per FIXTURES.md §1: boilerplate_heavy (+multilingual via the
 lang mix), plain_minimal, link_farm, tables_lists, malformed, pdf_text,
@@ -280,7 +281,7 @@ def gen_doc_with_expected(i: int, seed: int = SEED) -> tuple:
     return rows, expected
 
 
-def generate_pages(spark, n_docs: int, seed: int = SEED, partitions: int | None = None):
+def generate_pages(spark, n_docs: int, partitions: int):
     """Distributed pages table: spark.range → mapInPandas(gen_doc).
 
     Scale-honest: per-doc work is independent and keyed on the global index,
@@ -290,18 +291,16 @@ def generate_pages(spark, n_docs: int, seed: int = SEED, partitions: int | None 
 
     from engine.schema import PAGES_SCHEMA
 
-    parts = partitions or max(32, spark.sparkContext.defaultParallelism * 2)
-
     def gen(batches):
         for pdf in batches:
             rows: list[dict] = []
             for i in pdf["id"]:
-                rows.extend(gen_doc(int(i), seed))
+                rows.extend(gen_doc(int(i)))
             yield pd.DataFrame(
                 rows, columns=["url", "warc_ts", "html", "text", "lang"]
             )
 
     return (
-        spark.range(0, n_docs, numPartitions=parts)
+        spark.range(0, n_docs, numPartitions=partitions)
         .mapInPandas(gen, schema=PAGES_SCHEMA)
     )

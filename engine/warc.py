@@ -268,11 +268,10 @@ def valid_page(r: dict) -> bool:
     return isinstance(url, str) and ts is not None and ts == ts
 
 
-def encode_pages(
-    rows: Iterable[dict], wet: bool = False, compress: bool = True
-) -> bytes:
-    """Serialize pages rows into one WARC (or WET) file's bytes; rows
-    failing `valid_page` are excluded (degenerate, not fatal)."""
+def encode_pages(rows: Iterable[dict], wet: bool = False) -> bytes:
+    """Serialize pages rows into one .warc.gz (or .wet.gz) file's bytes,
+    one gzip member per record; rows failing `valid_page` are excluded
+    (degenerate, not fatal)."""
     out = io.BytesIO()
     for r in rows:
         if not valid_page(r):
@@ -293,5 +292,5 @@ def encode_pages(
                 r["warc_ts"],
                 bytes(html) if isinstance(html, (bytes, bytearray)) else b"",
             )
-        out.write(gzip_member(rec) if compress else rec)
+        out.write(gzip_member(rec))
     return out.getvalue()

@@ -64,11 +64,13 @@ def test_write_wave_create_then_idempotent_replace(spark, sink_table):
 
 
 def test_kill_and_resume_through_catalog_sink(spark, sink_table, tmp_path):
+    from tests.test_resume import _enqueue_n
+
     pages_path = str(tmp_path / "pages.parquet")
     generate_pages(spark, 200, partitions=4).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="cat-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="cat-test")
 
     r1 = run_extract_job(spark, pages, man, wave_size=4, max_waves=2)
     assert r1["waves_run"] == 2 and not r1["complete"]
@@ -200,7 +202,9 @@ def test_increment_refuses_shared_table_and_unions_across_tables(
         assert spark.table(sink_table).count() == base_count  # still
         # the union view resolves each run's sink from ITS manifest even
         # with the session conf now pointing elsewhere
-        across = read_extracted_across(spark, root, ["cbase", "cinc2"])
+        across = read_extracted_across(
+            spark, [RunManifest.load(root, r) for r in ("cbase", "cinc2")]
+        )
         assert (
             across.select("url").distinct().count()
             == bigger.select("url").distinct().count()
@@ -215,14 +219,14 @@ def test_read_back_lineage_through_catalog_sink(spark, sink_table, tmp_path):
     the catalog table it wrote: every lineage row equals the aggregate
     recomputed from the table's rows."""
     from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX
-    from tests.test_resume import _expected_lineage
+    from tests.test_resume import _enqueue_n, _expected_lineage
 
     pages_path = str(tmp_path / "pages.parquet")
     generate_pages(spark, 200, partitions=4).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     n = _OBSERVED_LINEAGE_MAX + 4
-    man = enqueue(spark, pages, str(tmp_path / "runs"), min_partitions=n,
-                  run_id="cat-read-back")
+    man = _enqueue_n(spark, pages, str(tmp_path / "runs"), n,
+                     run_id="cat-read-back")
     r = run_extract_job(spark, pages, man, wave_size=n)
     assert (r["waves_run"], r["complete"]) == (1, True)
     got = {
@@ -240,7 +244,7 @@ def test_read_extracted_raises_when_catalog_table_lost(spark, sink_table, tmp_pa
     generate_pages(spark, 60, partitions=2).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="cat-lost")
+    man = enqueue(spark, pages, root, run_id="cat-lost")
     run_extract_job(spark, pages, man, wave_size=8)
 
     from engine.jobs.extract_job import read_extracted
@@ -266,17 +270,25 @@ def test_enqueue_refuses_claimed_or_populated_sink_table(
     the table and silently overwritePartitions each other (both manifests
     still read complete). enqueue must refuse a table already recorded by
     another manifest under runs_root, or already non-empty with no
-    claiming manifest — force=True is the explicit override."""
+    claiming manifest — force=True is the explicit override. A refusal
+    the manifests alone decide runs no Spark job: it comes before the
+    sizing pass reads the corpus."""
+    from tests.test_resume import _jobs_run
+
     pages = generate_pages(spark, 30, partitions=2)
     root = str(tmp_path / "runs")
     enqueue(spark, pages, root, run_id="claim-a")
 
     # same table, same runs_root, new run id → refused
-    with pytest.raises(RuntimeError, match="already recorded by run"):
+    with _jobs_run(spark) as jobs, pytest.raises(
+        RuntimeError, match="already recorded by run"
+    ):
         enqueue(spark, pages, root, run_id="claim-b")
+    assert jobs == []
     # re-enqueueing the SAME run id stays create()'s resume/reset domain
-    with pytest.raises(FileExistsError):
+    with _jobs_run(spark) as jobs, pytest.raises(FileExistsError):
         enqueue(spark, pages, root, run_id="claim-a")
+    assert jobs == []
     # explicit override works
     m = enqueue(spark, pages, root, run_id="claim-b", force=True)
     assert m.sink_table == sink_table

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import pytest
 
+from engine import cluster
 from engine.cluster import connected_components
 from engine.queries import _QUERIES
 
@@ -38,12 +39,13 @@ def test_components_on_known_graph(spark):
     assert got == {0: 0, 1: 0, 2: 0, 3: 0, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_path_graph_converges_in_log_rounds(spark):
+def test_path_graph_converges_in_log_rounds(spark, monkeypatch):
     """A 64-node path has diameter 63: propagation alone needs 63 rounds,
-    propagation+jumping needs O(log 63) ≈ 6. max_iter=10 binds the log
+    propagation+jumping needs O(log 63) ≈ 6. MAX_ITER=10 binds the log
     behaviour — this test is THE regression guard for pointer jumping."""
+    monkeypatch.setattr(cluster, "MAX_ITER", 10)
     path = _edges(spark, [(i, i + 1) for i in range(63)])
-    got = _assign(connected_components(path, max_iter=10))
+    got = _assign(connected_components(path))
     assert got == {i: 0 for i in range(64)}
 
 
@@ -63,11 +65,10 @@ def test_empty_edges_empty_result(spark):
     assert connected_components(_edges(spark, [])).count() == 0
 
 
-def test_unconverged_raises(spark):
+def test_unconverged_raises(spark, monkeypatch):
+    monkeypatch.setattr(cluster, "MAX_ITER", 1)
     with pytest.raises(RuntimeError, match="converge"):
-        connected_components(
-            _edges(spark, [(i, i + 1) for i in range(63)]), max_iter=1
-        )
+        connected_components(_edges(spark, [(i, i + 1) for i in range(63)]))
 
 
 def test_neardup_clusters_plan_is_python_free(spark):

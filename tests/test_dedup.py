@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from engine import queries
 from engine.queries import (
     N_MINHASH,
     _minhash_sig_df,
@@ -132,7 +133,7 @@ def _write_docs(spark, tmp_path, texts):
     return str(tmp_path)
 
 
-def test_shingle_df_cap_bounds_hot_key(spark, tmp_path):
+def test_shingle_df_cap_bounds_hot_key(spark, tmp_path, monkeypatch):
     """A stop-shingle shared by every document must stop feeding the
     self-join once its df exceeds the cap: with the cap binding, only the
     genuine near-dup pair survives; without it, the hot shingle alone
@@ -144,12 +145,11 @@ def test_shingle_df_cap_bounds_hot_key(spark, tmp_path):
         "real duplicate content body words here seven eight nine ten",
     ]
     sf = _write_docs(spark, tmp_path, texts)
-    uncapped = q_ngram_jaccard_pairs(
-        spark, sf, max_shingle_df=10**9, min_jaccard=0.0
-    )
-    capped = q_ngram_jaccard_pairs(
-        spark, sf, max_shingle_df=8, min_jaccard=0.0
-    )
+    monkeypatch.setattr(queries, "MIN_JACCARD", 0.0)
+    monkeypatch.setattr(queries, "MAX_SHINGLE_DF", 10**9)
+    uncapped = q_ngram_jaccard_pairs(spark, sf)
+    monkeypatch.setattr(queries, "MAX_SHINGLE_DF", 8)
+    capped = q_ngram_jaccard_pairs(spark, sf)
     # the capped plan's candidate space excludes every hot-shingle-only pair
     capped_pairs = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert capped_pairs == {(40, 41)}
@@ -157,7 +157,7 @@ def test_shingle_df_cap_bounds_hot_key(spark, tmp_path):
     assert uncapped.count() >= 40 * 39 / 2
 
 
-def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
+def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path, monkeypatch):
     """A band bucket holding a giant identical-document cluster implies
     s(s-1)/2 pairs on one reducer; a binding cap drops it while normal-size
     buckets keep their candidates."""
@@ -167,9 +167,11 @@ def test_lsh_bucket_cap_drops_degenerate_bucket(spark, tmp_path):
         "genuine article one about spark shuffles and joins here now",
     ]
     sf = _write_docs(spark, tmp_path, texts)
-    uncapped = q_lsh_bucket_candidates(spark, sf, max_bucket=10**9)
+    monkeypatch.setattr(queries, "MAX_BAND_BUCKET", 10**9)
+    uncapped = q_lsh_bucket_candidates(spark, sf)
     assert uncapped.count() >= 30 * 29 / 2  # degenerate cluster blowup
-    capped = q_lsh_bucket_candidates(spark, sf, max_bucket=8)
+    monkeypatch.setattr(queries, "MAX_BAND_BUCKET", 8)
+    capped = q_lsh_bucket_candidates(spark, sf)
     pairs = {(r["doc_a"], r["doc_b"]) for r in capped.collect()}
     assert (30, 31) in pairs  # the real near-dup survives
     assert all(a >= 30 for a, _ in pairs)  # degenerate bucket gone

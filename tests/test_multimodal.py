@@ -22,7 +22,7 @@ from engine.multimodal import (
 
 
 def test_fake_codec_roundtrip():
-    data = encode_fake_image(7, 4, 3, 3)
+    data = encode_fake_image(7, 4, 3)
     w, h, c, px = decode_image_fake(data)
     assert (w, h, c) == (4, 3, 3) and len(px) == 36
     meta = sniff_image_meta(data)
@@ -89,7 +89,7 @@ def test_features_feed_ann_operator(spark):
 
 
 def test_audio_fake_codec_roundtrip():
-    data = encode_fake_audio(7, 400, 16000, 1)
+    data = encode_fake_audio(7, 400)
     sr, ch, samples = decode_audio_fake(data)
     assert (sr, ch, len(samples)) == (16000, 1, 400)
     assert all(-32768 <= v <= 32767 for v in samples)

@@ -4,12 +4,16 @@ FIXTURES.md §3 resume fixture)."""
 
 from __future__ import annotations
 
+import contextlib
+import uuid
+
 import pytest
 from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from engine.jobs.extract_job import (
     MAX_PARTITIONS,
+    MIN_PARTITIONS,
     enqueue,
     export_run,
     with_host_salted_partition_id,
@@ -35,15 +39,26 @@ def pages(spark, tmp_path_factory):
     return spark.read.parquet(path)
 
 
+def _enqueue_n(spark, pages, root, n, **kw):
+    """enqueue sized to plan exactly `n` partitions (n >= MIN_PARTITIONS)
+    the way perfbench sizes its runs: html_bytes // n + 1 bytes each."""
+    html_bytes = pages.selectExpr("sum(length(html))").first()[0]
+    man = enqueue(
+        spark, pages, root, target_partition_bytes=html_bytes // n + 1, **kw
+    )
+    assert man.state()["n_partitions"] == n
+    return man
+
+
 def test_plan_partitions_bounds():
-    assert plan_partitions(0) == 8  # min bound
+    assert plan_partitions(0) == MIN_PARTITIONS  # min bound
     assert plan_partitions(640 << 20, target_partition_bytes=64 << 20) == 10
     assert plan_partitions(1 << 50) == MAX_PARTITIONS  # max bound
 
 
 def test_kill_and_resume_no_reprocessing(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="resume-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="resume-test")
     n = man.state()["n_partitions"]
     assert n == 12
 
@@ -79,7 +94,7 @@ def test_kill_and_resume_no_reprocessing(spark, pages, tmp_path):
 
 def test_lineage_doc_and_byte_counts(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="lin-test")
+    man = enqueue(spark, pages, root, run_id="lin-test")
     run_extract_job(spark, pages, man, wave_size=8)
     lin = read_lineage(spark, man)
     tot = lin.agg(F.sum("doc_count").alias("d")).collect()[0]["d"]
@@ -90,7 +105,7 @@ def test_lineage_doc_and_byte_counts(spark, pages, tmp_path):
 
 def test_retry_failed_and_current_view(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="retry-test")
+    man = enqueue(spark, pages, root, run_id="retry-test")
     run_extract_job(spark, pages, man, wave_size=8)
     out = read_extracted(spark, man)
     n_failed = out.where(F.col("status") == "failed").select("url").distinct().count()
@@ -151,9 +166,7 @@ def _interrupted(spark, pages, root, n_partitions, wave_size):
     write observes its lineage and builds none)."""
     import engine.jobs.extract_job as job
 
-    man = enqueue(spark, pages, root, min_partitions=n_partitions,
-                  run_id="lin-values")
-    assert man.state()["n_partitions"] == n_partitions
+    man = _enqueue_n(spark, pages, root, n_partitions, run_id="lin-values")
     frames = []
     real_frame = job._lineage_aggregate
 
@@ -292,7 +305,7 @@ def test_read_back_lineage_of_a_64_partition_wave(spark, pages, tmp_path):
 
     assert 64 > _OBSERVED_LINEAGE_MAX
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=64, run_id="wide-wave")
+    man = _enqueue_n(spark, pages, root, 64, run_id="wide-wave")
     r = run_extract_job(spark, pages, man, wave_size=64)
     assert (r["waves_run"], r["complete"]) == (1, True)
     lin = read_lineage(spark, man).collect()
@@ -314,7 +327,7 @@ def test_kill_between_extract_write_and_lineage_publish(
     import shutil
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="publish-kill")
+    man = enqueue(spark, pages, root, run_id="publish-kill")
     run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
 
     def kill(*args):
@@ -361,9 +374,8 @@ def test_read_extracted_round_trips_do_not_grow_with_files(
     pages = _ok_pages(spark, 400).repartition(1)  # one file per partition
     runs = {}
     for n in (16, 200):
-        man = enqueue(
-            spark, pages, str(tmp_path / "runs"), min_partitions=n,
-            run_id=f"files-{n}",
+        man = _enqueue_n(
+            spark, pages, str(tmp_path / "runs"), n, run_id=f"files-{n}"
         )
         run_extract_job(spark, pages, man, wave_size=n)
         runs[n] = man
@@ -380,7 +392,7 @@ def test_read_extracted_round_trips_do_not_grow_with_files(
 
 def test_rollup_metrics(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="rollup-test")
+    man = enqueue(spark, pages, root, run_id="rollup-test")
     run_extract_job(spark, pages, man, wave_size=4)
     roll = rollup_metrics(spark, man).collect()
     grand = [r for r in roll if r["run_id"] is None]
@@ -409,7 +421,7 @@ def test_rollup_metrics(spark, pages, tmp_path):
 
 def test_export_completed_run_only(spark, pages, tmp_path):
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="export-test")
+    man = enqueue(spark, pages, root, run_id="export-test")
     run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
     with pytest.raises(RuntimeError):
         export_run(spark, man, str(tmp_path / "never"))
@@ -425,7 +437,7 @@ def test_compact_run_reduces_files_preserves_rows(spark, pages, tmp_path):
     from engine.jobs.extract_job import compact_run
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="compact-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="compact-test")
     # one wave with no staged copy: each input task writes a file into
     # every partition it holds (a staged run already has one per partition)
     run_extract_job(spark, pages, man, wave_size=12)
@@ -448,17 +460,20 @@ def test_compact_run_reduces_files_preserves_rows(spark, pages, tmp_path):
         for d in os.listdir(man.extracted_path)
     )
     # incomplete runs refused
-    man2 = enqueue(spark, pages, root, min_partitions=12, run_id="compact-inc")
+    man2 = _enqueue_n(spark, pages, root, 12, run_id="compact-inc")
     run_extract_job(spark, pages, man2, wave_size=3, max_waves=1)
     with pytest.raises(RuntimeError):
         compact_run(spark, man2)
 
 
-def test_host_salting_spreads_hot_hosts(spark, pages):
+def test_host_salting_spreads_hot_hosts(spark, pages, monkeypatch):
     """The Zipf-head host must spread across >1 partition under the salted
-    layout, and across <= n_salt partitions (bounded skew)."""
+    layout, and across <= N_HOST_SALT partitions (bounded skew)."""
+    import engine.jobs.extract_job as job
+
     n_parts, n_salt = 32, 8
-    keyed = with_host_salted_partition_id(pages, n_parts, n_salt=n_salt)
+    monkeypatch.setattr(job, "N_HOST_SALT", n_salt)
+    keyed = with_host_salted_partition_id(pages, n_parts)
     hot = (
         keyed.withColumn("host", F.parse_url("url", F.lit("HOST")))
         .groupBy("host")
@@ -488,7 +503,7 @@ def test_kill_between_write_and_commit_no_duplicates(spark, pages, tmp_path):
     manifest flip leaves orphan rows; the resume must REPLACE them (dynamic
     partition overwrite), not append duplicates."""
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="orphan-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="orphan-test")
     run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
 
     real_commit = man.commit_partitions
@@ -522,7 +537,7 @@ def test_waves_read_only_their_partitions(spark, pages, tmp_path):
     from engine.jobs.extract_job import stage_pages
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="prune-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="prune-test")
     staged = stage_pages(spark, pages, man)
     wave = [0, 1, 2]
     batch = spark.read.parquet(staged).where(F.col("partition_id").isin(wave))
@@ -559,7 +574,7 @@ def test_staged_and_wave_outputs_hold_one_file_per_partition(
     from engine.jobs.extract_job import stage_pages, with_partition_id
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="layout-test")
+    man = _enqueue_n(spark, pages, root, 12, run_id="layout-test")
     stage_pages(spark, pages, man)
     one_each = {f"partition_id={p}": 1 for p in range(12)}
     assert _data_files_per_partition(man.staged_path) == one_each
@@ -582,7 +597,7 @@ def test_second_retry_preserves_first_audit_rows(spark, pages, tmp_path):
     """ADVICE(low): retry attempts are numbered; a second retry writes its
     own lineage file and rows instead of erasing the first's."""
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="retry2-test")
+    man = enqueue(spark, pages, root, run_id="retry2-test")
     run_extract_job(spark, pages, man, wave_size=8)
     r1 = retry_failed(spark, pages, man)
     if r1["retried"] == 0:
@@ -623,8 +638,8 @@ def test_retry_with_nothing_failed_leaves_no_attempt(spark, tmp_path):
 
     pages = _ok_pages(spark, 12)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="no-fail")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="no-fail")
+    run_extract_job(spark, pages, man, wave_size=8)
     assert read_current_extracted(spark, man).where(
         F.col("status") != "ok"
     ).count() == 0
@@ -668,7 +683,7 @@ def test_retry_counts_every_recrawl_row(spark, pages, tmp_path):
     )
     crawl = pages.unionByName(junk)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, crawl, root, min_partitions=8, run_id="recrawl")
+    man = enqueue(spark, crawl, root, run_id="recrawl")
     run_extract_job(spark, crawl, man, wave_size=8)
     failed = (
         read_current_extracted(spark, man)
@@ -706,8 +721,8 @@ def test_run_stats_equals_an_independent_aggregate(spark, tmp_path):
 
     pages = _ok_and_junk_pages(spark, 40, 6)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="stats")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="stats")
+    run_extract_job(spark, pages, man, wave_size=8)
     row = read_extracted(spark, man).agg(
         F.count("*").alias("rows"),
         F.approx_count_distinct("url").alias("approx_urls"),
@@ -748,8 +763,8 @@ def test_kill_between_retry_write_and_lineage_publish(
 
     pages = _ok_and_junk_pages(spark, 40, 6)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-kill")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="retry-kill")
+    run_extract_job(spark, pages, man, wave_size=8)
 
     monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
     with pytest.raises(_Kill):
@@ -779,8 +794,8 @@ def test_burned_retry_attempt_is_not_current(spark, tmp_path, monkeypatch):
     fixed = _ok_pages(spark, 40).unionByName(_ok_pages(spark, 6, "junk.example"))
     junk = [f"http://junk.example/{i}" for i in range(6)]
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-burned")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="retry-burned")
+    run_extract_job(spark, pages, man, wave_size=8)
 
     monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
     with pytest.raises(_Kill):
@@ -812,8 +827,8 @@ def test_retry_writes_one_overlay_file_per_touched_partition(spark, tmp_path):
     pages = spark.read.parquet(src)
     assert pages.rdd.getNumPartitions() >= 3
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="retry-files")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="retry-files")
+    run_extract_job(spark, pages, man, wave_size=8)
 
     def data_files():
         out = {}
@@ -855,8 +870,8 @@ def test_spark_written_retry_lineage_still_reads(spark, tmp_path):
 
     pages = _ok_and_junk_pages(spark, 40, 6)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="old-lineage")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="old-lineage")
+    run_extract_job(spark, pages, man, wave_size=8)
     assert retry_failed(spark, pages, man)["attempt"] == 1
     want = sorted(read_lineage(spark, man).collect())
     assert any(r["stage"] == "retry" for r in want)
@@ -892,7 +907,7 @@ def test_legacy_retry_overlay_fails_loudly(spark, pages, tmp_path):
     from engine.jobs.extract_job import compact_run
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="legacy")
+    man = enqueue(spark, pages, root, run_id="legacy")
     run_extract_job(spark, pages, man, wave_size=8)
     retry_failed(spark, pages, man)
     compact_run(spark, man, target_file_bytes=1 << 30)
@@ -932,12 +947,19 @@ def test_legacy_retry_overlay_fails_loudly(spark, pages, tmp_path):
 
 def test_manifest_create_refuses_overwrite(spark, pages, tmp_path):
     """ADVICE(low): re-creating an existing run must be an explicit,
-    data-clearing act, never a silent pending-reset over live data."""
+    data-clearing act, never a silent pending-reset over live data.
+    enqueue refuses before its sizing pass reads the corpus: no Spark
+    job runs."""
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="guard-test")
+    man = enqueue(spark, pages, root, run_id="guard-test")
     run_extract_job(spark, pages, man, wave_size=8)
     with pytest.raises(FileExistsError):
         RunManifest.create(root, 8, 1, run_id="guard-test")
+    with _jobs_run(spark) as jobs, pytest.raises(
+        FileExistsError, match="already has a manifest"
+    ):
+        enqueue(spark, pages, root, run_id="guard-test")
+    assert jobs == []
     import os
 
     man2 = RunManifest.create(root, 8, 1, run_id="guard-test", force=True)
@@ -949,7 +971,7 @@ def test_manifest_create_refuses_overwrite(spark, pages, tmp_path):
 def test_fresh_run_reads_as_empty(spark, pages, tmp_path):
     """retry/rollup on a never-run manifest must not crash."""
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="fresh-test")
+    man = enqueue(spark, pages, root, run_id="fresh-test")
     assert read_extracted(spark, man).count() == 0
     assert retry_failed(spark, pages, man) == {"retried": 0}
     assert read_lineage(spark, man).count() == 0
@@ -965,8 +987,8 @@ def test_corrupt_extracted_layout_raises(spark, pages, tmp_path):
     import shutil
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="corrupt-test")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="corrupt-test")
+    run_extract_job(spark, pages, man, wave_size=8)
     assert read_extracted(spark, man).count() > 0
     # break partition discovery: one leaf with a DIFFERENT partition key
     src = next(
@@ -1065,7 +1087,9 @@ def test_increment_extracts_only_new_urls(spark, pages, tmp_path):
     assert inc_urls == new_urls  # only the new docs were processed
 
     # one logical table: disjoint by construction, complete
-    across = read_extracted_across(spark, root, ["base", "inc1"])
+    across = read_extracted_across(
+        spark, [RunManifest.load(root, r) for r in ("base", "inc1")]
+    )
     assert across.select("url").distinct().count() == len(base_urls) + len(
         new_urls
     )
@@ -1091,7 +1115,7 @@ def test_increment_refuses_incomplete_base(spark, pages, tmp_path):
     from engine.jobs.extract_job import enqueue_increment
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=12, run_id="partial")
+    man = _enqueue_n(spark, pages, root, 12, run_id="partial")
     run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
     with pytest.raises(RuntimeError, match="pending"):
         enqueue_increment(spark, pages, root, ["partial"])
@@ -1146,7 +1170,9 @@ def test_increment_killed_midrun_resumes_from_recorded_input(
         for r in read_extracted(spark, inc2).select("url").distinct().collect()
     }
     assert not (inc_urls & base_urls)  # disjointness survived the kill
-    across = read_extracted_across(spark, root, ["base", "inc"])
+    across = read_extracted_across(
+        spark, [RunManifest.load(root, r) for r in ("base", "inc")]
+    )
     assert across.count() == across.select("url").distinct().count()
 
 
@@ -1211,8 +1237,8 @@ def test_lost_extracted_dir_raises_not_empty(spark, pages, tmp_path):
     import shutil
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="lost-test")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="lost-test")
+    run_extract_job(spark, pages, man, wave_size=8)
     assert read_extracted(spark, man).count() > 0
     shutil.rmtree(man.extracted_path)
     with pytest.raises(RuntimeError, match="lineage records"):
@@ -1227,8 +1253,8 @@ def test_emptied_extracted_dir_raises_not_empty(spark, pages, tmp_path):
     import pathlib
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=4, run_id="emptied-test")
-    run_extract_job(spark, pages, man, wave_size=4)
+    man = enqueue(spark, pages, root, run_id="emptied-test")
+    run_extract_job(spark, pages, man, wave_size=8)
     assert read_extracted(spark, man).count() > 0
     data = [p for p in pathlib.Path(man.extracted_path).rglob("*") if p.is_file()]
     assert data
@@ -1244,10 +1270,8 @@ def test_empty_corpus_run_still_reads_as_empty(spark, pages, tmp_path):
     a committed run over an empty corpus writes no data files and reads
     as an empty table (lineage doc sum is 0)."""
     root = str(tmp_path / "runs")
-    man = enqueue(
-        spark, pages.limit(0), root, min_partitions=4, run_id="empty-test"
-    )
-    r = run_extract_job(spark, pages.limit(0), man, wave_size=4)
+    man = enqueue(spark, pages.limit(0), root, run_id="empty-test")
+    r = run_extract_job(spark, pages.limit(0), man, wave_size=8)
     assert man.is_complete()
     assert r["waves_run"] == 1 and r["docs_processed"] == 0
     assert read_extracted(spark, man).count() == 0
@@ -1276,7 +1300,7 @@ def test_increment_content_dedup(spark, pages, tmp_path):
     from engine.synth import gen_doc
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="cbase")
+    man = enqueue(spark, pages, root, run_id="cbase")
     run_extract_job(spark, pages, man, wave_size=8)
 
     base_rows = (
@@ -1344,7 +1368,7 @@ def test_compact_kill_window_leaves_readable_table(spark, pages, tmp_path):
     from engine.jobs.extract_job import compact_run, vacuum_run
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="kcompact")
+    man = enqueue(spark, pages, root, run_id="kcompact")
     run_extract_job(spark, pages, man, wave_size=8)
 
     def fp():
@@ -1432,7 +1456,7 @@ def test_retry_overlay_survives_compaction(spark, pages, tmp_path):
     from engine.jobs.extract_job import compact_run, vacuum_run
 
     root = str(tmp_path / "runs")
-    man = enqueue(spark, pages, root, min_partitions=8, run_id="retry-compact")
+    man = enqueue(spark, pages, root, run_id="retry-compact")
     run_extract_job(spark, pages, man, wave_size=8)
     first = retry_failed(spark, pages, man)
     assert first["attempt"] == 1 and first["retried"] > 0
@@ -1540,6 +1564,22 @@ _JOBS_PER_VERB_CAP = {
 }
 
 
+@contextlib.contextmanager
+def _jobs_run(spark):
+    """`with _jobs_run(spark) as ids:` — the ids of the Spark jobs the
+    block ran, filled in when it exits (raising or not), counted through
+    a job group of its own and the status tracker."""
+    sc = spark.sparkContext
+    group = f"jobs-run-{uuid.uuid4().hex}"
+    ids = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        ids += sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def _job_labels(spark, job_ids):
     """(description, call site) of each job, from the status store."""
     store = spark.sparkContext._jsc.sc().statusStore()
@@ -1554,24 +1594,17 @@ def _job_labels(spark, job_ids):
 def test_spark_jobs_per_verb_capped(spark, pages, tmp_path):
     from engine.jobs.extract_job import run_stats, stage_pages
 
-    sc = spark.sparkContext
-
     def lifecycle(tag):
         jobs, labels = {}, {}
 
         def step(verb, fn):
-            group = f"jobs-per-verb-{tag}-{verb}"
-            sc.setJobGroup(group, group)
-            try:
+            with _jobs_run(spark) as ids:
                 value = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-            ids = sorted(sc.statusTracker().getJobIdsForGroup(group))
             jobs[verb], labels[verb] = len(ids), _job_labels(spark, ids)
             return value
 
         root = str(tmp_path / f"runs-{tag}")
-        m = step("enqueue", lambda: enqueue(spark, pages, root, min_partitions=8, run_id="jobs"))
+        m = step("enqueue", lambda: enqueue(spark, pages, root, run_id="jobs"))
         step("stage", lambda: stage_pages(spark, pages, m))
         run = step("run", lambda: run_extract_job(spark, pages, m, wave_size=4, max_waves=1))
         resume = step("resume", lambda: run_extract_job(spark, pages, m, wave_size=4))

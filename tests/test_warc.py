@@ -138,10 +138,17 @@ def test_warc_roundtrip_binary_exact(spark, pages, tmp_path):
 
 
 def test_warc_roundtrip_uncompressed(spark, pages, tmp_path):
-    p = str(tmp_path / "warc_plain")
-    manifest = export_pages_warc(pages, p, compress=False)
-    assert all(m["file"].endswith(".warc") for m in manifest)
-    assert _fingerprint(read_pages(spark, p, "warc")) == _fingerprint(pages)
+    """Plain .warc segments (each exported segment with its gzip members
+    inflated) ingest like the .warc.gz ones."""
+    import pathlib
+
+    plain = tmp_path / "warc_plain"
+    plain.mkdir()
+    for m in export_pages_warc(pages, str(tmp_path / "warc_gz")):
+        seg = pathlib.Path(m["file"])
+        (plain / seg.stem).write_bytes(gzip.decompress(seg.read_bytes()))
+    assert {f.suffix for f in plain.iterdir()} == {".warc"}
+    assert _fingerprint(read_pages(spark, str(plain), "warc")) == _fingerprint(pages)
 
 
 def test_wet_roundtrip_text(spark, pages, tmp_path):
@@ -198,7 +205,9 @@ def test_codec_property_roundtrip(rows, compress):
     """Any payload bytes (including record delimiters, gzip magic, header
     look-alikes) and any second-precision timestamp survive encode→decode;
     record count and order are preserved; null html reads back as b''."""
-    buf = encode_pages(rows, compress=compress)
+    buf = encode_pages(rows)
+    if not compress:
+        buf = gzip.decompress(buf)  # a plain .warc: the members inflated
     back = list(pages_from_archive(buf))
     assert [(r["url"], r["warc_ts"]) for r in back] == [
         (r["url"], r["warc_ts"]) for r in rows
@@ -240,8 +249,8 @@ def test_export_run_wet_full_cc_loop(spark, pages, tmp_path):
     export_pages_warc(pages, wdir)
     ingested = read_pages_warc(spark, wdir)
     root = str(tmp_path / "runs")
-    man = enqueue(spark, ingested, root, min_partitions=4, run_id="wetloop")
-    run_extract_job(spark, ingested, man, wave_size=4)
+    man = enqueue(spark, ingested, root, run_id="wetloop")
+    run_extract_job(spark, ingested, man, wave_size=8)
 
     dest = str(tmp_path / "out_wet")
     res = export_run(spark, man, dest, fmt="wet")
