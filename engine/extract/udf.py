@@ -22,38 +22,80 @@ engine/pyworker.py from a worker's second task on.
 
 from __future__ import annotations
 
+import hashlib
+
+from pyspark.accumulators import AccumulatorParam
+
 from engine.extract.core import extract_document
 from engine.schema import EXTRACTED_SCHEMA
 
 
-def extract_batches_arrow(batches):
+class LineageParam(AccumulatorParam):
+    """Accumulator of per-partition lineage lanes, {partition_id: [docs,
+    n_chars sum, row digest sum]}: each task adds its own dict once, and
+    the driver adds the lanes of every partition id."""
+
+    def zero(self, value):
+        return {}
+
+    def addInPlace(self, acc, more):
+        for pid, lanes in more.items():
+            acc[pid] = [a + b for a, b in zip(acc.get(pid, (0, 0, 0)), lanes)]
+        return acc
+
+
+def lineage_digest(url: str | None, value: str | None) -> int:
+    """A row's 64-bit lineage digest: blake2b over the url's length, the
+    url and the stage's column (a null reads as ''), so no two (url,
+    value) pairs share an encoding."""
+    url, value = url or "", value or ""
+    h = hashlib.blake2b(f"{len(url)}:{url}{value}".encode(), digest_size=8)
+    return int.from_bytes(h.digest(), "little")
+
+
+def extract_batches_arrow(batches, lineage=None):
     """mapInArrow body: (url, html[, partition_id]) batches → extracted
     batches. html bytes come out of the RecordBatch via to_pylist() (the
     tokenizer needs Python bytes), and the output batch is assembled
     straight into pyarrow arrays against the declared schema. A batch that
     carries partition_id (the wave-committed job path: partitioned writes
-    and lineage) gets it passed through as the last column."""
+    and lineage) gets it passed through as the last column.
+
+    `lineage`, set by the job path, is (accumulator, column): each emitted
+    row is folded into its partition's [docs, n_chars sum, digest sum]
+    lanes, the digest taken over the url and that output column
+    (`lineage_digest`), and the task's lanes are added to the accumulator
+    (a `LineageParam`) once, after its last batch."""
     import pyarrow as pa
 
     from engine.schema import extracted_arrow_schema
 
     out_schema = extracted_arrow_schema()
     out_cols = out_schema.names
+    lanes: dict[int, tuple[int, int, int]] = {}
     for batch in batches:
         urls = batch.column("url").to_pylist()
         htmls = batch.column("html").to_pylist()
         cols: dict[str, list] = {c: [] for c in out_cols}
         cols["url"] = urls
-        for html in htmls:
+        if lineage:
+            pids = batch.column("partition_id").to_pylist()
+        for i, html in enumerate(htmls):
             rec = extract_document(html)
             for c in out_cols[1:]:
                 cols[c].append(rec[c])
+            if lineage:
+                docs, chars, digests = lanes.get(pids[i], (0, 0, 0))
+                lanes[pids[i]] = (docs + 1, chars + rec["n_chars"],
+                                  digests + lineage_digest(urls[i], rec[lineage[1]]))
         arrays = [pa.array(cols[c], type=out_schema.field(c).type) for c in out_cols]
         schema = out_schema
         if "partition_id" in batch.schema.names:
             arrays.append(batch.column("partition_id"))
             schema = out_schema.append(batch.schema.field("partition_id"))
         yield pa.RecordBatch.from_arrays(arrays, schema=schema)
+    if lineage:
+        lineage[0].add(lanes)
 
 
 def run_extract(pages_df):

@@ -38,19 +38,18 @@ Commit protocol (resume unit = wave of partitions):
        them instead of appending duplicates. A task holds one partition,
        so the write adds one file per partition
     4. publish the wave's lineage rows (per partition: doc/byte counts and
-       checksum, plus wall_ms) to a wave-keyed file. Up to
-       `_OBSERVED_LINEAGE_MAX` partitions, the counts and checksums are an
-       unnamed Observation on step 3's write — per partition id of the
-       wave, the record `_lineage_sql` defines — so the wave is ONE Spark
-       job and nothing is read back; above it they are a collected
-       aggregate of the written partitions. The driver writes the file
-       with pyarrow (`_publish_lineage`: temp, fsync, rename; the rename
-       replaces any orphan a killed wave left). A retry attempt publishes
-       its lineage the same way (`_write_with_lineage`), its partition set
-       being the run's committed partitions: observed on its overlay write
-       up to the cap, read back above it. The shuffle that feeds a retry's
-       UDF carries only the failed rows, clustered by partition_id, so
-       an attempt writes one overlay file per partition it touches
+       checksum, plus wall_ms) to a wave-keyed file. Step 2's UDF body
+       folds every row it emits into per-partition lanes and adds them to
+       a per-write accumulator once per task; the UDF runs in step 3's
+       result stage (no exchange above it), where Spark applies each
+       task's update once, so at any wave size the wave is ONE Spark job
+       and nothing is read back. The driver writes the file with pyarrow
+       (`_publish_lineage`: temp, fsync, rename; the rename replaces any
+       orphan a killed wave left). A retry attempt publishes its lineage
+       the same way (`_write_with_lineage`). The shuffle that feeds a
+       retry's UDF sits below it and carries only the failed rows,
+       clustered by partition_id, so an attempt writes one overlay file
+       per partition it touches
     5. atomically flip those partitions pending→committed in manifest.json
 A kill ANYWHERE — between waves or between steps 3/4 and 5 — loses at most
 the in-flight wave's work; re-running recomputes ONLY partitions absent
@@ -62,6 +61,8 @@ tests/test_resume.py). A fully committed run is a no-op.
 from __future__ import annotations
 
 import contextlib
+import functools
+import hashlib
 import math
 import time
 
@@ -69,7 +70,11 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from engine.extract.core import EXTRACTOR_VERSION
-from engine.extract.udf import dedup_latest_crawl, extract_batches_arrow
+from engine.extract.udf import (
+    LineageParam,
+    dedup_latest_crawl,
+    extract_batches_arrow,
+)
 from engine.manifest import RunManifest, new_run_id
 from engine.schema import (
     EXTRACTED_PARTITIONED_SCHEMA,
@@ -82,131 +87,71 @@ DEFAULT_TARGET_PARTITION_BYTES = 64 << 20  # 64 MiB of raw html per partition
 MIN_PARTITIONS = 8  # plan_partitions' lower clamp
 MAX_PARTITIONS = 1 << 20  # plan_partitions' upper clamp
 
-_MASK40 = (1 << 40) - 1
-
 # the column each stage's checksum digests next to the url: an extract
 # wave pins the committed text, a retry attempt each url's new status
 _CHECKSUM_COL = {"extract": "text", "retry": "status"}
 
 
-def _lineage_sql(stage: str, pid: int | None = None) -> str:
-    """SQL text of one partition's lineage record, a struct of
-    (partition_id, doc_count, byte_count, checksum): over every row of a
-    group when `pid` is None (the read-back groupBy(partition_id),
-    `_lineage_aggregate`), else over the rows of partition `pid` only (the
-    per-partition metrics a write observes, `_write_with_lineage`).
-
-    The checksum is an order-insensitive, partial-aggregatable content
-    digest: sha256 of "count:lane1:lane2", where the lanes are two
-    independent 40-bit lanes of the per-row xxhash64(url, column) SUMmed
-    (not collected). Commutative + associative → map-side combine works,
-    the aggregation buffer is constant-size, and the result is independent
-    of row order. 40-bit lanes keep the long sum overflow-free to ~2^23
-    rows per partition (partitions are byte-bounded far below that). The
-    naive alternative — sort_array(collect_list(row_digest)) — buffers
-    every row of a partition in ONE aggregation state: a scale bug at
-    64 MiB+ partitions (round-2 fix; was the dominant lineage cost).
-
-    SQL text, not `F.*` chains: every `F.*` call is ~3 py4j round trips
-    and a wave's metric would take ~100 of them."""
-    def rows(x):
-        return x if pid is None else f"if(partition_id = {pid}, {x}, 0)"
-
-    row_hash = f"xxhash64(url, coalesce({_CHECKSUM_COL[stage]}, ''))"
-    count = "count(1)" if pid is None else f"count_if(partition_id = {pid})"
-    lane1 = f"sum({rows(f'{row_hash} & {_MASK40}')})"
-    lane2 = f"sum({rows(f'shiftrightunsigned({row_hash}, 20) & {_MASK40}')})"
-    return (
-        f"named_struct('partition_id', {'partition_id' if pid is None else pid},"
-        f" 'doc_count', {count},"
-        f" 'byte_count', sum({rows('coalesce(n_chars, 0)')}),"
-        f" 'checksum', sha2(concat_ws(':', {count}, {lane1}, {lane2}), 256))"
-    )
-
-
-# The largest partition set whose lineage a write observes. The metric is
-# 4 aggregates per partition, so its driver-side build and its per-row cost
-# grow with the set, while a read-back costs two more jobs and a listing of
-# the written files. Timed at local[4] (CHANGES.md): observing wins for a
-# wave and a retry at 4 partitions, ties at 8 and loses at 16 and above.
-_OBSERVED_LINEAGE_MAX = 8
-
-
-def _lineage_aggregate(rows: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage records of `rows` (column `l`), a JVM
-    aggregate from the same SQL text a write observes: no Python worker is
-    touched (tests/test_resume.py pins the plan Python-free)."""
-    return rows.groupBy("partition_id").agg(
-        F.expr(f"{_lineage_sql(stage)} AS l")
-    )
-
-
-def _write_with_lineage(rows: DataFrame, stage: str, pids: list[int],
-                        write, written) -> tuple[int, int, list]:
+def _write_with_lineage(rows: DataFrame, stage: str, write) -> tuple[int, dict]:
     """Extract `rows` (url, html, partition_id) with the fused UDF, pass
-    the extracted frame to `write`, and return (rows written, wall ms of
-    the extract and write, the written rows' per-partition lineage
-    records).
+    the extracted frame to `write`, and return (wall ms of the extract
+    and write, the written rows' lineage lanes {partition_id: (docs,
+    n_chars sum, row digest sum)}).
 
-    `pids` is the write's partition set: every row has a partition_id in
-    it. Up to `_OBSERVED_LINEAGE_MAX` partitions, the records are an
-    unnamed Observation on the write, one `_lineage_sql` record per
-    partition id, so nothing is read back. Above it, `written()`, the rows
-    the write committed, is aggregated and collected
-    (`_lineage_aggregate`). The row count is observed either way, on the
-    same Observation, and read right after the write returns."""
+    The UDF body folds every row it emits into a per-write accumulator
+    (`LineageParam`), so the write is the only Spark job and nothing is
+    read back. The UDF runs in the write's result stage (no exchange
+    above it: tests/test_plans.py pins it), where Spark applies each
+    task's accumulator update once, so the lanes count exactly the rows
+    the committed tasks wrote."""
     t0 = time.monotonic()
-    observed = Observation()
-    metrics = [F.expr("count(1) AS n")]
-    if len(pids) <= _OBSERVED_LINEAGE_MAX:
-        metrics.append(F.expr(
-            "array("
-            + ", ".join(_lineage_sql(stage, p) for p in pids)
-            + ") AS per_partition"
-        ))
-    # the observation sits right above the UDF, where no exchange is above
-    # it in the write's plan, so it sees exactly the rows the committed
-    # tasks wrote
+    acc = rows.sparkSession.sparkContext.accumulator({}, LineageParam())
+    body = functools.partial(
+        extract_batches_arrow, lineage=(acc, _CHECKSUM_COL[stage])
+    )
     write(
         rows.select("url", "html", "partition_id")
-        .mapInArrow(extract_batches_arrow, schema=EXTRACTED_PARTITIONED_SCHEMA)
-        .observe(observed, *metrics)
+        .mapInArrow(body, schema=EXTRACTED_PARTITIONED_SCHEMA)
     )
     wall_ms = int((time.monotonic() - t0) * 1000)
-    got = observed.get
-    if "per_partition" in got:
-        records = got["per_partition"]
-    elif got["n"]:
-        records = [r.l for r in _lineage_aggregate(written(), stage).collect()]
-    else:
-        records = []
-    return got["n"], wall_ms, records
+    # the context keeps every accumulator it made: keep this one empty
+    lanes, acc.value = acc.value, {}
+    return wall_ms, lanes
 
 
 def _publish_lineage(
-    manifest: RunManifest, name: str, stage: str, wall_ms: int, records
+    manifest: RunManifest, name: str, stage: str, wall_ms: int, lanes: dict
 ) -> int:
-    """Publish lineage file `name` from per-partition records
-    (partition_id, doc_count, byte_count, checksum), written with pyarrow
-    on the driver; returns the docs it counts. A partition with no rows
-    gets no lineage row, as a groupBy gives none; no records at all (an
-    empty corpus) publish a zero-row file."""
+    """Publish lineage file `name` from per-partition lanes (the
+    `_write_with_lineage` dict), one row per partition, written with
+    pyarrow on the driver; returns the docs it counts. A partition with
+    no rows has no lanes and gets no lineage row; no lanes at all (an
+    empty corpus) publish a zero-row file.
+
+    A row's checksum is an order-insensitive content digest of its
+    partition's rows: sha256 of "count:sum", where sum is the exact
+    (unbounded) sum of every row's 64-bit `lineage_digest` (blake2b over
+    the url and the stage's column: text for extract, status for retry).
+    Lineage files written by older code hold another checksum, sha256 of
+    "count:lane1:lane2" over two 40-bit lanes of xxhash64(url, column):
+    they read, roll up and count for the data-loss guard as before, since
+    no reader recomputes a checksum, but the two definitions never
+    compare equal."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     rows = [
         {
             "run_id": manifest.run_id,
-            "partition_id": r["partition_id"],
+            "partition_id": pid,
             "stage": stage,
-            "doc_count": r["doc_count"],
-            "byte_count": r["byte_count"],
+            "doc_count": docs,
+            "byte_count": chars,
             "extractor_version": EXTRACTOR_VERSION,
-            "checksum": r["checksum"],
+            "checksum": hashlib.sha256(f"{docs}:{digests}".encode()).hexdigest(),
             "wall_ms": wall_ms,
         }
-        for r in records
-        if r["doc_count"]
+        for pid, (docs, chars, digests) in sorted(lanes.items())
     ]
     table = pa.Table.from_pylist(rows, schema=lineage_arrow_schema())
     manifest.publish_lineage(name, lambda f: pq.write_table(table, f))
@@ -538,10 +483,10 @@ def _run_wave(
     batch: DataFrame,
 ) -> int:
     """Extract one wave's pages, write them, and publish the wave's lineage
-    file; returns the docs that lineage counts. Up to
-    `_OBSERVED_LINEAGE_MAX` partitions the wave is one Spark job: its
-    lineage is observed on the write itself, and the file is written on
-    the driver. The caller commits the wave."""
+    file; returns the docs that lineage counts. The wave is one Spark job:
+    its lineage is folded into an accumulator by the UDF that feeds the
+    write, and the file is written on the driver. The caller commits the
+    wave."""
     from engine.catalog import write_wave_to_table
 
     def write(extracted):
@@ -561,24 +506,13 @@ def _run_wave(
                 .parquet(manifest.extracted_path)
             )
 
-    def written():
-        table = (
-            spark.table(sink_table) if sink_table
-            else spark.read.schema(EXTRACTED_PARTITIONED_SCHEMA).parquet(
-                manifest.extracted_path
-            )
-        )
-        return table.where(F.col("partition_id").isin(wave))
-
-    _, wall_ms, records = _write_with_lineage(
-        batch, "extract", wave, write, written
-    )
+    wall_ms, lanes = _write_with_lineage(batch, "extract", write)
     # wave file keyed by its first partition id: unique across waves
     # (pending sets are disjoint), stable across resume, and the publish
     # replaces an orphan a killed wave left
     return _publish_lineage(
         manifest, manifest.wave_lineage_name(wave[0]), "extract", wall_ms,
-        records,
+        lanes,
     )
 
 
@@ -699,15 +633,13 @@ def retry_failed(
     append+window-dedup is the idempotent equivalent.
 
     One pass: the failed-url window and semi join run once, inside the
-    overlay write, and `retried` is the row count observed on that write.
-    The attempt's lineage is observed on the same write when the run has
-    at most `_OBSERVED_LINEAGE_MAX` committed partitions (the set its rows
-    can fall in); above that its overlay rows are read back and
-    aggregated. The failed rows are clustered by `partition_id` before
-    the extract UDF: the shuffle carries only failed rows, AQE coalesces
-    it (one Python task for a small failure set), and no partition id is
-    split across tasks, so an attempt writes one overlay file per
-    partition it touches.
+    overlay write, and `retried` and the attempt's lineage come from the
+    accumulator the UDF feeding that write fills. The failed rows are
+    clustered by `partition_id` below the extract UDF (never above it:
+    the UDF must stay in the write's result stage): the shuffle carries
+    only failed rows, AQE coalesces it (one Python task for a small
+    failure set), and no partition id is split across tasks, so an
+    attempt writes one overlay file per partition it touches.
     An attempt that re-extracts nothing leaves no trace: its claim is
     removed (so the attempt number stays free) and no new overlay
     directory is left.
@@ -735,17 +667,13 @@ def retry_failed(
         lineage_name = manifest.retry_lineage_name(attempt)
         retry_path = manifest.retry_path
         had_overlay = os.path.exists(retry_path)
-        # every failed url lies in a committed partition: the current view
-        # reads no other
-        retried, wall_ms, records = _write_with_lineage(
-            todo, "retry", manifest.committed_partitions(),
+        wall_ms, lanes = _write_with_lineage(
+            todo, "retry",
             lambda df: df.withColumn("attempt", F.lit(attempt))
             .write.mode("append").partitionBy("partition_id")
             .parquet(retry_path),
-            lambda: spark.read.schema(EXTRACTED_RETRY_SCHEMA)
-            .parquet(retry_path).where(F.col("attempt") == attempt),
         )
-        if retried == 0:
+        if not lanes:
             os.rmdir(manifest.lineage_path(lineage_name))
             if not had_overlay:
                 # the zero-row write left only a _SUCCESS marker
@@ -754,7 +682,9 @@ def retry_failed(
         # every stage writes lineage rows (BASELINE.json north_star) — the
         # retry wave is auditable like any extract wave; lineage covers
         # THIS attempt only, not the accumulated retry table
-        _publish_lineage(manifest, lineage_name, "retry", wall_ms, records)
+        retried = _publish_lineage(
+            manifest, lineage_name, "retry", wall_ms, lanes
+        )
     return {"retried": retried, "attempt": attempt}
 
 

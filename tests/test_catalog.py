@@ -214,19 +214,18 @@ def test_increment_refuses_shared_table_and_unions_across_tables(
         spark.sql(f"DROP TABLE IF EXISTS {inc_table}")
 
 
-def test_read_back_lineage_through_catalog_sink(spark, sink_table, tmp_path):
-    """A wave above `_OBSERVED_LINEAGE_MAX` reads its lineage back from
-    the catalog table it wrote: every lineage row equals the aggregate
-    recomputed from the table's rows."""
-    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX
+def test_wave_lineage_through_catalog_sink(spark, sink_table, tmp_path):
+    """A 12-partition wave written to the catalog table takes its lineage
+    from the UDF that feeds the write: every lineage row equals the
+    aggregate recomputed from the table's rows."""
     from tests.test_resume import _enqueue_n, _expected_lineage
 
     pages_path = str(tmp_path / "pages.parquet")
     generate_pages(spark, 200, partitions=4).write.parquet(pages_path)
     pages = spark.read.parquet(pages_path)
-    n = _OBSERVED_LINEAGE_MAX + 4
+    n = 12
     man = _enqueue_n(spark, pages, str(tmp_path / "runs"), n,
-                     run_id="cat-read-back")
+                     run_id="cat-lineage")
     r = run_extract_job(spark, pages, man, wave_size=n)
     assert (r["waves_run"], r["complete"]) == (1, True)
     got = {

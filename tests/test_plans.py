@@ -37,6 +37,86 @@ def test_extract_scan_prunes_to_url_html(spark, pages_path):
     assert "Exchange" not in plan
 
 
+def _udf_write_trees(spark, action):
+    """Run `action` and return the executed plan tree (the text above the
+    node details) of every SQL execution it ran whose plan holds
+    MapInArrow, read from the SQL status store, final AQE plan first."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    runs = store.executionsList()
+    first = runs.last().executionId() + 1 if runs.nonEmpty() else 0
+    action()
+    bus.waitUntilEmpty()
+    runs = store.executionsList()
+    trees = []
+    for i in range(runs.size() - 1, -1, -1):
+        run = runs.apply(i)
+        if run.executionId() < first:
+            break
+        tree = run.physicalPlanDescription().split("\n\n", 1)[0]
+        if "MapInArrow" in tree:
+            trees.append(tree)
+    return trees[::-1]
+
+
+def _exchanges_above_udf(tree):
+    """Lines from the write command down to the first MapInArrow below it
+    that name an exchange."""
+    lines = tree.splitlines()
+    top = next(i for i, ln in enumerate(lines) if "Execute " in ln)
+    udf = next(i for i in range(top, len(lines)) if "MapInArrow" in lines[i])
+    return [ln for ln in lines[top:udf] if "Exchange" in ln]
+
+
+def test_extract_udf_runs_in_the_write_result_stage(spark, tmp_path):
+    """Waves and retries take lineage and their row count from an
+    accumulator the extract UDF fills (`_write_with_lineage`), and Spark
+    applies a task's accumulator update exactly once only in a result
+    stage. So in every write that UDF feeds, no Exchange sits between the
+    write command and MapInArrow: a staged wave, an unstaged single wave,
+    a catalog-sink wave (its create and its replace) and the retry's
+    overlay write, whose clustering shuffle must stay below the UDF."""
+    from engine.catalog import SINK_TABLE_CONF
+    from engine.jobs.extract_job import enqueue, retry_failed, run_extract_job
+
+    path = str(tmp_path / "pages.parquet")
+    generate_pages(spark, 200, partitions=2).write.parquet(path)
+    pages = spark.read.parquet(path)
+    root = str(tmp_path / "runs")
+
+    def run(run_id, wave_size):
+        man = enqueue(spark, pages, root, run_id=run_id)
+        return man, _udf_write_trees(
+            spark, lambda: run_extract_job(spark, pages, man, wave_size=wave_size)
+        )
+
+    _, staged = run("staged", 4)
+    single_man, single = run("single", 8)
+    retry = _udf_write_trees(
+        spark, lambda: retry_failed(spark, pages, single_man)
+    )
+    table = "spark_catalog.default.udf_result_stage"
+    spark.conf.set(SINK_TABLE_CONF, table)
+    try:
+        _, catalog = run("catalog", 4)
+    finally:
+        spark.conf.unset(SINK_TABLE_CONF)
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+    writes = {"staged": staged, "single": single, "retry": retry,
+              "catalog": catalog}
+    # two waves each for the staged and the catalog run (the catalog's
+    # first wave is its create, planned as a command over a nested insert)
+    assert {k: len(v) for k, v in writes.items()} == {
+        "staged": 2, "single": 1, "retry": 1, "catalog": 3,
+    }, writes
+    assert all("Exchange" in t for t in retry), retry  # below the UDF
+    for name, trees in writes.items():
+        for tree in trees:
+            assert _exchanges_above_udf(tree) == [], (name, tree)
+
+
 def test_dim_joins_broadcast_with_pushdown(spark):
     plan = _plan(q_broadcast_dim_join(spark, SF))
     assert plan.count("BroadcastHashJoin") == 2

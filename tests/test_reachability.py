@@ -18,10 +18,11 @@ option, and some call in the roots must pass it, by keyword or by
 position. A call reaches the defs named like its callee; a call through
 a local dispatch variable (`reader = _READERS[fmt]`, then `reader(...,
 glob=...)`) reaches the defs named in that variable's value, for its
-keywords. A def that passes its own option straight on (`f(x=x)`) sets
-the inner option only if the outer one is itself set. An option no root
-sets is a value only a test picks: make it the module constant it
-defaults to, or put it on OPTIONS_ALLOWLIST with the reason it stays.
+keywords; `functools.partial(f, ...)` passes its arguments to `f`. A def
+that passes its own option straight on (`f(x=x)`) sets the inner option
+only if the outer one is itself set. An option no root sets is a value
+only a test picks: make it the module constant it defaults to, or put it
+on OPTIONS_ALLOWLIST with the reason it stays.
 """
 
 from __future__ import annotations
@@ -200,20 +201,23 @@ def unset_options() -> list[str]:
         for call in ast.walk(node):
             if not isinstance(call, ast.Call):
                 continue
-            f = call.func
+            f, args = call.func, call.args
+            if getattr(f, "id", getattr(f, "attr", None)) == "partial" and args:
+                # functools.partial(fn, *args, **kw) binds them for fn
+                f, args = args[0], args[1:]
             callee = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
             # a dispatch variable's callees are reached by keyword only
             targets = [(k, True) for k in by_callee.get(callee, [])] or [
                 (k, False)
                 for x in dispatch.get(callee, ()) for k in by_callee.get(x, [])
             ]
-            starred = any(isinstance(x, ast.Starred) for x in call.args)
+            starred = any(isinstance(x, ast.Starred) for x in args)
             spread = any(k.arg is None for k in call.keywords)
             for key, positional in targets:
                 for opt, i in options[key].items():
                     passed = [k.value for k in call.keywords if k.arg == opt]
-                    if positional and i is not None and i < len(call.args):
-                        passed.append(call.args[i])
+                    if positional and i is not None and i < len(args):
+                        passed.append(args[i])
                     elif spread or (positional and i is not None and starred):
                         passed.append(None)
                     for v in passed:

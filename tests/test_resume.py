@@ -8,7 +8,6 @@ import contextlib
 import uuid
 
 import pytest
-from pyspark.sql import Observation
 from pyspark.sql import functions as F
 
 from engine.jobs.extract_job import (
@@ -132,86 +131,46 @@ class _Kill(RuntimeError):
     pass
 
 
-_MASK40 = (1 << 40) - 1
-
-
 def _expected_lineage(rows_df, hashed_col):
     """{partition_id: (doc_count, byte_count, checksum)} recomputed on the
-    driver from the rows themselves: the per-row xxhash64 comes from
-    Spark, the count, byte sum, 40-bit lane sums and sha256 from Python."""
+    driver from the rows themselves: a row's digest is the 8-byte
+    little-endian blake2b of "<len(url)>:<url><value>" (a null value
+    reads as ''), the checksum sha256 of "<count>:<digest sum>"."""
     import hashlib
 
     acc = {}
-    for r in rows_df.select(
-        "partition_id",
-        F.coalesce(F.col("n_chars"), F.lit(0)).alias("n"),
-        F.xxhash64("url", F.coalesce(F.col(hashed_col), F.lit(""))).alias("h"),
-    ).collect():
-        c, b, l1, l2 = acc.get(r["partition_id"], (0, 0, 0, 0))
-        h = r["h"] & ((1 << 64) - 1)
+    for r in rows_df.select("partition_id", "url", "n_chars", hashed_col).collect():
+        url, value = r["url"] or "", r[hashed_col] or ""
+        digest = hashlib.blake2b(
+            f"{len(url)}:{url}{value}".encode(), digest_size=8
+        ).digest()
+        c, b, d = acc.get(r["partition_id"], (0, 0, 0))
         acc[r["partition_id"]] = (
-            c + 1, b + r["n"], l1 + (h & _MASK40), l2 + ((h >> 20) & _MASK40)
+            c + 1, b + (r["n_chars"] or 0), d + int.from_bytes(digest, "little")
         )
     return {
-        p: (c, b, hashlib.sha256(f"{c}:{l1}:{l2}".encode()).hexdigest())
-        for p, (c, b, l1, l2) in acc.items()
+        p: (c, b, hashlib.sha256(f"{c}:{d}".encode()).hexdigest())
+        for p, (c, b, d) in acc.items()
     }
 
 
 def _interrupted(spark, pages, root, n_partitions, wave_size):
     """A run with a committed wave, a wave killed between its lineage
-    publish and its commit, the resume, and one retry — with every lineage
-    aggregate frame the job builds recorded on the way (a write whose
-    partition set is above `_OBSERVED_LINEAGE_MAX` builds one; below it a
-    write observes its lineage and builds none)."""
-    import engine.jobs.extract_job as job
-
+    publish and its commit, the resume, and one retry."""
     man = _enqueue_n(spark, pages, root, n_partitions, run_id="lin-values")
-    frames = []
-    real_frame = job._lineage_aggregate
-
-    def spy(*args):
-        frames.append(real_frame(*args))
-        return frames[-1]
-
-    job._lineage_aggregate = spy
-    try:
-        run_extract_job(spark, pages, man, wave_size=wave_size, max_waves=1)
-        real_commit = man.commit_partitions
-        man.commit_partitions = lambda wave: (_ for _ in ()).throw(_Kill())
-        with pytest.raises(_Kill):
-            run_extract_job(spark, pages, man, wave_size=wave_size)
-        man.commit_partitions = real_commit
-        resumed_parts = man.pending_partitions()
-        resumed = run_extract_job(spark, pages, man, wave_size=wave_size)
-        retried = retry_failed(spark, pages, man)
-    finally:
-        job._lineage_aggregate = real_frame
+    run_extract_job(spark, pages, man, wave_size=wave_size, max_waves=1)
+    real_commit = man.commit_partitions
+    man.commit_partitions = lambda wave: (_ for _ in ()).throw(_Kill())
+    with pytest.raises(_Kill):
+        run_extract_job(spark, pages, man, wave_size=wave_size)
+    man.commit_partitions = real_commit
+    resumed_parts = man.pending_partitions()
+    resumed = run_extract_job(spark, pages, man, wave_size=wave_size)
+    retried = retry_failed(spark, pages, man)
     return {
-        "manifest": man, "frames": frames, "resumed": resumed,
+        "manifest": man, "resumed": resumed,
         "resumed_parts": resumed_parts, "retried": retried,
     }
-
-
-@pytest.fixture(scope="module")
-def interrupted_run(spark, pages, tmp_path_factory):
-    """`_interrupted` above the cap: two waves of cap + 1 partitions, and
-    a retry over 2 * (cap + 1) committed partitions, all read back."""
-    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX as cap
-
-    root = str(tmp_path_factory.mktemp("interrupted") / "runs")
-    return _interrupted(spark, pages, root, 2 * (cap + 1), cap + 1)
-
-
-@pytest.fixture(scope="module")
-def observed_run(spark, pages, tmp_path_factory):
-    """`_interrupted` below the cap: two waves of 4 partitions, and a
-    retry over 8 committed partitions, all observed on their writes."""
-    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX as cap
-
-    assert cap >= 8
-    root = str(tmp_path_factory.mktemp("observed") / "runs")
-    return _interrupted(spark, pages, root, 8, 4)
 
 
 def _assert_lineage_matches_committed_rows(spark, run):
@@ -260,33 +219,14 @@ def _assert_lineage_matches_committed_rows(spark, run):
     )
 
 
-def test_lineage_values_match_committed_rows(spark, interrupted_run):
-    """Above the cap (waves and retry read their lineage back), lineage
-    equals what the committed rows give."""
-    _assert_lineage_matches_committed_rows(spark, interrupted_run)
-
-
-def test_observed_lineage_values_match_committed_rows(spark, observed_run):
-    """At or below the cap (waves and retry observe their lineage on their
-    writes and build no read-back frame), lineage equals what the
-    committed rows give."""
-    assert observed_run["frames"] == []
-    _assert_lineage_matches_committed_rows(spark, observed_run)
-
-
-def test_lineage_frames_are_python_free(interrupted_run):
-    """Lineage is job-path bookkeeping: the aggregate a write above the cap
-    collects must plan as a pure JVM aggregate (no collected rows
-    re-parallelized from Python, no Python UDF or Arrow map). One frame
-    per wave write (the first wave, the killed wave, its resume) and one
-    for the retry."""
-    frames = interrupted_run["frames"]
-    assert len(frames) == 4
-    for df in frames:
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        for node in ("ExistingRDD", "BatchEvalPython", "ArrowEvalPython",
-                     "MapInArrow"):
-            assert node not in plan, plan
+def test_lineage_values_match_committed_rows(spark, pages, tmp_path):
+    """Through a committed wave, a killed wave, its resume and a retry,
+    lineage equals what the committed rows give, at 8 partitions in waves
+    of 4 and at 18 in waves of 9."""
+    for n_partitions, wave_size in ((8, 4), (18, 9)):
+        root = str(tmp_path / f"runs-{n_partitions}")
+        run = _interrupted(spark, pages, root, n_partitions, wave_size)
+        _assert_lineage_matches_committed_rows(spark, run)
 
 
 def _lineage_by_partition(lin):
@@ -296,18 +236,17 @@ def _lineage_by_partition(lin):
     }
 
 
-def test_read_back_lineage_of_a_64_partition_wave(spark, pages, tmp_path):
-    """One wave holding 64 partitions, 8x the CLI's default wave and above
-    `_OBSERVED_LINEAGE_MAX`, so its lineage is read back from the written
-    partitions: it equals the aggregate recomputed from the committed
-    rows."""
-    from engine.jobs.extract_job import _OBSERVED_LINEAGE_MAX
-
-    assert 64 > _OBSERVED_LINEAGE_MAX
+def test_64_partition_wave_lineage_in_one_job(spark, pages, tmp_path):
+    """One wave holding 64 partitions, 8x the CLI's default wave, is one
+    Spark job (its lineage comes from the UDF that feeds the write, with
+    nothing read back), and its lineage equals the aggregate recomputed
+    from the committed rows."""
     root = str(tmp_path / "runs")
     man = _enqueue_n(spark, pages, root, 64, run_id="wide-wave")
-    r = run_extract_job(spark, pages, man, wave_size=64)
+    with _jobs_run(spark) as jobs:
+        r = run_extract_job(spark, pages, man, wave_size=64)
     assert (r["waves_run"], r["complete"]) == (1, True)
+    assert len(jobs) == 1, _job_labels(spark, jobs)
     lin = read_lineage(spark, man).collect()
     want = _expected_lineage(read_extracted(spark, man), "text")
     assert len(want) > 56  # nearly every partition holds rows
@@ -744,12 +683,10 @@ def test_run_stats_equals_an_independent_aggregate(spark, tmp_path):
     assert run_stats(spark, man) == want
 
 
-class _KilledAfterWrite(Observation):
-    # the retry reads its observed row count right after the overlay
-    # write returns
-    @property
-    def get(self):
-        raise _Kill()
+def _killed_publish(*args):
+    # stands in for `RunManifest.publish_lineage`: the kill lands after
+    # the retry's overlay write and before its lineage file exists
+    raise _Kill()
 
 
 def test_kill_between_retry_write_and_lineage_publish(
@@ -759,14 +696,12 @@ def test_kill_between_retry_write_and_lineage_publish(
     publish has burned its attempt number: the next retry is attempt 2, so
     the overlay never holds one (url, attempt) pair twice and the new
     attempt's lineage counts exactly the rows it retried."""
-    import engine.jobs.extract_job as job
-
     pages = _ok_and_junk_pages(spark, 40, 6)
     root = str(tmp_path / "runs")
     man = enqueue(spark, pages, root, run_id="retry-kill")
     run_extract_job(spark, pages, man, wave_size=8)
 
-    monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
+    monkeypatch.setattr(man, "publish_lineage", _killed_publish)
     with pytest.raises(_Kill):
         retry_failed(spark, pages, man)
     monkeypatch.undo()
@@ -787,8 +722,6 @@ def test_burned_retry_attempt_is_not_current(spark, tmp_path, monkeypatch):
     current view leaves them out, so those urls still read as failed, the
     next retry takes them up again as attempt 2, and the retry lineage
     counts exactly the overlay rows of the published attempts."""
-    import engine.jobs.extract_job as job
-
     pages = _ok_and_junk_pages(spark, 40, 6)
     # the same urls, now with html that extracts
     fixed = _ok_pages(spark, 40).unionByName(_ok_pages(spark, 6, "junk.example"))
@@ -797,7 +730,7 @@ def test_burned_retry_attempt_is_not_current(spark, tmp_path, monkeypatch):
     man = enqueue(spark, pages, root, run_id="retry-burned")
     run_extract_job(spark, pages, man, wave_size=8)
 
-    monkeypatch.setattr(job, "Observation", _KilledAfterWrite)
+    monkeypatch.setattr(man, "publish_lineage", _killed_publish)
     with pytest.raises(_Kill):
         retry_failed(spark, fixed, man)
     monkeypatch.undo()
@@ -894,6 +827,63 @@ def test_spark_written_retry_lineage_still_reads(spark, tmp_path):
     assert os.listdir(man.lineage_path(man.retry_lineage_name(3))) == []
     assert read_lineage(spark, man).count() == n_rows
     assert man.next_retry_attempt() == 4
+
+
+def test_lineage_with_the_older_checksum_still_reads(spark, pages, tmp_path):
+    """A run resumed across the checksum change: its first wave's lineage
+    file holds the checksum older code wrote (sha256 of
+    "count:lane1:lane2" over two 40-bit lanes of xxhash64(url, text)).
+    Next to the file the resume writes, it still reads, rolls up, and
+    counts for read_extracted's data-loss guard."""
+    import hashlib
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    root = str(tmp_path / "runs")
+    man = enqueue(spark, pages, root, run_id="old-checksum")
+    run_extract_job(spark, pages, man, wave_size=4, max_waves=1)
+    mask = (1 << 40) - 1
+    lanes = {}
+    for r in read_extracted(spark, man).select(
+        "partition_id",
+        F.xxhash64("url", F.coalesce(F.col("text"), F.lit(""))).alias("h"),
+    ).collect():
+        c, l1, l2 = lanes.get(r["partition_id"], (0, 0, 0))
+        h = r["h"] & ((1 << 64) - 1)
+        lanes[r["partition_id"]] = (
+            c + 1, l1 + (h & mask), l2 + ((h >> 20) & mask)
+        )
+    old_file = man.lineage_file(man.wave_lineage_name(0))
+    table = pq.read_table(old_file)
+    old = {
+        p: hashlib.sha256(f"{c}:{l1}:{l2}".encode()).hexdigest()
+        for p, (c, l1, l2) in lanes.items()
+    }
+    pids = table.column("partition_id").to_pylist()
+    table = table.set_column(
+        table.schema.get_field_index("checksum"), "checksum",
+        pa.array([old[p] for p in pids], pa.string()),
+    )
+    pq.write_table(table, old_file)
+
+    r = run_extract_job(spark, pages, man, wave_size=4)
+    assert (r["waves_run"], r["complete"]) == (1, True)
+    got = _lineage_by_partition(read_lineage(spark, man).collect())
+    want = _expected_lineage(read_extracted(spark, man), "text")
+    assert sorted(got) == list(range(8)) and sorted(pids) == [0, 1, 2, 3]
+    for p in range(8):
+        assert got[p][:2] == want[p][:2]
+        assert got[p][2] == (old[p] if p < 4 else want[p][2])
+    assert all(old[p] != want[p][2] for p in range(4))
+    grand = [x for x in rollup_metrics(spark, man).collect() if x["run_id"] is None]
+    assert grand[0]["docs"] == pages.count()
+    shutil.rmtree(man.extracted_path)
+    with pytest.raises(
+        RuntimeError, match=f"lineage records {pages.count()} committed docs"
+    ):
+        read_extracted(spark, man)
 
 
 def test_legacy_retry_overlay_fails_loudly(spark, pages, tmp_path):
@@ -1552,13 +1542,13 @@ def test_only_the_manifest_names_run_paths():
 # per Python task before its UDF runs (CLAUDE.md job-path rule).
 # enqueue and stats: one noop pass each, its aggregates observed on it (a
 # collected global aggregate is a map job plus a final job under AQE);
-# run/resume: the wave write alone (its lineage is observed on that write
-# and published from the driver); stage: the clustering shuffle's map stage
-# (its own job under AQE) and the write; retry: the map stage of the
-# failed-url window's shuffle, the broadcast of the failed urls, the map
-# stage of the shuffle that clusters the failed rows by partition id before
-# the UDF, and the overlay write (its lineage observed on it: the run's 8
-# committed partitions are within `_OBSERVED_LINEAGE_MAX`).
+# run/resume: the wave write alone (the UDF feeding it folds the lineage
+# into an accumulator, published from the driver); stage: the clustering
+# shuffle's map stage (its own job under AQE) and the write; retry: the map
+# stage of the failed-url window's shuffle, the broadcast of the failed
+# urls, the map stage of the shuffle that clusters the failed rows by
+# partition id before the UDF, and the overlay write (its lineage taken
+# the same way).
 _JOBS_PER_VERB_CAP = {
     "enqueue": 1, "stage": 2, "run": 1, "resume": 1, "retry": 4, "stats": 1,
 }
